@@ -207,6 +207,13 @@ object Bench {
   def forkQuery(name: String, sfDir: String, cpus: String): Option[Double] =
     forkBatch(Seq(name), sfDir, cpus, full = true).get(name)
 
+  /** `v` with `places` decimals in `Locale.ROOT` — every number the
+    * parent parses back (child result lines, the one-line JSON) must not
+    * follow the JVM default locale, which writes `1,234` under de_DE.
+    */
+  private[graft] def decimal(v: Double, places: Int): String =
+    String.format(java.util.Locale.ROOT, s"%.${places}f", Double.box(v))
+
   private val ChildResult = """CHILD_RESULT (\S+) ([0-9.]+)""".r
   private val ChildCalib = """CHILD_CALIB (\S+) ([0-9.]+)""".r
 
@@ -227,12 +234,12 @@ object Bench {
         // fast path would have seen) and the median of all three
         timeRuns(name, fn, sfDir, spark, warmups = 1, runs = 3) match {
           case Some(ts) =>
-            println(f"CHILD_RESULT $name ${ts.take(2).min}%.6f")
-            println(f"CHILD_CALIB $name ${ts.sorted.apply(1)}%.6f")
+            println(s"CHILD_RESULT $name ${decimal(ts.take(2).min, 6)}")
+            println(s"CHILD_CALIB $name ${decimal(ts.sorted.apply(1), 6)}")
           case None => println(s"CHILD_FAILED $name")
         }
       else timeQuery(name, fn, sfDir, spark, mode == "full") match {
-        case Some(t) => println(f"CHILD_RESULT $name $t%.6f")
+        case Some(t) => println(s"CHILD_RESULT $name ${decimal(t, 6)}")
         case None    => println(s"CHILD_FAILED $name")
       }
     } finally spark.stop()
@@ -354,8 +361,8 @@ object Bench {
     Console.err.println(
       f"bench: probe single=$probeSingle%.3fs multi=$probeMulti%.3fs")
     val probeJson =
-      f"""{"kernel":"splitmix64","iters":$ProbeIters,"threads":$probeThreads,""" +
-        f""""single_sec":$probeSingle%.4f,"multi_sec":$probeMulti%.4f}"""
+      s"""{"kernel":"splitmix64","iters":$ProbeIters,"threads":$probeThreads,""" +
+        s""""single_sec":${decimal(probeSingle, 4)},"multi_sec":${decimal(probeMulti, 4)}}"""
     val lock = new Object
     val results = scala.collection.mutable.TreeMap[String, Double]()
     val failed = scala.collection.mutable.TreeSet[String]()
@@ -367,7 +374,7 @@ object Bench {
       // diff was lost to exactly that). Measurement unchanged — only the
       // rendered precision. The total keeps full precision.
       val qs = results.toSeq
-        .map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
+        .map { case (k, v) => "\"" + k + "\":" + decimal(v, 3) }
         .mkString("{", ",", "}")
       val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
       s"""{"metric":"total","value":${results.values.sum},"unit":"sec",""" +

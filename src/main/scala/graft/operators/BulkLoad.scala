@@ -1,9 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.hb
-import graft.sources.{HFile, HFileReader, HFileWriter}
+import graft.sources.{HFile, HFileDir, HFileManifest, HFileReader}
 
 /** One row per cell read back from an HFile by [[BulkLoad.readHFiles]].
   * `tags`/`mvcc` are empty/0 for files written without the tags layout;
@@ -51,10 +51,11 @@ object Salt {
   * exactly the invariant HBase bulk import (LoadIncrementalHFiles) needs.
   * No global single-point sort; parallelism scales with data size.
   *
-  * The physical file format here is parquet (HFile writing needs hbase
-  * jars, which are out of scope per the build constraints); the layout —
-  * `bucket=NNN/part-*.parquet`, rows sorted by (rowkey, family, qualifier)
-  * — is the bulk-load contract.
+  * Two physical formats share that layout — `bucket=NNN/` directories
+  * of files sorted by (rowkey, family, qualifier): [[write]] emits
+  * parquet, and [[writeHFiles]] emits real HFile v3 binaries without
+  * hbase jars, through [[graft.sources.HFileDir]] (the directory layout
+  * the `graft-hfile` source reads too).
   */
 object BulkLoad {
 
@@ -94,8 +95,9 @@ object BulkLoad {
     * reference's actual output format (HadoopOutputFormat2.java:85-100),
     * re-expressed without hbase jars via [[graft.sources.HFile]].
     *
-    * Each range partition streams its rows through one [[HFileWriter]]
-    * at a time, rolling to a new file whenever the bucket changes —
+    * Each range partition streams its rows through one
+    * [[graft.sources.HFileDir.TaskWriter]], one HFile at a time, rolling
+    * to a new file whenever the bucket changes —
     * the same roll-on-salt-prefix-change rule as the reference's
     * `writeRecord` — so every emitted file holds one bucket's
     * contiguous, fully-sorted key range with non-overlapping files per
@@ -109,9 +111,9 @@ object BulkLoad {
     * rejected — collapse them first with [[Cells.latestVersion]] /
     * [[Cells.lastVersions]].
     *
-    * Output is task-committed: each task writes to an attempt-unique
-    * temp file under `_inprogress/` and renames into place when the
-    * file is complete, so a failed or speculative duplicate attempt
+    * Output is task-committed: each task writes attempt-unique temp
+    * files under `_inprogress/` and renames them into place when the
+    * task ends, so a failed or speculative duplicate attempt
     * never interleaves bytes into a final file (first finished rename
     * wins; output is deterministic, so the winner's bytes equal the
     * loser's). The driver clears `_inprogress/` after the job.
@@ -126,20 +128,20 @@ object BulkLoad {
                   encoding: String = "none",
                   tagsCol: Option[String] = None,
                   mvccCol: Option[String] = None): Unit = {
-    val codec = HFile.codecOf(compression) // fail fast, on the driver
-    val encodingId = graft.sources.BlockEncoding.idOf(encoding)
+    val format = HFileDir.Format(blockSize,
+      HFile.codecOf(compression), // fail fast, on the driver
+      bloomChunkKeys, maxFileBytes,
+      graft.sources.BlockEncoding.idOf(encoding),
+      // tagsCol/mvccCol switch every file to the tags+mvcc cell layout
+      // (the cluster's KEY_VALUE_VERSION=1 format) — what a compaction of
+      // cluster-written files uses so cell TTL tags and sequence ids
+      // survive the rewrite
+      withTagsAndMvcc = tagsCol.isDefined || mvccCol.isDefined)
     val spark = prepared.sparkSession
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fsRoot = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fsRoot.exists(root)) fsRoot.delete(root, true)
-    fsRoot.mkdirs(root)
-    val confMap = broadcastHadoopConf(spark)
+    val hconf = spark.sparkContext.hadoopConfiguration
+    HFileDir.startWrite(path, hconf, overwrite = true)
+    val confMap = HFileDir.confMap(spark)
 
-    // tagsCol/mvccCol switch every file to the tags+mvcc cell layout
-    // (the cluster's KEY_VALUE_VERSION=1 format) — what a compaction of
-    // cluster-written files uses so cell TTL tags and sequence ids
-    // survive the rewrite
-    val withTagsAndMvcc = tagsCol.isDefined || mvccCol.isDefined
     val ts = tsCol.map(col(_).cast("long")).getOrElse(lit(0L))
     val typ = typeCol.map(col(_).cast("int"))
       .getOrElse(lit(HFile.KeyTypePut.toInt))
@@ -159,106 +161,26 @@ object BulkLoad {
 
     try {
       import spark.implicits._
-      // one stat tuple per committed file — the input to the `_manifest`
-      // sidecar, recorded here where the writer already knows it all
-      // (re-reading 100k trailers at plan time is what the sidecar kills)
-      val stats = rows.mapPartitions { it: Iterator[org.apache.spark.sql.Row] =>
-        val acc = scala.collection.mutable.ArrayBuffer
-          .empty[(String, Int, Long, Long, String, String)]
-        if (it.hasNext) {
-          val tc = org.apache.spark.TaskContext.get()
-          val fs = new org.apache.hadoop.fs.Path(path)
-            .getFileSystem(hadoopConfOf(confMap.value))
-          val pid = tc.partitionId()
-          val attempt = tc.taskAttemptId()
-          var bucket = Int.MinValue
-          var seq = 0
-          var out: org.apache.hadoop.fs.FSDataOutputStream = null
-          var writer: HFileWriter = null
-          var tmp: org.apache.hadoop.fs.Path = null
-          var dest: org.apache.hadoop.fs.Path = null
-          def commitCurrent(): Unit = if (writer != null) {
-            writer.finish(); out.close()
-            fs.mkdirs(dest.getParent)
-            // first completed attempt wins; losers hold identical bytes,
-            // so an existing dest means success — just drop our temp
-            if (!fs.rename(tmp, dest)) {
-              if (!fs.exists(dest))
-                throw new java.io.IOException(s"could not commit $dest")
-              fs.delete(tmp, false)
-            }
-            acc += ((graft.sources.HFileManifest.relOf(dest), bucket,
-              writer.bytesWritten, writer.cellCount,
-              graft.sources.HFileManifest.toHex(writer.firstRowkey),
-              graft.sources.HFileManifest.toHex(writer.lastRowkey)))
-            writer = null
-          }
-          def roll(b: Int): Unit = {
-            commitCurrent()
-            dest = new org.apache.hadoop.fs.Path(path,
-              f"bucket=$b%d/part-$pid%05d-$seq%03d.hfile")
-            tmp = new org.apache.hadoop.fs.Path(path,
-              f"_inprogress/attempt-$attempt%d-part-$pid%05d-$seq%03d.hfile")
-            seq += 1
-            out = fs.create(tmp, true)
-            writer = new HFileWriter(out, blockSize, codec, bloomChunkKeys,
-              withTagsAndMvcc = withTagsAndMvcc, encoding = encodingId)
-            bucket = b
-          }
-          it.foreach { r =>
-            val b = r.getInt(0)
-            val rk = r.getAs[Array[Byte]](1)
-            // size cap (hbase.hregion.max.filesize analogue): roll to a
-            // new file in the SAME bucket, but only between rowkeys —
-            // splitting one row across files would overlap their ranges
-            if (b != bucket ||
-                (writer.bytesWritten >= maxFileBytes &&
-                  !java.util.Arrays.equals(writer.lastRowkey, rk)))
-              roll(b)
-            writer.append(HFile.HCell(rk,
-              r.getString(2).getBytes("UTF-8"),
-              r.getString(3).getBytes("UTF-8"),
-              r.getLong(4), r.getAs[Array[Byte]](5),
-              r.getInt(6).toByte,
-              if (withTagsAndMvcc) r.getAs[Array[Byte]](7)
-              else Array.emptyByteArray,
-              if (withTagsAndMvcc) r.getLong(8) else 0L))
-          }
-          commitCurrent()
+      // one manifest entry per committed file — the input to the
+      // `_manifest` sidecar, recorded where the writer already knows it
+      // all (re-reading 100k trailers at plan time is what the sidecar
+      // kills)
+      val entries = rows.mapPartitions { it: Iterator[org.apache.spark.sql.Row] =>
+        val tc = org.apache.spark.TaskContext.get()
+        val w = new HFileDir.TaskWriter(path, HFileDir.confOf(confMap),
+          format, "part-", tc.partitionId(), tc.taskAttemptId())
+        it.foreach { r =>
+          w.write(r.getInt(0), HFile.HCell(r.getAs[Array[Byte]](1),
+            r.getString(2).getBytes("UTF-8"), r.getString(3).getBytes("UTF-8"),
+            r.getLong(4), r.getAs[Array[Byte]](5), r.getInt(6).toByte,
+            r.getAs[Array[Byte]](7), r.getLong(8)))
         }
-        acc.iterator
+        w.commit().iterator
       }
         // one row per FILE, not per cell — driver-scale at any data size
         .collect()
-        .map(t => graft.sources.HFileManifest.Entry(t._1, t._2, t._3, t._4,
-          t._5, t._6))
-      graft.sources.HFileManifest.write(fsRoot, root, stats.toSeq)
-    } finally {
-      // always clear temp files — a failed job must not leave attempt
-      // files for readHFiles to trip over (its glob also excludes them)
-      fsRoot.delete(new org.apache.hadoop.fs.Path(root, "_inprogress"), true)
-      confMap.destroy()
-    }
-  }
-
-  /** The session's Hadoop settings as a broadcastable map — executors
-    * must see credentials / fs.defaultFS etc.; a bare
-    * `new Configuration()` on an executor would not.
-    */
-  private def broadcastHadoopConf(spark: SparkSession)
-      : org.apache.spark.broadcast.Broadcast[Map[String, String]] = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val m = scala.collection.mutable.Map[String, String]()
-    val it = hconf.iterator()
-    while (it.hasNext) { val e = it.next(); m += e.getKey -> e.getValue }
-    spark.sparkContext.broadcast(m.toMap)
-  }
-
-  private def hadoopConfOf(m: Map[String, String])
-      : org.apache.hadoop.conf.Configuration = {
-    val conf = new org.apache.hadoop.conf.Configuration(false)
-    m.foreach { case (k, v) => conf.set(k, v) }
-    conf
+      HFileDir.commitWrite(path, hconf, entries.toSeq)
+    } finally HFileDir.clearTemp(path, hconf)
   }
 
   /** Distributed scan of a [[writeHFiles]] directory back into a cell
@@ -268,7 +190,7 @@ object BulkLoad {
     * integrity audit of the bulk output.
     */
   def readHFiles(spark: SparkSession, path: String): DataFrame =
-    readHFiles(spark, path, "bucket=*/*.hfile")
+    readHFiles(spark, path, HFileDir.Glob)
 
   /** [[readHFiles]] with an explicit file glob under `path` — e.g. the
     * `epoch=N`-prefixed hfile glob, to scan every micro-batch run a
@@ -278,39 +200,35 @@ object BulkLoad {
     */
   def readHFiles(spark: SparkSession, path: String, glob: String): DataFrame = {
     import spark.implicits._
-    val root = new org.apache.hadoop.fs.Path(path)
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val fs = root.getFileSystem(hconf)
-    // bucket=* (not */) so leftover _inprogress attempt files are never
-    // read back as data; globStatus returns null when the path is absent
-    val files = Option(
-        fs.globStatus(new org.apache.hadoop.fs.Path(root, glob)))
-      .getOrElse(Array.empty)
-      .map(_.getPath.toString).toSeq
-    require(files.nonEmpty, s"no HFiles found under $path")
-    val confMap = broadcastHadoopConf(spark)
-    val par = math.max(1, math.min(files.size,
-      spark.sparkContext.defaultParallelism))
-    spark.createDataset(files).repartition(par).flatMap { f =>
-      val p = new org.apache.hadoop.fs.Path(f)
-      val fsx = p.getFileSystem(hadoopConfOf(confMap.value))
-      val len = fsx.getFileStatus(p).getLen
-      val in = fsx.open(p)
-      val rr = new HFileReader.RandomRead {
-        def length: Long = len
-        def readFully(pos: Long, n: Int): Array[Byte] = {
-          val buf = new Array[Byte](n)
-          in.readFully(pos, buf)
-          buf
-        }
-        override def close(): Unit = in.close()
-      }
+    val confMap = HFileDir.confMap(spark)
+    perFile(spark, filesOf(spark, path, glob).paths).flatMap { f =>
       val bucket = graft.sources.HFileSource.bucketOf(f)
-      HFileReader.scan(rr).map(c => HFileCellRow(f, bucket, c.rowkey,
-        new String(c.family, "UTF-8"), new String(c.qualifier, "UTF-8"),
-        c.ts, c.value, c.keyType.toInt, c.tags, c.mvcc))
+      HFileReader.scan(HFileDir.open(f, HFileDir.confOf(confMap)))
+        .map(cellRow(f, bucket, _))
     }.toDF()
   }
+
+  /** `path`'s HFiles under `glob`; every verb but [[dirHasTagsOrMvcc]]
+    * refuses a directory without any.
+    */
+  private def filesOf(spark: SparkSession, path: String,
+                      glob: String = HFileDir.Glob): HFileDir.Listing = {
+    val dir = HFileDir.list(path, spark.sparkContext.hadoopConfiguration, glob)
+    require(dir.files.nonEmpty, s"no HFiles found under $path")
+    dir
+  }
+
+  /** One row per file, spread over the cluster's task slots. */
+  private def perFile(spark: SparkSession, files: Seq[String]): Dataset[String] = {
+    import spark.implicits._
+    spark.createDataset(files).repartition(
+      math.max(1, math.min(files.size, spark.sparkContext.defaultParallelism)))
+  }
+
+  private def cellRow(f: String, bucket: Int, c: HFile.HCell): HFileCellRow =
+    HFileCellRow(f, bucket, c.rowkey, new String(c.family, "UTF-8"),
+      new String(c.qualifier, "UTF-8"), c.ts, c.value, c.keyType.toInt,
+      c.tags, c.mvcc)
 
   /** Whether ANY file under `path`/`glob` stores the tags+mvcc cell
     * layout — the bit a compaction needs to decide whether its rewrite
@@ -319,42 +237,28 @@ object BulkLoad {
     * as the manifest fallback.
     */
   def dirHasTagsOrMvcc(spark: SparkSession, path: String,
-                       glob: String = "bucket=*/*.hfile"): Boolean = {
-    val root = new org.apache.hadoop.fs.Path(path)
+                       glob: String = HFileDir.Glob): Boolean = {
     val hconf = spark.sparkContext.hadoopConfiguration
-    val fs = root.getFileSystem(hconf)
-    val files = Option(fs.globStatus(new org.apache.hadoop.fs.Path(root, glob)))
-      .getOrElse(Array.empty).map(_.getPath.toString)
-    if (files.isEmpty) return false
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(16, files.length))
     val found = new java.util.concurrent.atomic.AtomicBoolean(false)
-    try {
-      files.map { f =>
-        pool.submit(new java.util.concurrent.Callable[Boolean] {
-          def call(): Boolean = {
-            if (found.get()) return false // short-circuit queued probes
-            val rr = openRead(f, hconf)
-            try {
-              val t = HFileReader.readTrailer(rr)
-              val l = HFileReader.cellLayoutOf(rr, t)
-              val hit = l.tags || l.mvcc
-              if (hit) found.set(true)
-              hit
-            } finally rr.close()
-          }
-        })
-      }.exists(_.get())
-      // shutdownNow (not shutdown) so a hit doesn't leave thousands of
-      // queued probes reading trailers the answer no longer needs
-    } finally pool.shutdownNow()
+    // probes still queued after a hit return without reading
+    HFileDir.pooled(HFileDir.list(path, hconf, glob).paths) { f =>
+      if (!found.get()) {
+        val rr = HFileDir.open(f, hconf)
+        try {
+          val l = HFileReader.cellLayoutOf(rr, HFileReader.readTrailer(rr))
+          if (l.tags || l.mvcc) found.set(true)
+        } finally rr.close()
+      }
+    }
+    found.get()
   }
 
   /** Distributed keyed lookup (multi-get) against a [[writeHFiles]]
     * directory — the reference's point-GET-by-rowkey lookup
     * (HBaseRowDataLookupFunction.java) as a batch operator. The driver
-    * reads each file's key range through a bounded pool and broadcasts
-    * the tiny (file, bucket, range) manifest; each key routes to the
+    * takes each file's key range from the `_manifest` sidecar (or a
+    * bounded pool of trailer reads when it is stale) and broadcasts
+    * the tiny (file, bucket, range) table; each key routes to the
     * files whose range covers it; each task then opens its file ONCE and
     * probes its whole sorted key batch through the bloom and the
     * multi-level index ([[HFileReader.multiGet]]) — a handful of short
@@ -364,42 +268,12 @@ object BulkLoad {
   def multiGet(spark: SparkSession, path: String, keys: DataFrame,
                keyCol: String = "rowkey"): DataFrame = {
     import spark.implicits._
-    val root = new org.apache.hadoop.fs.Path(path)
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val fs = root.getFileSystem(hconf)
-    val listing = Option(
-        fs.globStatus(new org.apache.hadoop.fs.Path(root, "bucket=*/*.hfile")))
-      .getOrElse(Array.empty)
-    val files = listing.map(_.getPath.toString)
-    require(files.nonEmpty, s"no HFiles found under $path")
-    val confMap = broadcastHadoopConf(spark)
+    val confMap = HFileDir.confMap(spark)
     // key ranges from the `_manifest` sidecar when it matches the
     // listing; pooled per-file short reads only when it doesn't
-    val fileRanges = graft.sources.HFileManifest
-      .readValid(fs, root, listing.toSeq)
-      .map { entries =>
-        files.toSeq.zip(entries).collect {
-          case (f, e) if e.minHex.nonEmpty =>
-            (f, e.bucket, e.minKey, e.maxKey)
-        }
-      }
-      .getOrElse {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(16, files.length))
-        try {
-          files.map { f =>
-            pool.submit(
-              new java.util.concurrent.Callable[Option[(String, Int, Array[Byte], Array[Byte])]] {
-                def call(): Option[(String, Int, Array[Byte], Array[Byte])] = {
-                  val rr = openRead(f, hconf)
-                  try HFileReader.rowkeyRange(rr).map { case (lo, hi) =>
-                    (f, graft.sources.HFileSource.bucketOf(f), lo, hi)
-                  } finally rr.close()
-                }
-              })
-          }.flatMap(_.get()).toSeq
-        } finally pool.shutdown()
-      }
+    val fileRanges = filesOf(spark, path).stats().collect {
+      case HFileDir.FileStat(f, b, _, Some((lo, hi))) => (f, b, lo, hi)
+    }
     // key → covering files in O(log F + matches), not O(F): ranges sorted
     // by first key, with a prefix running-max of last keys so the left
     // walk stops as soon as no earlier run can still reach the key
@@ -439,13 +313,11 @@ object BulkLoad {
       .flatMapGroups { (fb: (String, Int),
                         batch: Iterator[(String, Int, Array[Byte])]) =>
         val (f, b) = fb
-        val rr = openRead(f, hadoopConfOf(confMap.value))
+        val rr = HFileDir.open(f, HFileDir.confOf(confMap))
         // multiGet materializes its result, so closing before returning
         // the iterator is safe
         try HFileReader.multiGet(rr, batch.map(_._3).toSeq)
-          .map(c => HFileCellRow(f, b, c.rowkey,
-            new String(c.family, "UTF-8"), new String(c.qualifier, "UTF-8"),
-            c.ts, c.value, c.keyType.toInt, c.tags, c.mvcc)).iterator
+          .map(cellRow(f, b, _)).iterator
         finally rr.close()
       }.toDF()
   }
@@ -482,29 +354,15 @@ object BulkLoad {
   def backup(spark: SparkSession, srcDir: String, dstDir: String,
              base: Option[String] = None): DataFrame = {
     import spark.implicits._
-    val root = new org.apache.hadoop.fs.Path(srcDir)
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val fs = root.getFileSystem(hconf)
-    val files = Option(
-        fs.globStatus(new org.apache.hadoop.fs.Path(root, "bucket=*/*.hfile")))
-      .getOrElse(Array.empty)
-      .map(_.getPath.toString).toSeq
-    require(files.nonEmpty, s"no HFiles found under $srcDir")
-    val confMap = broadcastHadoopConf(spark)
-    val par = math.max(1, math.min(files.size,
-      spark.sparkContext.defaultParallelism))
+    val files = filesOf(spark, srcDir).paths
+    val confMap = HFileDir.confMap(spark)
     // the audit job runs (and materializes) BEFORE the copy job: a
     // corrupt source file must fail the backup before any byte moves
-    val audit = spark.createDataset(files).repartition(par).map { f =>
-      val conf = hadoopConfOf(confMap.value)
-      val src = new org.apache.hadoop.fs.Path(f)
-      val stats = {
-        val rr = openRead(f, conf)
-        try HFileReader.validate(rr) finally rr.close()
-      }
-      val rel = s"${src.getParent.getName}/${src.getName}"
-      val len = src.getFileSystem(conf).getFileStatus(src).getLen
-      (rel, graft.sources.HFileSource.bucketOf(f), stats.nCells, len)
+    val audit = perFile(spark, files).map { f =>
+      val rr = HFileDir.open(f, HFileDir.confOf(confMap))
+      val nCells = try HFileReader.validate(rr).nCells finally rr.close()
+      (HFileManifest.relOf(new org.apache.hadoop.fs.Path(f)),
+        graft.sources.HFileSource.bucketOf(f), nCells, rr.length)
     }.collect().toSeq
     StoreMaintenance.backupStore(spark, srcDir, dstDir, base)
     audit.toDF("file", "bucket", "n_cells", "bytes")
@@ -551,7 +409,7 @@ object BulkLoad {
     StoreMaintenance.copyFilesDistributed(spark,
       plan.map { case (rel, _, phys) =>
         (phys, new org.apache.hadoop.fs.Path(qd, rel).toString) })
-    graft.sources.HFileManifest.delete(rfs, root)
+    HFileManifest.delete(rfs, root)
     plan.map { case (rel, n, _) =>
       (rel, graft.sources.HFileSource.bucketOf(rel), n) }
       .toDF("file", "bucket", "bytes")
@@ -566,24 +424,15 @@ object BulkLoad {
   def repair(spark: SparkSession, dir: String,
              quarantineDir: String): DataFrame = {
     import spark.implicits._
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val fs = root.getFileSystem(hconf)
-    val files = Option(
-        fs.globStatus(new org.apache.hadoop.fs.Path(root, "bucket=*/*.hfile")))
-      .getOrElse(Array.empty)
-      .map(_.getPath.toString).toSeq
-    require(files.nonEmpty, s"no HFiles found under $dir")
-    val confMap = broadcastHadoopConf(spark)
-    val par = math.max(1, math.min(files.size,
-      spark.sparkContext.defaultParallelism))
-    spark.createDataset(files).repartition(par).map { f =>
-      val conf = hadoopConfOf(confMap.value)
+    val files = filesOf(spark, dir).paths
+    val confMap = HFileDir.confMap(spark)
+    perFile(spark, files).map { f =>
+      val conf = HFileDir.confOf(confMap)
       val src = new org.apache.hadoop.fs.Path(f)
       val sfs = src.getFileSystem(conf)
       val audit: Either[String, Long] =
         try {
-          val rr = openRead(f, conf)
+          val rr = HFileDir.open(f, conf)
           Right(try HFileReader.validate(rr).nCells finally rr.close())
         } catch { case e: Exception => Left(String.valueOf(e.getMessage)) }
       audit match {
@@ -605,23 +454,6 @@ object BulkLoad {
       .toDF("file", "ok", "n_cells", "error")
   }
 
-  private def openRead(f: String, conf: org.apache.hadoop.conf.Configuration)
-      : HFileReader.RandomRead = {
-    val p = new org.apache.hadoop.fs.Path(f)
-    val fsx = p.getFileSystem(conf)
-    val len = fsx.getFileStatus(p).getLen
-    val in = fsx.open(p)
-    new HFileReader.RandomRead {
-      def length: Long = len
-      def readFully(pos: Long, n: Int): Array[Byte] = {
-        val buf = new Array[Byte](n)
-        in.readFully(pos, buf)
-        buf
-      }
-      override def close(): Unit = in.close()
-    }
-  }
-
   /** Per-file stats of a [[writeHFiles]] directory read straight from
     * the trailers and key ranges (bounded-pool short reads — no data
     * block IO at any directory size): same shape as [[manifest]], so
@@ -631,45 +463,14 @@ object BulkLoad {
     */
   def hfileManifest(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
-    val root = new org.apache.hadoop.fs.Path(path)
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val fs = root.getFileSystem(hconf)
-    val listing = Option(
-        fs.globStatus(new org.apache.hadoop.fs.Path(root, "bucket=*/*.hfile")))
-      .getOrElse(Array.empty)
-    val files = listing.map(_.getPath.toString)
-    require(files.nonEmpty, s"no HFiles found under $path")
     // the `_manifest` sidecar IS this manifest — read it when it matches
     // the listing, fall back to pooled trailer reads when it doesn't
-    val rows = graft.sources.HFileManifest
-      .readValid(fs, root, listing.toSeq)
-      .map { entries =>
-        files.toSeq.zip(entries).map { case (f, e) =>
-          (e.bucket, f, e.entryCount, e.minHex, e.maxHex)
-        }
-      }
-      .getOrElse {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(16, files.length))
-        try {
-          files.toSeq.map { f =>
-            pool.submit(new java.util.concurrent.Callable[(Int, String, Long, String, String)] {
-              def call(): (Int, String, Long, String, String) = {
-                val rr = openRead(f, hconf)
-                try {
-                  val n = HFileReader.readTrailer(rr).entryCount
-                  val (lo, hi) = HFileReader.rowkeyRange(rr)
-                    .map { case (a, b) =>
-                      (a.map(x => f"$x%02X").mkString, b.map(x => f"$x%02X").mkString)
-                    }.getOrElse(("", ""))
-                  (graft.sources.HFileSource.bucketOf(f), f, n, lo, hi)
-                } finally rr.close()
-              }
-            })
-          }.map(_.get())
-        } finally pool.shutdown()
-      }
-    rows.toDF("bucket", "file", "n_cells", "min_key_hex", "max_key_hex")
+    filesOf(spark, path).stats().map { s =>
+      val (lo, hi) = s.range.map { case (a, b) =>
+        (HFileManifest.toHex(a), HFileManifest.toHex(b))
+      }.getOrElse(("", ""))
+      (s.bucket, s.file, s.entryCount, lo, hi)
+    }.toDF("bucket", "file", "n_cells", "min_key_hex", "max_key_hex")
   }
 
   /** Per-file stats of a written bulk output — the HFile info-block

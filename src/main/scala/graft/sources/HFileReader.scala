@@ -157,10 +157,7 @@ object HFileReader {
     */
   private[graft] def cellLayoutOf(r: RandomRead, trailer: Trailer): CellLayout = {
     if (trailer.entryCount == 0) return PlainLayout
-    val fi = readBlock(r, trailer.fileInfoOffset, AnyPrevOffset,
-      trailer.compressionCodec)
-    require(fi.magic.sameElements(BlockMagicFileInfo), "missing file info")
-    val info = parseFileInfo(fi.payload)
+    val info = fileInfo(r, trailer)
     val tags = info.contains("hfile.MAX_TAGS_LEN")
     if (tags) require(!info.get("hfile.TAGS_COMPRESSED").exists(
       b => b.nonEmpty && b(0) != 0),
@@ -246,28 +243,22 @@ object HFileReader {
       r.close(); return Iterator.empty
     }
     val layout = cellLayoutOf(r, trailer)
-    var pos = 0L // walk from the first block: a bloom chunk may precede it
-    var prev = -1L
+    val cells = sectionBlocks(r, trailer).flatMap { b =>
+      if (isDataMagic(b.magic)) parseDataBlock(b.magic, b.payload, layout)
+      else {
+        require(b.magic.sameElements(BlockMagicBloomChunk) ||
+          b.magic.sameElements(BlockMagicMeta) ||
+          b.magic.sameElements(BlockMagicLeafIndex) ||
+          b.magic.sameElements(BlockMagicIntermediateIndex),
+          s"unexpected block magic in scanned section at ${b.offset}")
+        Iterator.empty
+      }
+    }
     var lastCell: HCell = null
     var seen = 0L
     new Iterator[HCell] {
-      private var current: Iterator[HCell] = Iterator.empty
-      private def advance(): Unit =
-        while (!current.hasNext && pos < trailer.loadOnOpenOffset) {
-          val b = readBlock(r, pos, prev, trailer.compressionCodec)
-          prev = pos
-          pos += b.onDiskSizeWithHeader
-          if (isDataMagic(b.magic))
-            current = parseDataBlock(b.magic, b.payload, layout)
-          else require(b.magic.sameElements(BlockMagicBloomChunk) ||
-            b.magic.sameElements(BlockMagicMeta) ||
-            b.magic.sameElements(BlockMagicLeafIndex) ||
-            b.magic.sameElements(BlockMagicIntermediateIndex),
-            s"unexpected block magic in scanned section at ${pos - b.onDiskSizeWithHeader}")
-        }
       def hasNext: Boolean = {
-        advance()
-        val more = current.hasNext
+        val more = cells.hasNext
         if (!more) {
           require(seen == trailer.entryCount,
             s"cell count ${seen} != trailer entry_count ${trailer.entryCount}")
@@ -276,8 +267,7 @@ object HFileReader {
         more
       }
       def next(): HCell = {
-        advance()
-        val c = current.next()
+        val c = cells.next()
         require(lastCell == null || compareCells(lastCell, c) < 0,
           "cells out of order in file")
         lastCell = c
@@ -285,6 +275,29 @@ object HFileReader {
         c
       }
     }
+  }
+
+  /** The scanned section's blocks in file order — data blocks with the
+    * bloom chunks, meta and sub-root index blocks inlined between them —
+    * each checked against the prev-offset chain. The walk starts at
+    * offset 0: a bloom chunk may precede the first data block.
+    */
+  private def sectionBlocks(r: RandomRead, trailer: Trailer): Iterator[Block] =
+    Iterator.unfold((0L, -1L)) { case (pos, prev) =>
+      if (pos >= trailer.loadOnOpenOffset) None
+      else {
+        val b = readBlock(r, pos, prev, trailer.compressionCodec)
+        Some((b, (pos + b.onDiskSizeWithHeader, pos)))
+      }
+    }
+
+  /** The file info block's key → bytes map. */
+  private def fileInfo(r: RandomRead, trailer: Trailer,
+                       prev: Long = AnyPrevOffset): Map[String, Array[Byte]] = {
+    val fi = readBlock(r, trailer.fileInfoOffset, prev,
+      trailer.compressionCodec)
+    require(fi.magic.sameElements(BlockMagicFileInfo), "missing file info")
+    parseFileInfo(fi.payload)
   }
 
   /** Parses a file-info block payload (`PBUF` + varint-prefixed
@@ -326,21 +339,18 @@ object HFileReader {
     * planner needs to prune whole files against a rowkey range — the
     * file-skipping analogue of a parquet footer's min/max.
     */
-  def rowkeyRange(r: RandomRead): Option[(Array[Byte], Array[Byte])] = {
-    val trailer = readTrailer(r)
+  def rowkeyRange(r: RandomRead): Option[(Array[Byte], Array[Byte])] =
+    rowkeyRange(r, readTrailer(r))
+
+  private[sources] def rowkeyRange(r: RandomRead, trailer: Trailer)
+      : Option[(Array[Byte], Array[Byte])] = {
     if (trailer.entryCount == 0 || trailer.firstDataBlockOffset < 0)
       return None
-    val idx = readBlock(r, trailer.loadOnOpenOffset, AnyPrevOffset,
-      trailer.compressionCodec)
-    require(idx.magic.sameElements(BlockMagicRootIndex), "missing root index")
-    val ib = ByteBuffer.wrap(idx.payload)
+    val ib = ByteBuffer.wrap(rootIndex(r, trailer).payload)
     ib.getLong; ib.getInt // first entry's offset + on-disk size
     val keyLen = readHadoopVLong(ib).toInt
     val firstKey = new Array[Byte](keyLen); ib.get(firstKey)
-    val fi = readBlock(r, trailer.fileInfoOffset, AnyPrevOffset,
-      trailer.compressionCodec)
-    require(fi.magic.sameElements(BlockMagicFileInfo), "missing file info")
-    val lastKey = parseFileInfo(fi.payload).getOrElse("hfile.LASTKEY",
+    val lastKey = fileInfo(r, trailer).getOrElse("hfile.LASTKEY",
       throw new IllegalStateException("file info lacks hfile.LASTKEY"))
     Some((rowkeyOfKey(firstKey), rowkeyOfKey(lastKey)))
   }
@@ -352,9 +362,6 @@ object HFileReader {
   def validate(r: RandomRead): FileStats = {
     val trailer = readTrailer(r)
     val layout = cellLayoutOf(r, trailer)
-    // walk every block in the scanned section (data + inline bloom
-    // chunks + meta blocks)
-    var pos = 0L
     var prev = -1L
     var nBlocks = 0
     var nCells = 0L
@@ -362,8 +369,7 @@ object HFileReader {
     var firstKey = ""; var lastKey = ""
     val blockStarts = ArrayBuffer[(Long, Int, Array[Byte])]()
     val metaStarts = ArrayBuffer[(Long, Int)]()
-    while (pos < trailer.loadOnOpenOffset) {
-      val b = readBlock(r, pos, prev, trailer.compressionCodec)
+    sectionBlocks(r, trailer).foreach { b =>
       if (isDataMagic(b.magic)) {
         var blockFirstKey: Array[Byte] = null
         var last: HCell = null
@@ -377,20 +383,19 @@ object HFileReader {
           last = c
           nCells += 1
         }
-        blockStarts += ((pos, b.onDiskSizeWithHeader, blockFirstKey))
+        blockStarts += ((b.offset, b.onDiskSizeWithHeader, blockFirstKey))
         nBlocks += 1
       } else if (b.magic.sameElements(BlockMagicBloomChunk)) {
         nBloomChunks += 1
       } else if (b.magic.sameElements(BlockMagicMeta)) {
-        metaStarts += ((pos, b.onDiskSizeWithHeader))
+        metaStarts += ((b.offset, b.onDiskSizeWithHeader))
       } else if (b.magic.sameElements(BlockMagicLeafIndex) ||
           b.magic.sameElements(BlockMagicIntermediateIndex)) {
         // sub-root index blocks; verified via the root descent below
       } else {
-        throw new IllegalStateException(s"unexpected block magic at $pos")
+        throw new IllegalStateException(s"unexpected block magic at ${b.offset}")
       }
-      prev = pos
-      pos += b.onDiskSizeWithHeader
+      prev = b.offset
     }
     // dataIndexCount counts ROOT entries: data blocks when single-level,
     // top-level index blocks otherwise (checked against the root below)
@@ -401,13 +406,11 @@ object HFileReader {
       s"$nCells cells != trailer entry_count ${trailer.entryCount}")
 
     // root index block + multi-level descent down to the data entries
-    val idx = readBlock(r, trailer.loadOnOpenOffset, prev,
-      trailer.compressionCodec)
-    require(idx.magic.sameElements(BlockMagicRootIndex), "missing root index")
+    val idx = rootIndex(r, trailer, prev)
     require(parseIndexEntries(idx.payload).length == trailer.dataIndexCount,
       "root entry count != trailer data_index_count")
-    val dataEntries = collectDataEntries(r, idx.payload,
-      trailer.numDataIndexLevels, trailer.compressionCodec)
+    val dataEntries = coveringBlocks(idx, trailer.numDataIndexLevels,
+      None, None, readBlock(r, _, AnyPrevOffset, trailer.compressionCodec))
     var nIdx = 0
     dataEntries.foreach { case (off, size, key) =>
       val (expOff, expSize, expKey) = blockStarts(nIdx)
@@ -420,31 +423,21 @@ object HFileReader {
 
     // root META index block (always present; entries point at the META
     // blocks seen in the body walk)
-    val metaOffset = trailer.loadOnOpenOffset + idx.onDiskSizeWithHeader
-    val metaIdx = readBlock(r, metaOffset, trailer.loadOnOpenOffset,
-      trailer.compressionCodec)
-    require(metaIdx.magic.sameElements(BlockMagicRootIndex),
-      "missing root meta index")
-    val metaEntries = parseMetaIndex(metaIdx.payload)
+    val metaEntries = metaIndex(r, trailer, idx, trailer.loadOnOpenOffset)
     require(metaEntries.size == metaStarts.size,
       s"meta index lists ${metaEntries.size} blocks, ${metaStarts.size} present")
     metaEntries.values.zip(metaStarts).foreach { case ((off, size), (eo, es)) =>
       require(off == eo && size == es, "meta index entry offset/size mismatch")
     }
     // bloom meta (when present) must agree with the chunks actually seen
-    metaEntries.get(HFile.BloomMetaName).foreach { case (off, _) =>
-      val bm = readBlock(r, off, AnyPrevOffset, trailer.compressionCodec)
-      require(bm.magic.sameElements(BlockMagicMeta), "bloom meta magic")
-      val chunks = parseBloomMeta(bm.payload)
+    bloomChunks(r, trailer, metaEntries).foreach { chunks =>
       require(chunks.length == nBloomChunks,
         s"bloom meta lists ${chunks.length} chunks, $nBloomChunks present")
     }
 
     // file info block
-    val fi = readBlock(r, trailer.fileInfoOffset, metaOffset,
-      trailer.compressionCodec)
-    require(fi.magic.sameElements(BlockMagicFileInfo), "missing file info")
-    val info = parseFileInfo(fi.payload)
+    val info = fileInfo(r, trailer,
+      trailer.loadOnOpenOffset + idx.onDiskSizeWithHeader)
     r.close()
     FileStats(nBlocks, nCells, nIdx, info, firstKey, lastKey, nBloomChunks)
   }
@@ -453,18 +446,9 @@ object HFileReader {
     * insertion-ordered.
     */
   private def parseMetaIndex(payload: Array[Byte])
-      : scala.collection.SeqMap[String, (Long, Int)] = {
-    val ib = ByteBuffer.wrap(payload)
-    val out = scala.collection.mutable.LinkedHashMap[String, (Long, Int)]()
-    while (ib.remaining() > 0) {
-      val off = ib.getLong
-      val size = ib.getInt
-      val nameLen = readHadoopVLong(ib).toInt
-      val name = new Array[Byte](nameLen); ib.get(name)
-      out += new String(name, "UTF-8") -> ((off, size))
-    }
-    out
-  }
+      : scala.collection.SeqMap[String, (Long, Int)] =
+    scala.collection.mutable.LinkedHashMap.from(parseIndexEntries(payload)
+      .map { case (off, size, name) => new String(name, "UTF-8") -> ((off, size)) })
 
   /** Bloom meta payload → (chunkOffset, chunkOnDiskSize, firstRowkey)
     * per chunk, in key order.
@@ -477,12 +461,65 @@ object HFileReader {
     buf.getLong // totalKeys
     buf.getInt  // chunkKeys
     val n = buf.getInt
-    Array.fill(n) {
-      val off = buf.getLong
-      val size = buf.getInt
-      val rowLen = readHadoopVLong(buf).toInt
-      val row = new Array[Byte](rowLen); buf.get(row)
-      (off, size, row)
+    val chunks = parseIndexEntries(payload, buf.position())
+    require(chunks.length == n, s"bloom meta lists $n chunks, holds ${chunks.length}")
+    chunks
+  }
+
+  /** Root data index block: the first block of the load-on-open section. */
+  private def rootIndex(r: RandomRead, trailer: Trailer,
+                        prev: Long = AnyPrevOffset): Block = {
+    val root = readBlock(r, trailer.loadOnOpenOffset, prev,
+      trailer.compressionCodec)
+    require(root.magic.sameElements(BlockMagicRootIndex), "missing root index")
+    root
+  }
+
+  /** The root meta index, the block right after `root`: meta block name
+    * → (offset, onDiskSizeWithHeader).
+    */
+  private def metaIndex(r: RandomRead, trailer: Trailer, root: Block,
+                        prev: Long = AnyPrevOffset)
+      : scala.collection.SeqMap[String, (Long, Int)] = {
+    val metaIdx = readBlock(r,
+      trailer.loadOnOpenOffset + root.onDiskSizeWithHeader, prev,
+      trailer.compressionCodec)
+    require(metaIdx.magic.sameElements(BlockMagicRootIndex),
+      "missing root meta index")
+    parseMetaIndex(metaIdx.payload)
+  }
+
+  /** The row bloom's chunk table `(offset, size, firstRowkey)` from the
+    * bloom meta block the meta index names; None when the file carries
+    * no bloom.
+    */
+  private def bloomChunks(r: RandomRead, trailer: Trailer,
+                          metaEntries: scala.collection.Map[String, (Long, Int)])
+      : Option[Array[(Long, Int, Array[Byte])]] =
+    metaEntries.get(HFile.BloomMetaName).map { case (off, _) =>
+      val bm = readBlock(r, off, AnyPrevOffset, trailer.compressionCodec)
+      require(bm.magic.sameElements(BlockMagicMeta), "bloom meta magic")
+      parseBloomMeta(bm.payload)
+    }
+
+  /** Bloom verdict for `rowkey` against its owning chunk — the last whose
+    * firstRowkey <= key (chunks partition the sorted key stream into
+    * contiguous ranges); `block` loads a block by offset.
+    */
+  private def bloomMayContain(chunks: Array[(Long, Int, Array[Byte])],
+                              rowkey: Array[Byte],
+                              block: Long => Block): Boolean = {
+    var lo = 0; var hi = chunks.length - 1; var owner = -1
+    while (lo <= hi) {
+      val mid = (lo + hi) >>> 1
+      if (java.util.Arrays.compareUnsigned(chunks(mid)._3, rowkey) <= 0) {
+        owner = mid; lo = mid + 1
+      } else hi = mid - 1
+    }
+    owner >= 0 && {
+      val cb = block(chunks(owner)._1)
+      require(cb.magic.sameElements(BlockMagicBloomChunk), "bloom chunk magic")
+      HFile.bloomMayContain(cb.payload, rowkey)
     }
   }
 
@@ -494,46 +531,21 @@ object HFileReader {
   def rowkeyMayContain(r: RandomRead, rowkey: Array[Byte]): Option[Boolean] = {
     val trailer = readTrailer(r)
     if (trailer.entryCount == 0) return Some(false)
-    val idx = readBlock(r, trailer.loadOnOpenOffset, AnyPrevOffset,
-      trailer.compressionCodec)
-    require(idx.magic.sameElements(BlockMagicRootIndex), "missing root index")
-    val metaIdx = readBlock(r,
-      trailer.loadOnOpenOffset + idx.onDiskSizeWithHeader, AnyPrevOffset,
-      trailer.compressionCodec)
-    require(metaIdx.magic.sameElements(BlockMagicRootIndex),
-      "missing root meta index")
-    parseMetaIndex(metaIdx.payload).get(HFile.BloomMetaName).map {
-      case (off, _) =>
-        val bm = readBlock(r, off, AnyPrevOffset, trailer.compressionCodec)
-        require(bm.magic.sameElements(BlockMagicMeta), "bloom meta magic")
-        val chunks = parseBloomMeta(bm.payload)
-        // the owning chunk is the last whose firstRowkey <= key (chunks
-        // partition the sorted key stream into contiguous ranges)
-        var lo = 0; var hi = chunks.length - 1; var owner = -1
-        while (lo <= hi) {
-          val mid = (lo + hi) >>> 1
-          if (java.util.Arrays.compareUnsigned(chunks(mid)._3, rowkey) <= 0) {
-            owner = mid; lo = mid + 1
-          } else hi = mid - 1
-        }
-        owner >= 0 && {
-          val (coff, _, _) = chunks(owner)
-          val cb = readBlock(r, coff, AnyPrevOffset, trailer.compressionCodec)
-          require(cb.magic.sameElements(BlockMagicBloomChunk),
-            "bloom chunk magic")
-          HFile.bloomMayContain(cb.payload, rowkey)
-        }
-    }
+    val metaEntries = metaIndex(r, trailer, rootIndex(r, trailer))
+    bloomChunks(r, trailer, metaEntries).map(bloomMayContain(_, rowkey,
+      readBlock(r, _, AnyPrevOffset, trailer.compressionCodec)))
   }
 
   // ---- multi-level index -------------------------------------------------
 
-  /** `(offset, onDiskSizeWithHeader, firstKey)` triples of one index
-    * block payload (any level — the entry shape is uniform).
+  /** `(offset, onDiskSizeWithHeader, key)` entries from `from` to the end
+    * of `payload` — the one entry shape of every data index block (any
+    * level, keyed by first cell key), the root meta index (keyed by
+    * name) and the bloom meta's chunk table (keyed by first rowkey).
     */
-  private def parseIndexEntries(payload: Array[Byte])
+  private def parseIndexEntries(payload: Array[Byte], from: Int = 0)
       : Array[(Long, Int, Array[Byte])] = {
-    val ib = ByteBuffer.wrap(payload)
+    val ib = ByteBuffer.wrap(payload, from, payload.length - from)
     val out = ArrayBuffer[(Long, Int, Array[Byte])]()
     while (ib.remaining() > 0) {
       val off = ib.getLong
@@ -545,23 +557,6 @@ object HFileReader {
     out.toArray
   }
 
-  /** Full descent: every data-block entry under an index payload,
-    * verifying sub-level block magics on the way down.
-    */
-  private def collectDataEntries(r: RandomRead, payload: Array[Byte],
-                                 levels: Int, codec: Int)
-      : Array[(Long, Int, Array[Byte])] = {
-    val entries = parseIndexEntries(payload)
-    if (levels <= 1) entries
-    else entries.flatMap { case (off, _, _) =>
-      val b = readBlock(r, off, AnyPrevOffset, codec)
-      require(b.magic.sameElements(BlockMagicLeafIndex) ||
-        b.magic.sameElements(BlockMagicIntermediateIndex),
-        s"expected index block at $off")
-      collectDataEntries(r, b.payload, levels - 1, codec)
-    }
-  }
-
   /** Data blocks whose key range may intersect `[lower, upper]`
     * (inclusive rowkey bounds, either side optional), found by descending
     * the index — O(levels × log fanout) block reads, not a file walk. The
@@ -570,43 +565,56 @@ object HFileReader {
   private[sources] def dataBlocksInRange(r: RandomRead,
                                          lower: Option[Array[Byte]],
                                          upper: Option[Array[Byte]])
-      : Seq[(Long, Int)] = {
-    val trailer = readTrailer(r)
-    if (trailer.entryCount == 0) return Nil
-    val root = readBlock(r, trailer.loadOnOpenOffset, AnyPrevOffset,
-      trailer.compressionCodec)
-    require(root.magic.sameElements(BlockMagicRootIndex), "missing root index")
+      : Seq[(Long, Int)] =
+    dataBlocksInRange(r, readTrailer(r), lower, upper)
 
-    // an entry covers [firstRow_i, firstRow_{i+1}] (inclusive right edge:
-    // a row's cells can span the boundary); keep i when that span can
-    // intersect [lower, upper]
-    def select(entries: Array[(Long, Int, Array[Byte])])
-        : Array[(Long, Int, Array[Byte])] =
+  private def dataBlocksInRange(r: RandomRead, trailer: Trailer,
+                                lower: Option[Array[Byte]],
+                                upper: Option[Array[Byte]]): Seq[(Long, Int)] =
+    if (trailer.entryCount == 0) Nil
+    else coveringBlocks(rootIndex(r, trailer), trailer.numDataIndexLevels,
+      lower, upper, readBlock(r, _, AnyPrevOffset, trailer.compressionCodec))
+        .map { case (off, size, _) => (off, size) }
+
+  /** The one index descent, under [[validate]] (unbounded),
+    * [[dataBlocksInRange]] and [[multiGet]] (a point get is the `[k, k]`
+    * range): from the root, keep every entry whose span may intersect
+    * `[lower, upper]` — entry i covers [firstRow_i, firstRow_{i+1}],
+    * inclusive on the right because a row's cells can span a block
+    * boundary — verifying each sub-level's index magic on the way down.
+    * Returns the data entries `(offset, onDiskSizeWithHeader, firstKey)`;
+    * `block` loads an index block by offset.
+    */
+  private def coveringBlocks(root: Block, levels: Int,
+                             lower: Option[Array[Byte]],
+                             upper: Option[Array[Byte]],
+                             block: Long => Block)
+      : Seq[(Long, Int, Array[Byte])] = {
+    def select(payload: Array[Byte]): Array[(Long, Int, Array[Byte])] = {
+      val entries = parseIndexEntries(payload)
       entries.zipWithIndex.filter { case ((_, _, key), i) =>
-        val row = rowkeyOfKey(key)
-        val belowUpper = upper.forall(u =>
-          java.util.Arrays.compareUnsigned(row, u) <= 0)
-        val aboveLower = lower.forall { l =>
-          i == entries.length - 1 ||
-            java.util.Arrays.compareUnsigned(
-              rowkeyOfKey(entries(i + 1)._3), l) >= 0
-        }
-        belowUpper && aboveLower
+        upper.forall(u =>
+          java.util.Arrays.compareUnsigned(rowkeyOfKey(key), u) <= 0) &&
+          lower.forall { l =>
+            i == entries.length - 1 ||
+              java.util.Arrays.compareUnsigned(
+                rowkeyOfKey(entries(i + 1)._3), l) >= 0
+          }
       }.map(_._1)
-
-    var level = select(parseIndexEntries(root.payload))
-    var depth = trailer.numDataIndexLevels
+    }
+    var level = select(root.payload)
+    var depth = levels
     while (depth > 1) {
+      val magic = if (depth == 2) BlockMagicLeafIndex
+        else BlockMagicIntermediateIndex
       level = level.flatMap { case (off, _, _) =>
-        val b = readBlock(r, off, AnyPrevOffset, trailer.compressionCodec)
-        require(b.magic.sameElements(BlockMagicLeafIndex) ||
-          b.magic.sameElements(BlockMagicIntermediateIndex),
-          s"expected index block at $off")
-        select(parseIndexEntries(b.payload))
+        val b = block(off)
+        require(b.magic.sameElements(magic), s"expected index block at $off")
+        select(b.payload)
       }
       depth -= 1
     }
-    level.map { case (off, size, _) => (off, size) }.toSeq
+    level.toSeq
   }
 
   /** Batched point-GETs against one open file — the multi-get primitive a
@@ -620,29 +628,12 @@ object HFileReader {
     if (keys0.isEmpty) return Nil
     val trailer = readTrailer(r)
     if (trailer.entryCount == 0) return Nil
-    val codec = trailer.compressionCodec
     val layout = cellLayoutOf(r, trailer)
-    val root = readBlock(r, trailer.loadOnOpenOffset, AnyPrevOffset, codec)
-    require(root.magic.sameElements(BlockMagicRootIndex), "missing root index")
-    val metaIdx = readBlock(r,
-      trailer.loadOnOpenOffset + root.onDiskSizeWithHeader, AnyPrevOffset, codec)
-    require(metaIdx.magic.sameElements(BlockMagicRootIndex),
-      "missing root meta index")
-    val bloomChunks = parseMetaIndex(metaIdx.payload).get(HFile.BloomMetaName)
-      .map { case (off, _) =>
-        val bm = readBlock(r, off, AnyPrevOffset, codec)
-        require(bm.magic.sameElements(BlockMagicMeta), "bloom meta magic")
-        parseBloomMeta(bm.payload)
-      }
+    val root = rootIndex(r, trailer)
+    val chunks = bloomChunks(r, trailer, metaIndex(r, trailer, root))
     val blockCache = scala.collection.mutable.Map[Long, Block]()
-    def cachedBlock(off: Long): Block =
-      blockCache.getOrElseUpdate(off, readBlock(r, off, AnyPrevOffset, codec))
-    def cachedPayload(off: Long, wantMagic: Array[Byte]): Array[Byte] = {
-      val b = cachedBlock(off)
-      require(b.magic.sameElements(wantMagic),
-        s"unexpected block magic at $off")
-      b.payload
-    }
+    def cachedBlock(off: Long): Block = blockCache.getOrElseUpdate(off,
+      readBlock(r, off, AnyPrevOffset, trailer.compressionCodec))
     def cmp(a: Array[Byte], b: Array[Byte]) =
       java.util.Arrays.compareUnsigned(a, b)
 
@@ -653,46 +644,13 @@ object HFileReader {
         if (acc.nonEmpty && cmp(acc.last, k) == 0) acc else acc :+ k
       }
     keys.flatMap { k =>
-      val bloomPass = bloomChunks.forall { chunks =>
-        var lo = 0; var hi = chunks.length - 1; var owner = -1
-        while (lo <= hi) {
-          val mid = (lo + hi) >>> 1
-          if (cmp(chunks(mid)._3, k) <= 0) { owner = mid; lo = mid + 1 }
-          else hi = mid - 1
-        }
-        owner >= 0 && HFile.bloomMayContain(
-          cachedPayload(chunks(owner)._1, BlockMagicBloomChunk), k)
-      }
-      if (!bloomPass) Nil
-      else {
-        // descend every level keeping each entry that may cover k: its own
-        // first row is <= k and the NEXT entry's first row is >= k (>=,
-        // not > — a row's cells can span a block boundary, leaving the
-        // key's earlier cells in the preceding block)
-        def covering(payload: Array[Byte]): Array[(Long, Int, Array[Byte])] = {
-          val entries = parseIndexEntries(payload)
-          entries.zipWithIndex.filter { case ((_, _, key), i) =>
-            cmp(rowkeyOfKey(key), k) <= 0 &&
-              (i == entries.length - 1 ||
-                cmp(rowkeyOfKey(entries(i + 1)._3), k) >= 0)
-          }.map(_._1)
-        }
-        var level = covering(root.payload)
-        var depth = trailer.numDataIndexLevels
-        while (depth > 1) {
-          val magic = if (depth == 2) BlockMagicLeafIndex
-            else BlockMagicIntermediateIndex
-          level = level.flatMap { case (off, _, _) =>
-            covering(cachedPayload(off, magic))
-          }
-          depth -= 1
-        }
-        level.toSeq.flatMap { case (off, _, _) =>
-          val b = cachedBlock(off)
-          require(isDataMagic(b.magic), s"unexpected block magic at $off")
-          parseDataBlock(b.magic, b.payload, layout)
-            .filter(c => cmp(c.rowkey, k) == 0)
-        }
+      if (!chunks.forall(bloomMayContain(_, k, cachedBlock))) Nil
+      else coveringBlocks(root, trailer.numDataIndexLevels, Some(k), Some(k),
+          cachedBlock).flatMap { case (off, _, _) =>
+        val b = cachedBlock(off)
+        require(isDataMagic(b.magic), s"unexpected block magic at $off")
+        parseDataBlock(b.magic, b.payload, layout)
+          .filter(c => cmp(c.rowkey, k) == 0)
       }
     }
   }
@@ -706,9 +664,9 @@ object HFileReader {
     */
   def scanRange(r: RandomRead, lower: Option[Array[Byte]],
                 upper: Option[Array[Byte]]): Iterator[HCell] = {
-    val blocks = dataBlocksInRange(r, lower, upper)
-    if (blocks.isEmpty) { r.close(); return Iterator.empty }
     val trailer = readTrailer(r)
+    val blocks = dataBlocksInRange(r, trailer, lower, upper)
+    if (blocks.isEmpty) { r.close(); return Iterator.empty }
     val layout = cellLayoutOf(r, trailer)
     val it = blocks.iterator.flatMap { case (off, _) =>
       val b = readBlock(r, off, AnyPrevOffset, trailer.compressionCodec)

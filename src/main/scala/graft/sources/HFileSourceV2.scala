@@ -4,7 +4,6 @@ import java.util
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
@@ -94,38 +93,22 @@ object HFileSource {
   def bucketOf(file: String): Int = {
     val parent = new Path(file).getParent
     if (parent == null) -1
-    else "^bucket=(-?\\d+)$".r.findFirstMatchIn(parent.getName)
+    else BucketDir.findFirstMatchIn(parent.getName)
       .map(_.group(1).toInt).getOrElse(-1)
   }
+  private val BucketDir = "^bucket=(-?\\d+)$".r
 
-  private[sources] def hadoopConfMap(spark: SparkSession): Map[String, String] = {
-    val it = spark.sparkContext.hadoopConfiguration.iterator()
-    val m = Map.newBuilder[String, String]
-    while (it.hasNext) { val e = it.next(); m += e.getKey -> e.getValue }
-    m.result()
-  }
-
-  private[sources] def confOf(m: Map[String, String]): Configuration = {
-    val conf = new Configuration(false)
-    m.foreach { case (k, v) => conf.set(k, v) }
-    conf
-  }
-
-  private[sources] def openRandomRead(file: String,
-                                      conf: Configuration): HFileReader.RandomRead = {
-    val p = new Path(file)
-    val fs = p.getFileSystem(conf)
-    val len = fs.getFileStatus(p).getLen
-    val in = fs.open(p)
-    new HFileReader.RandomRead {
-      def length: Long = len
-      def readFully(pos: Long, n: Int): Array[Byte] = {
-        val buf = new Array[Byte](n)
-        in.readFully(pos, buf)
-        buf
-      }
-      override def close(): Unit = in.close()
+  /** Whether a file of bucket `b` can satisfy `f`: exact `bucket`
+    * filters decide from the `bucket=N` directory name; anything else
+    * may match.
+    */
+  private[sources] def bucketMayMatch(b: Int, f: Filter): Boolean = f match {
+    case EqualTo("bucket", v: Int) => b == v
+    case In("bucket", vs) => vs.exists {
+      case v: Int => v == b
+      case _      => true
     }
+    case _ => true
   }
 }
 
@@ -215,10 +198,10 @@ class HFileScanBuilder(path: String) extends ScanBuilder
   override def build(): Scan = pushedAgg match {
     case Some((byBucket, funcs)) =>
       new HFileStatsScan(path, pushed, byBucket, funcs,
-        HFileSource.hadoopConfMap(SparkSession.active))
+        HFileDir.confMap(SparkSession.active))
     case None =>
       new HFileScan(path, required, pushed,
-        HFileSource.hadoopConfMap(SparkSession.active))
+        HFileDir.confMap(SparkSession.active))
   }
 }
 
@@ -279,77 +262,29 @@ class HFileStatsScan(path: String, pushed: Array[Filter], byBucket: Boolean,
       s"[${funcs.mkString(",")}${if (byBucket) " by bucket" else ""}]"
 
   override def rows(): Array[InternalRow] = {
-    val conf = confOf(confMap)
-    val root = new Path(path)
-    val fs = root.getFileSystem(conf)
-    val listing = Option(fs.globStatus(new Path(root, "bucket=*/*.hfile")))
-      .getOrElse(Array.empty)
-    val files = listing.map(_.getPath.toString)
+    val dir = HFileDir.list(path, HFileDir.confOf(confMap))
     // same path semantics as the row scan: empty-but-existing dir is an
     // empty aggregate input, a missing path is an error
-    if (files.isEmpty)
-      require(fs.exists(root), s"no HFiles found under $path")
-    val surviving = files
-      .map(f => (f, bucketOf(f)))
-      .filter { case (_, b) =>
-        pushed.forall {
-          case EqualTo("bucket", v: Int) => b == v
-          case In("bucket", vs)          => vs.exists { case v: Int => v == b; case _ => true }
-          case _                         => true
-        }
-      }
-    val needRange = funcs.exists(f => f == "min" || f == "max")
-    // (bucket, entryCount, range) per file — free when the `_manifest`
-    // sidecar matches the listing, 2-3 pooled short reads per file when not
-    val fromManifest: Option[Seq[(Int, Long, Option[(Array[Byte], Array[Byte])])]] =
-      HFileManifest.readValid(fs, root, listing.toSeq).map { entries =>
-        val survivingSet = surviving.map(_._1).toSet
-        listing.map(_.getPath.toString).zip(entries).collect {
-          case (f, e) if survivingSet.contains(f) =>
-            (e.bucket, e.entryCount,
-              if (e.minHex.isEmpty) None else Some((e.minKey, e.maxKey)))
-        }.toSeq
-      }
-    val stats: Seq[(Int, Long, Option[(Array[Byte], Array[Byte])])] =
-      fromManifest.getOrElse {
-        if (surviving.isEmpty) Nil
-        else {
-          val pool = java.util.concurrent.Executors.newFixedThreadPool(
-            math.min(16, surviving.length))
-          try surviving.toSeq.map { case (f, b) =>
-            pool.submit(
-              new java.util.concurrent.Callable[(Int, Long, Option[(Array[Byte], Array[Byte])])] {
-                def call() = {
-                  val r = openRandomRead(f, conf)
-                  try {
-                    val n = HFileReader.readTrailer(r).entryCount
-                    val range = if (needRange) HFileReader.rowkeyRange(r) else None
-                    (b, n, range)
-                  } finally r.close()
-                }
-              })
-          }.map(_.get())
-          finally pool.shutdown()
-        }
-      }
-    def cmp(a: Array[Byte], b: Array[Byte]) =
-      java.util.Arrays.compareUnsigned(a, b)
-    def rowOf(bucket: Option[Int],
-              group: Seq[(Int, Long, Option[(Array[Byte], Array[Byte])])]): InternalRow = {
-      val ranges = group.flatMap(_._3)
+    if (dir.files.isEmpty)
+      require(dir.fs.exists(dir.root), s"no HFiles found under $path")
+    // (bucket, entryCount, range) per surviving file — free when the
+    // `_manifest` sidecar matches the listing, 1-3 pooled short reads per
+    // file when not
+    val stats = dir.stats(needRange = funcs.exists(f => f == "min" || f == "max"),
+      keep = b => pushed.forall(bucketMayMatch(b, _)))
+    val unsigned = Ordering.fromLessThan[Array[Byte]](
+      java.util.Arrays.compareUnsigned(_, _) < 0)
+    def rowOf(bucket: Option[Int], group: Seq[HFileDir.FileStat]): InternalRow = {
+      val ranges = group.flatMap(_.range)
       val aggVals: Seq[Any] = funcs.map {
-        case "count" => group.map(_._2).sum
-        case "min" =>
-          if (ranges.isEmpty) null else ranges.map(_._1).minBy(identity[Array[Byte]])(
-            Ordering.fromLessThan[Array[Byte]]((a, b) => cmp(a, b) < 0))
-        case "max" =>
-          if (ranges.isEmpty) null else ranges.map(_._2).maxBy(identity[Array[Byte]])(
-            Ordering.fromLessThan[Array[Byte]]((a, b) => cmp(a, b) < 0))
+        case "count" => group.map(_.entryCount).sum
+        case "min" => if (ranges.isEmpty) null else ranges.map(_._1).min(unsigned)
+        case "max" => if (ranges.isEmpty) null else ranges.map(_._2).max(unsigned)
       }
       new GenericInternalRow((bucket.toSeq ++ aggVals).toArray[Any])
     }
     if (byBucket)
-      stats.groupBy(_._1).toSeq.sortBy(_._1)
+      stats.groupBy(_.bucket).toSeq.sortBy(_._1)
         .map { case (b, g) => rowOf(Some(b), g) }.toArray
     else Array(rowOf(None, stats))
   }
@@ -385,11 +320,7 @@ class HFileScan(path: String, required: StructType, pushed: Array[Filter],
       mayMatch(bucket, range, l) && mayMatch(bucket, range, r)
     case Or(l, r) =>
       mayMatch(bucket, range, l) || mayMatch(bucket, range, r)
-    case EqualTo("bucket", v: Int) => bucket == v
-    case In("bucket", vs) => vs.exists {
-      case v: Int => v == bucket
-      case _      => true
-    }
+    case EqualTo("bucket", _: Int) | In("bucket", _) => bucketMayMatch(bucket, f)
     case _ => range match {
       case None => false // empty file: no rowkey can match
       case Some((first, last)) => f match {
@@ -405,16 +336,11 @@ class HFileScan(path: String, required: StructType, pushed: Array[Filter],
   }
 
   override def planInputPartitions(): Array[InputPartition] = {
-    val conf = confOf(confMap)
-    val root = new Path(path)
-    val fs = root.getFileSystem(conf)
-    val listing = Option(fs.globStatus(new Path(root, "bucket=*/*.hfile")))
-      .getOrElse(Array.empty)
-    val files = listing.map(_.getPath.toString)
-    if (files.isEmpty) {
+    val dir = HFileDir.list(path, HFileDir.confOf(confMap))
+    if (dir.files.isEmpty) {
       // an existing-but-empty directory is a valid empty scan (count() = 0,
       // like every other Spark source); only a missing path is an error
-      require(fs.exists(root), s"no HFiles found under $path")
+      require(dir.fs.exists(dir.root), s"no HFiles found under $path")
       return Array.empty
     }
     // anything touching rowkey (leaf OR tree) must see the file's key
@@ -423,78 +349,35 @@ class HFileScan(path: String, required: StructType, pushed: Array[Filter],
       pushed.partition(!_.references.contains("rowkey"))
     // directory-name pruning first: costs nothing, avoids the trailer
     // reads for buckets that can't match
-    val bucketSurvivors = files
-      .map(f => (f, bucketOf(f)))
-      .filter { case (_, b) => bucketFilters.forall(mayMatch(b, None, _)) }
+    val bucketOk = (b: Int) => bucketFilters.forall(mayMatch(b, None, _))
     val survivors =
-      if (rowkeyFilters.isEmpty) bucketSurvivors
+      if (rowkeyFilters.isEmpty)
+        dir.paths.map(f => (f, bucketOf(f))).filter(p => bucketOk(p._2))
       else {
-        val eqKeys = rowkeyFilters.collect {
-          case EqualTo("rowkey", v: Array[Byte]) => v
-        }
         // key ranges come free from the `_manifest` sidecar when it
         // matches the listing; only its absence costs 3 short reads
         // (trailer / first index key / LASTKEY) per file
-        val manifestRanges: Option[Map[String, Option[(Array[Byte], Array[Byte])]]] =
-          HFileManifest.readValid(fs, root, listing.toSeq).map { entries =>
-            listing.map(_.getPath.toString).zip(entries.map { e =>
-              if (e.minHex.isEmpty) None else Some((e.minKey, e.maxKey))
-            }).toMap
-          }
-        manifestRanges match {
-          case Some(ranges) =>
-            val rangeSurvivors = bucketSurvivors.filter { case (f, b) =>
-              rowkeyFilters.forall(mayMatch(b, ranges(f), _))
-            }
-            if (eqKeys.isEmpty) rangeSurvivors
-            // point-GETs still consult the row bloom, but only for the
-            // (few) files whose range already covers the key
-            else pooledPrune(rangeSurvivors, conf, rangeChecked = true,
-              rowkeyFilters, eqKeys)
-          case None =>
-            // no (valid) sidecar: range pruning needs per-file short reads;
-            // at 100k files serial driver IO would gate the whole job, so
-            // fan them over a bounded pool (the parquet parallel-footer
-            // analogue)
-            pooledPrune(bucketSurvivors, conf, rangeChecked = false,
-              rowkeyFilters, eqKeys)
+        val inRange = dir.stats(keep = bucketOk)
+          .filter(s => rowkeyFilters.forall(mayMatch(s.bucket, s.range, _)))
+          .map(s => (s.file, s.bucket))
+        val eqKeys = rowkeyFilters.collect {
+          case EqualTo("rowkey", v: Array[Byte]) => v
+        }
+        // point-GETs additionally consult the row bloom of the (few)
+        // files whose key range covers the key — files that don't
+        // contain it are dropped here, not in a task
+        if (eqKeys.isEmpty) inRange
+        else {
+          inRange.zip(HFileDir.pooled(inRange) { case (f, _) =>
+            val r = HFileDir.open(f, dir.conf)
+            try eqKeys.forall(k =>
+              HFileReader.rowkeyMayContain(r, k).getOrElse(true))
+            finally r.close()
+          }).collect { case (p, true) => p }
         }
       }
     survivors.map { case (f, b) => HFileInputPartition(f, b): InputPartition }
-  }
-
-  /** Per-file short-read pruning over a bounded pool: key-range checks
-    * (unless the caller already did them from the sidecar) plus the row
-    * bloom for point-GET keys.
-    */
-  private def pooledPrune(candidates: Array[(String, Int)],
-                          conf: Configuration, rangeChecked: Boolean,
-                          rowkeyFilters: Array[Filter],
-                          eqKeys: Array[Array[Byte]]): Array[(String, Int)] = {
-    if (candidates.isEmpty) return candidates
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(16, candidates.length))
-    try {
-      candidates.map { case (f, b) =>
-        pool.submit(new java.util.concurrent.Callable[Option[(String, Int)]] {
-          def call(): Option[(String, Int)] = {
-            val r = openRandomRead(f, conf)
-            try {
-              val rangeOk = rangeChecked || {
-                val range = HFileReader.rowkeyRange(r)
-                rowkeyFilters.forall(mayMatch(b, range, _))
-              }
-              // point-GETs additionally consult the row bloom — files
-              // whose key range covers the key but don't contain it
-              // are dropped here, not in a task
-              val bloomOk = rangeOk && eqKeys.forall(k =>
-                HFileReader.rowkeyMayContain(r, k).getOrElse(true))
-              if (bloomOk) Some((f, b)) else None
-            } finally r.close()
-          }
-        })
-      }.flatMap(_.get())
-    } finally pool.shutdown()
+      .toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory = {
@@ -536,31 +419,6 @@ class HFileScan(path: String, required: StructType, pushed: Array[Filter],
   }
 }
 
-// ---- DSv2 write path ------------------------------------------------------
-
-/** `df.write.format("graft-hfile").mode(...).save(dir)` — the write twin of
-  * the read path, so the two surfaces are symmetric.
-  *
-  * Input columns: `bucket int, rowkey binary, family string,
-  * qualifier string, ts long, value binary` and optionally
-  * `key_type int` (defaults to Put). Options: `blockSize`,
-  * `compression` (`none`/`gz`/`snappy`/`lz4`/`zstd`), `encoding`
-  * (`none`/`prefix`/`diff`/`fast_diff` data block encoding), `bloom`,
-  * `bloomChunkKeys`, `maxFileBytes`.
-  *
-  * Instead of pre-shuffling like [[graft.operators.BulkLoad.writeHFiles]],
-  * the write declares what it needs via
-  * [[RequiresDistributionAndOrdering]] — range-distributed by
-  * (bucket, rowkey) and fully sorted within partitions (family/qualifier
-  * ascending, ts/key_type descending) — and Spark plans the shuffle+sort
-  * itself (AQE included). Only (bucket, rowkey) distributes: any finer
-  * key in the range partitioning could split one row's cells across a
-  * boundary and produce overlapping files at that rowkey. Each task then streams its sorted run through
-  * one [[HFileWriter]] at a time, rolling on bucket change, writing to
-  * `_inprogress/` temp names and renaming into place at task commit
-  * (first finished attempt wins; output is deterministic, so duplicate
-  * speculative bytes are identical).
-  */
 /** Streaming offset for a tailed bulk-load directory: the highest epoch
   * id delivered so far (-1 = nothing yet). Epoch ids are
   * strictly increasing by construction — plain sinks use the batch id,
@@ -611,7 +469,7 @@ class HFileMicroBatchStream(path: String, required: StructType,
 
   private def fs = {
     val root = new Path(path)
-    (root, root.getFileSystem(confOf(confMap)))
+    (root, root.getFileSystem(HFileDir.confOf(confMap)))
   }
 
   /** `(id, hasComplete, hasConsumed)` per epoch directory. ONE listStatus
@@ -715,20 +573,11 @@ class HFileMicroBatchStream(path: String, required: StructType,
           "(see HFileMicroBatchStream's keep-pace contract)")
     val epochs = states.collect { case (id, true, false) => id }
       .filter(id => id > s && id <= e)
-    val bucketOk: Int => Boolean = b => pushed.forall {
-      case EqualTo("bucket", v: Int) => b == v
-      case In("bucket", vs) => vs.exists {
-        case v: Int => v == b
-        case _      => true
-      }
-      case _ => true // residual filters re-filter rows upstream
-    }
     epochs.sorted.flatMap { id =>
-      Option(f.globStatus(new Path(root, s"epoch=$id/bucket=*/*.hfile")))
-        .getOrElse(Array.empty)
-        .map(st => st.getPath.toString)
+      HFileDir.list(s"$path/epoch=$id", HFileDir.confOf(confMap)).paths
         .map(p => HFileInputPartition(p, bucketOf(p)))
-        .filter(p => bucketOk(p.bucket))
+        // residual filters re-filter rows upstream
+        .filter(p => pushed.forall(bucketMayMatch(p.bucket, _)))
     }.toArray
   }
 
@@ -736,13 +585,38 @@ class HFileMicroBatchStream(path: String, required: StructType,
     new HFileReaderFactory(required, confMap)
 }
 
+// ---- DSv2 write path ------------------------------------------------------
+
+/** `df.write.format("graft-hfile").mode(...).save(dir)` — the write twin of
+  * the read path, so the two surfaces are symmetric.
+  *
+  * Input columns: `bucket int, rowkey binary, family string,
+  * qualifier string, ts long, value binary` and optionally
+  * `key_type int` (defaults to Put). Options: `blockSize`,
+  * `compression` (`none`/`gz`/`snappy`/`lz4`/`zstd`), `encoding`
+  * (`none`/`prefix`/`diff`/`fast_diff` data block encoding), `bloom`,
+  * `bloomChunkKeys`, `maxFileBytes`.
+  *
+  * Instead of pre-shuffling like [[graft.operators.BulkLoad.writeHFiles]],
+  * the write declares what it needs via
+  * [[RequiresDistributionAndOrdering]] — range-distributed by
+  * (bucket, rowkey) and fully sorted within partitions (family/qualifier
+  * ascending, ts/key_type descending) — and Spark plans the shuffle+sort
+  * itself (AQE included). Only (bucket, rowkey) distributes: any finer
+  * key in the range partitioning could split one row's cells across a
+  * boundary and produce overlapping files at that rowkey. Each task then
+  * streams its sorted run through one [[HFileDir.TaskWriter]] — the
+  * same rolling, `_inprogress/` naming and task-end commit as
+  * `writeHFiles` — naming files `part-<queryId8>-PPPPP-SSS` so appends
+  * never collide with existing files.
+  */
 class HFileWriteBuilder(path: String, info: LogicalWriteInfo)
     extends WriteBuilder with SupportsTruncate {
   private var doTruncate = false
   override def truncate(): WriteBuilder = { doTruncate = true; this }
   override def build(): Write =
     new HFileWriteImpl(path, info, doTruncate,
-      HFileSource.hadoopConfMap(SparkSession.active))
+      HFileDir.confMap(SparkSession.active))
 }
 
 class HFileWriteImpl(path: String, info: LogicalWriteInfo, truncate: Boolean,
@@ -752,21 +626,20 @@ class HFileWriteImpl(path: String, info: LogicalWriteInfo, truncate: Boolean,
   private val schema = info.schema()
   // validate the contract on the driver, before any task launches
   HFileWriteImpl.fieldIndexes(schema)
-  private val blockSize = Option(info.options.get("blockSize"))
-    .map(_.toInt).getOrElse(HFile.DefaultBlockSize)
-  private val codec = HFile.codecOf(
-    Option(info.options.get("compression")).getOrElse("none"))
-  // bloom=false disables the row bloom; bloomChunkKeys overrides capacity
-  private val bloomChunkKeys =
-    if (Option(info.options.get("bloom")).exists(_.toLowerCase == "false")) 0
-    else Option(info.options.get("bloomChunkKeys")).map(_.toInt)
-      .getOrElse(HFile.DefaultBloomChunkKeys)
-  private val maxFileBytes = Option(info.options.get("maxFileBytes"))
-    .map(_.toLong).getOrElse(HFile.DefaultMaxFileBytes)
-  // data block encoding name (none / prefix / diff / fast_diff), like the
-  // table-level DATA_BLOCK_ENCODING attribute
-  private val encoding = BlockEncoding.idOf(
-    Option(info.options.get("encoding")).getOrElse("none"))
+  private def opt(name: String): Option[String] = Option(info.options.get(name))
+  private val format = HFileDir.Format(
+    blockSize = opt("blockSize").map(_.toInt).getOrElse(HFile.DefaultBlockSize),
+    codec = HFile.codecOf(opt("compression").getOrElse("none")),
+    // bloom=false disables the row bloom; bloomChunkKeys overrides capacity
+    bloomChunkKeys =
+      if (opt("bloom").exists(_.toLowerCase == "false")) 0
+      else opt("bloomChunkKeys").map(_.toInt)
+        .getOrElse(HFile.DefaultBloomChunkKeys),
+    maxFileBytes = opt("maxFileBytes").map(_.toLong)
+      .getOrElse(HFile.DefaultMaxFileBytes),
+    // data block encoding name (none / prefix / diff / fast_diff), like
+    // the table-level DATA_BLOCK_ENCODING attribute
+    encoding = BlockEncoding.idOf(opt("encoding").getOrElse("none")))
 
   private def asc(name: String): SortOrder =
     Expressions.sort(Expressions.column(name), SortDirection.ASCENDING)
@@ -789,12 +662,8 @@ class HFileWriteImpl(path: String, info: LogicalWriteInfo, truncate: Boolean,
   override def toBatch: BatchWrite = {
     // overwrite clears the directory before tasks rename files into it
     // (same driver-side semantics as BulkLoad.writeHFiles)
-    val root = new Path(path)
-    val fs = root.getFileSystem(HFileSource.confOf(confMap))
-    if (truncate && fs.exists(root)) fs.delete(root, true)
-    fs.mkdirs(root)
-    new HFileBatchWrite(path, schema, blockSize, codec, bloomChunkKeys,
-      maxFileBytes, confMap, info.queryId(), encoding)
+    HFileDir.startWrite(path, HFileDir.confOf(confMap), overwrite = truncate)
+    new HFileBatchWrite(path, schema, format, confMap, info.queryId())
   }
 }
 
@@ -828,140 +697,54 @@ object HFileWriteImpl {
 case class HFileCommitMessage(files: Seq[HFileManifest.Entry])
     extends WriterCommitMessage
 
-class HFileBatchWrite(path: String, schema: StructType, blockSize: Int,
-                      codec: Int, bloomChunkKeys: Int, maxFileBytes: Long,
-                      confMap: Map[String, String],
-                      queryId: String,
-                      encoding: Int = BlockEncoding.None) extends BatchWrite {
+class HFileBatchWrite(path: String, schema: StructType,
+                      format: HFileDir.Format, confMap: Map[String, String],
+                      queryId: String) extends BatchWrite {
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    new HFileDataWriterFactory(path, schema, blockSize, codec, bloomChunkKeys,
-      maxFileBytes, confMap, queryId, encoding)
+    new HFileDataWriterFactory(path, schema, format, confMap, queryId)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val root = new Path(path)
-    val fs = root.getFileSystem(HFileSource.confOf(confMap))
-    // `_manifest` sidecar from the tasks' commit messages — appends merge
-    // with the previous sidecar's entries (new names never collide: they
-    // embed this query's id). If the old sidecar was already stale, the
-    // merged one fails readValid and planning falls back — never wrong.
-    val fresh = messages.flatMap {
+    HFileDir.commitWrite(path, HFileDir.confOf(confMap), messages.toSeq.flatMap {
       case HFileCommitMessage(entries) => entries
       case _                           => Nil
-    }
-    val freshNames = fresh.map(_.file).toSet
-    val carried = HFileManifest.read(fs, root).getOrElse(Nil)
-      .filterNot(e => freshNames.contains(e.file))
-    HFileManifest.write(fs, root, (carried ++ fresh).toSeq)
-    cleanupTemp()
+    })
+    HFileDir.clearTemp(path, HFileDir.confOf(confMap))
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
-    cleanupTemp()
-
-  private def cleanupTemp(): Unit = {
-    val root = new Path(path)
-    val fs = root.getFileSystem(HFileSource.confOf(confMap))
-    fs.delete(new Path(root, "_inprogress"), true)
-  }
+    HFileDir.clearTemp(path, HFileDir.confOf(confMap))
 }
 
-class HFileDataWriterFactory(path: String, schema: StructType, blockSize: Int,
-                             codec: Int, bloomChunkKeys: Int,
-                             maxFileBytes: Long,
-                             confMap: Map[String, String],
-                             queryId: String,
-                             encoding: Int = BlockEncoding.None)
+class HFileDataWriterFactory(path: String, schema: StructType,
+                             format: HFileDir.Format,
+                             confMap: Map[String, String], queryId: String)
     extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new HFileDataWriter(path, schema, blockSize, codec, bloomChunkKeys,
-      maxFileBytes, confMap, queryId, partitionId, taskId, encoding)
+    new HFileDataWriter(path, schema, format, confMap, queryId, partitionId,
+      taskId)
 }
 
-class HFileDataWriter(path: String, schema: StructType, blockSize: Int,
-                      codec: Int, bloomChunkKeys: Int, maxFileBytes: Long,
-                      confMap: Map[String, String], queryId: String,
-                      partitionId: Int, taskId: Long,
-                      encoding: Int = BlockEncoding.None)
+class HFileDataWriter(path: String, schema: StructType,
+                      format: HFileDir.Format, confMap: Map[String, String],
+                      queryId: String, partitionId: Int, taskId: Long)
     extends DataWriter[InternalRow] {
-  import HFile.HCell
-
-  private val conf = HFileSource.confOf(confMap)
-  private val fs = new Path(path).getFileSystem(conf)
   private val Array(iBucket, iRowkey, iFamily, iQualifier, iTs, iValue, iType) =
     HFileWriteImpl.fieldIndexes(schema)
   // queryId is a UUID; 8 chars de-collide appends into an existing dir
-  private val qid = queryId.replace("-", "").take(8)
+  private val writer = new HFileDir.TaskWriter(path, HFileDir.confOf(confMap),
+    format, s"part-${queryId.replace("-", "").take(8)}-", partitionId, taskId)
 
-  private var bucket = Int.MinValue
-  private var seq = 0
-  private var out: org.apache.hadoop.fs.FSDataOutputStream = null
-  private var writer: HFileWriter = null
-  private var tmp: Path = null
-  private var dest: Path = null
-  private val pending = scala.collection.mutable.ArrayBuffer[(Path, Path)]()
-  private val stats = scala.collection.mutable.ArrayBuffer[HFileManifest.Entry]()
-
-  private def finishCurrent(): Unit = if (writer != null) {
-    writer.finish()
-    out.close()
-    pending += ((tmp, dest))
-    stats += HFileManifest.Entry(HFileManifest.relOf(dest), bucket,
-      writer.bytesWritten, writer.cellCount,
-      HFileManifest.toHex(writer.firstRowkey),
-      HFileManifest.toHex(writer.lastRowkey))
-    writer = null
-  }
-
-  private def roll(b: Int): Unit = {
-    finishCurrent()
-    dest = new Path(path, f"bucket=$b%d/part-$qid-$partitionId%05d-$seq%03d.hfile")
-    tmp = new Path(path,
-      f"_inprogress/attempt-$taskId%d-$partitionId%05d-$seq%03d.hfile")
-    seq += 1
-    out = fs.create(tmp, true)
-    writer = new HFileWriter(out, blockSize, codec, bloomChunkKeys,
-      encoding = encoding)
-    bucket = b
-  }
-
-  override def write(row: InternalRow): Unit = {
-    val b = row.getInt(iBucket)
-    val rk = row.getBinary(iRowkey)
-    // size cap: new file in the same bucket, only at a rowkey boundary
-    if (b != bucket || writer == null ||
-        (writer.bytesWritten >= maxFileBytes &&
-          !java.util.Arrays.equals(writer.lastRowkey, rk))) roll(b)
-    writer.append(HCell(
+  override def write(row: InternalRow): Unit =
+    writer.write(row.getInt(iBucket), HFile.HCell(
       row.getBinary(iRowkey),
       row.getUTF8String(iFamily).toString.getBytes("UTF-8"),
       row.getUTF8String(iQualifier).toString.getBytes("UTF-8"),
       row.getLong(iTs),
       row.getBinary(iValue),
       if (iType < 0) HFile.KeyTypePut else row.getInt(iType).toByte))
-  }
 
-  override def commit(): WriterCommitMessage = {
-    finishCurrent()
-    pending.foreach { case (t, d) =>
-      fs.mkdirs(d.getParent)
-      // first completed attempt wins; losers hold identical bytes
-      if (!fs.rename(t, d)) {
-        if (!fs.exists(d))
-          throw new java.io.IOException(s"could not commit $d")
-        fs.delete(t, false)
-      }
-    }
-    HFileCommitMessage(stats.toSeq)
-  }
-
-  override def abort(): Unit = {
-    if (writer != null) { try out.close() catch { case _: Throwable => () } }
-    writer = null
-    (pending.map(_._1) ++ Option(tmp)).foreach { t =>
-      try fs.delete(t, false) catch { case _: Throwable => () }
-    }
-  }
-
+  override def commit(): WriterCommitMessage = HFileCommitMessage(writer.commit())
+  override def abort(): Unit = writer.abort()
   override def close(): Unit = ()
 }
 
@@ -997,8 +780,7 @@ class HFilePartitionReader(p: HFileInputPartition, required: StructType,
     case other => throw new IllegalArgumentException(s"unknown column $other")
   }
 
-  private val rr =
-    HFileSource.openRandomRead(p.file, HFileSource.confOf(confMap))
+  private val rr = HFileDir.open(p.file, HFileDir.confOf(confMap))
   // a corrupt trailer/header throws before the reader is constructed, so
   // close() would never run — release the stream on the failure path.
   // With rowkey bounds, seek through the index and stream only covering

@@ -1195,7 +1195,7 @@ object Streams {
       .foreach(p => fs.delete(p._2, true))
     // ---- drop empty completed runs (nothing to fold there)
     def bytesOf(p: org.apache.hadoop.fs.Path): Long = Option(
-        fs.globStatus(new org.apache.hadoop.fs.Path(p, "bucket=*/*.hfile")))
+        fs.globStatus(new org.apache.hadoop.fs.Path(p, graft.sources.HFileDir.Glob)))
       .getOrElse(Array.empty).map(_.getLen).sum
     val sized = epochDirs().filter(_._1 < runId)
       .map { case (e, p) => (e, p, bytesOf(p)) }

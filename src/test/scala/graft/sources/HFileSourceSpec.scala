@@ -170,11 +170,22 @@ class HFileSourceSpec extends SparkSpec {
     val es = entries.get
     assert(es.map(_.entryCount).sum == 40)
     assert(es.map(_.bucket).toSet == Set(0, 1, 2, 3))
-    // stats in the sidecar equal stats read from the trailers
-    val fromTrailers = BulkLoad.hfileManifest(spark, dir)
+    // stats, multi-gets and count(*) answer the same from the sidecar
+    // and from the pooled trailer reads that replace it once deleted
+    val keys = Seq("k0003", "k0017", "k0039", "k0040", "absent")
+      .map(_.getBytes("UTF-8")).toDF("rowkey")
+    def answers() = (
+      BulkLoad.hfileManifest(spark, dir).collect().toSet,
+      BulkLoad.multiGet(spark, dir, keys)
+        .select(col("file"), col("bucket"), hex(col("rowkey")),
+          hex(col("value"))).collect().toSet,
+      spark.read.format("graft-hfile").load(dir)
+        .agg(count(lit(1))).as[Long].head())
+    val fromSidecar = answers()
     HFileManifest.delete(fsOf(dir), new org.apache.hadoop.fs.Path(dir))
-    val pooled = BulkLoad.hfileManifest(spark, dir)
-    assert(fromTrailers.collect().toSet == pooled.collect().toSet)
+    val pooled = answers()
+    assert(fromSidecar == pooled)
+    assert(fromSidecar._2.size == 3 && fromSidecar._3 == 40)
   }
 
   test("_manifest: planning and trailer stats need zero per-file reads") {
@@ -241,6 +252,64 @@ class HFileSourceSpec extends SparkSpec {
     assert(merged.isDefined, "append must merge, not invalidate")
     assert(merged.get.map(_.entryCount).sum == 30)
     assert(spark.read.format("graft-hfile").load(dir).count() == 30)
+  }
+
+  test("writeHFiles and the DSv2 write roll and commit the same files") {
+    val cells = (0 until 400)
+      .map(i => (f"r${i / 2}%04d".getBytes("UTF-8"), "f", s"q${i % 2}",
+        Array.fill[Byte](24)(i.toByte), i.toLong))
+      .toDF("rowkey", "family", "qualifier", "value", "ts")
+    // one range partition on both sides, so files differ only if the
+    // writers roll or commit differently
+    val prepared = BulkLoad.prepare(cells, buckets = 4, numPartitions = 1)
+    val viaBulkLoad = Files.createTempDirectory("hfile_parity_bl").toString
+    BulkLoad.writeHFiles(prepared, viaBulkLoad, tsCol = Some("ts"),
+      blockSize = 256, maxFileBytes = 1024)
+    val viaDsv2 = Files.createTempDirectory("hfile_parity_v2").toString
+    val shufflePartitions = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "1")
+    try prepared.select(col("bucket"), col("salted_key").as("rowkey"),
+        col("family"), col("qualifier"), col("ts"), col("value"),
+        lit(HFile.KeyTypePut.toInt).as("key_type"))
+      .write.format("graft-hfile").option("blockSize", "256")
+      .option("maxFileBytes", "1024").mode("overwrite").save(viaDsv2)
+    finally spark.conf.set("spark.sql.shuffle.partitions", shufflePartitions)
+
+    /** bucket -> its files' cells, files in name (= roll) order. */
+    def filesByBucket(dir: String): Map[Int, Seq[Seq[String]]] =
+      listingOf(dir).map(_.getPath.toString).sorted
+        .groupBy(HFileSource.bucketOf).map { case (b, files) =>
+          b -> files.map { f =>
+            val bytes = Files.readAllBytes(
+              java.nio.file.Paths.get(new java.net.URI(f)))
+            HFileReader.scan(new HFileReader.BytesRead(bytes)).map { c =>
+              Seq(HFileManifest.toHex(c.rowkey), new String(c.family, "UTF-8"),
+                new String(c.qualifier, "UTF-8"), c.ts.toString,
+                HFileManifest.toHex(c.value), c.keyType.toString).mkString("/")
+            }.toSeq
+          }
+        }
+    val a = filesByBucket(viaBulkLoad)
+    val b = filesByBucket(viaDsv2)
+    val filesPerBucket = a.map { case (k, fs) => k -> fs.size }
+    assert(filesPerBucket.keySet == Set(0, 1, 2, 3))
+    assert(filesPerBucket == b.map { case (k, fs) => k -> fs.size })
+    assert(filesPerBucket.values.exists(_ > 1), "maxFileBytes must roll files")
+    a.keys.foreach(k =>
+      assert(a(k).flatten == b(k).flatten, s"bucket $k cell stream"))
+    Seq(viaBulkLoad, viaDsv2).foreach { dir =>
+      val root = new org.apache.hadoop.fs.Path(dir)
+      val sidecar = HFileManifest.readValid(fsOf(dir), root, listingOf(dir))
+        .getOrElse(fail(s"no valid _manifest under $dir"))
+        .map(e => (e.bucket, e.file, e.entryCount, e.minHex, e.maxHex)).toSet
+      HFileManifest.delete(fsOf(dir), root)
+      val trailers = BulkLoad.hfileManifest(spark, dir).as[(Int, String, Long, String, String)]
+        .collect().map { case (bk, f, n, lo, hi) =>
+          (bk, HFileManifest.relOf(new org.apache.hadoop.fs.Path(f)), n, lo, hi)
+        }.toSet
+      assert(sidecar == trailers)
+      assert(!new java.io.File(s"$dir/_inprogress").exists())
+    }
   }
 
   test("restore drops the destination _manifest (content rewritten in place)") {
