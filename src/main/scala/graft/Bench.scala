@@ -41,39 +41,18 @@ object Bench {
   private[graft] val CheapPriorSec = 1.5
   private[graft] val CheapBatch = 8
 
-  /** Optimizer rules excluded in every engine session (Bench, Verify,
-    * specs). `InferFiltersFromGenerate` duplicates a generator's child
-    * expression into a `size(e) > 0 AND isnotnull(e)` filter BELOW the
-    * projection that computes it; every explode in this engine
-    * generates from a COMPUTED kernel (shingle hashes, BPE ids, cell
-    * structs — never a stored array column, so the inferred filter can
-    * never reach a parquet scan), which made the most expensive
-    * per-row expressions run twice per row in the scan stage.
-    * Measured at sf0.1 (warm, per query): corpus_boilerplate −31%,
-    * dedup_minhash_lsh −20%, text_top_terms −17%; no query regressed.
-    * Results are unchanged by construction (optimizer rules are
-    * semantics-preserving) and the full oracle suite pins it.
-    */
-  private[graft] val ExcludedOptimizerRules =
-    "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"
-
   /** Fresh local session. Callers own the stop(). */
   def newSession(cpus: String): SparkSession = {
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", classOf[GraftExtensions].getName)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.optimizer.excludedRules", ExcludedOptimizerRules)
+    val s = GraftSession.builder(s"local[$cpus]", cpus.toInt)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }
 
-  private def clearLeftovers(spark: SparkSession): Unit = {
+  private[graft] def clearLeftovers(spark: SparkSession): Unit = {
     spark.catalog.clearCache()
     spark.sparkContext.getPersistentRDDs.values
       .foreach(_.unpersist(blocking = true))

@@ -135,17 +135,18 @@ object Knn {
       .filter(col("rank") <= k)
   }
 
-  /** IVF-style ANN: a deterministic coarse codebook (every `stride`-th
-    * corpus vector, with the CELL COUNT capped at `maxCells` — a pure
-    * stride ties |cells| to n/stride, making the assign step
-    * super-linear in corpus size; the effective stride grows with the
-    * corpus instead, the fixed-nlist posture real IVF indexes use),
-    * each corpus vector assigned to its nearest centroid cell, each
-    * query probing its `nProbe` nearest cells. At scale the assign step
-    * is a broadcast map + partial-aggregating argmax (codebook ≪
-    * corpus; no n×|codebook| shuffle) and the search only scans probed
-    * cells.
+  /** The anchored-stride systematic coarse codebook, public so callers
+    * can FREEZE it into a persisted layout ([[buildIvfPqIndex]]'s
+    * `coarse` override) and still replay the assignment in a plain-SQL
+    * oracle — the deterministic twin of a trained
+    * [[kmeansSubCodebooks]] coarse table. Returns broadcast-hinted
+    * `(cell_id, centroid: array<double>)`.
     */
+  def strideCoarse(corpus: DataFrame, idCol: String, vecCol: String,
+                   stride: Int = 50, maxCells: Int = 256): DataFrame =
+    coarseTable(corpus, idCol, vecCol, stride, maxCells, scala.None,
+      "strideCoarse")._1
+
   /** The broadcast (cell_id, centroid) coarse-quantizer table every IVF
     * family member shares: a TRAINED table when `coarse` is passed
     * (e.g. a full-vector [[kmeansSubCodebooks]] run with m = 1), else
@@ -158,38 +159,50 @@ object Knn {
     * codebook is never empty (ids 1..49 with stride 50 would pick zero
     * centroids if the anchor were hardcoded to residue 0). `knownCount`
     * skips the count action when the caller already has it.
+    * `countIdsBelow = Some(b)` also returns how many corpus ids are
+    * below `b` (the systematic PQ codebook's contiguity check); on the
+    * stride path it rides the anchor's aggregate, so no job is added.
     */
-  /** The anchored-stride systematic coarse codebook, public so callers
-    * can FREEZE it into a persisted layout ([[buildIvfPqIndex]]'s
-    * `coarse` override) and still replay the assignment in a plain-SQL
-    * oracle — the deterministic twin of a trained
-    * [[kmeansSubCodebooks]] coarse table. Returns broadcast-hinted
-    * `(cell_id, centroid: array<double>)`.
-    */
-  def strideCoarse(corpus: DataFrame, idCol: String, vecCol: String,
-                   stride: Int = 50, maxCells: Int = 256): DataFrame =
-    coarseTable(corpus, idCol, vecCol, stride, maxCells, scala.None,
-      "strideCoarse")
-
   private def coarseTable(corpus: DataFrame, idCol: String, vecCol: String,
                           stride: Int, maxCells: Int,
                           coarse: Option[DataFrame], who: String,
-                          knownCount: Option[Long] = scala.None): DataFrame =
-    broadcast(coarse.map(_.select(col("cell_id"),
-        asDouble(col("centroid")).as("centroid")))
-      .getOrElse {
-        val n = knownCount.getOrElse(corpus.count())
-        require(n > 0, s"$who needs a non-empty corpus")
-        val effStride = math.max(stride.toLong,
-          math.ceil(n / maxCells.toDouble).toLong)
-        val anchorMod = corpus
-          .agg(min(pmod(col(idCol).cast("long"), lit(effStride))).as("m"))
-          .head().getLong(0)
-        corpus.filter(pmod(col(idCol), lit(effStride)) === anchorMod)
+                          knownCount: Option[Long] = scala.None,
+                          countIdsBelow: Option[Int] = scala.None)
+      : (DataFrame, Option[Long]) = coarse match {
+    case Some(c) =>
+      (broadcast(c.select(col("cell_id"),
+          asDouble(col("centroid")).as("centroid"))),
+        countIdsBelow.map(b => corpus.filter(col(idCol) < b).count()))
+    case scala.None =>
+      val n = knownCount.getOrElse(corpus.count())
+      require(n > 0, s"$who needs a non-empty corpus")
+      val effStride = math.max(stride.toLong,
+        math.ceil(n / maxCells.toDouble).toLong)
+      // the stride anchor and the optional id count ride ONE aggregate
+      // over the same id-column scan: a separate filter count would be
+      // one more eager job and corpus pass inside the timed query
+      val row = corpus.agg(
+        min(pmod(col(idCol).cast("long"), lit(effStride))).as("m"),
+        countIdsBelow.toSeq.map(b =>
+          count(when(col(idCol) < b, lit(1))).as("nc")): _*).head()
+      (broadcast(corpus
+          .filter(pmod(col(idCol), lit(effStride)) === row.getLong(0))
           .select(col(idCol).as("cell_id"),
-            asDouble(col(vecCol)).as("centroid"))
-      })
+            asDouble(col(vecCol)).as("centroid"))),
+        countIdsBelow.map(_ => row.getLong(1)))
+  }
 
+  /** IVF-style ANN: a deterministic coarse codebook (every `stride`-th
+    * corpus vector, with the CELL COUNT capped at `maxCells` — a pure
+    * stride ties |cells| to n/stride, making the assign step
+    * super-linear in corpus size; the effective stride grows with the
+    * corpus instead, the fixed-nlist posture real IVF indexes use),
+    * each corpus vector assigned to its nearest centroid cell, each
+    * query probing its `nProbe` nearest cells. At scale the assign step
+    * is a broadcast map + partial-aggregating argmax (codebook ≪
+    * corpus; no n×|codebook| shuffle) and the search only scans probed
+    * cells.
+    */
   def ivf(corpus: DataFrame, queries: DataFrame, idCol: String,
           vecCol: String, k: Int, stride: Int = 50,
           nProbe: Int = 5, maxCells: Int = 256,
@@ -231,7 +244,7 @@ object Knn {
     val c = corpus.select(col(idCol).as("neighbor_id"),
       asDouble(col(vecCol)).as("cv"))
     val centroids = coarseTable(corpus, idCol, vecCol, stride, maxCells,
-      coarse, "ivf", knownCount)
+      coarse, "ivf", knownCount)._1
     val cells = c.join(centroids)
       .withColumn("csim", cosineD(col("cv"), col("centroid")))
       .groupBy(col("neighbor_id"))
@@ -554,34 +567,11 @@ object Knn {
             coarse: Option[DataFrame] = scala.None): DataFrame = {
     require(dim % m == 0, s"dim $dim not divisible by m $m")
     val d = dim / m
-    // systematic-path constants in ONE eager pass (r19): with neither a
-    // trained coarse table nor trained codebooks, this used to run three
-    // separate jobs inside the timed query — count(n) for the effective
-    // stride, a min(pmod) aggregate for the stride anchor, and a
-    // pushed-down filter count for the codebook contiguity check. The
-    // anchor and the check now ride one combined aggregate over the same
-    // id-column scan (one fewer corpus pass at any scale).
-    val (coarseDf, nCentOpt): (DataFrame, Option[Long]) = coarse match {
-      case Some(_) =>
-        (coarseTable(corpus, idCol, vecCol, stride, maxCells, coarse,
-          "ivfpq"),
-          if (codebooks.isEmpty)
-            Some(corpus.filter(col(idCol) < ksub).count())
-          else scala.None)
-      case scala.None =>
-        val n = corpus.count()
-        require(n > 0, "ivfpq needs a non-empty corpus")
-        val effStride = math.max(stride.toLong,
-          math.ceil(n / maxCells.toDouble).toLong)
-        val row = corpus.agg(
-          min(pmod(col(idCol).cast("long"), lit(effStride))).as("m"),
-          count(when(col(idCol) < ksub, lit(1))).as("nc")).head()
-        val cd = broadcast(corpus
-          .filter(pmod(col(idCol), lit(effStride)) === row.getLong(0))
-          .select(col(idCol).as("cell_id"),
-            asDouble(col(vecCol)).as("centroid")))
-        (cd, if (codebooks.isEmpty) Some(row.getLong(1)) else scala.None)
-    }
+    // systematic-path constants in ONE eager pass (see coarseTable):
+    // the stride anchor and the codebook contiguity count
+    val (coarseDf, nCentOpt) = coarseTable(corpus, idCol, vecCol, stride,
+      maxCells, coarse, "ivfpq",
+      countIdsBelow = if (codebooks.isEmpty) Some(ksub) else scala.None)
     // coarse assign: partial-agg argmax, no cv carried (re-rank joins
     // the corpus again); ties toward the smallest cell_id
     val cells = corpus
@@ -751,30 +741,11 @@ object Knn {
                     coarse: Option[DataFrame] = scala.None): DataFrame = {
     require(dim % m == 0, s"dim $dim not divisible by m $m")
     val d = dim / m
-    // systematic-path constants in ONE eager pass — the [[ivfpq]] r19
-    // shape: stride anchor and codebook contiguity check share one
-    // combined aggregate instead of two separate jobs
-    val (coarseDf, nCentOpt): (DataFrame, Option[Long]) = coarse match {
-      case Some(_) =>
-        (coarseTable(corpus, idCol, vecCol, stride, maxCells, coarse,
-          "ivfpqResidual"),
-          if (codebooks.isEmpty)
-            Some(corpus.filter(col(idCol) < ksub).count())
-          else scala.None)
-      case scala.None =>
-        val n = corpus.count()
-        require(n > 0, "ivfpqResidual needs a non-empty corpus")
-        val effStride = math.max(stride.toLong,
-          math.ceil(n / maxCells.toDouble).toLong)
-        val row = corpus.agg(
-          min(pmod(col(idCol).cast("long"), lit(effStride))).as("m"),
-          count(when(col(idCol) < ksub, lit(1))).as("nc")).head()
-        val cd = broadcast(corpus
-          .filter(pmod(col(idCol), lit(effStride)) === row.getLong(0))
-          .select(col(idCol).as("cell_id"),
-            asDouble(col(vecCol)).as("centroid")))
-        (cd, if (codebooks.isEmpty) Some(row.getLong(1)) else scala.None)
-    }
+    // systematic-path constants in ONE eager pass (see coarseTable):
+    // the stride anchor and the codebook contiguity count
+    val (coarseDf, nCentOpt) = coarseTable(corpus, idCol, vecCol, stride,
+      maxCells, coarse, "ivfpqResidual",
+      countIdsBelow = if (codebooks.isEmpty) Some(ksub) else scala.None)
     // coarse assign with a SCALAR aggregate only (see scaladoc), then
     // re-attach the vector and the winning centroid to form residuals
     val cells = residuals(corpus, idCol, vecCol, coarseDf)
@@ -1065,7 +1036,7 @@ object Knn {
     val c = corpus.select(col(idCol).as("neighbor_id"),
       asDouble(col(vecCol)).as("cv"))
     val centroids = coarseTable(corpus, idCol, vecCol, stride, maxCells,
-      coarse, "recallSweep")
+      coarse, "recallSweep")._1
     // the ivfCandidates assignment: broadcast argmax, partial-agg safe
     val cells = c.join(centroids)
       .withColumn("csim", cosineD(col("cv"), col("centroid")))

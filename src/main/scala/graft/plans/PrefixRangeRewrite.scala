@@ -36,7 +36,7 @@ import org.apache.spark.sql.types.BinaryType
   *
   * Registered by [[graft.GraftExtensions]] via `injectOptimizerRule`;
   * any session built with `spark.sql.extensions=graft.GraftExtensions`
-  * (e.g. [[graft.GraftExtensions.GraftSession]]) gets it.
+  * (e.g. [[graft.GraftSession]]) gets it.
   *
   * Scope: ONLY binary operands (strings keep their collation-aware
   * `StartsWith`, which already pushes as `StringStartsWith`). By

@@ -46,10 +46,8 @@ object GenData {
     val n = factorS.toInt
     require(n >= 1, s"factor must be >= 1, got $n")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
+    val spark = graft.GraftSession.builder(s"local[$cpus]", cpus.toInt)
       .appName("graft-gendata")
-      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Scratch main: dump the formatted physical plan of EVERY SparkEntry
   * query into `<outDir>/<name>.txt` in ONE JVM (`runMain
   * graft.tools.PlanDump <sfDir> <outDir> [name,...]`), with a stderr
@@ -16,12 +14,7 @@ object PlanDump {
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").map(_.trim).toSet)
       else scala.None
-    val spark = SparkSession.builder.master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.optimizer.excludedRules",
-        graft.Bench.ExcludedOptimizerRules)
-      .config("spark.sql.session.timeZone", "UTC")
+    val spark = graft.GraftSession.builder("local[4]", 4)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -44,9 +37,7 @@ object PlanDump {
         }
         Console.err.println(s"PLANDUMP_END $name")
         Console.err.flush()
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
+        graft.Bench.clearLeftovers(spark)
       }
     spark.stop()
   }

@@ -11,14 +11,8 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[4]")
+  lazy val session: SparkSession = GraftSession.builder("local[4]", 8)
     .appName("graft-test")
-    .config("spark.sql.extensions", classOf[GraftExtensions].getName)
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.optimizer.excludedRules", Bench.ExcludedOptimizerRules)
-    .config("spark.sql.timeType.enabled", "true")
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 }

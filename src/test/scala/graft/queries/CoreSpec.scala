@@ -7,6 +7,10 @@ import org.apache.spark.sql.functions.{col, countDistinct}
 /** Core-query scale-path checks not covered by the DuckDB oracle. */
 class CoreSpec extends SparkSpec {
 
+  test("SparkEntry.entry returns rows (the flagship smoke contract)") {
+    assert(graft.SparkEntry.entry(spark).count() > 0)
+  }
+
   test("rollupPercentiles approx mode is rank-accurate within 1%") {
     // approx_percentile guarantees a value whose RANK is within
     // 1/accuracy of the requested quantile (it returns an actual sample,

@@ -287,4 +287,18 @@ class PlanShapeSpec extends SparkSpec {
     assert(!p.contains("CartesianProduct"), "no cartesian")
   }
 
+  test("InferFiltersFromGenerate is excluded: an exploded kernel gets no " +
+      "inferred size/isnotnull filter, so it runs once per row") {
+    assert(spark.conf.get("spark.sql.optimizer.excludedRules")
+      .contains("InferFiltersFromGenerate"))
+    // the kernel is projected, then exploded: the rule would infer
+    // size(hs) > 0 AND isnotnull(hs) and push it below the projection,
+    // evaluating the kernel a second time in the scan stage
+    val p = graft.Tables(spark, dir, "documents")
+      .selectExpr("doc_id", "graft_shingle_hashes(text, 5) AS hs")
+      .selectExpr("doc_id", "explode(hs) AS h")
+      .queryExecution.optimizedPlan.toString
+    assert(!p.contains("size(") && !p.contains("isnotnull(wordshingle"), p)
+    assert("wordshinglehashes\\(".r.findAllIn(p).size == 1, p)
+  }
 }

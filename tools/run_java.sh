@@ -10,5 +10,5 @@ done
 for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
   OPENS="$OPENS --add-opens java.base/$p=ALL-UNNAMED"
 done
-exec java $OPENS -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
+exec java $OPENS -Dspark.ui.enabled=false \
   -Xmx${SPARK_DRIVER_MEM:-8g} -cp "$CP" "$@"
