@@ -436,292 +436,105 @@ object GraftExtensions {
           operators.Packing.sequenceSpans(counted, idCol, "n_tokens",
             budget), idCol).queryExecution.logical
       }),
-    (FunctionIdentifier("graft_knn_index_fsck"),
-      info("graft_knn_index_fsck",
-        "graft_knn_index_fsck(dir) - integrity report over a persisted " +
-          "IVFxPQ index: (check, ok, n_bad, detail) per invariant"),
-      (args: Seq[Expression]) => {
-        val spark = org.apache.spark.sql.SparkSession.active
-        operators.Knn.fsckIvfPqIndex(spark,
-          strArg(args(0), "graft_knn_index_fsck")).queryExecution.logical
-      }),
-    (FunctionIdentifier("graft_knn_index_compact"),
-      info("graft_knn_index_compact",
-        "graft_knn_index_compact(dir[, max_files_per_cell][, dry_run]) - " +
-          "CALL-style: coalesce fragmented cell partitions of a " +
-          "persisted IVFxPQ index, return the post-compaction " +
-          "per-cell stats. The maintenance side effect runs at plan " +
-          "RESOLUTION (EXPLAIN triggers it too); trailing dry_run=true " +
-          "skips it and returns the current stats"),
+    // ---- persisted-store lifecycle: ONE family for the IVFxPQ, SQ8 and
+    // LSH stores, the kind detected from the sidecars in `dir`. The
+    // CALL-style ones run their side effect at plan RESOLUTION (EXPLAIN
+    // too); a trailing dry_run=true skips it and reports current state.
+    (FunctionIdentifier("graft_store_fsck"),
+      info("graft_store_fsck",
+        "graft_store_fsck(dir) - integrity report over a persisted " +
+          "IVFxPQ, SQ8 or LSH store: (check, ok, n_bad, detail) per " +
+          "invariant"),
+      (args: Seq[Expression]) => operators.PersistedStore.fsck(
+          org.apache.spark.sql.SparkSession.active,
+          strArg(args(0), "graft_store_fsck")).queryExecution.logical),
+    (FunctionIdentifier("graft_store_stats"),
+      info("graft_store_stats",
+        "graft_store_stats(dir[, min_bytes]) - file health: (cell_id, " +
+          "n_codes, n_files, bytes) per IVFxPQ cell, (band, n_rows, " +
+          "n_files, bytes) per LSH band, or ONE SQ8 row (n_codes, " +
+          "n_files, bytes, n_small_files under min_bytes)"),
+      (args: Seq[Expression]) => operators.PersistedStore.stats(
+          org.apache.spark.sql.SparkSession.active,
+          strArg(args(0), "graft_store_stats"),
+          args.lift(1).fold(operators.PersistedStore.SmallFileBytes)(
+            numArg(_, "graft_store_stats").toLong))
+        .queryExecution.logical),
+    (FunctionIdentifier("graft_store_compact"),
+      info("graft_store_compact",
+        "graft_store_compact(dir[, threshold][, dry_run]) - CALL-style: " +
+          "coalesce a store's small files, return its post-compaction " +
+          "graft_store_stats. threshold = max files per IVFxPQ cell / " +
+          "LSH band (default 1), or the SQ8 small-file cut in bytes " +
+          "(default 4 MiB)"),
       (args0: Seq[Expression]) => {
         val spark = org.apache.spark.sql.SparkSession.active
+        val n = "graft_store_compact"
         val (args, dry) = splitDryRun(args0)
-        val dir = strArg(args(0), "graft_knn_index_compact")
-        val maxFiles = if (args.length > 1)
-          numArg(args(1), "graft_knn_index_compact").toInt else 1
-        if (!dry) operators.Knn.compactIvfPqIndex(spark, dir, maxFiles)
-        operators.Knn.ivfPqIndexStats(spark, dir).queryExecution.logical
-      }),
-    (FunctionIdentifier("graft_knn_index_repair"),
-      info("graft_knn_index_repair",
-        "graft_knn_index_repair(dir[, dry_run]) - CALL-style: drop " +
-          "duplicate / malformed / orphan code rows from a persisted " +
-          "IVFxPQ index, return the post-repair fsck report. The " +
-          "maintenance side effect runs at plan RESOLUTION (EXPLAIN " +
-          "triggers it too); trailing dry_run=true skips it and " +
-          "returns the current fsck report"),
-      (args0: Seq[Expression]) => {
-        val spark = org.apache.spark.sql.SparkSession.active
-        val (args, dry) = splitDryRun(args0)
-        val dir = strArg(args(0), "graft_knn_index_repair")
-        if (!dry) operators.Knn.repairIvfPqIndex(spark, dir)
-        operators.Knn.fsckIvfPqIndex(spark, dir).queryExecution.logical
-      }),
-    (FunctionIdentifier("graft_knn_index_advise"),
-      info("graft_knn_index_advise",
-        "graft_knn_index_advise(dir, corpus_table, id_col, vec_col) - " +
-          "the maintenance advisor's runbook row for a persisted " +
-          "IVFxPQ index: (store, action in repair|rebuild|compact|ok, " +
-          "reason) joining fsck, drift-vs-corpus, and fragmentation"),
-      (args: Seq[Expression]) => {
-        val spark = org.apache.spark.sql.SparkSession.active
-        val dir = strArg(args(0), "graft_knn_index_advise")
-        val df = spark.table(strArg(args(1), "graft_knn_index_advise"))
-        val idCol = strArg(args(2), "graft_knn_index_advise")
-        val vecCol = strArg(args(3), "graft_knn_index_advise")
-        operators.Knn.adviseIvfPqIndex(spark, dir, df, idCol, vecCol)
+        val dir = strArg(args(0), n)
+        val flat = operators.PersistedStore.detect(spark, dir).partCol.isEmpty
+        val t = args.lift(1).map(numArg(_, n))
+        val maxFiles = t.filterNot(_ => flat).fold(1)(_.toInt)
+        val minBytes = t.filter(_ => flat)
+          .fold(operators.PersistedStore.SmallFileBytes)(_.toLong)
+        if (!dry)
+          operators.PersistedStore.compact(spark, dir, maxFiles, minBytes)
+        operators.PersistedStore.stats(spark, dir, minBytes)
           .queryExecution.logical
       }),
-    (FunctionIdentifier("graft_knn_index_drift"),
-      info("graft_knn_index_drift",
-        "graft_knn_index_drift(dir, corpus_table, id_col, vec_col) - " +
-          "per-cell quantization drift of a persisted IVFxPQ index vs " +
-          "the CURRENT corpus: (cell_id, n_codes, recon_cos, " +
-          "frac_misassigned) - the rebuild trigger's number"),
-      (args: Seq[Expression]) => {
-        val spark = org.apache.spark.sql.SparkSession.active
-        val dir = strArg(args(0), "graft_knn_index_drift")
-        val df = spark.table(strArg(args(1), "graft_knn_index_drift"))
-        val idCol = strArg(args(2), "graft_knn_index_drift")
-        val vecCol = strArg(args(3), "graft_knn_index_drift")
-        operators.Knn.ivfPqIndexDrift(spark, dir, df, idCol, vecCol)
-          .queryExecution.logical
-      }),
-    (FunctionIdentifier("graft_knn_index_stats"),
-      info("graft_knn_index_stats",
-        "graft_knn_index_stats(dir) - per-cell health of a persisted " +
-          "IVFxPQ index: (cell_id, n_codes, n_files, bytes)"),
-      (args: Seq[Expression]) => {
-        val spark = org.apache.spark.sql.SparkSession.active
-        operators.Knn.ivfPqIndexStats(spark,
-          strArg(args(0), "graft_knn_index_stats")).queryExecution.logical
-      }),
-    (FunctionIdentifier("graft_knn_index_merge"),
-      info("graft_knn_index_merge",
-        "graft_knn_index_merge(dst, srcs_csv[, dry_run]) - CALL-style: " +
-          "merge same-quantizer shard IVFxPQ indexes into dst (bytes " +
-          "move as a Spark job), return the post-merge fsck report " +
-          "(ids_unique catches shard overlap). The maintenance side " +
-          "effect runs at plan RESOLUTION (EXPLAIN triggers it too); " +
-          "trailing dry_run=true runs the quantizer-admission check " +
-          "(incompatible shards still refuse) but moves nothing"),
+    (FunctionIdentifier("graft_store_repair"),
+      info("graft_store_repair",
+        "graft_store_repair(dir[, dry_run]) - CALL-style: drop what fsck " +
+          "flags by file surgery (refuses on an unusable sidecar or a " +
+          "missing LSH band), return the post-repair fsck report"),
       (args0: Seq[Expression]) => {
         val spark = org.apache.spark.sql.SparkSession.active
         val (args, dry) = splitDryRun(args0)
-        val dst = strArg(args(0), "graft_knn_index_merge")
-        val srcs = strArg(args(1), "graft_knn_index_merge")
+        val dir = strArg(args(0), "graft_store_repair")
+        if (!dry) operators.PersistedStore.repair(spark, dir)
+        operators.PersistedStore.fsck(spark, dir).queryExecution.logical
+      }),
+    (FunctionIdentifier("graft_store_merge"),
+      info("graft_store_merge",
+        "graft_store_merge(dst, srcs_csv[, dry_run]) - CALL-style: merge " +
+          "shard stores built under dst's sidecars into dst (bytes move " +
+          "as a Spark job), return the post-merge fsck report; dry_run " +
+          "still refuses incompatible shards"),
+      (args0: Seq[Expression]) => {
+        val spark = org.apache.spark.sql.SparkSession.active
+        val (args, dry) = splitDryRun(args0)
+        val dst = strArg(args(0), "graft_store_merge")
+        val srcs = strArg(args(1), "graft_store_merge")
           .split(",").map(_.trim).filter(_.nonEmpty).toSeq
-        operators.Knn.mergeIvfPqIndexes(spark, dst, srcs, dryRun = dry)
-        operators.Knn.fsckIvfPqIndex(spark, dst).queryExecution.logical
+        operators.PersistedStore.merge(spark, dst, srcs, dryRun = dry)
+        operators.PersistedStore.fsck(spark, dst).queryExecution.logical
       }),
-    // ---- LSH index lifecycle (the graft_knn_index_* symmetry for the
-    // C25 bucket store) --------------------------------------------------
-    (FunctionIdentifier("graft_lsh_index_merge"),
-      info("graft_lsh_index_merge",
-        "graft_lsh_index_merge(dst, srcs_csv[, dry_run]) - CALL-style: " +
-          "merge same-signature shard LSH indexes into dst (bytes " +
-          "move as a Spark job), return the post-merge fsck report. " +
-          "The maintenance side effect runs at plan RESOLUTION " +
-          "(EXPLAIN triggers it too); trailing dry_run=true runs the " +
-          "signature-admission check but moves nothing"),
-      (args0: Seq[Expression]) => {
-        val spark = org.apache.spark.sql.SparkSession.active
-        val (args, dry) = splitDryRun(args0)
-        val dst = strArg(args(0), "graft_lsh_index_merge")
-        val srcs = strArg(args(1), "graft_lsh_index_merge")
-          .split(",").map(_.trim).filter(_.nonEmpty).toSeq
-        operators.Dedup.mergeLshIndexes(spark, dst, srcs, dryRun = dry)
-        operators.Dedup.fsckLshIndex(spark, dst).queryExecution.logical
-      }),
-    (FunctionIdentifier("graft_lsh_index_fsck"),
-      info("graft_lsh_index_fsck",
-        "graft_lsh_index_fsck(dir) - integrity report over a persisted " +
-          "MinHash-LSH index: (check, ok, n_bad, detail) per invariant"),
+    (FunctionIdentifier("graft_store_advise"),
+      info("graft_store_advise",
+        "graft_store_advise(dir[, corpus_table, id_col, vec_col]) - the " +
+          "maintenance runbook row (store, action in repair|rebuild|" +
+          "compact|ok, reason) joining fsck, drift vs the corpus " +
+          "(IVFxPQ and SQ8; LSH needs no corpus) and fragmentation"),
       (args: Seq[Expression]) => {
         val spark = org.apache.spark.sql.SparkSession.active
-        operators.Dedup.fsckLshIndex(spark,
-          strArg(args(0), "graft_lsh_index_fsck")).queryExecution.logical
-      }),
-    (FunctionIdentifier("graft_lsh_index_compact"),
-      info("graft_lsh_index_compact",
-        "graft_lsh_index_compact(dir[, max_files_per_band][, dry_run]) - " +
-          "CALL-style: coalesce fragmented band partitions of a " +
-          "persisted LSH index, return the post-compaction per-band " +
-          "stats. The maintenance side effect runs at plan RESOLUTION " +
-          "(EXPLAIN triggers it too); trailing dry_run=true skips it " +
-          "and returns the current stats"),
-      (args0: Seq[Expression]) => {
-        val spark = org.apache.spark.sql.SparkSession.active
-        val (args, dry) = splitDryRun(args0)
-        val dir = strArg(args(0), "graft_lsh_index_compact")
-        val maxFiles = if (args.length > 1)
-          numArg(args(1), "graft_lsh_index_compact").toInt else 1
-        if (!dry) operators.Dedup.compactLshIndex(spark, dir, maxFiles)
-        operators.Dedup.lshIndexStats(spark, dir).queryExecution.logical
-      }),
-    (FunctionIdentifier("graft_lsh_index_repair"),
-      info("graft_lsh_index_repair",
-        "graft_lsh_index_repair(dir[, dry_run]) - CALL-style: drop " +
-          "duplicate bucket rows, torn-append docs, and out-of-range " +
-          "band partitions from a persisted LSH index (file surgery; " +
-          "refuses on a missing band partition), return the " +
-          "post-repair fsck report. The maintenance side effect runs " +
-          "at plan RESOLUTION (EXPLAIN triggers it too); trailing " +
-          "dry_run=true skips it and returns the current fsck report"),
-      (args0: Seq[Expression]) => {
-        val spark = org.apache.spark.sql.SparkSession.active
-        val (args, dry) = splitDryRun(args0)
-        val dir = strArg(args(0), "graft_lsh_index_repair")
-        if (!dry) operators.Dedup.repairLshIndex(spark, dir)
-        operators.Dedup.fsckLshIndex(spark, dir).queryExecution.logical
-      }),
-    (FunctionIdentifier("graft_lsh_index_advise"),
-      info("graft_lsh_index_advise",
-        "graft_lsh_index_advise(dir[, max_files_per_band]) - the " +
-          "maintenance advisor's runbook row for a persisted LSH " +
-          "index: (store, action in repair|compact|ok, reason); decay " +
-          "measurement is graft_dedup_recall's territory"),
-      (args: Seq[Expression]) => {
-        val spark = org.apache.spark.sql.SparkSession.active
-        val dir = strArg(args(0), "graft_lsh_index_advise")
-        val maxFiles = if (args.length > 1)
-          numArg(args(1), "graft_lsh_index_advise").toInt else 1
-        operators.Dedup.adviseLshIndex(spark, dir, maxFiles)
+        val s = args.map(strArg(_, "graft_store_advise"))
+        operators.PersistedStore.advise(spark, s(0),
+            s.lift(1).map(spark.table), s.lift(2).getOrElse("vec_id"),
+            s.lift(3).getOrElse("embedding"))
           .queryExecution.logical
       }),
-    (FunctionIdentifier("graft_lsh_index_stats"),
-      info("graft_lsh_index_stats",
-        "graft_lsh_index_stats(dir) - per-band health of a persisted " +
-          "LSH index: (band, n_rows, n_files, bytes)"),
+    (FunctionIdentifier("graft_store_drift"),
+      info("graft_store_drift",
+        "graft_store_drift(dir, corpus_table, id_col, vec_col) - drift vs " +
+          "the CURRENT corpus, the rebuild trigger's number: (cell_id, " +
+          "n_codes, recon_cos, frac_misassigned) per IVFxPQ cell or (j, " +
+          "n, frac_out_of_range, mean_err_grid_units) per SQ8 dimension; " +
+          "an LSH store refuses (its decay metric is lshIndexRecall)"),
       (args: Seq[Expression]) => {
         val spark = org.apache.spark.sql.SparkSession.active
-        operators.Dedup.lshIndexStats(spark,
-          strArg(args(0), "graft_lsh_index_stats")).queryExecution.logical
-      }),
-    // ---- SQ index lifecycle (the symmetry for the D11b flat store) -----
-    (FunctionIdentifier("graft_sq_index_merge"),
-      info("graft_sq_index_merge",
-        "graft_sq_index_merge(dst, srcs_csv[, dry_run]) - CALL-style: " +
-          "merge same-grid shard SQ8 stores into dst (bytes move as a " +
-          "Spark job), return the post-merge fsck report. The " +
-          "maintenance side effect runs at plan RESOLUTION (EXPLAIN " +
-          "triggers it too); trailing dry_run=true runs the " +
-          "grid-admission check but moves nothing"),
-      (args0: Seq[Expression]) => {
-        val spark = org.apache.spark.sql.SparkSession.active
-        val (args, dry) = splitDryRun(args0)
-        val dst = strArg(args(0), "graft_sq_index_merge")
-        val srcs = strArg(args(1), "graft_sq_index_merge")
-          .split(",").map(_.trim).filter(_.nonEmpty).toSeq
-        operators.Knn.mergeSqIndexes(spark, dst, srcs, dryRun = dry)
-        operators.Knn.fsckSqIndex(spark, dst).queryExecution.logical
-      }),
-    (FunctionIdentifier("graft_sq_index_fsck"),
-      info("graft_sq_index_fsck",
-        "graft_sq_index_fsck(dir) - integrity report over a persisted " +
-          "SQ8 codes store: (check, ok, n_bad, detail) per invariant " +
-          "(sweeps a crashed compaction first, like every open path)"),
-      (args: Seq[Expression]) => {
-        val spark = org.apache.spark.sql.SparkSession.active
-        operators.Knn.fsckSqIndex(spark,
-          strArg(args(0), "graft_sq_index_fsck")).queryExecution.logical
-      }),
-    (FunctionIdentifier("graft_sq_index_compact"),
-      info("graft_sq_index_compact",
-        "graft_sq_index_compact(dir[, min_bytes][, dry_run]) - " +
-          "CALL-style: merge the small files an append-per-batch " +
-          "ingest leaves in a persisted SQ8 store (crash-safe " +
-          "staged-rename journal), return the post-compaction stats. " +
-          "The maintenance side effect runs at plan RESOLUTION " +
-          "(EXPLAIN triggers it too); trailing dry_run=true skips it " +
-          "and returns the current stats"),
-      (args0: Seq[Expression]) => {
-        val spark = org.apache.spark.sql.SparkSession.active
-        val (args, dry) = splitDryRun(args0)
-        val dir = strArg(args(0), "graft_sq_index_compact")
-        val minBytes = if (args.length > 1)
-          numArg(args(1), "graft_sq_index_compact").toLong else 4L << 20
-        if (!dry) operators.Knn.compactSqIndex(spark, dir, minBytes)
-        operators.Knn.sqIndexStats(spark, dir, minBytes)
-          .queryExecution.logical
-      }),
-    (FunctionIdentifier("graft_sq_index_repair"),
-      info("graft_sq_index_repair",
-        "graft_sq_index_repair(dir[, dry_run]) - CALL-style: drop " +
-          "malformed code rows and collapse duplicate neighbor_id " +
-          "rows in a persisted SQ8 store (file surgery; refuses on an " +
-          "empty grid sidecar), return the post-repair fsck report. " +
-          "The maintenance side effect runs at plan RESOLUTION " +
-          "(EXPLAIN triggers it too); trailing dry_run=true skips it " +
-          "and returns the current fsck report"),
-      (args0: Seq[Expression]) => {
-        val spark = org.apache.spark.sql.SparkSession.active
-        val (args, dry) = splitDryRun(args0)
-        val dir = strArg(args(0), "graft_sq_index_repair")
-        if (!dry) operators.Knn.repairSqIndex(spark, dir)
-        operators.Knn.fsckSqIndex(spark, dir).queryExecution.logical
-      }),
-    (FunctionIdentifier("graft_sq_index_advise"),
-      info("graft_sq_index_advise",
-        "graft_sq_index_advise(dir, corpus_table, vec_col) - the " +
-          "maintenance advisor's runbook row for a persisted SQ8 " +
-          "store: (store, action in repair|rebuild|compact|ok, " +
-          "reason) joining fsck, grid drift-vs-corpus, and small-file " +
-          "fragmentation"),
-      (args: Seq[Expression]) => {
-        val spark = org.apache.spark.sql.SparkSession.active
-        val dir = strArg(args(0), "graft_sq_index_advise")
-        val df = spark.table(strArg(args(1), "graft_sq_index_advise"))
-        val vecCol = strArg(args(2), "graft_sq_index_advise")
-        operators.Knn.adviseSqIndex(spark, dir, df, vecCol)
-          .queryExecution.logical
-      }),
-    (FunctionIdentifier("graft_sq_index_drift"),
-      info("graft_sq_index_drift",
-        "graft_sq_index_drift(dir, corpus_table, vec_col) - per-" +
-          "dimension drift of a persisted SQ8 store vs the CURRENT " +
-          "corpus: (j, n, frac_out_of_range, mean_err_grid_units) - " +
-          "the rebuild trigger's number"),
-      (args: Seq[Expression]) => {
-        val spark = org.apache.spark.sql.SparkSession.active
-        val dir = strArg(args(0), "graft_sq_index_drift")
-        val df = spark.table(strArg(args(1), "graft_sq_index_drift"))
-        val vecCol = strArg(args(2), "graft_sq_index_drift")
-        operators.Knn.sqIndexDrift(spark, dir, df, vecCol)
-          .queryExecution.logical
-      }),
-    (FunctionIdentifier("graft_sq_index_stats"),
-      info("graft_sq_index_stats",
-        "graft_sq_index_stats(dir[, min_bytes]) - flat-store health of " +
-          "a persisted SQ8 index: ONE row (n_codes, n_files, bytes, " +
-          "n_small_files)"),
-      (args: Seq[Expression]) => {
-        val spark = org.apache.spark.sql.SparkSession.active
-        val dir = strArg(args(0), "graft_sq_index_stats")
-        val minBytes = if (args.length > 1)
-          numArg(args(1), "graft_sq_index_stats").toLong else 4L << 20
-        operators.Knn.sqIndexStats(spark, dir, minBytes)
-          .queryExecution.logical
+        val s = args.map(strArg(_, "graft_store_drift"))
+        operators.PersistedStore.drift(spark, s(0), spark.table(s(1)),
+          s(2), s(3)).queryExecution.logical
       }),
     (FunctionIdentifier("graft_store_backup"),
       info("graft_store_backup",

@@ -315,211 +315,6 @@ object Dedup {
       .parquet(s"$dir/buckets")
   }
 
-  /** C25 lifecycle (remove): purge docs from a [[buildLshIndex]]
-    * layout — the GDPR/retention path the IVF×PQ index got in
-    * [[graft.operators.Knn.removeFromIvfPqIndex]], adapted to the
-    * flat band-key format. A doc's rows land in EVERY `band=`
-    * partition (one key per band), so partition-level rewrite would
-    * always rewrite the whole index; instead the surgery is
-    * FILE-level: `input_file_name()` finds the files that actually
-    * contain a purged id (bounded by the purge batch's append files,
-    * not the corpus), their surviving rows append back as new files,
-    * and the old files are deleted — every untouched file stays
-    * byte-identical (spec-pinned), and the probe path needs no
-    * tombstone awareness because purged keys physically leave the
-    * layout. Crash window: surviving rows are appended BEFORE the old
-    * files are deleted, so a crash in between leaves duplicate bucket
-    * rows (harmless — the probe's candidate set is `.distinct()`) and
-    * purged rows still present; re-running the purge converges.
-    * Single-writer posture, like every maintenance API here. Returns
-    * the number of bucket rows removed.
-    */
-  def removeFromLshIndex(deleteIds: DataFrame, idCol: String,
-                         dir: String): Long = {
-    val spark = deleteIds.sparkSession
-    val ids = deleteIds.select(col(idCol).cast("long").as("corpus_id"))
-      .distinct()
-    val buckets = spark.read.parquet(s"$dir/buckets")
-      .withColumn("_file", input_file_name())
-    val affected = buckets.join(broadcast(ids), "corpus_id")
-      .select(col("_file")).distinct().collect()
-      .map(_.getString(0)).sorted
-    if (affected.isEmpty) return 0L
-    val touched = buckets.filter(col("_file").isin(affected: _*))
-    val removed = touched.join(broadcast(ids), "corpus_id").count()
-    // localCheckpoint (eager) before deleting the very files the
-    // lineage reads — the removeFromIvfPqIndex rationale; snapshot
-    // the persistent-RDD set so exactly the checkpoint's blocks free
-    val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
-    val remaining = touched
-      .join(broadcast(ids), Seq("corpus_id"), "left_anti")
-      .select(col("bkey"), col("corpus_id"), col("band"))
-      .localCheckpoint()
-    try {
-      remaining.write.mode("append").partitionBy("band")
-        .parquet(s"$dir/buckets")
-      val fs = new org.apache.hadoop.fs.Path(s"$dir/buckets")
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      affected.foreach { f =>
-        fs.delete(new org.apache.hadoop.fs.Path(new java.net.URI(f)), false)
-      }
-      // the deletes bypass the Spark writer: drop any cached listing
-      StoreMaintenance.refreshPath(spark, s"$dir/buckets")
-    } finally {
-      val rdds = spark.sparkContext.getPersistentRDDs
-      (rdds.keySet diff persistedBefore)
-        .foreach(id => rdds.get(id).foreach(_.unpersist(blocking = false)))
-    }
-    removed
-  }
-
-  /** C25 lifecycle (compact): coalesce fragmented `band=` partitions —
-    * every [[appendToLshIndex]] batch adds one file per band, so a
-    * crawl loop that ingested B batches leaves B+1 files in EVERY band
-    * directory and each probe pays the per-file open tax across all of
-    * them. Only bands over `maxFilesPerBand` files are read
-    * (partition-pruned) and rewritten to one file each; bands at or
-    * under the threshold stay byte-identical (spec-pinned). Bucket
-    * rows are unchanged, so probe results cannot move. Returns
-    * (bandsCompacted, filesBefore, filesAfter).
-    */
-  def compactLshIndex(spark: org.apache.spark.sql.SparkSession,
-                      dir: String, maxFilesPerBand: Int = 1)
-      : (Int, Long, Long) =
-    StoreMaintenance.compactPartitioned(spark, s"$dir/buckets", "band",
-      maxFilesPerBand)
-
-  /** C25 lifecycle (merge): combine indexes built under the SAME
-    * (k, perms, bands) signature — parallel shard crawls merged into
-    * one history, the [[graft.operators.Knn.mergeIvfPqIndexes]]
-    * posture: signature identity VERIFIED against the params sidecars
-    * (different signatures produce incompatible band keys — silent
-    * missed-dup corruption), then pure file concatenation per `band=`
-    * partition. No dedup across shards (run [[fsckLshIndex]] after;
-    * its dup_rows check catches overlap). Returns files copied.
-    * `dryRun=true`: admission check + enumeration only, returns the
-    * would-copy count.
-    */
-  def mergeLshIndexes(spark: org.apache.spark.sql.SparkSession,
-                      dst: String, srcs: Seq[String],
-                      dryRun: Boolean = false): Long = {
-    val want = lshIndexParams(spark, dst)
-    srcs.foreach { s =>
-      require(lshIndexParams(spark, s) == want,
-        s"$s was built under a DIFFERENT (k, perms, bands) signature " +
-          s"than $dst — band keys are incompatible")
-    }
-    val dstRoot = new org.apache.hadoop.fs.Path(s"$dst/buckets")
-    // enumerate (src, dst) driver-side (O(bands × shards)), move the
-    // BYTES as a Spark job — merge bandwidth scales with the cluster
-    val pairs = srcs.filterNot(_ == dst).zipWithIndex.flatMap {
-      case (src, i) =>
-        StoreMaintenance.partitionDirs(spark,
-            new org.apache.hadoop.fs.Path(s"$src/buckets"), "band")
-          .flatMap { case (band, p) =>
-            StoreMaintenance.dataFiles(spark, p).map { case (f, _) =>
-              (f.toString, new org.apache.hadoop.fs.Path(dstRoot,
-                s"band=$band/merge$i-${f.getName}").toString)
-            }
-          }
-    }
-    // dry run: signature admission ran above — count, don't copy
-    if (dryRun) pairs.size.toLong
-    else StoreMaintenance.copyFilesDistributed(spark, pairs)
-  }
-
-  /** C25 lifecycle (stats): per-band health of a [[buildLshIndex]]
-    * layout — (band, n_rows, n_files, bytes), the
-    * [[graft.operators.Knn.ivfPqIndexStats]] report for the bucket
-    * store: file fragmentation drives [[compactLshIndex]], row
-    * imbalance flags a hot band. Listing is O(bands) driver work; the
-    * count side is one column-pruned partial agg.
-    */
-  def lshIndexStats(spark: org.apache.spark.sql.SparkSession,
-                    dir: String): DataFrame = {
-    import spark.implicits._
-    val files = StoreMaintenance
-      .partitionFileStats(spark, s"$dir/buckets", "band")
-      .toDF("band", "n_files", "bytes")
-    spark.read.parquet(s"$dir/buckets")
-      .groupBy(col("band")).agg(count(lit(1)).as("n_rows"))
-      .join(files, Seq("band"), "right")
-      .withColumn("n_rows", coalesce(col("n_rows"), lit(0L)))
-      .select(col("band"), col("n_rows"), col("n_files"), col("bytes"))
-      .orderBy("band")
-  }
-
-  /** C25 lifecycle (fsck): integrity report over a [[buildLshIndex]]
-    * layout — (check, ok, n_bad, detail) per invariant:
-    *
-    *   - `params_valid`: the sidecar parses and `perms % bands == 0`;
-    *   - `bands_complete`: the `band=` partitions tile 0..bands−1
-    *     exactly (a missing band silently blinds every probe to 1/B of
-    *     the signature; an extra band is unreachable rows);
-    *   - `doc_coverage`: every indexed doc carries EXACTLY one key in
-    *     every band (fewer = a torn append, that doc under-recalls
-    *     forever; the check counts docs whose distinct-band count ≠
-    *     bands);
-    *   - `dup_rows`: repeated (band, bkey, corpus_id) rows — the
-    *     crashed-purge/compaction signature; probes absorb them via
-    *     `.distinct()` but they inflate every probe's shuffle.
-    *
-    * Two grouped partial aggs over the bucket rows — fsck cadence.
-    */
-  def fsckLshIndex(spark: org.apache.spark.sql.SparkSession,
-                   dir: String): DataFrame = {
-    import spark.implicits._
-    val (k, perms, bands) = lshIndexParams(spark, dir)
-    val paramsBad = if (k >= 1 && bands >= 1 && perms % bands == 0) 0L
-      else 1L
-    val stored = StoreMaintenance.partitionDirs(spark,
-      new org.apache.hadoop.fs.Path(s"$dir/buckets"), "band")
-      .map(_._1).toSet
-    val bandBad = ((0 until bands).count(!stored(_)) +
-      stored.count(b => b < 0 || b >= bands)).toLong
-    val buckets = spark.read.parquet(s"$dir/buckets")
-      .select(col("band"), col("bkey"), col("corpus_id"))
-    val cover = buckets.groupBy(col("corpus_id"))
-      .agg(countDistinct(col("band")).as("nb"))
-      .filter(col("nb") =!= bands).count()
-    val dups = buckets.groupBy(col("band"), col("bkey"), col("corpus_id"))
-      .agg(count(lit(1)).as("c")).filter(col("c") > 1).count()
-    Seq(
-      ("params_valid", paramsBad == 0L, paramsBad,
-        s"k=$k perms=$perms bands=$bands"),
-      ("bands_complete", bandBad == 0L, bandBad,
-        s"expect band= partitions 0..${bands - 1}"),
-      ("doc_coverage", cover == 0L, cover,
-        s"docs must key into all $bands bands (torn append)"),
-      ("dup_rows", dups == 0L, dups,
-        "repeated bucket rows (crashed purge/compaction)")
-    ).toDF("check", "ok", "n_bad", "detail")
-  }
-
-  /** C25 lifecycle (advise): the maintenance-advisor runbook row for
-    * the LSH store — [[graft.operators.Knn.adviseIvfPqIndex]]'s
-    * discipline under [[StoreMaintenance.adviseRow]]'s precedence.
-    * The LSH store has no drift number derivable from a listing (its
-    * decay metric is [[lshIndexRecall]], which needs a corpus + probe
-    * batch — C37's row, an eval cadence, not an advisor scan), so the
-    * rebuild slot stays empty here: actions are repair (fsck flags),
-    * compact (any `band=` partition over `maxFilesPerBand` files —
-    * [[compactLshIndex]]'s knob), or ok.
-    */
-  def adviseLshIndex(spark: org.apache.spark.sql.SparkSession,
-                     dir: String,
-                     maxFilesPerBand: Int = 1): DataFrame = {
-    val fsckBad = fsckLshIndex(spark, dir).filter(!col("ok")).count()
-    val fragged = StoreMaintenance
-      .partitionFileStats(spark, s"$dir/buckets", "band")
-      .count(_._2 > maxFilesPerBand)
-    val compact = if (fragged > 0)
-      Some(s"$fragged band partition(s) over $maxFilesPerBand file(s) " +
-        "- compactLshIndex")
-    else scala.None
-    StoreMaintenance.adviseRow(spark, dir, fsckBad, scala.None, compact)
-  }
-
   /** [[lshIndexRecall]] with an ABSOLUTE-size probe batch — the C35b
     * posture for the persisted-store report: the registered harness
     * batch is PROPORTIONAL (10% of corpus), which at a duplicate-storm
@@ -554,99 +349,6 @@ object Dedup {
     lshIndexRecall(dir, corpus, batchIn, idCol, textCol, threshold)
   }
 
-  /** C25 lifecycle (repair): fix what [[fsckLshIndex]] flags, without
-    * a rebuild — the [[graft.operators.Knn.repairIvfPqIndex]]
-    * discipline for the band-partitioned layout, per corruption
-    * class:
-    *
-    *   - out-of-range `band=` partitions (band < 0 or ≥ bands —
-    *     unreachable by any probe) are deleted outright, the D8
-    *     orphan-cell rule;
-    *   - duplicate (band, bkey, corpus_id) rows (crashed purge /
-    *     pre-journal compaction) collapse to ONE copy — the row IS
-    *     its three columns, so any survivor is the same value and
-    *     re-running converges;
-    *   - torn-append docs (distinct-band count ≠ bands: the append
-    *     died between band files; that doc under-recalls forever)
-    *     have ALL their bucket rows dropped — the doc simply leaves
-    *     the index, consistent and re-appendable.
-    *
-    * FILE surgery only: offender files (any file holding a duplicate
-    * copy or a torn doc's row — all copies of a dup are offender-
-    * resident by construction) are rewritten via append-then-delete;
-    * every clean file stays byte-identical (spec-pinned). Refuses
-    * loudly when a band partition in 0..bands−1 is MISSING entirely:
-    * under that data loss every doc looks torn and "repair" would
-    * drop the whole index — that is restore/rebuild territory, fsck
-    * keeps flagging it. Idempotent. Returns (rowsDropped,
-    * filesRewritten) — orphan-partition rows count in rowsDropped.
-    */
-  def repairLshIndex(spark: org.apache.spark.sql.SparkSession,
-                     dir: String): (Long, Int) = {
-    val (k, perms, bands) = lshIndexParams(spark, dir)
-    require(k >= 1 && bands >= 1 && perms % bands == 0,
-      s"$dir params sidecar is invalid (k=$k perms=$perms " +
-        s"bands=$bands) — repair cannot interpret the layout")
-    val root = new org.apache.hadoop.fs.Path(s"$dir/buckets")
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // 1) unreachable out-of-range band partitions: delete the dirs
-    val dirs = StoreMaintenance.partitionDirs(spark, root, "band")
-    val orphan = dirs.filter { case (b, _) => b < 0 || b >= bands }
-    var dropped = 0L
-    if (orphan.nonEmpty) {
-      dropped += spark.read
-        .parquet(orphan.map(_._2.toString): _*).count()
-      orphan.foreach { case (_, p) => fs.delete(p, true) }
-      StoreMaintenance.refreshPath(spark, s"$dir/buckets")
-    }
-    val stored = StoreMaintenance.partitionDirs(spark, root, "band")
-      .map(_._1).toSet
-    require((0 until bands).forall(stored),
-      s"$dir is missing band partitions ${(0 until bands)
-        .filterNot(stored).mkString(",")} — under that loss every doc " +
-        "looks torn and surgery would drop the index; restore or " +
-        "rebuild instead")
-    // 2) dup rows + torn docs, file-level
-    val buckets = spark.read.parquet(s"$dir/buckets")
-      .withColumn("_file", input_file_name())
-    val dupKeys = buckets
-      .groupBy(col("band"), col("bkey"), col("corpus_id"))
-      .agg(count(lit(1)).as("c")).filter(col("c") > 1)
-      .select(col("band"), col("bkey"), col("corpus_id"))
-    val torn = buckets.groupBy(col("corpus_id"))
-      .agg(countDistinct(col("band")).as("nb"))
-      .filter(col("nb") =!= bands).select(col("corpus_id"))
-    val offenders = buckets
-      .join(dupKeys, Seq("band", "bkey", "corpus_id"))
-      .select(col("_file"))
-      .unionAll(buckets.join(torn, "corpus_id").select(col("_file")))
-      .distinct().collect().map(_.getString(0)).sorted
-    if (offenders.isEmpty) return (dropped, 0)
-    val touched = buckets.filter(col("_file").isin(offenders: _*))
-    val nTouched = touched.count()
-    val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
-    val survivors = touched
-      .join(torn, Seq("corpus_id"), "left_anti")
-      .select(col("bkey"), col("corpus_id"), col("band"))
-      .dropDuplicates("band", "bkey", "corpus_id")
-      .localCheckpoint()
-    try {
-      val kept = survivors.count()
-      survivors.write.mode("append").partitionBy("band")
-        .parquet(s"$dir/buckets")
-      offenders.foreach { f =>
-        fs.delete(new org.apache.hadoop.fs.Path(new java.net.URI(f)), false)
-      }
-      // the deletes bypass the Spark writer: drop any cached listing
-      StoreMaintenance.refreshPath(spark, s"$dir/buckets")
-      (dropped + nTouched - kept, offenders.length)
-    } finally {
-      val rdds = spark.sparkContext.getPersistentRDDs
-      (rdds.keySet diff persistedBefore)
-        .foreach(id => rdds.get(id).foreach(_.unpersist(blocking = false)))
-    }
-  }
-
   /** C25 lifecycle (probe): [[incrementalMinhash]] served from a
     * [[buildLshIndex]] layout instead of re-hashing the corpus text
     * per call — the corpus side of the plan reads ONLY the flat
@@ -670,7 +372,7 @@ object Dedup {
     val (k, perms, bands) = lshIndexParams(spark, dir)
     incrementalMinhash(corpus, batch, idCol, textCol, k, perms, bands,
       threshold, maxBucket, cacheShingles, broadcastBatch,
-      bucketIndex = Some(spark.read.parquet(s"$dir/buckets")
+      bucketIndex = Some(PersistedStore.readData(spark, dir, PersistedStore.Lsh)
         .select(col("band"), col("bkey"), col("corpus_id"))),
       shingledCorpus = shingledCorpus, shingledBatch = shingledBatch)
   }
@@ -709,7 +411,7 @@ object Dedup {
                      threshold: Double = 0.7): DataFrame = {
     val spark = batch.sparkSession
     val (k, _, _) = lshIndexParams(spark, dir)
-    val indexed = spark.read.parquet(s"$dir/buckets")
+    val indexed = PersistedStore.readData(spark, dir, PersistedStore.Lsh)
       .select(col("corpus_id")).distinct()
     val corpusIn = corpus
       .withColumn("_cid", col(idCol).cast("long"))

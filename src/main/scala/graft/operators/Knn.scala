@@ -1138,7 +1138,7 @@ object Knn {
       .collect().map(_.getLong(0)).sorted
     val cv = corpus.select(col(idCol).as("neighbor_id"),
       asDouble(col(vecCol)).as("cv"))
-    val cand = readCodes(spark, dir)
+    val cand = PersistedStore.readData(spark, dir, PersistedStore.IvfPq)
       .filter(col("cell_id").isin(probedCells: _*))
       .select(col("neighbor_id"), col("cell_id"))
       .join(probes, "cell_id")
@@ -1181,7 +1181,7 @@ object Knn {
     // oracle can replay — or a coarse trained on a reference
     // distribution; default trains full-vector k-means here.
     // `codebooks` is the same posture for the PQ side — REQUIRED when
-    // several shard builds must later [[mergeIvfPqIndexes]] (stores
+    // several shard builds must later [[PersistedStore.merge]] (stores
     // with independently-trained quantizers cannot merge: the same
     // byte codes would decode to different subvectors).
     val coarseTab = coarse.map(_.select(col("cell_id"),
@@ -1249,34 +1249,6 @@ object Knn {
       s"index at $dir was built with dim $stored, caller passed $dim")
   }
 
-  /** The codes table's read schema (partition column last, as parquet
-    * partition inference returns it). */
-  private val CodesSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("neighbor_id",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("codes",
-      org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.LongType)),
-    org.apache.spark.sql.types.StructField("cell_id",
-      org.apache.spark.sql.types.IntegerType)))
-
-  /** Read `dir/codes`, tolerating the fully-purged state (a legal
-    * retention outcome — [[removeFromIvfPqIndex]] drops every
-    * `cell_id=` partition when the whole corpus is purged): an empty
-    * frame with the layout's schema comes back instead of a parquet
-    * schema-inference failure, so search answers "no neighbors" and a
-    * later append restores the index.
-    */
-  private def readCodes(spark: SparkSession, dir: String): DataFrame = {
-    val root = new org.apache.hadoop.fs.Path(s"$dir/codes")
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hasCells = fs.exists(root) && fs.listStatus(root).exists(s =>
-      s.isDirectory && s.getPath.getName.startsWith("cell_id="))
-    if (hasCells) spark.read.parquet(s"$dir/codes")
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], CodesSchema)
-  }
-
   /** D8 (append): add new vectors to a [[buildIvfPqIndex]] layout
     * WITHOUT retraining — the FAISS `add` lifecycle an ingest cycle
     * runs: the stored coarse table and sub-codebooks are read back
@@ -1301,394 +1273,6 @@ object Knn {
     assignAndEncode(delta, idCol, vecCol, coarseB, cbs, m, dim / m)
       .write.mode("append").partitionBy("cell_id")
       .parquet(s"$dir/codes")
-  }
-
-  /** D8 (remove): delete vectors from a [[buildIvfPqIndex]] layout —
-    * the GDPR-purge / retention lifecycle, WITHOUT a full rebuild and
-    * without touching the search path: only the `cell_id=` partitions
-    * that actually contain a purged id are rewritten (dynamic
-    * partition overwrite), every other partition's files stay
-    * byte-identical, and [[searchIvfPqIndex]] needs no tombstone
-    * awareness because deleted codes physically leave the layout. A
-    * cell whose every code is purged has its partition directory
-    * removed outright. Codebooks and coarse centroids are NOT retrained
-    * (same frozen-quantizer trade as [[appendToIvfPqIndex]] — rebuild
-    * when recall decays). The purge list is an id set (broadcast —
-    * deletion requests are bounded, nothing corpus-scale); the only
-    * driver-side materialization is the affected CELL list, ≤
-    * coarseCells rows by construction. Returns the number of codes
-    * removed.
-    */
-  def removeFromIvfPqIndex(deleteIds: DataFrame, idCol: String,
-                           dir: String): Long = {
-    val spark = deleteIds.sparkSession
-    val ids = deleteIds.select(col(idCol).cast("long").as("neighbor_id"))
-      .distinct()
-    val codes = readCodes(spark, dir)
-    val affected = codes.join(broadcast(ids), "neighbor_id")
-    val cells = affected.select(col("cell_id")).distinct().collect()
-      .map(_.getAs[Number](0).intValue()).sorted
-    if (cells.isEmpty) return 0L
-    val removed = affected.count()
-    // localCheckpoint (not persist): the write below dynamically
-    // OVERWRITES $dir/codes, the very path this frame's lineage reads.
-    // A cached plan can lose blocks (executor death) mid-commit and
-    // recompute from partially-swapped source files, persisting
-    // corrupt codes; checkpointing truncates the lineage so the write
-    // plan has no path back to the directory being replaced.
-    // Dataset.unpersist only releases CacheManager entries and never
-    // touches the RDD-level blocks a localCheckpoint pins, so snapshot
-    // the persistent-RDD set and free exactly the checkpoint's blocks
-    // in the finally below — otherwise every purge leaks a
-    // cells-sized block set until RDD GC. (Assumes no concurrent
-    // persist in this session between the snapshot and the diff — the
-    // single-writer posture this maintenance API already requires.)
-    val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
-    val remaining = codes
-      .filter(col("cell_id").isin(cells.map(Integer.valueOf): _*))
-      .join(broadcast(ids), Seq("neighbor_id"), "left_anti")
-      .localCheckpoint()
-    try {
-      val keptCells = remaining.select(col("cell_id")).distinct().collect()
-        .map(_.getAs[Number](0).intValue()).toSet
-      val key = "spark.sql.sources.partitionOverwriteMode"
-      val prev = spark.conf.getOption(key)
-      spark.conf.set(key, "dynamic")
-      try remaining.write.mode("overwrite").partitionBy("cell_id")
-        .parquet(s"$dir/codes")
-      finally prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case scala.None => spark.conf.unset(key)
-      }
-      // dynamic overwrite only rewrites partitions present in the
-      // data — a fully-purged cell keeps its old files unless the
-      // directory is dropped explicitly
-      val root = new org.apache.hadoop.fs.Path(s"$dir/codes")
-      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      cells.filterNot(keptCells).foreach { c =>
-        fs.delete(new org.apache.hadoop.fs.Path(root, s"cell_id=$c"), true)
-      }
-      StoreMaintenance.refreshPath(spark, s"$dir/codes")
-    } finally {
-      val rdds = spark.sparkContext.getPersistentRDDs
-      (rdds.keySet diff persistedBefore)
-        .foreach(id => rdds.get(id).foreach(_.unpersist(blocking = false)))
-    }
-    removed
-  }
-
-  /** D8 (compact): coalesce fragmented `cell_id=` partitions after an
-    * append-heavy ingest cycle — every [[appendToIvfPqIndex]] is a
-    * pure file-add, so a store that ingested B batches carries up to
-    * B+1 files per probed cell, and each [[searchIvfPqIndex]] pays
-    * per-file open/footer/task costs on KB-sized splits (the classic
-    * small-files tax at cluster scale). Only cells over
-    * `maxFilesPerCell` files are read (partition-pruned) and
-    * rewritten to one file each; every other cell's files stay
-    * byte-identical (spec-pinned), the row set is unchanged, and the
-    * search path needs no awareness (same rows, fewer files). Frozen
-    * quantizers are untouched — compaction is file surgery, not a
-    * rebuild. Returns (cellsCompacted, filesBefore, filesAfter).
-    */
-  def compactIvfPqIndex(spark: SparkSession, dir: String,
-                        maxFilesPerCell: Int = 1): (Int, Long, Long) =
-    StoreMaintenance.compactPartitioned(spark, s"$dir/codes", "cell_id",
-      maxFilesPerCell)
-
-  /** D8 (stats): per-cell health of a [[buildIvfPqIndex]] layout —
-    * (cell_id, n_codes, n_files, bytes) — the report that drives the
-    * compact/rebuild decision (file fragmentation → [[compactIvfPqIndex]];
-    * cell-count imbalance → recall drift, rebuild). The listing side
-    * is O(coarseCells) driver work; the count side is one
-    * column-pruned partial aggregation over the codes.
-    */
-  def ivfPqIndexStats(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val files = StoreMaintenance
-      .partitionFileStats(spark, s"$dir/codes", "cell_id")
-      .toDF("cell_id", "n_files", "bytes")
-    readCodes(spark, dir)
-      .groupBy(col("cell_id")).agg(count(lit(1)).as("n_codes"))
-      .join(files, Seq("cell_id"), "right")
-      .withColumn("n_codes", coalesce(col("n_codes"), lit(0L)))
-      .select(col("cell_id"), col("n_codes"), col("n_files"), col("bytes"))
-      .orderBy("cell_id")
-  }
-
-  /** D8 (fsck): structural integrity check over a [[buildIvfPqIndex]]
-    * layout — the [[graft.operators.BulkLoad]] repair discipline for
-    * the vector store: after crashes, manual surgery, or a bad writer,
-    * an index can hold silently-corrupt state that search only
-    * surfaces as wrong answers. One report row per invariant:
-    * (check, ok, n_bad, detail).
-    *
-    *   - `coarse_uniform`: centroid lengths agree (the stored dim);
-    *   - `codebooks_complete`: subs tile 0..m−1, every sub carries the
-    *     same cell count, every cvec is dim/m long;
-    *   - `codes_len`: every code array is exactly m long;
-    *   - `codes_range`: every code falls in [0, ksub);
-    *   - `ids_unique`: no neighbor_id appears twice (a replayed append
-    *     or a mid-compaction crash duplicates rows — search would
-    *     return the same neighbor twice);
-    *   - `cells_known`: every stored cell_id has a coarse centroid
-    *     (an orphan partition is unreachable by any probe — rows
-    *     silently invisible).
-    *
-    * Cost: the metadata checks are tiny reads; the codes checks are
-    * one partial-agg pass plus one id-keyed shuffle for uniqueness —
-    * fsck cadence, not query cadence.
-    */
-  def fsckIvfPqIndex(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    // the integrity checker must REPORT a missing/empty/unreadable
-    // sidecar as the corruption it is, not crash on it (an empty max
-    // would NPE below and the fsck would die exactly when needed)
-    def tryRead(name: String): Either[String, DataFrame] =
-      try {
-        val df = spark.read.parquet(s"$dir/$name")
-        if (df.head(1).isEmpty) Left(s"$name sidecar is EMPTY")
-        else Right(df)
-      } catch {
-        case e: Exception =>
-          Left(s"$name sidecar unreadable: ${
-            Option(e.getMessage).getOrElse(e.getClass.getName).take(80)}")
-      }
-    (tryRead("coarse"), tryRead("codebooks")) match {
-      case (cE, bE) if cE.isLeft || bE.isLeft =>
-        val skip = "skipped: quantizer sidecar corrupt"
-        return Seq(
-          ("coarse_uniform", cE.isRight, if (cE.isLeft) 1L else 0L,
-            cE.left.getOrElse("readable")),
-          ("codebooks_complete", bE.isRight, if (bE.isLeft) 1L else 0L,
-            bE.left.getOrElse("readable")),
-          ("codes_len", false, 0L, skip),
-          ("codes_range", false, 0L, skip),
-          ("ids_unique", false, 0L, skip),
-          ("cells_known", false, 0L, skip)
-        ).toDF("check", "ok", "n_bad", "detail")
-      case _ => ()
-    }
-    val coarse = spark.read.parquet(s"$dir/coarse")
-    val dimCounts = coarse.groupBy(size(col("centroid")).as("d"))
-      .count().collect()
-    val dim = dimCounts.map(r => (r.getInt(0), r.getLong(1)))
-      .maxBy(_._2)._1
-    val badDims = dimCounts.filter(_.getInt(0) != dim)
-      .map(_.getLong(1)).sum
-    val cbs = spark.read.parquet(s"$dir/codebooks")
-    val m = cbs.agg(max(col("sub"))).head().getInt(0) + 1
-    val subStats = cbs.groupBy(col("sub"))
-      .agg(count(lit(1)).as("k"),
-        countDistinct(size(col("cvec"))).as("dl"),
-        max(size(col("cvec"))).as("dmax"))
-      .collect()
-    val ksub = subStats.map(_.getAs[Long]("k")).max.toInt
-    val cbBad =
-      (0 until m).count(s => !subStats.exists(_.getAs[Int]("sub") == s)) +
-        subStats.count(r => r.getAs[Long]("k") != ksub ||
-          r.getAs[Long]("dl") != 1L ||
-          r.getAs[Int]("dmax") != dim / m)
-    val codes = readCodes(spark, dir)
-    val known = coarse.select(col("cell_id")).distinct().collect()
-      .map(_.getAs[Number](0).intValue()).toSet
-    // one partial-agg pass for the per-row invariants
-    val rowBad = codes.agg(
-      sum(when(size(col("codes")) =!= m, 1L).otherwise(0L)).as("len"),
-      sum(when(exists(col("codes"),
-        c => c < 0 || c >= ksub), 1L).otherwise(0L)).as("rng"),
-      sum(when(!col("cell_id").isin(known.toSeq.map(Integer.valueOf): _*),
-        1L).otherwise(0L)).as("orphan"))
-      .collect().headOption
-    val (badLen, badRng, orphan) = rowBad match {
-      case Some(r) if !r.isNullAt(0) =>
-        (r.getAs[Long]("len"), r.getAs[Long]("rng"), r.getAs[Long]("orphan"))
-      case _ => (0L, 0L, 0L) // empty (fully-purged) store: all clean
-    }
-    val dupIds = codes.groupBy(col("neighbor_id"))
-      .agg(count(lit(1)).as("c")).filter(col("c") > 1).count()
-    Seq(
-      ("coarse_uniform", badDims == 0L, badDims,
-        s"stored dim $dim, ${coarse.count()} centroids"),
-      ("codebooks_complete", cbBad == 0, cbBad.toLong,
-        s"m=$m ksub=$ksub subdim=${dim / m}"),
-      ("codes_len", badLen == 0L, badLen, s"expect $m codes per row"),
-      ("codes_range", badRng == 0L, badRng, s"expect codes in [0, $ksub)"),
-      ("ids_unique", dupIds == 0L, dupIds,
-        "duplicate neighbor_id rows (replayed append / crashed compact)"),
-      ("cells_known", orphan == 0L, orphan,
-        s"${known.size} coarse cells")
-    ).toDF("check", "ok", "n_bad", "detail")
-  }
-
-  /** D8 (merge): combine stores built under the SAME frozen quantizers
-    * into one — FAISS `merge_from`, the distributed-build endgame:
-    * shard a billion-vector corpus, run [[buildIvfPqIndex]] per shard
-    * in parallel (each with the shared pretrained `coarse` +
-    * `codebooks` overrides), then merge = pure FILE CONCATENATION per
-    * `cell_id=` partition — no Spark job touches a code row, because
-    * identical quantizers mean identical cell assignment and byte
-    * semantics. Quantizer identity is VERIFIED (exact row-set equality
-    * of both sidecars, driver-side — they are tiny), not trusted: the
-    * same byte codes under different codebooks decode to different
-    * vectors, the silent-corruption worst case. Sources' files are
-    * copied with disambiguated names; `dst` may be one of the sources
-    * (in-place merge = copy the others in). Returns the number of
-    * code files copied. Single-writer posture; run
-    * [[fsckIvfPqIndex]] after (ids_unique catches shard overlap —
-    * merge does not dedup across shards, exactly like FAISS). The
-    * (src, dst) file list is enumerated driver-side (O(partitions ×
-    * shards)) but the BYTES move as a Spark job
-    * ([[StoreMaintenance.copyFilesDistributed]]) — merge bandwidth
-    * scales with the cluster, the driver touches no data path.
-    * `dryRun=true` runs the full quantizer-admission check and file
-    * enumeration (incompatible shards still refuse loudly) but moves
-    * nothing — returns the would-copy count.
-    */
-  def mergeIvfPqIndexes(spark: SparkSession, dst: String,
-                        srcs: Seq[String],
-                        dryRun: Boolean = false): Long = {
-    // quantizer identity compared on TYPED values (integer key fields
-    // + vector elements), not Row.toString renderings: string equality
-    // is brittle (double formatting, -0.0 vs 0.0) and would refuse a
-    // numerically-identical but re-serialized sidecar. The sort key is
-    // the TYPED key tuple (fields in name order, so a re-serialized
-    // sidecar with reordered columns still compares) — never a hash
-    // fold, whose collisions would make the sorted order depend on
-    // nondeterministic collect() order and spuriously refuse an
-    // identical sidecar
-    def sidecar(dir: String, name: String): Seq[(Seq[Int], Seq[Double])] =
-      spark.read.parquet(s"$dir/$name").collect().map { r =>
-        val (vecFields, keyFields) = r.schema.fields.partition(
-          _.dataType.isInstanceOf[org.apache.spark.sql.types.ArrayType])
-        require(vecFields.length == 1,
-          s"$name sidecar must have exactly one vector column")
-        val key = keyFields.sortBy(_.name).map(f =>
-          r.getAs[Number](f.name).intValue()).toSeq
-        // normalize -0.0 to 0.0 AT READ so sorting and equality agree
-        (key, r.getAs[scala.collection.Seq[Number]](vecFields.head.name)
-          .map(_.doubleValue() + 0.0).toSeq)
-      }.sortBy(p => (p._1, p._2))(
-        Ordering.Tuple2(Ordering.Implicits.seqOrdering[Seq, Int],
-          Ordering.Implicits.seqOrdering[Seq, Double])).toSeq
-    def sameSidecar(a: Seq[(Seq[Int], Seq[Double])],
-                    b: Seq[(Seq[Int], Seq[Double])]): Boolean =
-      a.size == b.size && a.zip(b).forall { case ((ka, va), (kb, vb)) =>
-        ka == kb && va.size == vb.size &&
-          va.zip(vb).forall { case (x, y) =>
-            java.lang.Double.compare(x + 0.0, y + 0.0) == 0 }
-      }
-    val wantCoarse = sidecar(dst, "coarse")
-    val wantCbs = sidecar(dst, "codebooks")
-    srcs.foreach { s =>
-      require(sameSidecar(sidecar(s, "coarse"), wantCoarse),
-        s"$s was built under a DIFFERENT coarse quantizer than $dst — " +
-          "stores with independent quantizers cannot merge")
-      require(sameSidecar(sidecar(s, "codebooks"), wantCbs),
-        s"$s was built under DIFFERENT codebooks than $dst")
-    }
-    val dstRoot = new org.apache.hadoop.fs.Path(s"$dst/codes")
-    val pairs = srcs.filterNot(_ == dst).zipWithIndex.flatMap {
-      case (src, i) =>
-        StoreMaintenance.partitionDirs(spark,
-            new org.apache.hadoop.fs.Path(s"$src/codes"), "cell_id")
-          .flatMap { case (cell, p) =>
-            StoreMaintenance.dataFiles(spark, p).map { case (f, _) =>
-              (f.toString, new org.apache.hadoop.fs.Path(dstRoot,
-                s"cell_id=$cell/merge$i-${f.getName}").toString)
-            }
-          }
-    }
-    // dry run: the full admission check ran (incompatible quantizers
-    // refused loudly above) — report the would-copy count, move nothing
-    if (dryRun) pairs.size.toLong
-    else StoreMaintenance.copyFilesDistributed(spark, pairs)
-  }
-
-  /** D8 (repair): fix what [[fsckIvfPqIndex]] flags, without a rebuild
-    * — the BulkLoad backup/repair discipline completing the store's
-    * lifecycle: duplicate neighbor_id rows collapse to ONE surviving
-    * copy (deterministic winner: smallest (cell_id, codes-hash), so
-    * re-running after a crash converges), malformed rows (wrong code
-    * length, out-of-range codes) drop — no ADC can score garbage —
-    * and orphan-cell partitions (no coarse centroid ⇒ unreachable by
-    * any probe) drop outright. File surgery only: the orphan dirs are
-    * deleted and ONLY the cells containing an offending row are
-    * rewritten (dynamic overwrite, localCheckpoint-before-overwrite
-    * lineage guard); every clean cell's files stay byte-identical.
-    * Returns (rowsDropped, cellsRewritten). Idempotent; quantizers
-    * untouched (a drifted quantizer is [[ivfPqIndexDrift]]'s rebuild
-    * territory, not repair's).
-    */
-  def repairIvfPqIndex(spark: SparkSession, dir: String): (Long, Int) = {
-    val coarse = spark.read.parquet(s"$dir/coarse")
-    val cbs = spark.read.parquet(s"$dir/codebooks")
-    // refuse loudly on an empty quantizer sidecar — repair has no
-    // basis to judge codes without one (fsck reports it; rebuilding
-    // or restoring the sidecar is the operator's call, not surgery's)
-    require(cbs.head(1).nonEmpty && coarse.head(1).nonEmpty,
-      s"$dir quantizer sidecars are empty — run fsckIvfPqIndex; " +
-        "repair cannot proceed without coarse + codebooks")
-    val m = cbs.agg(max(col("sub"))).head().getInt(0) + 1
-    val ksub = cbs.groupBy(col("sub")).agg(count(lit(1)).as("k"))
-      .agg(max(col("k"))).head().getLong(0).toInt
-    val known = coarse.select(col("cell_id")).distinct().collect()
-      .map(_.getAs[Number](0).intValue()).toSet
-    val root = new org.apache.hadoop.fs.Path(s"$dir/codes")
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // orphan partitions: unreachable, drop the directories outright
-    val orphanDirs = StoreMaintenance.partitionDirs(spark, root, "cell_id")
-      .filterNot(d => known(d._1))
-    val orphanRows = if (orphanDirs.isEmpty) 0L
-      else spark.read.parquet(orphanDirs.map(_._2.toString): _*).count()
-    orphanDirs.foreach(d => fs.delete(d._2, true))
-    if (orphanDirs.nonEmpty)
-      StoreMaintenance.refreshPath(spark, s"$dir/codes")
-    val codes = readCodes(spark, dir)
-    val wellFormed = size(col("codes")) === m &&
-      !exists(col("codes"), c => c < 0 || c >= ksub)
-    // deterministic dup winner per id (well-formed copies outrank
-    // malformed ones, so a dup pair never loses both); losers +
-    // malformed rows leave
-    val ranked = codes.withColumn("_rn",
-      row_number().over(org.apache.spark.sql.expressions.Window
-        .partitionBy(col("neighbor_id"))
-        .orderBy(when(wellFormed, 0).otherwise(1),
-          col("cell_id"), hash(col("codes")))))
-    val offending = ranked.filter(!wellFormed || col("_rn") > 1)
-    val dropped = offending.count()
-    val cells = offending.select(col("cell_id")).distinct().collect()
-      .map(_.getAs[Number](0).intValue()).sorted
-    if (cells.nonEmpty) {
-      val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
-      val keep = ranked
-        .filter(col("cell_id").isin(cells.map(Integer.valueOf): _*))
-        .filter(wellFormed && col("_rn") === 1)
-        .select(col("neighbor_id"), col("codes"), col("cell_id"))
-        .localCheckpoint()
-      try {
-        val keptCells = keep.select(col("cell_id")).distinct().collect()
-          .map(_.getAs[Number](0).intValue()).toSet
-        val key = "spark.sql.sources.partitionOverwriteMode"
-        val prev = spark.conf.getOption(key)
-        spark.conf.set(key, "dynamic")
-        try keep.write.mode("overwrite").partitionBy("cell_id")
-          .parquet(s"$dir/codes")
-        finally prev match {
-          case Some(v) => spark.conf.set(key, v)
-          case scala.None => spark.conf.unset(key)
-        }
-        cells.filterNot(keptCells).foreach { c =>
-          fs.delete(new org.apache.hadoop.fs.Path(root, s"cell_id=$c"),
-            true)
-        }
-        StoreMaintenance.refreshPath(spark, s"$dir/codes")
-      } finally {
-        val rdds = spark.sparkContext.getPersistentRDDs
-        (rdds.keySet diff persistedBefore)
-          .foreach(id => rdds.get(id).foreach(_.unpersist(blocking = false)))
-      }
-    }
-    (orphanRows + dropped, orphanDirs.size + cells.length)
   }
 
   /** D8 (drift): the REBUILD TRIGGER's number — append/remove run
@@ -1721,7 +1305,7 @@ object Knn {
     val d = dim / m
     val vecs = corpus.select(col(idCol).cast("long").as("neighbor_id"),
       asDouble(col(vecCol)).as("cv"))
-    val codes = readCodes(spark, dir)
+    val codes = PersistedStore.readData(spark, dir, PersistedStore.IvfPq)
     // recon cosine, decomposed per sub: dot(recon, v) = Σ_j dot(cvec_j,
     // slice_j), |recon|² = Σ_j |cvec_j|², |v|² computed once
     val parts = codes
@@ -1760,48 +1344,6 @@ object Knn {
         round(avg(when(col("ncell") =!= col("cell_id"), 1.0)
           .otherwise(0.0)), 6).as("frac_misassigned"))
       .orderBy("cell_id")
-  }
-
-  /** D8 (advise): the maintenance ADVISOR — one (store, action ∈
-    * repair|rebuild|compact|ok, reason) runbook row joining the
-    * store's fsck, drift, and fragmentation numbers under
-    * [[StoreMaintenance.adviseRow]]'s precedence: corruption beats
-    * drift beats fragmentation (corrupt rows pollute the other two
-    * numbers; a drifted quantizer makes compaction pointless).
-    * Rebuild triggers when the code-weighted mean of
-    * [[ivfPqIndexDrift]]'s `frac_misassigned` — the fraction of
-    * stored vectors whose CURRENT nearest coarse cell differs from
-    * their stored one, i.e. probes that now look in the wrong
-    * partition — crosses `maxMisassigned`. Compact triggers when any
-    * `cell_id=` partition holds more than `maxFilesPerCell` files
-    * ([[compactIvfPqIndex]]'s knob). Driver cost: the fsck + stats
-    * passes plus drift's one corpus join — the fsck cadence.
-    */
-  def adviseIvfPqIndex(spark: SparkSession, dir: String,
-                       corpus: DataFrame, idCol: String, vecCol: String,
-                       maxFilesPerCell: Int = 1,
-                       maxMisassigned: Double = 0.2): DataFrame = {
-    val fsckBad = fsckIvfPqIndex(spark, dir)
-      .filter(!col("ok")).count()
-    val rebuild = if (fsckBad > 0) scala.None else {
-      val d = ivfPqIndexDrift(spark, dir, corpus, idCol, vecCol)
-        .agg((sum(col("frac_misassigned") * col("n_codes")) /
-          sum(col("n_codes"))).as("w"))
-        .head().getAs[Double]("w")
-      if (d > maxMisassigned)
-        Some(f"$d%.4f of stored codes are coarse-misassigned vs the " +
-          f"current corpus (> $maxMisassigned%.2f) - the frozen " +
-          "quantizers no longer fit; rebuild")
-      else scala.None
-    }
-    val fragged = StoreMaintenance
-      .partitionFileStats(spark, s"$dir/codes", "cell_id")
-      .count(_._2 > maxFilesPerCell)
-    val compact = if (fragged > 0)
-      Some(s"$fragged cell partition(s) over $maxFilesPerCell file(s) " +
-        "- compactIvfPqIndex")
-    else scala.None
-    StoreMaintenance.adviseRow(spark, dir, fsckBad, rebuild, compact)
   }
 
   /** D8 (search): probe a [[buildIvfPqIndex]] layout. Coarse +
@@ -1849,7 +1391,7 @@ object Knn {
     // Collected from the UNHINTED frame (see recallSweepIndexed).
     val probedCells = probes0.select(col("cell_id")).distinct()
       .collect().map(_.getLong(0)).sorted
-    val codes = readCodes(spark, dir)
+    val codes = PersistedStore.readData(spark, dir, PersistedStore.IvfPq)
       .filter(col("cell_id").isin(probedCells: _*))
     val qsubs = queries.select(col(idCol).as("query_id"),
         posexplode(transform(sequence(lit(0), lit(m - 1)),
@@ -2152,7 +1694,7 @@ object Knn {
                      scala.None): Unit = {
     // `grid` override = the pretrained-quantizer slot (the
     // buildIvfPqIndex coarse/codebooks posture): REQUIRED when shard
-    // builds must later [[mergeSqIndexes]]
+    // builds must later [[PersistedStore.merge]]
     val (lo, scale) = grid.getOrElse(sqTrain(corpus, vecCol, dim))
     require(lo.length == dim && scale.length == dim,
       s"grid override length ${lo.length}/${scale.length} != dim $dim")
@@ -2190,275 +1732,6 @@ object Knn {
     delta.select(col(idCol).cast("long").as("neighbor_id"),
         sqCodes(col(vecCol), lo, scale).as("codes"))
       .write.mode("append").parquet(s"$dir/codes")
-  }
-
-  /** D11b (remove): purge ids from the codes store — file-level
-    * surgery like [[graft.operators.Dedup.removeFromLshIndex]] (the
-    * store is flat, unpartitioned): only files containing a purged id
-    * are rewritten (survivors appended as new files, then the old
-    * files deleted), every other file stays byte-identical. Returns
-    * the number of code rows removed.
-    */
-  def removeFromSqIndex(deleteIds: DataFrame, idCol: String,
-                        dir: String): Long = {
-    val spark = deleteIds.sparkSession
-    StoreMaintenance.recoverFlat(spark, s"$dir/codes")
-    val ids = deleteIds.select(col(idCol).cast("long").as("neighbor_id"))
-      .distinct()
-    val codes = spark.read.parquet(s"$dir/codes")
-      .withColumn("_file", input_file_name())
-    val affected = codes.join(broadcast(ids), "neighbor_id")
-      .select(col("_file")).distinct().collect()
-      .map(_.getString(0)).sorted
-    if (affected.isEmpty) return 0L
-    val touched = codes.filter(col("_file").isin(affected: _*))
-    val removed = touched.join(broadcast(ids), "neighbor_id").count()
-    val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
-    val remaining = touched
-      .join(broadcast(ids), Seq("neighbor_id"), "left_anti")
-      .select(col("neighbor_id"), col("codes"))
-      .localCheckpoint()
-    try {
-      remaining.write.mode("append").parquet(s"$dir/codes")
-      val fs = new org.apache.hadoop.fs.Path(s"$dir/codes")
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      affected.foreach { f =>
-        fs.delete(new org.apache.hadoop.fs.Path(new java.net.URI(f)), false)
-      }
-      // the deletes bypass the Spark writer: drop any cached listing
-      StoreMaintenance.refreshPath(spark, s"$dir/codes")
-    } finally {
-      val rdds = spark.sparkContext.getPersistentRDDs
-      (rdds.keySet diff persistedBefore)
-        .foreach(id => rdds.get(id).foreach(_.unpersist(blocking = false)))
-    }
-    removed
-  }
-
-  /** D11b (compact): combine the small files an append-per-batch
-    * ingest leaves in the flat codes store — files under `minBytes`
-    * merge into one, files at or over it stay byte-identical
-    * (spec-pinned). CRASH-SAFE via the staged-rename journal
-    * ([[StoreMaintenance.compactFlat]]): every open path of this
-    * store sweeps [[StoreMaintenance.recoverFlat]] first, so a
-    * mid-compaction crash can never leave duplicate or missing code
-    * rows at rest. Returns (filesCompacted, filesBefore, filesAfter).
-    */
-  def compactSqIndex(spark: SparkSession, dir: String,
-                     minBytes: Long = 4L << 20): (Int, Long, Long) =
-    StoreMaintenance.compactFlat(spark, s"$dir/codes", minBytes)
-
-  /** D11b (stats): flat-store health — ONE row (n_codes, n_files,
-    * bytes, n_small_files), the [[ivfPqIndexStats]] report for the
-    * unpartitioned layout: `n_small_files` (under `minBytes`) is the
-    * [[compactSqIndex]] trigger. Listing is O(files) driver work; the
-    * count is one column-pruned pass.
-    */
-  def sqIndexStats(spark: SparkSession, dir: String,
-                   minBytes: Long = 4L << 20): DataFrame = {
-    import spark.implicits._
-    StoreMaintenance.recoverFlat(spark, s"$dir/codes")
-    val files = StoreMaintenance.dataFiles(spark,
-      new org.apache.hadoop.fs.Path(s"$dir/codes"))
-    val n = if (files.isEmpty) 0L
-      else spark.read.parquet(s"$dir/codes").count()
-    Seq((n, files.size.toLong, files.map(_._2).sum,
-        files.count(_._2 < minBytes).toLong))
-      .toDF("n_codes", "n_files", "bytes", "n_small_files")
-  }
-
-  /** D11b (merge): combine SQ stores built under the SAME affine grid
-    * — the [[mergeIvfPqIndexes]] posture for the flat layout: grid
-    * identity VERIFIED (same bytes under different grids reconstruct
-    * different vectors), then flat file concatenation — enumerated
-    * driver-side, BYTES moved as a Spark job
-    * ([[StoreMaintenance.copyFilesDistributed]]). Returns files
-    * copied; run [[fsckSqIndex]] after for shard-overlap dups.
-    * `dryRun=true`: admission check + enumeration only, returns the
-    * would-copy count.
-    */
-  def mergeSqIndexes(spark: SparkSession, dst: String,
-                     srcs: Seq[String],
-                     dryRun: Boolean = false): Long = {
-    val (wlo, wsc) = sqIndexGrid(spark, dst)
-    srcs.foreach { s =>
-      val (lo, sc) = sqIndexGrid(spark, s)
-      require(lo.sameElements(wlo) && sc.sameElements(wsc),
-        s"$s was built under a DIFFERENT affine grid than $dst — " +
-          "codes are not comparable")
-    }
-    val dstRoot = new org.apache.hadoop.fs.Path(s"$dst/codes")
-    val pairs = srcs.filterNot(_ == dst).zipWithIndex.flatMap {
-      case (src, i) =>
-        StoreMaintenance.dataFiles(spark,
-            new org.apache.hadoop.fs.Path(s"$src/codes"))
-          .map { case (f, _) =>
-            (f.toString, new org.apache.hadoop.fs.Path(dstRoot,
-              s"merge$i-${f.getName}").toString)
-          }
-    }
-    // dry run: grid-identity admission ran above — count, don't copy
-    if (dryRun) pairs.size.toLong
-    else StoreMaintenance.copyFilesDistributed(spark, pairs)
-  }
-
-  /** D11b (fsck): [[fsckIvfPqIndex]]'s discipline for the flat SQ8
-    * store — (check, ok, n_bad, detail) per invariant: the affine grid
-    * tiles dimensions 0..dim−1 exactly once with finite rows, every
-    * code array is dim long with codes in [0, 255], and neighbor_id is
-    * unique (the replayed-append / crashed-compaction signature). One
-    * partial-agg pass plus one id-keyed shuffle.
-    */
-  def fsckSqIndex(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    StoreMaintenance.recoverFlat(spark, s"$dir/codes")
-    // report a missing/empty/unreadable grid sidecar instead of
-    // crashing on it — the fsckIvfPqIndex guard for the flat store
-    val gridE: Either[String, Array[(Int, Double, Double)]] =
-      try {
-        val g = spark.read.parquet(s"$dir/grid")
-          .select(col("j"), col("lo"), col("scale")).collect()
-          .map(r => (r.getInt(0), r.getDouble(1), r.getDouble(2)))
-        if (g.isEmpty) Left("grid sidecar is EMPTY") else Right(g)
-      } catch {
-        case e: Exception => Left(s"grid sidecar unreadable: ${
-          Option(e.getMessage).getOrElse(e.getClass.getName).take(80)}")
-      }
-    if (gridE.isLeft) {
-      val skip = "skipped: grid sidecar corrupt"
-      return Seq(
-        ("grid_complete", false, 1L, gridE.left.getOrElse("")),
-        ("codes_len", false, 0L, skip),
-        ("codes_range", false, 0L, skip),
-        ("ids_unique", false, 0L, skip)
-      ).toDF("check", "ok", "n_bad", "detail")
-    }
-    val grid = gridE.toOption.get
-    val dim = grid.map(_._1).max + 1
-    val gridBad =
-      (0 until dim).count(j => grid.count(_._1 == j) != 1).toLong +
-        grid.count(g => g._2.isNaN || g._3.isNaN || g._3 < 0).toLong
-    val codes = spark.read.parquet(s"$dir/codes")
-    val rowBad = codes.agg(
-      sum(when(size(col("codes")) =!= dim, 1L).otherwise(0L)).as("len"),
-      sum(when(exists(col("codes"),
-        c => c < 0 || c > 255), 1L).otherwise(0L)).as("rng"))
-      .collect().headOption
-    val (badLen, badRng) = rowBad match {
-      case Some(r) if !r.isNullAt(0) =>
-        (r.getAs[Long]("len"), r.getAs[Long]("rng"))
-      case _ => (0L, 0L)
-    }
-    val dupIds = codes.groupBy(col("neighbor_id"))
-      .agg(count(lit(1)).as("c")).filter(col("c") > 1).count()
-    Seq(
-      ("grid_complete", gridBad == 0L, gridBad,
-        s"dim $dim affine rows"),
-      ("codes_len", badLen == 0L, badLen, s"expect $dim codes per row"),
-      ("codes_range", badRng == 0L, badRng, "expect codes in [0, 255]"),
-      ("ids_unique", dupIds == 0L, dupIds,
-        "duplicate neighbor_id rows (replayed append / crashed compact)")
-    ).toDF("check", "ok", "n_bad", "detail")
-  }
-
-  /** D11b (repair): fix what [[fsckSqIndex]] flags, without a rebuild
-    * — [[repairIvfPqIndex]]'s discipline for the flat store: malformed
-    * rows (wrong code length, out-of-range codes) DROP — no scan can
-    * reconstruct garbage — and duplicate neighbor_id rows (replayed
-    * append / crashed pre-journal compaction) collapse to ONE
-    * deterministic survivor (smallest codes-hash, so re-running after
-    * a crash converges; a true replayed append's copies are
-    * byte-identical, so any survivor is the same row). FILE surgery
-    * only: offender files (those containing a malformed row or any
-    * copy of a duplicated id — all copies of a dup are offender-file
-    * resident by construction) are rewritten via append-then-delete;
-    * every clean file stays byte-identical (spec-pinned). Refuses
-    * loudly on an empty/unreadable grid sidecar — repair has no basis
-    * to judge code rows without the dim (fsck reports it; restoring
-    * the sidecar is the operator's call). Idempotent; the grid itself
-    * is never touched (a drifted grid is [[sqIndexDrift]]'s rebuild
-    * territory). Returns (rowsDropped, filesRewritten).
-    */
-  def repairSqIndex(spark: SparkSession, dir: String): (Long, Int) = {
-    StoreMaintenance.recoverFlat(spark, s"$dir/codes")
-    val (lo, _) = sqIndexGrid(spark, dir)
-    require(lo.nonEmpty,
-      s"$dir grid sidecar is empty — run fsckSqIndex; repair cannot " +
-        "judge code rows without the affine grid")
-    val dim = lo.length
-    val codes = spark.read.parquet(s"$dir/codes")
-      .withColumn("_file", input_file_name())
-    val isMalformed = size(col("codes")) =!= dim ||
-      exists(col("codes"), c => c < 0 || c > 255)
-    val dupIds = codes.groupBy(col("neighbor_id"))
-      .agg(count(lit(1)).as("c")).filter(col("c") > 1)
-      .select(col("neighbor_id"))
-    val offenders = codes.filter(isMalformed).select(col("_file"))
-      .unionAll(codes.join(dupIds, "neighbor_id").select(col("_file")))
-      .distinct().collect().map(_.getString(0)).sorted
-    if (offenders.isEmpty) return (0L, 0)
-    val touched = codes.filter(col("_file").isin(offenders: _*))
-    val nTouched = touched.count()
-    // survivors: well-formed rows, one deterministic copy per id
-    val wId = Window.partitionBy(col("neighbor_id"))
-      .orderBy(xxhash64(col("codes")))
-    val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
-    val survivors = touched.filter(!isMalformed)
-      .withColumn("_rn", row_number().over(wId))
-      .filter(col("_rn") === 1)
-      .select(col("neighbor_id"), col("codes"))
-      .localCheckpoint()
-    try {
-      val kept = survivors.count()
-      survivors.write.mode("append").parquet(s"$dir/codes")
-      val fs = new org.apache.hadoop.fs.Path(s"$dir/codes")
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      offenders.foreach { f =>
-        fs.delete(new org.apache.hadoop.fs.Path(new java.net.URI(f)), false)
-      }
-      // the deletes bypass the Spark writer: drop any cached listing
-      StoreMaintenance.refreshPath(spark, s"$dir/codes")
-      (nTouched - kept, offenders.length)
-    } finally {
-      val rdds = spark.sparkContext.getPersistentRDDs
-      (rdds.keySet diff persistedBefore)
-        .foreach(id => rdds.get(id).foreach(_.unpersist(blocking = false)))
-    }
-  }
-
-  /** D11b (advise): [[adviseIvfPqIndex]]'s runbook row for the flat
-    * SQ8 store — same precedence ([[StoreMaintenance.adviseRow]]).
-    * Rebuild triggers when the dim-averaged `frac_out_of_range` of
-    * [[sqIndexDrift]] — current corpus values clamping to the grid's
-    * edge codes, unbounded reconstruction error — crosses
-    * `maxOutOfRange`. Compact triggers when the store holds
-    * `minSmallFiles` or more files under `minBytes`
-    * ([[compactSqIndex]]'s knob; one small file is just the tail of
-    * the last append, two or more is an ingest pattern worth
-    * merging).
-    */
-  def adviseSqIndex(spark: SparkSession, dir: String, corpus: DataFrame,
-                    vecCol: String, minBytes: Long = 4L << 20,
-                    minSmallFiles: Int = 2,
-                    maxOutOfRange: Double = 0.05): DataFrame = {
-    val fsckBad = fsckSqIndex(spark, dir).filter(!col("ok")).count()
-    val rebuild = if (fsckBad > 0) scala.None else {
-      val d = sqIndexDrift(spark, dir, corpus, vecCol)
-        .agg(avg(col("frac_out_of_range")).as("w"))
-        .head().getAs[Double]("w")
-      if (d > maxOutOfRange)
-        Some(f"$d%.4f of current corpus values fall outside the " +
-          f"frozen affine grid (> $maxOutOfRange%.2f) - codes clamp; " +
-          "rebuild")
-      else scala.None
-    }
-    val small = StoreMaintenance.dataFiles(spark,
-        new org.apache.hadoop.fs.Path(s"$dir/codes"))
-      .count(_._2 < minBytes)
-    val compact = if (small >= minSmallFiles)
-      Some(s"$small files under $minBytes bytes - compactSqIndex")
-    else scala.None
-    StoreMaintenance.adviseRow(spark, dir, fsckBad, rebuild, compact)
   }
 
   /** D11b (drift): the SQ store's rebuild trigger — the frozen affine
@@ -2517,11 +1790,10 @@ object Knn {
                     idCol: String, vecCol: String, dim: Int, k: Int,
                     corpus: DataFrame, overscan: Int = 4,
                     salts: Int = 32): DataFrame = {
-    StoreMaintenance.recoverFlat(spark, s"$dir/codes")
     val (lo, scale) = sqIndexGrid(spark, dir)
     require(lo.length == dim,
       s"index at $dir was built with dim ${lo.length}, caller passed $dim")
-    val recon = spark.read.parquet(s"$dir/codes")
+    val recon = PersistedStore.readData(spark, dir, PersistedStore.Sq)
       .select(col("neighbor_id"), sqRecon(col("codes"), lo, scale).as("rv"))
     sqScanRerank(recon, corpus, queries, idCol, vecCol, k, overscan,
       salts)
@@ -2576,7 +1848,7 @@ object Knn {
     // Collected from the UNHINTED frame (see recallSweepIndexed).
     val probedCells = probes0.select(col("cell_id")).distinct()
       .collect().map(_.getLong(0)).sorted
-    val cand = readCodes(spark, dir)
+    val cand = PersistedStore.readData(spark, dir, PersistedStore.IvfPq)
       .filter(col("cell_id").isin(probedCells: _*))
       .select(col("neighbor_id"), col("cell_id"))
       .join(probes, "cell_id")

@@ -36,6 +36,23 @@ private[graft] object StoreMaintenance {
   def refreshPath(spark: SparkSession, path: String): Unit =
     spark.catalog.refreshByPath(path)
 
+  /** Run `body`, then free every RDD block it left persisted — the
+    * localCheckpoint pins a store surgery or a streaming epoch takes
+    * (Dataset.unpersist never releases those, so without this each call
+    * leaks a block set until RDD GC). Assumes no concurrent persist in
+    * this session between the snapshot and the diff — the single-writer
+    * posture every maintenance verb already requires.
+    */
+  def freeingBlocks[T](spark: SparkSession)(body: => T): T = {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    try body
+    finally {
+      val rdds = spark.sparkContext.getPersistentRDDs
+      (rdds.keySet diff before)
+        .foreach(id => rdds.get(id).foreach(_.unpersist(blocking = false)))
+    }
+  }
+
   /** Data files directly under `dir` (parquet parts only — `_SUCCESS`
     * and other markers excluded), as (path, bytes). */
   def dataFiles(spark: SparkSession, dir: Path): Seq[(Path, Long)] = {
@@ -75,8 +92,7 @@ private[graft] object StoreMaintenance {
     */
   def compactPartitioned(spark: SparkSession, root: String,
                          partCol: String,
-                         maxFilesPerPartition: Int = 1,
-                         maxRecordsPerFile: Long = 0L): (Int, Long, Long) = {
+                         maxFilesPerPartition: Int = 1): (Int, Long, Long) = {
     require(maxFilesPerPartition >= 1,
       s"maxFilesPerPartition must be >= 1, got $maxFilesPerPartition")
     val rootPath = new Path(root)
@@ -91,57 +107,38 @@ private[graft] object StoreMaintenance {
     // localCheckpoint, not persist: the dynamic overwrite below
     // replaces the very files this frame's lineage reads; a cached
     // plan that loses blocks mid-commit would recompute from
-    // partially-swapped sources (the removeFromIvfPqIndex hazard).
-    // The checkpoint's RDD blocks are freed explicitly in the
-    // finally — Dataset.unpersist never releases them.
-    val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
-    val rows = spark.read.parquet(root)
-      .filter(col(partCol).isin(fragged.map(Integer.valueOf): _*))
-      .localCheckpoint()
-    // a fragmented partition whose files hold ZERO rows gets nothing
-    // from dynamic overwrite (it writes no output there, so the stale
-    // files would persist and every rerun would re-report the
-    // partition as compacted): delete those partition dirs directly
-    val nonEmpty = rows.groupBy(col(partCol)).agg(count(lit(1)))
-      .collect().map(_.getInt(0)).toSet
-    val emptyFragged = fragged.filterNot(nonEmpty)
-    if (emptyFragged.nonEmpty) {
-      val fs = rootPath.getFileSystem(
-        spark.sparkContext.hadoopConfiguration)
-      emptyFragged.foreach { v =>
-        fs.delete(new Path(rootPath, s"$partCol=$v"), true)
+    // partially-swapped sources
+    freeingBlocks(spark) {
+      val rows = spark.read.parquet(root)
+        .filter(col(partCol).isin(fragged.map(Integer.valueOf): _*))
+        .localCheckpoint()
+      // a fragmented partition whose files hold ZERO rows gets nothing
+      // from dynamic overwrite (it writes no output there, so the stale
+      // files would persist and every rerun would re-report the
+      // partition as compacted): delete those partition dirs directly
+      val nonEmpty = rows.groupBy(col(partCol)).agg(count(lit(1)))
+        .collect().map(_.getInt(0)).toSet
+      val emptyFragged = fragged.filterNot(nonEmpty)
+      if (emptyFragged.nonEmpty) {
+        val fs = rootPath.getFileSystem(
+          spark.sparkContext.hadoopConfiguration)
+        emptyFragged.foreach { v =>
+          fs.delete(new Path(rootPath, s"$partCol=$v"), true)
+        }
+        refreshPath(spark, root)
       }
-      refreshPath(spark, root)
-    }
-    val liveFragged = fragged.filter(nonEmpty)
-    if (liveFragged.isEmpty) {
-      val rdds = spark.sparkContext.getPersistentRDDs
-      (rdds.keySet diff persistedBefore)
-        .foreach(id => rdds.get(id).foreach(_.unpersist(blocking = false)))
-      return (fragged.size, nBefore, census().values.map(_.toLong).sum)
-    }
-    try {
-      val key = "spark.sql.sources.partitionOverwriteMode"
-      val prev = spark.conf.getOption(key)
-      spark.conf.set(key, "dynamic")
-      // maxRecordsPerFile > 0 re-splits a giant partition's single
-      // task output into bounded files (at 100 TB a hot cell compacted
-      // to literally ONE file would recreate the unsplittable-blob
-      // problem compaction exists to avoid); default 0 = one file per
-      // partition, right at test/ops scale
-      val w = rows.repartition(liveFragged.size, col(partCol))
-        .write.mode("overwrite")
-      val w2 = if (maxRecordsPerFile > 0L)
-        w.option("maxRecordsPerFile", maxRecordsPerFile) else w
-      try w2.partitionBy(partCol).parquet(root)
-      finally prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case scala.None => spark.conf.unset(key)
+      val liveFragged = fragged.filter(nonEmpty)
+      if (liveFragged.nonEmpty) {
+        val key = "spark.sql.sources.partitionOverwriteMode"
+        val prev = spark.conf.getOption(key)
+        spark.conf.set(key, "dynamic")
+        try rows.repartition(liveFragged.size, col(partCol))
+          .write.mode("overwrite").partitionBy(partCol).parquet(root)
+        finally prev match {
+          case Some(v) => spark.conf.set(key, v)
+          case scala.None => spark.conf.unset(key)
+        }
       }
-    } finally {
-      val rdds = spark.sparkContext.getPersistentRDDs
-      (rdds.keySet diff persistedBefore)
-        .foreach(id => rdds.get(id).foreach(_.unpersist(blocking = false)))
     }
     (fragged.size, nBefore, census().values.map(_.toLong).sum)
   }
@@ -267,10 +264,9 @@ private[graft] object StoreMaintenance {
     val staged = new Path(tmp, "staged")
     fs.mkdirs(tmp)
     writeLines(fs, new Path(tmp, "sources.list"), small.map(_.toString))
-    val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
-    val rows = spark.read.parquet(small.map(_.toString): _*)
-      .coalesce(nOut).localCheckpoint()
-    try {
+    freeingBlocks(spark) {
+      val rows = spark.read.parquet(small.map(_.toString): _*)
+        .coalesce(nOut).localCheckpoint()
       rows.write.mode("overwrite").parquet(staged.toString)
       // publish names carry the staged part names (job-UUID-unique),
       // prefixed so a human can tell compaction output from appends
@@ -290,10 +286,6 @@ private[graft] object StoreMaintenance {
       small.foreach(fs.delete(_, false))
       fs.delete(tmp, true)
       refreshPath(spark, dir)
-    } finally {
-      val rdds = spark.sparkContext.getPersistentRDDs
-      (rdds.keySet diff persistedBefore)
-        .foreach(id => rdds.get(id).foreach(_.unpersist(blocking = false)))
     }
     (small.size, before.size.toLong,
       dataFiles(spark, dirPath).size.toLong)
@@ -421,38 +413,6 @@ private[graft] object StoreMaintenance {
       val fs = dataFiles(spark, p)
       (v, fs.size, fs.map(_._2).sum)
     }
-
-  /** The ONE advisor decision rule every per-store `advise*` verb
-    * feeds (Knn.adviseIvfPqIndex / Knn.adviseSqIndex /
-    * Dedup.adviseLshIndex) — the ops runbook as code, by precedence:
-    *
-    *   1. `repair`  — fsck flags failing checks: a corrupt store must
-    *      be repaired before any drift or fragmentation number can be
-    *      trusted (corrupt rows pollute both);
-    *   2. `rebuild` — the store's drift number crossed its threshold:
-    *      the frozen quantizer/signature no longer fits the data, and
-    *      no file surgery fixes that;
-    *   3. `compact` — fragmentation crossed its threshold: rows are
-    *      fine, the file layout taxes every read;
-    *   4. `ok`      — none of the above.
-    *
-    * One row: (store, action, reason) — reason carries the triggering
-    * numbers so the row IS the runbook entry.
-    */
-  def adviseRow(spark: SparkSession, store: String, fsckBad: Long,
-                rebuild: Option[String],
-                compact: Option[String]): org.apache.spark.sql.DataFrame = {
-    import spark.implicits._
-    val (action, reason) =
-      if (fsckBad > 0)
-        ("repair", s"fsck flags $fsckBad failing check(s) - run the " +
-          "store's repair verb, then re-advise")
-      else rebuild.map(("rebuild", _))
-        .orElse(compact.map(("compact", _)))
-        .getOrElse(("ok",
-          "fsck clean, drift under thresholds, no fragmentation"))
-    Seq((store, action, reason)).toDF("store", "action", "reason")
-  }
 
   /** Every file under `root`, recursively, as (relative path, bytes) —
     * the store-agnostic snapshot listing [[backupStore]] copies and

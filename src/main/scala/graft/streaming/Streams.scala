@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupStateTimeout, OutputMode, StreamingQuery}
 import org.apache.spark.sql.types.DecimalType
+import graft.operators.{PersistedStore, StoreMaintenance}
 
 /** Typed event record for the stateful streaming operators. */
 case class EventRec(user_id: Long, ts_ms: Long, event_id: Long, value: Double)
@@ -601,55 +602,60 @@ object Streams {
         if (fs.exists(marker("done"))) {
           // redelivered fully-committed epoch: everything already ran
         } else if (!batch.isEmpty) {
-          val vecStore = spark.read.parquet(vecStoreDir)
-          val hits =
-            if (store == "sq")
-              graft.operators.Knn.searchSqIndex(spark, indexDir, batch,
-                idCol, vecCol, dim, probeK, corpus = vecStore)
-            else
-              graft.operators.Knn.searchIvfPqIndex(spark, indexDir,
-                batch, idCol, vecCol, dim, probeK,
-                rescoreWith = Some(vecStore))
-          // G17 guard (2): drop candidates whose history side is a
-          // batch id (retry over a half-committed append)
-          val best = hits
-            .join(batch.select(batch(idCol).cast("long")
-                .as("neighbor_id")),
-              Seq("neighbor_id"), "left_anti")
-            .filter(col("cosine") >= dupCosine)
-            .groupBy(col("query_id"))
-            .agg(max_by(col("neighbor_id"),
-                struct(col("cosine"), -col("neighbor_id")))
-                .as("match_id"),
-              max(col("cosine")).as("best_cosine"))
-          // EAGER verdicts/survivors before the appends below mutate
-          // the directories the probe plan reads
-          val verdict = batch.select(col(idCol))
-            .join(best, batch(idCol).cast("long") === best("query_id"),
-              "left")
-            .select(col(idCol), col("match_id").isNotNull.as("is_dup"),
-              col("match_id"), col("best_cosine"))
-            .localCheckpoint()
-          val survivors = batch.select(col(idCol), col(vecCol))
-            .join(verdict.filter(col("is_dup"))
-                .select(col(idCol)),
-              Seq(idCol), "left_anti")
-            .localCheckpoint()
-          // G17 guard (3): each append at most once across retries
-          if (!fs.exists(marker("idx"))) {
-            if (store == "sq")
-              graft.operators.Knn.appendToSqIndex(survivors, idCol,
-                vecCol, indexDir, dim)
-            else
-              graft.operators.Knn.appendToIvfPqIndex(survivors, idCol,
-                vecCol, indexDir, dim)
-            commit("idx")
+          // the epoch's checkpoints (verdict, survivors) are freed once
+          // the sink has consumed them — a long-running stream must not
+          // accumulate one block set per micro-batch
+          StoreMaintenance.freeingBlocks(spark) {
+            val vecStore = spark.read.parquet(vecStoreDir)
+            val hits =
+              if (store == "sq")
+                graft.operators.Knn.searchSqIndex(spark, indexDir, batch,
+                  idCol, vecCol, dim, probeK, corpus = vecStore)
+              else
+                graft.operators.Knn.searchIvfPqIndex(spark, indexDir,
+                  batch, idCol, vecCol, dim, probeK,
+                  rescoreWith = Some(vecStore))
+            // G17 guard (2): drop candidates whose history side is a
+            // batch id (retry over a half-committed append)
+            val best = hits
+              .join(batch.select(batch(idCol).cast("long")
+                  .as("neighbor_id")),
+                Seq("neighbor_id"), "left_anti")
+              .filter(col("cosine") >= dupCosine)
+              .groupBy(col("query_id"))
+              .agg(max_by(col("neighbor_id"),
+                  struct(col("cosine"), -col("neighbor_id")))
+                  .as("match_id"),
+                max(col("cosine")).as("best_cosine"))
+            // EAGER verdicts/survivors before the appends below mutate
+            // the directories the probe plan reads
+            val verdict = batch.select(col(idCol))
+              .join(best, batch(idCol).cast("long") === best("query_id"),
+                "left")
+              .select(col(idCol), col("match_id").isNotNull.as("is_dup"),
+                col("match_id"), col("best_cosine"))
+              .localCheckpoint()
+            val survivors = batch.select(col(idCol), col(vecCol))
+              .join(verdict.filter(col("is_dup"))
+                  .select(col(idCol)),
+                Seq(idCol), "left_anti")
+              .localCheckpoint()
+            // G17 guard (3): each append at most once across retries
+            if (!fs.exists(marker("idx"))) {
+              if (store == "sq")
+                graft.operators.Knn.appendToSqIndex(survivors, idCol,
+                  vecCol, indexDir, dim)
+              else
+                graft.operators.Knn.appendToIvfPqIndex(survivors, idCol,
+                  vecCol, indexDir, dim)
+              commit("idx")
+            }
+            if (!fs.exists(marker("vec"))) {
+              survivors.write.mode("append").parquet(vecStoreDir)
+              commit("vec")
+            }
+            sink(verdict, epochId)
           }
-          if (!fs.exists(marker("vec"))) {
-            survivors.write.mode("append").parquet(vecStoreDir)
-            commit("vec")
-          }
-          sink(verdict, epochId)
           commit("done")
         } else {
           commit("done") // empty epoch: nothing to mutate
@@ -660,14 +666,14 @@ object Streams {
   /** G20: streaming store MAINTENANCE — the babysitter loop that
     * closes the advisor story: G19 ingests continuously, so
     * fragmentation and corruption now ACCRUE continuously, and the
-    * runbook row the advisors emit (adviseIvfPqIndex / adviseSqIndex /
-    * adviseLshIndex under [[graft.operators.StoreMaintenance
-    * .adviseRow]]'s repair>rebuild>compact>ok precedence) is exactly
-    * the decision a cron'd operator would act on. Each tick of
-    * `ticks` (any trigger stream — a rate source in production; the
-    * tick ROWS are ignored, the trigger is the signal) runs the
-    * store's advise verb and APPLIES what it recommends: `repair` →
-    * the store's repair verb, `compact` → its compact verb,
+    * runbook row [[graft.operators.PersistedStore.advise]] emits
+    * (repair>rebuild>compact>ok precedence) is exactly the decision a
+    * cron'd operator would act on. Each tick of `ticks` (any trigger
+    * stream — a rate source in production; the tick ROWS are ignored,
+    * the trigger is the signal) advises the store at `dir` (its kind
+    * detected from the sidecars) and APPLIES what it recommends:
+    * `repair` → [[graft.operators.PersistedStore.repair]], `compact` →
+    * [[graft.operators.PersistedStore.compact]],
     * `rebuild` → reported but NEVER auto-applied (a rebuild retrains
     * the frozen quantizers — a training decision with an owner, not
     * file surgery a babysitter should fire). One action per tick, by
@@ -685,13 +691,14 @@ object Streams {
     * reason, applied) — the audit log of what the babysitter did and
     * why, one row per tick.
     *
-    * `corpus` feeds the drift leg of the ivfpq/sq advisors (required
-    * there, unused for lsh — its decay metric is an eval cadence, not
-    * an advisor scan). At 100 TB the tick cadence is the fsck cadence:
-    * every leg is driver-O(partitions) listings plus one drift join,
-    * nothing proportional to tick rate. An EMPTY micro-batch (the
-    * no-data trigger Spark fires after restart or watermark advance)
-    * is not a tick: no advise listings run, no audit row is emitted.
+    * `corpus` feeds the drift leg of the IVF×PQ and SQ8 advisors
+    * (required there, unused for LSH — its decay metric is an eval
+    * cadence, not an advisor scan). At 100 TB the tick cadence is the
+    * fsck cadence: every leg is driver-O(partitions) listings plus one
+    * drift join, nothing proportional to tick rate. An EMPTY
+    * micro-batch (the no-data trigger Spark fires after restart or
+    * watermark advance) is not a tick: no advise listings run, no
+    * audit row is emitted.
     *
     * `backupBefore = Some(parentDir)` is the advisor runbook's own
     * snapshot-first discipline wired in: before a REPAIR is applied,
@@ -733,23 +740,21 @@ object Streams {
     * deletes a base a retained incremental still references (it
     * reports `kept` as the chain's physical holder instead).
     */
-  def maintenanceStream(ticks: DataFrame, store: String, dir: String,
+  def maintenanceStream(ticks: DataFrame, dir: String,
                         corpus: Option[DataFrame] = None,
                         idCol: String = "vec_id",
                         vecCol: String = "embedding",
-                        maxFilesPerCell: Int = 1,
-                        minBytes: Long = 4L << 20,
-                        maxFilesPerBand: Int = 1,
+                        maxFilesPerPartition: Int = 1,
+                        minBytes: Long = PersistedStore.SmallFileBytes,
                         backupBefore: Option[String] = None,
                         keepBackups: Int = 0,
                         keepBackupsDays: Double = 0.0,
                         incrementalBackups: Boolean = false)
                        (sink: (DataFrame, Long) => Unit)
       : DataStreamWriter[Row] = {
-    require(Set("ivfpq", "sq", "lsh")(store),
-      s"store must be 'ivfpq', 'sq' or 'lsh', got $store")
-    require(store == "lsh" || corpus.nonEmpty,
-      s"the $store advisor needs a corpus= for its drift leg")
+    val kind = PersistedStore.detect(ticks.sparkSession, dir)
+    require(!kind.hasDrift || corpus.nonEmpty,
+      s"the ${kind.kind} advisor needs a corpus= for its drift leg")
     ticks.writeStream
       .outputMode(OutputMode.Append)
       .foreachBatch { (batch: Dataset[Row], epochId: Long) =>
@@ -759,14 +764,9 @@ object Streams {
         if (!batch.isEmpty) {
         val spark = batch.sparkSession
         import spark.implicits._
-        val advice = (store match {
-          case "ivfpq" => graft.operators.Knn.adviseIvfPqIndex(spark,
-            dir, corpus.get, idCol, vecCol, maxFilesPerCell)
-          case "sq" => graft.operators.Knn.adviseSqIndex(spark, dir,
-            corpus.get, vecCol, minBytes)
-          case _ => graft.operators.Dedup.adviseLshIndex(spark, dir,
-            maxFilesPerBand)
-        }).collect().head // ONE runbook row by construction
+        val advice = PersistedStore.advise(spark, dir, corpus, idCol,
+            vecCol, maxFilesPerPartition, minBytes)
+          .collect().head // ONE runbook row by construction
         val action = advice.getAs[String]("action")
         val applied = action match {
           case "repair" =>
@@ -798,11 +798,7 @@ object Streams {
                   .backupStore(spark, dir, snap, base)
               }
             }
-            store match {
-              case "ivfpq" => graft.operators.Knn.repairIvfPqIndex(spark, dir)
-              case "sq" => graft.operators.Knn.repairSqIndex(spark, dir)
-              case _ => graft.operators.Dedup.repairLshIndex(spark, dir)
-            }
+            PersistedStore.repair(spark, dir)
             // auto-retention AFTER the surgery, never between snapshot
             // and repair; prune's last-green guard keeps a restorable
             // copy whatever this sweep decides
@@ -816,14 +812,7 @@ object Streams {
               }
             true
           case "compact" =>
-            store match {
-              case "ivfpq" => graft.operators.Knn.compactIvfPqIndex(
-                spark, dir, maxFilesPerCell)
-              case "sq" => graft.operators.Knn.compactSqIndex(spark,
-                dir, minBytes)
-              case _ => graft.operators.Dedup.compactLshIndex(spark,
-                dir, maxFilesPerBand)
-            }
+            PersistedStore.compact(spark, dir, maxFilesPerPartition, minBytes)
             true
           case _ => false // ok / rebuild: report-only
         }
@@ -912,55 +901,50 @@ object Streams {
           // foreachBatch): every mutation and the sink already ran
         } else if (!batch.isEmpty) {
           val spark = batch.sparkSession
-          val corpus = spark.read.parquet(docStoreDir)
-          // the probe registers internal persists (shingle tables +
-          // candidate set) for within-plan reuse; a long-running
-          // stream would accumulate one set of cache entries per
-          // micro-batch, so capture the call's own cache delta and
-          // release it once the checkpoint has materialized the result
-          val sc = spark.sparkContext
-          val cachedBefore = sc.getPersistentRDDs.keySet
-          // guard (2): drop pairs whose HISTORY side is a batch id —
-          // on a clean run no such pair exists (the batch was never in
-          // the index), and on a retry after a half-committed append
-          // the probe reproduces the original verdict instead of
-          // matching batch docs against their own earlier append
-          val rawPairs = graft.operators.Dedup.incrementalMinhashIndexed(
-              indexDir, corpus, batch, idCol, textCol, threshold,
-              maxBucket)
-            .join(batch.select(batch(idCol).as("corpus_id")),
-              Seq("corpus_id"), "left_anti")
-          val probeCaches = sc.getPersistentRDDs.keySet -- cachedBefore
-          // EAGER: pin the probe result before the appends below
-          // mutate the directories its plan reads
-          val pairs = rawPairs.localCheckpoint()
-          sc.getPersistentRDDs
-            .filter { case (id, _) => probeCaches.contains(id) }
-            .values.foreach(_.unpersist(blocking = false))
-          val best = pairs.groupBy(col("batch_id"))
-            .agg(max_by(col("corpus_id"),
-                struct(col("jaccard"), -col("corpus_id"))).as("match_id"),
-              max(col("jaccard")).as("best_jaccard"))
-          val verdict = batch.select(col(idCol))
-            .join(best, batch(idCol) === best("batch_id"), "left")
-            .select(col(idCol), col("match_id").isNotNull.as("is_dup"),
-              col("match_id"), col("best_jaccard"))
-            .localCheckpoint()
-          val survivors = batch.select(col(idCol), col(textCol))
-            .join(pairs.select(col("batch_id").as(idCol)).distinct(),
-              Seq(idCol), "left_anti")
-            .localCheckpoint()
-          // guard (3): each append at most once across redeliveries
-          if (!fs.exists(marker("idx"))) {
-            graft.operators.Dedup.appendToLshIndex(survivors, idCol,
-              textCol, indexDir)
-            commit("idx")
+          // the probe's internal persists (shingle tables + candidate
+          // set) and the epoch's checkpoints are freed once the sink has
+          // consumed them — a long-running stream must not accumulate
+          // one block set per micro-batch
+          StoreMaintenance.freeingBlocks(spark) {
+            val corpus = spark.read.parquet(docStoreDir)
+            // guard (2): drop pairs whose HISTORY side is a batch id —
+            // on a clean run no such pair exists (the batch was never in
+            // the index), and on a retry after a half-committed append
+            // the probe reproduces the original verdict instead of
+            // matching batch docs against their own earlier append
+            val rawPairs = graft.operators.Dedup.incrementalMinhashIndexed(
+                indexDir, corpus, batch, idCol, textCol, threshold,
+                maxBucket)
+              .join(batch.select(batch(idCol).as("corpus_id")),
+                Seq("corpus_id"), "left_anti")
+            // EAGER: pin the probe result before the appends below
+            // mutate the directories its plan reads
+            val pairs = rawPairs.localCheckpoint()
+            val best = pairs.groupBy(col("batch_id"))
+              .agg(max_by(col("corpus_id"),
+                  struct(col("jaccard"), -col("corpus_id"))).as("match_id"),
+                max(col("jaccard")).as("best_jaccard"))
+            val verdict = batch.select(col(idCol))
+              .join(best, batch(idCol) === best("batch_id"), "left")
+              .select(col(idCol), col("match_id").isNotNull.as("is_dup"),
+                col("match_id"), col("best_jaccard"))
+              .localCheckpoint()
+            val survivors = batch.select(col(idCol), col(textCol))
+              .join(pairs.select(col("batch_id").as(idCol)).distinct(),
+                Seq(idCol), "left_anti")
+              .localCheckpoint()
+            // guard (3): each append at most once across redeliveries
+            if (!fs.exists(marker("idx"))) {
+              graft.operators.Dedup.appendToLshIndex(survivors, idCol,
+                textCol, indexDir)
+              commit("idx")
+            }
+            if (!fs.exists(marker("doc"))) {
+              survivors.write.mode("append").parquet(docStoreDir)
+              commit("doc")
+            }
+            sink(verdict, epochId)
           }
-          if (!fs.exists(marker("doc"))) {
-            survivors.write.mode("append").parquet(docStoreDir)
-            commit("doc")
-          }
-          sink(verdict, epochId)
           commit("done")
         } else {
           commit("done") // empty epoch: nothing to mutate, mark applied

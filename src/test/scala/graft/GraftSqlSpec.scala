@@ -440,27 +440,27 @@ class GraftSqlSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("sql_fsck").toString
     graft.operators.Knn.buildIvfPqIndex(emb, "vec_id", "embedding", dir,
       dim = 64)
-    val f = spark.sql(s"SELECT * FROM graft_knn_index_fsck('$dir') " +
+    val f = spark.sql(s"SELECT * FROM graft_store_fsck('$dir') " +
       "ORDER BY check").collect().map(_.toString).toSeq
-    val ef = graft.operators.Knn.fsckIvfPqIndex(spark, dir)
+    val ef = graft.operators.PersistedStore.fsck(spark, dir)
       .orderBy("check").collect().map(_.toString).toSeq
     assert(f == ef && f.length == 6, "fsck TVF drifted")
-    val s = spark.sql(s"SELECT * FROM graft_knn_index_stats('$dir') " +
+    val s = spark.sql(s"SELECT * FROM graft_store_stats('$dir') " +
       "ORDER BY cell_id").collect().map(_.toString).toSeq
-    val es = graft.operators.Knn.ivfPqIndexStats(spark, dir)
+    val es = graft.operators.PersistedStore.stats(spark, dir)
       .collect().map(_.toString).toSeq
     assert(s == es && s.nonEmpty, "stats TVF drifted")
     emb.createOrReplaceTempView("drift_corpus_v")
-    val d = spark.sql(s"SELECT * FROM graft_knn_index_drift('$dir', " +
+    val d = spark.sql(s"SELECT * FROM graft_store_drift('$dir', " +
       "'drift_corpus_v', 'vec_id', 'embedding') ORDER BY cell_id")
       .collect().map(_.toString).toSeq
     val ed = graft.operators.Knn.ivfPqIndexDrift(spark, dir, emb,
       "vec_id", "embedding").collect().map(_.toString).toSeq
     assert(d == ed && d.nonEmpty, "drift TVF drifted")
     // advisor TVF parity (healthy store scored vs its own corpus: ok)
-    val a = spark.sql(s"SELECT * FROM graft_knn_index_advise('$dir', " +
+    val a = spark.sql(s"SELECT * FROM graft_store_advise('$dir', " +
       "'drift_corpus_v', 'vec_id', 'embedding')").collect()
-    val ea = graft.operators.Knn.adviseIvfPqIndex(spark, dir, emb,
+    val ea = graft.operators.PersistedStore.advise(spark, dir, Some(emb),
       "vec_id", "embedding").collect().map(_.toString).toSeq
     assert(a.map(_.toString).toSeq == ea && a.length == 1 &&
       a.head.getAs[String]("action") == "ok", "advise TVF drifted")
@@ -479,16 +479,16 @@ class GraftSqlSpec extends SparkSpec {
       emb.filter(col("vec_id") % 2 === 1), "vec_id", "embedding", dir,
       dim = 64)
     val stats = spark.sql(
-      s"SELECT * FROM graft_knn_index_compact('$dir')").collect()
+      s"SELECT * FROM graft_store_compact('$dir')").collect()
     assert(stats.nonEmpty && stats.forall(_.getAs[Int]("n_files") == 1),
       "CALL-style compact must leave one file per cell")
     // corrupt (a replayed append), then repair from SQL
     graft.operators.Knn.appendToIvfPqIndex(
       emb.filter(col("vec_id") < 5), "vec_id", "embedding", dir, dim = 64)
-    assert(!graft.operators.Knn.fsckIvfPqIndex(spark, dir).collect()
+    assert(!graft.operators.PersistedStore.fsck(spark, dir).collect()
       .forall(_.getAs[Boolean]("ok")), "the replay must corrupt")
     val report = spark.sql(
-      s"SELECT * FROM graft_knn_index_repair('$dir')").collect()
+      s"SELECT * FROM graft_store_repair('$dir')").collect()
     assert(report.length == 6 && report.forall(_.getAs[Boolean]("ok")),
       s"repair TVF must return an all-green fsck: ${report.mkString(" | ")}")
   }
@@ -501,27 +501,27 @@ class GraftSqlSpec extends SparkSpec {
       docs.filter(col("doc_id") % 2 === 0), "doc_id", "text", dir)
     graft.operators.Dedup.appendToLshIndex(
       docs.filter(col("doc_id") % 2 === 1), "doc_id", "text", dir)
-    val f = spark.sql(s"SELECT * FROM graft_lsh_index_fsck('$dir') " +
+    val f = spark.sql(s"SELECT * FROM graft_store_fsck('$dir') " +
       "ORDER BY check").collect().map(_.toString).toSeq
-    val ef = graft.operators.Dedup.fsckLshIndex(spark, dir)
+    val ef = graft.operators.PersistedStore.fsck(spark, dir)
       .orderBy("check").collect().map(_.toString).toSeq
     assert(f == ef && f.length == 4, "lsh fsck TVF drifted")
-    val s = spark.sql(s"SELECT * FROM graft_lsh_index_stats('$dir') " +
+    val s = spark.sql(s"SELECT * FROM graft_store_stats('$dir') " +
       "ORDER BY band").collect()
-    val es = graft.operators.Dedup.lshIndexStats(spark, dir)
+    val es = graft.operators.PersistedStore.stats(spark, dir)
       .collect().map(_.toString).toSeq
     assert(s.map(_.toString).toSeq == es && s.nonEmpty,
       "lsh stats TVF drifted")
     assert(s.exists(_.getAs[Int]("n_files") > 1),
       "the append must fragment at least one band")
     val post = spark.sql(
-      s"SELECT * FROM graft_lsh_index_compact('$dir')").collect()
+      s"SELECT * FROM graft_store_compact('$dir')").collect()
     assert(post.nonEmpty && post.forall(_.getAs[Int]("n_files") == 1),
       "CALL-style lsh compact must leave one file per band")
     // advisor TVF parity on the healthy compacted store
     val adv = spark.sql(
-      s"SELECT * FROM graft_lsh_index_advise('$dir')").collect()
-    val eadv = graft.operators.Dedup.adviseLshIndex(spark, dir)
+      s"SELECT * FROM graft_store_advise('$dir')").collect()
+    val eadv = graft.operators.PersistedStore.advise(spark, dir)
       .collect().map(_.toString).toSeq
     assert(adv.map(_.toString).toSeq == eadv && adv.length == 1 &&
       adv.head.getAs[String]("action") == "ok", "lsh advise TVF drifted")
@@ -530,10 +530,10 @@ class GraftSqlSpec extends SparkSpec {
     Seq((1234L, 8888L, 0), (4321L, 7777L, 1), (4321L, 7777L, 1))
       .toDF("bkey", "corpus_id", "band")
       .write.mode("append").partitionBy("band").parquet(s"$dir/buckets")
-    assert(!graft.operators.Dedup.fsckLshIndex(spark, dir).collect()
+    assert(!graft.operators.PersistedStore.fsck(spark, dir).collect()
       .forall(_.getAs[Boolean]("ok")), "the injection must corrupt")
     val rep = spark.sql(
-      s"SELECT * FROM graft_lsh_index_repair('$dir')").collect()
+      s"SELECT * FROM graft_store_repair('$dir')").collect()
     assert(rep.length == 4 && rep.forall(_.getAs[Boolean]("ok")),
       s"repair TVF must return an all-green fsck: ${rep.mkString(" | ")}")
   }
@@ -546,14 +546,14 @@ class GraftSqlSpec extends SparkSpec {
       emb.filter(col("vec_id") % 2 === 0), "vec_id", "embedding", dir, 64)
     graft.operators.Knn.appendToSqIndex(
       emb.filter(col("vec_id") % 2 === 1), "vec_id", "embedding", dir, 64)
-    val f = spark.sql(s"SELECT * FROM graft_sq_index_fsck('$dir') " +
+    val f = spark.sql(s"SELECT * FROM graft_store_fsck('$dir') " +
       "ORDER BY check").collect().map(_.toString).toSeq
-    val ef = graft.operators.Knn.fsckSqIndex(spark, dir)
+    val ef = graft.operators.PersistedStore.fsck(spark, dir)
       .orderBy("check").collect().map(_.toString).toSeq
     assert(f == ef && f.length == 4, "sq fsck TVF drifted")
-    val s = spark.sql(s"SELECT * FROM graft_sq_index_stats('$dir')")
+    val s = spark.sql(s"SELECT * FROM graft_store_stats('$dir')")
       .collect()
-    val es = graft.operators.Knn.sqIndexStats(spark, dir)
+    val es = graft.operators.PersistedStore.stats(spark, dir)
       .collect().map(_.toString).toSeq
     assert(s.map(_.toString).toSeq == es && s.length == 1,
       "sq stats TVF drifted")
@@ -561,14 +561,14 @@ class GraftSqlSpec extends SparkSpec {
       s.head.getAs[Long]("n_small_files") >= 2,
       "the append must leave small files")
     emb.createOrReplaceTempView("sq_drift_corpus_v")
-    val d = spark.sql(s"SELECT * FROM graft_sq_index_drift('$dir', " +
-      "'sq_drift_corpus_v', 'embedding') ORDER BY j")
+    val d = spark.sql(s"SELECT * FROM graft_store_drift('$dir', " +
+      "'sq_drift_corpus_v', 'vec_id', 'embedding') ORDER BY j")
       .collect().map(_.toString).toSeq
     val ed = graft.operators.Knn.sqIndexDrift(spark, dir, emb,
       "embedding").collect().map(_.toString).toSeq
     assert(d == ed && d.nonEmpty, "sq drift TVF drifted")
     val post = spark.sql(
-      s"SELECT * FROM graft_sq_index_compact('$dir')").collect()
+      s"SELECT * FROM graft_store_compact('$dir')").collect()
     assert(post.length == 1 && post.head.getAs[Long]("n_small_files") <= 1,
       s"CALL-style sq compact must merge the small files: ${post.head}")
     // row set unchanged by the SQL-driven compaction
@@ -576,9 +576,9 @@ class GraftSqlSpec extends SparkSpec {
       s.head.getAs[Long]("n_codes"))
     // advisor TVF parity on the healthy compacted store (drift scored
     // against the store's own corpus)
-    val adv = spark.sql(s"SELECT * FROM graft_sq_index_advise('$dir', " +
-      "'sq_drift_corpus_v', 'embedding')").collect()
-    val eadv = graft.operators.Knn.adviseSqIndex(spark, dir, emb,
+    val adv = spark.sql(s"SELECT * FROM graft_store_advise('$dir', " +
+      "'sq_drift_corpus_v', 'vec_id', 'embedding')").collect()
+    val eadv = graft.operators.PersistedStore.advise(spark, dir, Some(emb),
       "embedding").collect().map(_.toString).toSeq
     assert(adv.map(_.toString).toSeq == eadv && adv.length == 1,
       "sq advise TVF drifted")
@@ -586,10 +586,10 @@ class GraftSqlSpec extends SparkSpec {
     // returns an all-green fsck
     Seq((9001L, Seq(1, 2))).toDF("neighbor_id", "codes")
       .write.mode("append").parquet(s"$dir/codes")
-    assert(!graft.operators.Knn.fsckSqIndex(spark, dir).collect()
+    assert(!graft.operators.PersistedStore.fsck(spark, dir).collect()
       .forall(_.getAs[Boolean]("ok")), "the injection must corrupt")
     val rep = spark.sql(
-      s"SELECT * FROM graft_sq_index_repair('$dir')").collect()
+      s"SELECT * FROM graft_store_repair('$dir')").collect()
     assert(rep.length == 4 && rep.forall(_.getAs[Boolean]("ok")),
       s"repair TVF must return an all-green fsck: ${rep.mkString(" | ")}")
   }
@@ -606,7 +606,7 @@ class GraftSqlSpec extends SparkSpec {
     graft.operators.Dedup.buildLshIndex(
       docs.filter(col("doc_id") % 2 === 1), "doc_id", "text", l2)
     val lr = spark.sql(
-      s"SELECT * FROM graft_lsh_index_merge('$l1', '$l2')").collect()
+      s"SELECT * FROM graft_store_merge('$l1', '$l2')").collect()
     assert(lr.length == 4 && lr.forall(_.getAs[Boolean]("ok")),
       s"post-merge lsh fsck must be green: ${lr.mkString(" | ")}")
     val mergedDocs = spark.read.parquet(s"$l1/buckets")
@@ -620,13 +620,13 @@ class GraftSqlSpec extends SparkSpec {
     graft.operators.Knn.buildSqIndex(emb, "vec_id", "embedding", s1, 64)
     // wipe s1's codes to half, build s2 over the other half under the
     // same grid by copying the grid sidecar
-    graft.operators.Knn.removeFromSqIndex(
+    graft.operators.PersistedStore.remove(
       emb.filter(col("vec_id") % 2 === 1).select("vec_id"), "vec_id", s1)
     graft.operators.Knn.buildSqIndex(emb, "vec_id", "embedding", s2, 64)
-    graft.operators.Knn.removeFromSqIndex(
+    graft.operators.PersistedStore.remove(
       emb.filter(col("vec_id") % 2 === 0).select("vec_id"), "vec_id", s2)
     val sr = spark.sql(
-      s"SELECT * FROM graft_sq_index_merge('$s1', '$s2')").collect()
+      s"SELECT * FROM graft_store_merge('$s1', '$s2')").collect()
     assert(sr.length == 4 && sr.forall(_.getAs[Boolean]("ok")),
       s"post-merge sq fsck must be green: ${sr.mkString(" | ")}")
     assert(spark.read.parquet(s"$s1/codes").count() == emb.count(),
@@ -637,7 +637,7 @@ class GraftSqlSpec extends SparkSpec {
     graft.operators.Knn.buildIvfPqIndex(emb, "vec_id", "embedding", kd,
       dim = 64)
     val kr = spark.sql(
-      s"SELECT * FROM graft_knn_index_merge('$kd', '$kd')").collect()
+      s"SELECT * FROM graft_store_merge('$kd', '$kd')").collect()
     assert(kr.length == 6 && kr.forall(_.getAs[Boolean]("ok")),
       s"no-op knn merge must return a green fsck: ${kr.mkString(" | ")}")
   }
@@ -823,10 +823,10 @@ class GraftSqlSpec extends SparkSpec {
     graft.operators.Knn.appendToSqIndex(
       emb.filter(col("vec_id") % 2 === 1), "vec_id", "embedding", sq, 64)
     val before = listing(sq)
-    spark.sql(s"EXPLAIN SELECT * FROM graft_sq_index_compact('$sq', true)")
+    spark.sql(s"EXPLAIN SELECT * FROM graft_store_compact('$sq', true)")
       .collect()
     val dryStats = spark.sql(
-      s"SELECT * FROM graft_sq_index_compact('$sq', true)").collect()
+      s"SELECT * FROM graft_store_compact('$sq', true)").collect()
     assert(dryStats.length == 1 &&
       dryStats.head.getAs[Long]("n_small_files") >= 2,
       s"dry-run compact must report the CURRENT state: ${dryStats.head}")
@@ -841,13 +841,13 @@ class GraftSqlSpec extends SparkSpec {
       .write.mode("append").partitionBy("band").parquet(s"$lsh/buckets")
     val lshBefore = listing(lsh)
     val dryRep = spark.sql(
-      s"SELECT * FROM graft_lsh_index_repair('$lsh', true)").collect()
+      s"SELECT * FROM graft_store_repair('$lsh', true)").collect()
     assert(dryRep.exists(!_.getAs[Boolean]("ok")),
       "dry-run repair must report the corruption, not fix it")
     assert(listing(lsh) == lshBefore,
       "dry-run lsh repair must not touch a file")
     val realRep = spark.sql(
-      s"SELECT * FROM graft_lsh_index_repair('$lsh')").collect()
+      s"SELECT * FROM graft_store_repair('$lsh')").collect()
     assert(realRep.forall(_.getAs[Boolean]("ok")),
       "the real repair after a dry run must still fix the store")
     // merge dry-run: compatible shards — dst row set unchanged;
@@ -860,7 +860,7 @@ class GraftSqlSpec extends SparkSpec {
       docs.filter(col("doc_id") % 2 === 1), "doc_id", "text", l2)
     val m1Before = listing(l1)
     val dryMerge = spark.sql(
-      s"SELECT * FROM graft_lsh_index_merge('$l1', '$l2', true)").collect()
+      s"SELECT * FROM graft_store_merge('$l1', '$l2', true)").collect()
     assert(dryMerge.forall(_.getAs[Boolean]("ok")) &&
       listing(l1) == m1Before,
       "dry-run merge must verify and move nothing")
@@ -868,7 +868,7 @@ class GraftSqlSpec extends SparkSpec {
     graft.operators.Dedup.buildLshIndex(docs, "doc_id", "text", l3,
       bands = 8)
     val refuse = intercept[Exception] {
-      spark.sql(s"SELECT * FROM graft_lsh_index_merge('$l1', '$l3', true)")
+      spark.sql(s"SELECT * FROM graft_store_merge('$l1', '$l3', true)")
     }
     val chain = Iterator.iterate(refuse: Throwable)(_.getCause)
       .takeWhile(_ != null)

@@ -569,7 +569,7 @@ class DedupSpec extends SparkSpec {
     assert(probeBefore.nonEmpty, "the sf batch should have near-dups")
     val countsBefore = bands.map(b => b -> bandFiles(b).length).toMap
     val filesBefore = countsBefore.values.map(_.toLong).sum
-    val (nb, fb, fa) = Dedup.compactLshIndex(spark, dir)
+    val (nb, fb, fa) = PersistedStore.compact(spark, dir)
     assert(fb == filesBefore && fa == bands.length.toLong,
       s"one file per band after compaction: $fb -> $fa")
     assert(nb == countsBefore.count(_._2 > 1),
@@ -589,7 +589,7 @@ class DedupSpec extends SparkSpec {
     val before2 = sigs()
     val total2 = bands.map(bandFiles(_).length.toLong).sum
     val maxPer = bands.map(bandFiles(_).length).max
-    assert(Dedup.compactLshIndex(spark, dir, maxFilesPerBand = maxPer) ==
+    assert(PersistedStore.compact(spark, dir, maxFilesPerPartition = maxPer) ==
       ((0, total2, total2)))
     assert(sigs() == before2,
       "an under-threshold census must leave every file byte-identical")
@@ -619,7 +619,7 @@ class DedupSpec extends SparkSpec {
     // purge 1: exactly the appended wave — its rows live only in the
     // appended files, so every BUILD file must survive byte-identical
     // and the wave's files must physically leave the layout
-    val removed = Dedup.removeFromLshIndex(
+    val removed = PersistedStore.remove(
       wave.select("doc_id"), "doc_id", dir)
     assert(removed == wave.count() * 16,
       s"one bucket row per band per purged doc, got $removed")
@@ -646,7 +646,7 @@ class DedupSpec extends SparkSpec {
     // file-level rewrites; the surviving row set must equal a fresh
     // build of the shrunk corpus (content equality, layout-free)
     val gone = corpus.filter(col("doc_id") % 7 === 1).select("doc_id")
-    val removed2 = Dedup.removeFromLshIndex(gone, "doc_id", dir)
+    val removed2 = PersistedStore.remove(gone, "doc_id", dir)
     assert(removed2 == gone.count() * 16)
     val fresh = java.nio.file.Files.createTempDirectory("lsh_fresh").toString
     Dedup.buildLshIndex(corpus.join(gone, Seq("doc_id"), "left_anti"),
@@ -657,7 +657,7 @@ class DedupSpec extends SparkSpec {
     assert(bucketRows(dir) == bucketRows(fresh),
       "surviving rows must equal a fresh build of the shrunk corpus")
     // idempotence: purging the same ids again is a no-op
-    assert(Dedup.removeFromLshIndex(gone, "doc_id", dir) == 0L)
+    assert(PersistedStore.remove(gone, "doc_id", dir) == 0L)
   }
 
   test("lshRecall: truth matches a driver-side exact all-pairs replay, " +
@@ -692,7 +692,7 @@ class DedupSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("lsh_fsck").toString
     Dedup.buildLshIndex(docs.filter(col("doc_id") % 10 =!= 0),
       "doc_id", "text", dir)
-    val clean = Dedup.fsckLshIndex(spark, dir).collect()
+    val clean = PersistedStore.fsck(spark, dir).collect()
     assert(clean.length == 4 && clean.forall(_.getAs[Boolean]("ok")),
       s"fresh index must fsck clean: ${clean.mkString(" | ")}")
     // a torn append (doc 8888 reached one band before the crash) and a
@@ -700,7 +700,7 @@ class DedupSpec extends SparkSpec {
     val bad = Seq((1234L, 8888L, 0), (4321L, 7777L, 1), (4321L, 7777L, 1))
       .toDF("bkey", "corpus_id", "band")
     bad.write.mode("append").partitionBy("band").parquet(s"$dir/buckets")
-    val r = Dedup.fsckLshIndex(spark, dir).collect()
+    val r = PersistedStore.fsck(spark, dir).collect()
       .map(x => x.getAs[String]("check") ->
         (x.getAs[Boolean]("ok"), x.getAs[Long]("n_bad"))).toMap
     assert(r("doc_coverage") == ((false, 2L)),
@@ -714,20 +714,20 @@ class DedupSpec extends SparkSpec {
       "repair (precedence over fragmentation)") {
     val dir = java.nio.file.Files.createTempDirectory("lsh_adv").toString
     Dedup.buildLshIndex(docs, "doc_id", "text", dir)
-    assert(Dedup.adviseLshIndex(spark, dir).head()
+    assert(PersistedStore.advise(spark, dir).head()
       .getAs[String]("action") == "ok", "fresh index must advise ok")
     // an append fragments every band: compact
     Dedup.appendToLshIndex(
       docs.select((col("doc_id") + 1000000L).as("doc_id"), col("text")),
       "doc_id", "text", dir)
-    val cp = Dedup.adviseLshIndex(spark, dir).head()
+    val cp = PersistedStore.advise(spark, dir).head()
     assert(cp.getAs[String]("action") == "compact",
       s"fragmented index must advise compact: $cp")
     assert(cp.getAs[String]("reason").contains("compactLshIndex"))
     // a torn append corrupts: repair wins over the fragmentation
     Seq((1234L, 8888L, 0)).toDF("bkey", "corpus_id", "band")
       .write.mode("append").partitionBy("band").parquet(s"$dir/buckets")
-    val rp = Dedup.adviseLshIndex(spark, dir).head()
+    val rp = PersistedStore.advise(spark, dir).head()
     assert(rp.getAs[String]("action") == "repair",
       s"corrupt index must advise repair before compact: $rp")
   }
@@ -767,15 +767,15 @@ class DedupSpec extends SparkSpec {
       // so the filesRewritten expectation below is deterministic
       .coalesce(1)
       .write.mode("append").partitionBy("band").parquet(s"$dir/buckets")
-    assert(!Dedup.fsckLshIndex(spark, dir).collect()
+    assert(!PersistedStore.fsck(spark, dir).collect()
       .forall(_.getAs[Boolean]("ok")), "the injection must corrupt")
-    val (dropped, rewritten) = Dedup.repairLshIndex(spark, dir)
+    val (dropped, rewritten) = PersistedStore.repair(spark, dir)
     // 2 orphan rows + torn 8888 (1) + torn-dup 7777 (2) + 1 dup copy
     assert(dropped == 6L, s"dropped $dropped rows, want 6")
     // the 2 injected band files + the build file holding the
     // duplicated covered row's original copy
     assert(rewritten == 3, s"rewrote $rewritten files, want 3")
-    val post = Dedup.fsckLshIndex(spark, dir).collect()
+    val post = PersistedStore.fsck(spark, dir).collect()
     assert(post.forall(_.getAs[Boolean]("ok")),
       s"post-repair fsck must be green: ${post.mkString(" | ")}")
     // every clean pre-injection file is byte-identical (length+mtime);
@@ -790,7 +790,7 @@ class DedupSpec extends SparkSpec {
       "doc_id", "text").collect().map(_.toString).sorted.toSeq
     assert(probe == cleanProbe, "repair must restore probe results")
     // idempotent
-    assert(Dedup.repairLshIndex(spark, dir) == ((0L, 0)),
+    assert(PersistedStore.repair(spark, dir) == ((0L, 0)),
       "second repair must be a no-op")
     // a MISSING band partition is refused loudly — restore territory
     val fs = new org.apache.hadoop.fs.Path(s"$dir/buckets")
@@ -798,7 +798,7 @@ class DedupSpec extends SparkSpec {
     fs.delete(new org.apache.hadoop.fs.Path(s"$dir/buckets/band=3"), true)
     graft.operators.StoreMaintenance.refreshPath(spark, s"$dir/buckets")
     val e = intercept[IllegalArgumentException] {
-      Dedup.repairLshIndex(spark, dir)
+      PersistedStore.repair(spark, dir)
     }
     assert(e.getMessage.contains("missing band"),
       s"expected the missing-band guard: ${e.getMessage.take(120)}")
@@ -948,7 +948,7 @@ class DedupSpec extends SparkSpec {
     // purge a corpus doc that participates in a FOUND pair
     val victim = Dedup.incrementalMinhashIndexed(dir, corpus, batch,
       "doc_id", "text").collect().head.getAs[Long]("corpus_id")
-    assert(Dedup.removeFromLshIndex(
+    assert(PersistedStore.remove(
       Seq(victim).toDF("doc_id"), "doc_id", dir) > 0L)
     val r2 = Dedup.lshIndexRecall(dir, corpus, batch, "doc_id", "text")
       .collect()(0)
@@ -1039,13 +1039,13 @@ class DedupSpec extends SparkSpec {
     val dirA = build(half1)
     val dirB = build(half2)
     val dirFull = build(corpus)
-    assert(Dedup.mergeLshIndexes(spark, dirA, Seq(dirB)) > 0L)
+    assert(PersistedStore.merge(spark, dirA, Seq(dirB)) > 0L)
     def rows(d: String) = spark.read.parquet(s"$d/buckets")
       .select("band", "bkey", "corpus_id")
       .collect().map(_.toString).sorted.toSeq
     assert(rows(dirA) == rows(dirFull),
       "band keys are deterministic — merged rows must equal one build")
-    assert(Dedup.fsckLshIndex(spark, dirA).collect()
+    assert(PersistedStore.fsck(spark, dirA).collect()
       .forall(_.getAs[Boolean]("ok")))
     // the merged index probes identically to the single build
     val batch = docs.filter(col("doc_id") % 10 === 0)
@@ -1055,9 +1055,35 @@ class DedupSpec extends SparkSpec {
     assert(got == probe(dirFull) && got.nonEmpty)
     val alien = build(half1, bands = 8)
     val e = intercept[IllegalArgumentException] {
-      Dedup.mergeLshIndexes(spark, dirFull, Seq(alien))
+      PersistedStore.merge(spark, dirFull, Seq(alien))
     }
     assert(e.getMessage.contains("DIFFERENT"))
+  }
+
+  test("lsh store total purge: every doc removed, the band tiling " +
+      "stays, stats / fsck / probe answer empty instead of throwing, " +
+      "and an append restores it") {
+    val corpus = docs.filter(col("doc_id") % 10 =!= 0)
+    val batch = docs.filter(col("doc_id") % 10 === 0)
+    val dir = java.nio.file.Files.createTempDirectory("lsh_total").toString
+    Dedup.buildLshIndex(corpus, "doc_id", "text", dir)
+    def probe() = Dedup.incrementalMinhashIndexed(dir, corpus, batch,
+      "doc_id", "text").collect().map(_.toString).sorted.toSeq
+    val probeBefore = probe()
+    assert(probeBefore.nonEmpty, "the sf batch should have near-dups")
+    assert(PersistedStore.remove(corpus.select("doc_id"), "doc_id", dir) ==
+      corpus.count() * 16)
+    assert(PersistedStore.remove(corpus.select("doc_id"), "doc_id", dir) ==
+      0L, "remove on an empty store must be a no-op")
+    val st = PersistedStore.stats(spark, dir).collect()
+    assert(st.length == 16 && st.forall(r =>
+      r.getAs[Long]("n_rows") == 0L && r.getAs[Int]("n_files") == 0),
+      s"every band dir stays, empty: ${st.mkString(" | ")}")
+    assert(PersistedStore.fsck(spark, dir).collect()
+      .forall(_.getAs[Boolean]("ok")), "an empty store is a clean store")
+    assert(probe().isEmpty, "an empty store finds no candidates")
+    Dedup.appendToLshIndex(corpus, "doc_id", "text", dir)
+    assert(probe() == probeBefore, "append must restore a purged store")
   }
 
 }

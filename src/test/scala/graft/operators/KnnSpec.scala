@@ -525,7 +525,7 @@ class KnnSpec extends SparkSpec {
         .map(f => f.getName -> java.util.Arrays.hashCode(
           java.nio.file.Files.readAllBytes(f.toPath))).toMap
     val before = fileSig(untouched)
-    val n = Knn.removeFromIvfPqIndex(purge.toDF("vec_id"), "vec_id", dir)
+    val n = PersistedStore.remove(purge.toDF("vec_id"), "vec_id", dir)
     assert(n == purge.size.toLong, s"removed $n of ${purge.size}")
     val left = spark.read.parquet(s"$dir/codes")
       .select("neighbor_id").as[Long].collect().toSet
@@ -543,14 +543,14 @@ class KnnSpec extends SparkSpec {
     assert(!got.exists(r => purge.contains(r.getAs[Long]("neighbor_id"))),
       "a purged id surfaced in search results")
     // purge is idempotent
-    assert(Knn.removeFromIvfPqIndex(purge.toDF("vec_id"), "vec_id",
+    assert(PersistedStore.remove(purge.toDF("vec_id"), "vec_id",
       dir) == 0L)
     // a TOTAL purge is a legal retention outcome: the layout must stay
     // readable (empty), remove stays idempotent, search answers "no
     // neighbors", and an append restores the index
-    assert(Knn.removeFromIvfPqIndex(emb.select("vec_id"), "vec_id",
+    assert(PersistedStore.remove(emb.select("vec_id"), "vec_id",
       dir) == 500L - purge.size)
-    assert(Knn.removeFromIvfPqIndex(emb.select("vec_id"), "vec_id",
+    assert(PersistedStore.remove(emb.select("vec_id"), "vec_id",
       dir) == 0L, "remove on an empty index must be a no-op")
     assert(Knn.searchIvfPqIndex(spark, dir, queries, "vec_id",
       "embedding", dim = 64, k = 5).collect().isEmpty,
@@ -571,7 +571,7 @@ class KnnSpec extends SparkSpec {
     // normalize to one file per cell, then two small appends fragment
     // ONLY the cells their vectors map to — the calm cells' files are
     // the byte-identity witnesses
-    Knn.compactIvfPqIndex(spark, dir)
+    PersistedStore.compact(spark, dir)
     Knn.appendToIvfPqIndex(
       emb.filter($"vec_id" % 2 === 1 && $"vec_id" < 20), "vec_id",
       "embedding", dir, dim = 64)
@@ -598,7 +598,7 @@ class KnnSpec extends SparkSpec {
     val searchBefore = Knn.searchIvfPqIndex(spark, dir, queries,
         "vec_id", "embedding", dim = 64, k = 5, rescoreWith = Some(emb))
       .collect().map(_.toString).sorted.toSeq
-    val (nc, fb, fa) = Knn.compactIvfPqIndex(spark, dir)
+    val (nc, fb, fa) = PersistedStore.compact(spark, dir)
     assert(nc == fragged.length, s"compacted $nc of $counts")
     assert(fb == counts.values.sum.toLong && fa == cells.length.toLong,
       s"file census must end at one per cell: $fb -> $fa")
@@ -614,9 +614,9 @@ class KnnSpec extends SparkSpec {
       .collect().map(_.toString).sorted.toSeq == searchBefore,
       "search results must be identical after compaction")
     // a re-run is a pure listing (no-op)
-    assert(Knn.compactIvfPqIndex(spark, dir) == ((0, fa, fa)))
+    assert(PersistedStore.compact(spark, dir) == ((0, fa, fa)))
     // stats report: every cell row, counts reconcile with the corpus
-    val stats = Knn.ivfPqIndexStats(spark, dir).collect()
+    val stats = PersistedStore.stats(spark, dir).collect()
     assert(stats.map(_.getAs[Int]("cell_id")).toSeq == cells.sorted.toSeq)
     assert(stats.map(_.getAs[Long]("n_codes")).sum == 270L)
     assert(stats.forall(_.getAs[Int]("n_files") == 1))
@@ -641,13 +641,13 @@ class KnnSpec extends SparkSpec {
     val dirA = build(emb.filter($"vec_id" % 2 === 0))
     val dirB = build(emb.filter($"vec_id" % 2 === 1))
     val dirFull = build(emb)
-    val copied = Knn.mergeIvfPqIndexes(spark, dirA, Seq(dirB))
+    val copied = PersistedStore.merge(spark, dirA, Seq(dirB))
     assert(copied > 0L, "merge must copy the shard's code files")
     def rows(d: String) = spark.read.parquet(s"$d/codes").collect()
       .map(_.toString).sorted.toSeq
     assert(rows(dirA) == rows(dirFull),
       "merged shards must equal the single-build store row-for-row")
-    assert(Knn.fsckIvfPqIndex(spark, dirA).collect()
+    assert(PersistedStore.fsck(spark, dirA).collect()
       .forall(_.getAs[Boolean]("ok")), "merged store must fsck clean")
     val viaMerged = Knn.searchIvfPqIndex(spark, dirA, queries, "vec_id",
         "embedding", dim = 64, k = 5, rescoreWith = Some(emb))
@@ -662,7 +662,7 @@ class KnnSpec extends SparkSpec {
     Knn.buildIvfPqIndex(emb.filter($"vec_id" < 100), "vec_id",
       "embedding", alien, dim = 64)
     val e = intercept[IllegalArgumentException] {
-      Knn.mergeIvfPqIndexes(spark, dirFull, Seq(alien))
+      PersistedStore.merge(spark, dirFull, Seq(alien))
     }
     assert(e.getMessage.contains("DIFFERENT"),
       s"expected the quantizer guard: ${e.getMessage.take(120)}")
@@ -751,7 +751,7 @@ class KnnSpec extends SparkSpec {
     val b = store(java.nio.file.Files.createTempDirectory("sc_b").toString,
       same, shuffle = true)
     // identical content, different row order: must merge
-    assert(Knn.mergeIvfPqIndexes(spark, a, Seq(b)) > 0L,
+    assert(PersistedStore.merge(spark, a, Seq(b)) > 0L,
       "row order must not matter to sidecar identity")
     // same fold-colliding keys but the VECTORS swapped across them:
     // a real mismatch the fold could nondeterministically accept
@@ -759,7 +759,7 @@ class KnnSpec extends SparkSpec {
     val c = store(java.nio.file.Files.createTempDirectory("sc_c").toString,
       swapped, shuffle = false)
     val e2 = intercept[IllegalArgumentException] {
-      Knn.mergeIvfPqIndexes(spark, a, Seq(c))
+      PersistedStore.merge(spark, a, Seq(c))
     }
     assert(e2.getMessage.contains("DIFFERENT"),
       s"swapped-vector sidecar must refuse: ${e2.getMessage.take(120)}")
@@ -770,7 +770,7 @@ class KnnSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("ivfpq_fsck").toString
     Knn.buildIvfPqIndex(emb.filter($"vec_id" >= 100), "vec_id",
       "embedding", dir, dim = 64)
-    val clean = Knn.fsckIvfPqIndex(spark, dir).collect()
+    val clean = PersistedStore.fsck(spark, dir).collect()
     assert(clean.length == 6 && clean.forall(_.getAs[Boolean]("ok")),
       s"fresh build must fsck clean: ${clean.mkString(" | ")}")
     // a replayed append duplicates its ids (the crash window the
@@ -789,7 +789,7 @@ class KnnSpec extends SparkSpec {
       .toDF("neighbor_id", "codes", "cell_id")
     bad.write.mode("append").partitionBy("cell_id")
       .parquet(s"$dir/codes")
-    val r = Knn.fsckIvfPqIndex(spark, dir).collect()
+    val r = PersistedStore.fsck(spark, dir).collect()
       .map(x => x.getAs[String]("check") ->
         (x.getAs[Boolean]("ok"), x.getAs[Long]("n_bad"))).toMap
     assert(r("ids_unique") == ((false, 5L)), s"dup ids: ${r("ids_unique")}")
@@ -816,14 +816,14 @@ class KnnSpec extends SparkSpec {
         .map(f => f.getName -> java.util.Arrays.hashCode(
           java.nio.file.Files.readAllBytes(f.toPath))).toMap
     val sigBefore = cleanSig()
-    val (nDropped, nRewritten) = Knn.repairIvfPqIndex(spark, dir)
+    val (nDropped, nRewritten) = PersistedStore.repair(spark, dir)
     // 5 dup losers + 2 malformed + 1 orphan row = 8
     assert(nDropped == 8L, s"dropped $nDropped of 8 offending rows")
     assert(nRewritten >= 1 && !new java.io.File(
       s"$dir/codes/cell_id=999").exists(), "orphan dir must go")
     assert(cleanSig() == sigBefore,
       "clean cells must stay byte-identical through repair")
-    val after = Knn.fsckIvfPqIndex(spark, dir).collect()
+    val after = PersistedStore.fsck(spark, dir).collect()
     assert(after.forall(_.getAs[Boolean]("ok")),
       s"repair must fsck clean: ${after.mkString(" | ")}")
     // every id exactly once, search shape intact
@@ -835,7 +835,7 @@ class KnnSpec extends SparkSpec {
       "embedding", dim = 64, k = 5, rescoreWith = Some(emb)).collect()
     assert(got.groupBy(_.getAs[Long]("query_id")).forall(_._2.length == 5))
     // idempotent
-    assert(Knn.repairIvfPqIndex(spark, dir) == ((0L, 0)))
+    assert(PersistedStore.repair(spark, dir) == ((0L, 0)))
   }
 
   test("ivfPqIndexDrift: a fresh build scores zero misassignment, and " +
@@ -889,7 +889,7 @@ class KnnSpec extends SparkSpec {
         "embedding", dim = 64, k = 5, corpus = emb)
       .collect().map(_.toString).sorted.toSeq
     // threshold at the big file's size: strictly-smaller files merge
-    val (nc, fb, fa) = Knn.compactSqIndex(spark, dir, minBytes = big._2)
+    val (nc, fb, fa) = PersistedStore.compact(spark, dir, minBytes = big._2)
     assert(nc == before.size - 1 && fb == before.size.toLong,
       s"expected all but the largest to merge: $nc of $before")
     assert(fa == 2L, s"one merged file + the untouched big one: ${files()}")
@@ -903,7 +903,7 @@ class KnnSpec extends SparkSpec {
       .collect().map(_.toString).sorted.toSeq == searchBefore,
       "search results must be identical after compaction")
     // a single remaining small file is left alone (needs two to act)
-    assert(Knn.compactSqIndex(spark, dir, minBytes = big._2) ==
+    assert(PersistedStore.compact(spark, dir, minBytes = big._2) ==
       ((0, 2L, 2L)))
   }
 
@@ -1080,7 +1080,7 @@ class KnnSpec extends SparkSpec {
     import spark.implicits._
     val before = codeFiles()
     val purge = Seq(5020L).toDF("vec_id")
-    val removed = Knn.removeFromSqIndex(purge, "vec_id", dir)
+    val removed = PersistedStore.remove(purge, "vec_id", dir)
     assert(removed == 1L, s"expected 1 code row removed, got $removed")
     val after = codeFiles()
     val kept = before.keySet intersect after.keySet
@@ -1090,7 +1090,7 @@ class KnnSpec extends SparkSpec {
       .select("neighbor_id").as[Long].collect().toSet
     assert(!ids.contains(5020L) && ids.contains(20L),
       "purged id gone, others intact")
-    assert(Knn.removeFromSqIndex(purge, "vec_id", dir) == 0L,
+    assert(PersistedStore.remove(purge, "vec_id", dir) == 0L,
       "re-purging is a no-op")
   }
 
@@ -1158,7 +1158,7 @@ class KnnSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("sq_fsck").toString
     Knn.buildSqIndex(emb.filter($"vec_id" >= 10), "vec_id", "embedding",
       dir, dim = 64)
-    val clean = Knn.fsckSqIndex(spark, dir).collect()
+    val clean = PersistedStore.fsck(spark, dir).collect()
     assert(clean.length == 4 && clean.forall(_.getAs[Boolean]("ok")),
       s"fresh store must fsck clean: ${clean.mkString(" | ")}")
     val delta = emb.filter($"vec_id" < 5)
@@ -1168,7 +1168,7 @@ class KnnSpec extends SparkSpec {
     Seq((9001L, Seq(1, 2)), (9002L, Seq.fill(64)(300)))
       .toDF("neighbor_id", "codes")
       .write.mode("append").parquet(s"$dir/codes")
-    val r = Knn.fsckSqIndex(spark, dir).collect()
+    val r = PersistedStore.fsck(spark, dir).collect()
       .map(x => x.getAs[String]("check") ->
         (x.getAs[Boolean]("ok"), x.getAs[Long]("n_bad"))).toMap
     assert(r("codes_len") == ((false, 1L)), s"len: ${r("codes_len")}")
@@ -1184,7 +1184,7 @@ class KnnSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("ivfpq_adv").toString
     Knn.buildIvfPqIndex(emb, "vec_id", "embedding", dir, dim = 64)
     def advise(corpus: org.apache.spark.sql.DataFrame) =
-      Knn.adviseIvfPqIndex(spark, dir, corpus, "vec_id", "embedding")
+      PersistedStore.advise(spark, dir, Some(corpus), "vec_id", "embedding")
         .head()
     // fresh build scored against its own corpus: ok
     assert(advise(emb).getAs[String]("action") == "ok",
@@ -1223,7 +1223,7 @@ class KnnSpec extends SparkSpec {
     Knn.buildSqIndex(evens, "vec_id", "embedding", sdir, dim = 64)
     def adviseSq(corpus: org.apache.spark.sql.DataFrame,
                  minBytes: Long = 1L) =
-      Knn.adviseSqIndex(spark, sdir, corpus, "embedding",
+      PersistedStore.advise(spark, sdir, Some(corpus), "vec_id", "embedding",
         minBytes = minBytes).head()
     assert(adviseSq(evens).getAs[String]("action") == "ok",
       s"fresh SQ store must advise ok: ${adviseSq(evens)}")
@@ -1264,7 +1264,7 @@ class KnnSpec extends SparkSpec {
     Seq((9001L, Seq(1, 2)), (9002L, Seq.fill(64)(300)))
       .toDF("neighbor_id", "codes").coalesce(1)
       .write.mode("append").parquet(s"$dir/codes")
-    assert(!Knn.fsckSqIndex(spark, dir).collect()
+    assert(!PersistedStore.fsck(spark, dir).collect()
       .forall(_.getAs[Boolean]("ok")), "the injection must corrupt")
     // expected offender files: those holding a dup id's copy (both
     // appends' files) or a malformed row — counted from the store
@@ -1273,12 +1273,12 @@ class KnnSpec extends SparkSpec {
       .withColumn("_f", input_file_name())
       .filter(col("neighbor_id") < 5 || col("neighbor_id") >= 9000L)
       .select("_f").distinct().count().toInt
-    val (dropped, rewritten) = Knn.repairSqIndex(spark, dir)
+    val (dropped, rewritten) = PersistedStore.repair(spark, dir)
     // 5 dup copies + 2 malformed rows
     assert(dropped == 7L, s"dropped $dropped rows, want 7")
     assert(rewritten == expOff && expOff >= 2,
       s"rewrote $rewritten files, want the $expOff offender files")
-    val post = Knn.fsckSqIndex(spark, dir).collect()
+    val post = PersistedStore.fsck(spark, dir).collect()
     assert(post.forall(_.getAs[Boolean]("ok")),
       s"post-repair fsck must be green: ${post.mkString(" | ")}")
     // the row SET is exactly the clean store's (dups were identical)
@@ -1294,7 +1294,7 @@ class KnnSpec extends SparkSpec {
       assert(after(p) == before(p), s"surviving file $p was modified")
     }
     // idempotent
-    assert(Knn.repairSqIndex(spark, dir) == ((0L, 0)),
+    assert(PersistedStore.repair(spark, dir) == ((0L, 0)),
       "second repair must be a no-op")
     // an empty grid sidecar is refused loudly — restore territory
     val gdir = java.nio.file.Files.createTempDirectory("sq_rep_g").toString
@@ -1304,7 +1304,7 @@ class KnnSpec extends SparkSpec {
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], gschema)
       .write.mode("overwrite").parquet(s"$gdir/grid")
     val e = intercept[IllegalArgumentException] {
-      Knn.repairSqIndex(spark, gdir)
+      PersistedStore.repair(spark, gdir)
     }
     assert(e.getMessage.contains("grid sidecar is empty"),
       s"expected the empty-grid guard: ${e.getMessage.take(120)}")
@@ -1323,12 +1323,12 @@ class KnnSpec extends SparkSpec {
     val dirA = build(emb.filter($"vec_id" % 2 === 0), Some(grid))
     val dirB = build(emb.filter($"vec_id" % 2 === 1), Some(grid))
     val dirFull = build(emb, Some(grid))
-    assert(Knn.mergeSqIndexes(spark, dirA, Seq(dirB)) > 0L)
+    assert(PersistedStore.merge(spark, dirA, Seq(dirB)) > 0L)
     def rows(d: String) = spark.read.parquet(s"$d/codes").collect()
       .map(_.toString).sorted.toSeq
     assert(rows(dirA) == rows(dirFull),
       "merged shards must equal the single-build store")
-    assert(Knn.fsckSqIndex(spark, dirA).collect()
+    assert(PersistedStore.fsck(spark, dirA).collect()
       .forall(_.getAs[Boolean]("ok")))
     val viaMerged = Knn.searchSqIndex(spark, dirA, queries, "vec_id",
         "embedding", dim = 64, k = 5, corpus = emb)
@@ -1340,9 +1340,31 @@ class KnnSpec extends SparkSpec {
     // a shard that trained its own grid cannot merge
     val alien = build(emb.filter($"vec_id" < 100), scala.None)
     val e = intercept[IllegalArgumentException] {
-      Knn.mergeSqIndexes(spark, dirFull, Seq(alien))
+      PersistedStore.merge(spark, dirFull, Seq(alien))
     }
     assert(e.getMessage.contains("DIFFERENT"))
+  }
+
+  test("sq store total purge: every id removed, stats / fsck / search " +
+      "answer empty instead of throwing, and an append restores it") {
+    val dir = java.nio.file.Files.createTempDirectory("sq_purge").toString
+    Knn.buildSqIndex(emb, "vec_id", "embedding", dir, dim = 64)
+    assert(PersistedStore.remove(emb.select("vec_id"), "vec_id", dir) ==
+      500L)
+    assert(PersistedStore.remove(emb.select("vec_id"), "vec_id", dir) ==
+      0L, "remove on an empty store must be a no-op")
+    assert(PersistedStore.stats(spark, dir).head()
+      .getAs[Long]("n_codes") == 0L)
+    assert(PersistedStore.fsck(spark, dir).collect()
+      .forall(_.getAs[Boolean]("ok")), "an empty store is a clean store")
+    assert(Knn.searchSqIndex(spark, dir, queries, "vec_id", "embedding",
+        dim = 64, k = 5, corpus = emb).collect().isEmpty,
+      "an empty store answers no neighbors, not an error")
+    Knn.appendToSqIndex(emb, "vec_id", "embedding", dir, dim = 64)
+    val restored = Knn.searchSqIndex(spark, dir, queries, "vec_id",
+      "embedding", dim = 64, k = 5, corpus = emb).collect()
+    assert(restored.groupBy(_.getAs[Long]("query_id"))
+      .forall(_._2.length == 5), "append must restore a purged store")
   }
 
 }

@@ -157,7 +157,7 @@ class StoreMaintenanceSpec extends SparkSpec {
       new Path(codesDir, "_compact_tmp/staged.done"), true).close()
     fs(codesDir).rename(staged.head, new Path(codesDir, targets.head))
     // the next open (fsck here) must sweep, then see exact rows
-    val fsck = Knn.fsckSqIndex(spark, dir)
+    val fsck = PersistedStore.fsck(spark, dir)
     assert(fsck.filter(!col("ok")).count() == 0,
       "post-recovery store is clean")
     assert(spark.read.parquet(codesDir).count() == wantRows,
@@ -256,7 +256,7 @@ class StoreMaintenanceSpec extends SparkSpec {
     Seq((9999L, Seq(1, 2))).toDF("neighbor_id", "codes")
       .write.mode("append").parquet(s"$store/codes")
     spark.catalog.refreshByPath(s"$store/codes")
-    assert(!Knn.fsckSqIndex(spark, store).collect()
+    assert(!PersistedStore.fsck(spark, store).collect()
       .forall(_.getAs[Boolean]("ok")), "the damage must register")
     // restore into a fresh dir: same files, same sizes, same answers
     val restored = java.nio.file.Files.createTempDirectory("bk_rest")
@@ -267,7 +267,7 @@ class StoreMaintenanceSpec extends SparkSpec {
       wantFiles, "restored tree must list identically to the snapshot")
     assert(search(restored) == wantSearch,
       "the restored store must answer exactly like the original")
-    assert(Knn.fsckSqIndex(spark, restored).collect()
+    assert(PersistedStore.fsck(spark, restored).collect()
       .forall(_.getAs[Boolean]("ok")))
     // restore refuses a non-empty destination
     val overLive = intercept[IllegalArgumentException] {
@@ -808,4 +808,56 @@ class StoreMaintenanceSpec extends SparkSpec {
       StoreMaintenance.pruneStoreBackups(spark, parent2, keep = 0)
     }
   }
+
+  test("PersistedStore kind detection: each built store is recognized; " +
+      "a dir with no store sidecar or with two kinds' sidecars is " +
+      "refused naming the expected sidecars, through the verb and the " +
+      "TVF; drift on an LSH store points at lshIndexRecall") {
+    val emb = sf("embeddings")
+    val docs = sf("documents")
+    def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
+    val ivf = tmp("kind_ivf")
+    Knn.buildIvfPqIndex(emb, "vec_id", "embedding", ivf, dim = 64)
+    val sq = tmp("kind_sq")
+    Knn.buildSqIndex(emb, "vec_id", "embedding", sq, dim = 64)
+    val lsh = tmp("kind_lsh")
+    Dedup.buildLshIndex(docs, "doc_id", "text", lsh)
+    assert(PersistedStore.detect(spark, ivf) == PersistedStore.IvfPq)
+    assert(PersistedStore.detect(spark, sq) == PersistedStore.Sq)
+    assert(PersistedStore.detect(spark, lsh) == PersistedStore.Lsh)
+    // each kind gets its own report, clean on a fresh build
+    Seq(ivf -> 6, sq -> 4, lsh -> 4).foreach { case (d, n) =>
+      val r = PersistedStore.fsck(spark, d).collect()
+      assert(r.length == n && r.forall(_.getAs[Boolean]("ok")),
+        s"fresh $d must fsck clean: ${r.mkString(" | ")}")
+    }
+    val none = tmp("kind_none")
+    spark.read.parquet(s"$sq/codes").write.parquet(s"$none/codes")
+    val two = tmp("kind_two")
+    Dedup.buildLshIndex(docs, "doc_id", "text", two)
+    spark.read.parquet(s"$sq/grid").write.parquet(s"$two/grid")
+    def chain(e: Throwable): String = Iterator.iterate(e)(_.getCause)
+      .takeWhile(_ != null)
+      .map(t => Option(t.getMessage).getOrElse("")).mkString(" ")
+    Seq(none, two).foreach { d =>
+      val viaVerb = chain(intercept[IllegalArgumentException] {
+        PersistedStore.fsck(spark, d)
+      })
+      val viaSql = chain(intercept[Exception] {
+        spark.sql(s"SELECT * FROM graft_store_fsck('$d')").collect()
+      })
+      Seq(viaVerb, viaSql).foreach { m =>
+        assert(m.contains("coarse + codebooks") && m.contains("grid") &&
+          m.contains("params"), s"refusal must name the sidecars: $m")
+      }
+    }
+    emb.createOrReplaceTempView("kind_corpus_v")
+    val drift = chain(intercept[Exception] {
+      spark.sql(s"SELECT * FROM graft_store_drift('$lsh', " +
+        "'kind_corpus_v', 'vec_id', 'embedding')").collect()
+    })
+    assert(drift.contains("lshIndexRecall"),
+      s"LSH drift must point at lshIndexRecall: $drift")
+  }
+
 }

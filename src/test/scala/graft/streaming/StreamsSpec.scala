@@ -1124,7 +1124,7 @@ class StreamsSpec extends SparkSpec {
       if (compactBetween) {
         // single-writer window: the stream is stopped; maintenance
         // runs, then ingest resumes against the compacted layout
-        val (nb, fb, fa) = graft.operators.Dedup.compactLshIndex(
+        val (nb, fb, fa) = graft.operators.PersistedStore.compact(
           spark, idx)
         assert(nb > 0 && fa < fb,
           s"bootstrap+append must leave fragmented bands: $nb $fb->$fa")
@@ -1221,7 +1221,7 @@ class StreamsSpec extends SparkSpec {
     // next session's open sweep must also absorb a compaction that
     // CRASHED mid-publish (manufactured journal, the
     // StoreMaintenanceSpec frame)
-    val (nc, fb, fa) = graft.operators.Knn.compactSqIndex(spark, dir)
+    val (nc, fb, fa) = graft.operators.PersistedStore.compact(spark, dir)
     assert(nc > 0 && fa < fb, s"append must have fragmented: $nc $fb->$fa")
     serve(b, buf)
     assert(buf.sorted.toSeq == batch.sorted.toSeq,
@@ -1266,7 +1266,7 @@ class StreamsSpec extends SparkSpec {
     serve(a, buf)
     // single-writer window between serving sessions: compact, then a
     // fresh stream serves the rest off the one-file-per-cell layout
-    val (nc, fb, fa) = graft.operators.Knn.compactIvfPqIndex(spark, dir)
+    val (nc, fb, fa) = graft.operators.PersistedStore.compact(spark, dir)
     assert(nc > 0 && fa < fb, s"append must have fragmented: $nc $fb->$fa")
     serve(b, buf)
     assert(buf.sorted.toSeq == batch.sorted.toSeq,
@@ -1451,7 +1451,7 @@ class StreamsSpec extends SparkSpec {
     val sqLog = scala.collection.mutable
       .ArrayBuffer[(Long, String, Boolean)]()
     val sqTicks = MemoryStream[Int]
-    val sqQ = Streams.maintenanceStream(sqTicks.toDF(), "sq", sq,
+    val sqQ = Streams.maintenanceStream(sqTicks.toDF(), sq,
         corpus = Some(emb)) { (report, _) =>
       val rows = report.select("epoch", "action", "applied")
         .as[(Long, String, Boolean)].collect()
@@ -1477,7 +1477,7 @@ class StreamsSpec extends SparkSpec {
     val lshLog = scala.collection.mutable
       .ArrayBuffer[(Long, String, Boolean)]()
     val lshTicks = MemoryStream[Int]
-    val lshQ = Streams.maintenanceStream(lshTicks.toDF(), "lsh", lsh) {
+    val lshQ = Streams.maintenanceStream(lshTicks.toDF(), lsh) {
       (report, _) =>
         val rows = report.select("epoch", "action", "applied")
           .as[(Long, String, Boolean)].collect()
@@ -1495,7 +1495,7 @@ class StreamsSpec extends SparkSpec {
       actions.forall { case (a, ap) =>
         (a == "ok") == !ap && Set("repair", "compact", "ok")(a) },
       s"the loop must converge to ok, applying only real actions: $actions")
-    assert(graft.operators.Dedup.fsckLshIndex(spark, lsh).collect()
+    assert(graft.operators.PersistedStore.fsck(spark, lsh).collect()
       .forall(_.getAs[Boolean]("ok")), "the babysat store must end green")
     // the injected garbage is gone, every real doc's keys survive
     assert(spark.read.parquet(s"$lsh/buckets")
@@ -1529,7 +1529,7 @@ class StreamsSpec extends SparkSpec {
       "torn".getBytes("UTF-8"))
     val log = scala.collection.mutable.ArrayBuffer[(String, Boolean)]()
     val ticks = MemoryStream[Int]
-    val q = Streams.maintenanceStream(ticks.toDF(), "lsh", lsh,
+    val q = Streams.maintenanceStream(ticks.toDF(), lsh,
         backupBefore = Some(parent)) { (report, _) =>
       val rows = report.select("action", "applied")
         .as[(String, Boolean)].collect()
@@ -1583,7 +1583,7 @@ class StreamsSpec extends SparkSpec {
     }
     val log = scala.collection.mutable.ArrayBuffer[(Long, String)]()
     val ticks = MemoryStream[Int]
-    val q = Streams.maintenanceStream(ticks.toDF(), "lsh", lsh,
+    val q = Streams.maintenanceStream(ticks.toDF(), lsh,
         backupBefore = Some(parent), keepBackups = 1) { (report, _) =>
       val rows = report.select("epoch", "action")
         .as[(Long, String)].collect()
@@ -1627,7 +1627,7 @@ class StreamsSpec extends SparkSpec {
     }
     val log = scala.collection.mutable.ArrayBuffer[(Long, String)]()
     val ticks = MemoryStream[Int]
-    val q = Streams.maintenanceStream(ticks.toDF(), "lsh", lsh,
+    val q = Streams.maintenanceStream(ticks.toDF(), lsh,
         backupBefore = Some(parent), keepBackups = 1,
         incrementalBackups = true) { (report, _) =>
       val rows = report.select("epoch", "action")
@@ -1702,7 +1702,7 @@ class StreamsSpec extends SparkSpec {
       spark.catalog.refreshByPath(s"$dir/codes")
     }
     inject(9999)
-    assert(!graft.operators.Knn.fsckIvfPqIndex(spark, dir).collect()
+    assert(!graft.operators.PersistedStore.fsck(spark, dir).collect()
       .forall(_.getAs[Boolean]("ok")), "the damage must register")
     assert(search(dir) == want,
       "premise: an orphan cell must not change any answer")
@@ -1710,8 +1710,8 @@ class StreamsSpec extends SparkSpec {
       .toString
     val log = scala.collection.mutable.ArrayBuffer[(String, Boolean)]()
     val ticks = MemoryStream[Int]
-    val q = Streams.maintenanceStream(ticks.toDF(), "ivfpq", dir,
-        corpus = Some(emb), maxFilesPerCell = 64,
+    val q = Streams.maintenanceStream(ticks.toDF(), dir,
+        corpus = Some(emb), maxFilesPerPartition = 64,
         backupBefore = Some(parent), incrementalBackups = true) {
       (report, _) =>
         val rows = report.select("action", "applied")
@@ -1727,7 +1727,7 @@ class StreamsSpec extends SparkSpec {
     assert(log.toSeq == Seq(("repair", true), ("repair", true),
       ("ok", false)), s"two repairs then convergence: $log")
     // the live store is green and still serves the original answers
-    assert(graft.operators.Knn.fsckIvfPqIndex(spark, dir).collect()
+    assert(graft.operators.PersistedStore.fsck(spark, dir).collect()
       .forall(_.getAs[Boolean]("ok")), "babysat store ends green")
     assert(search(dir) == want, "repair must not change answers")
     // the catalog an operator reads at 3am: newest snapshot is a
@@ -1752,10 +1752,61 @@ class StreamsSpec extends SparkSpec {
         "pre-corruption store")
     // and the drill's last mile: repairing the restored copy
     // re-converges it to a green store with the same answers
-    graft.operators.Knn.repairIvfPqIndex(spark, restored)
-    assert(graft.operators.Knn.fsckIvfPqIndex(spark, restored).collect()
+    graft.operators.PersistedStore.repair(spark, restored)
+    assert(graft.operators.PersistedStore.fsck(spark, restored).collect()
       .forall(_.getAs[Boolean]("ok")))
     assert(search(restored) == want)
+  }
+
+  test("G17 / G19 ingest streams free their per-epoch checkpoints: " +
+      "after 3 epochs of each, the session's persisted-RDD count is back " +
+      "to its pre-stream value") {
+    implicit val sqlCtx = spark.sqlContext
+    val sc = spark.sparkContext
+    def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
+    // vectors: an SQ store over the even half, odd batches stream in
+    val emb = sf("embeddings")
+    val corpus = emb.filter(col("vec_id") % 2 === 0)
+      .select("vec_id", "embedding")
+    val (idx, vst) = (tmp("leak_vi"), tmp("leak_vv"))
+    graft.operators.Knn.buildSqIndex(corpus, "vec_id", "embedding", idx,
+      dim = 64)
+    corpus.write.mode("overwrite").parquet(vst)
+    val odds = emb.filter(col("vec_id") % 2 === 1).orderBy("vec_id")
+      .select("vec_id", "embedding").as[(Long, Seq[Float])].collect().toSeq
+    val vBefore = sc.getPersistentRDDs.size
+    val vin = MemoryStream[(Long, Seq[Float])]
+    val vq = Streams.vectorIngestStream(vin.toDF().toDF("vec_id",
+        "embedding"), "vec_id", "embedding", idx, vst, store = "sq") {
+      (v, _) => v.collect()
+    }.start()
+    try (0 until 3).foreach { i =>
+      vin.addData(odds.slice(i * 5, i * 5 + 5): _*)
+      vq.processAllAvailable()
+    } finally vq.stop()
+    assert(sc.getPersistentRDDs.size == vBefore,
+      s"vectorIngestStream leaked ${sc.getPersistentRDDs.size - vBefore} " +
+        "persisted RDDs over 3 epochs")
+    // docs: an LSH store over a quarter of the corpus, a tenth streams in
+    val docs = sf("documents").select("doc_id", "text")
+    val hist = docs.filter(col("doc_id") % 4 === 1)
+    val (lidx, dst) = (tmp("leak_di"), tmp("leak_dd"))
+    graft.operators.Dedup.buildLshIndex(hist, "doc_id", "text", lidx)
+    hist.write.mode("overwrite").parquet(dst)
+    val fresh = docs.filter(col("doc_id") % 10 === 0).orderBy("doc_id")
+      .as[(Long, String)].collect().toSeq
+    val per = math.max(1, fresh.size / 3)
+    val dBefore = sc.getPersistentRDDs.size
+    val din = MemoryStream[(Long, String)]
+    val dq = Streams.dedupIngestStream(din.toDF().toDF("doc_id", "text"),
+        "doc_id", "text", lidx, dst) { (v, _) => v.collect() }.start()
+    try (0 until 3).foreach { i =>
+      din.addData(fresh.slice(i * per, i * per + per): _*)
+      dq.processAllAvailable()
+    } finally dq.stop()
+    assert(sc.getPersistentRDDs.size == dBefore,
+      s"dedupIngestStream leaked ${sc.getPersistentRDDs.size - dBefore} " +
+        "persisted RDDs over 3 epochs")
   }
 
 }
