@@ -710,9 +710,7 @@ object GraftExtensions {
         val vecCol = strArg(args(3), n)
         val k = numArg(args(4), n).toInt
         val nProbe = if (args.length > 5) numArg(args(5), n).toInt else 5
-        val dim = spark.read.parquet(s"$dir/coarse")
-          .select(org.apache.spark.sql.functions.size(col("centroid")))
-          .head().getInt(0)
+        val dim = new operators.Knn.IvfPqQuantizer(spark, dir).dim
         operators.Knn.searchIvfPqIndex(spark, dir, queries, idCol, vecCol,
           dim, k, nProbe).queryExecution.logical
       }),
@@ -734,9 +732,7 @@ object GraftExtensions {
         val vecCol = strArg(args(4), n)
         val tau = numArg(args(5), n)
         val nProbe = if (args.length > 6) numArg(args(6), n).toInt else 5
-        val dim = spark.read.parquet(s"$dir/coarse")
-          .select(org.apache.spark.sql.functions.size(col("centroid")))
-          .head().getInt(0)
+        val dim = new operators.Knn.IvfPqQuantizer(spark, dir).dim
         operators.Knn.rangeSearchIndexed(spark, dir, queries, idCol,
             vecCol, dim, tau, corpus, nProbe)
           .queryExecution.logical

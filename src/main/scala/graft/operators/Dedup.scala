@@ -280,7 +280,7 @@ object Dedup {
     * colliding buckets. Signature params ride a sidecar so a probe or
     * append under different (k, perms, bands) fails loudly instead of
     * silently mixing incompatible signatures
-    * ([[graft.operators.Knn]] requireIndexDim precedent).
+    * ([[graft.operators.Knn.IvfPqQuantizer]] `requireDim` precedent).
     */
   def buildLshIndex(corpus: DataFrame, idCol: String, textCol: String,
                     dir: String, k: Int = 3, perms: Int = 128,

@@ -36,23 +36,256 @@ object Knn {
     */
   def asDouble(vec: Column): Column = transform(vec, x => x.cast("double"))
 
+  // ---- the shared stages ------------------------------------------------
+  //
+  // Every search below is a composition of these: IVFADC's coarse
+  // assign → (residual) → codec encode → ADC scan → exact re-rank, plus
+  // the probe and candidate stages the IVF and stored-index paths share.
+
+  /** `(query_id, qv)`: the query vectors as doubles. */
+  private def queryVecs(queries: DataFrame, idCol: String,
+                        vecCol: String): DataFrame =
+    queries.select(col(idCol).as("query_id"), asDouble(col(vecCol)).as("qv"))
+
+  /** `(neighbor_id, cv)`: the corpus vectors as doubles. */
+  private def corpusVecs(corpus: DataFrame, idCol: String,
+                         vecCol: String): DataFrame =
+    corpus.select(col(idCol).as("neighbor_id"),
+      asDouble(col(vecCol)).as("cv"))
+
+  private def notSelf: Column = col("neighbor_id") =!= col("query_id")
+
+  /** Per-query top-k of scored `(query_id, neighbor_id, cosine)` rows:
+    * cosine descending, ties to the smaller neighbor_id, `rank` 1..k.
+    * Returns `(query_id, keep.., rank, neighbor_id, cosine)`.
+    */
+  private def rankByCosine(scored: DataFrame, k: Int,
+                           keep: Seq[String] = Nil): DataFrame = {
+    val w = Window.partitionBy(col("query_id"))
+      .orderBy(col("cosine").desc, col("neighbor_id"))
+    scored.withColumn("rank", row_number().over(w).cast("long"))
+      .filter(col("rank") <= k)
+      .select((("query_id" +: keep) ++ Seq("rank", "neighbor_id", "cosine"))
+        .map(col): _*)
+  }
+
+  /** Exact cosine top-k of a candidate set: `(query_id, neighbor_id)`
+    * pairs rescored against the full-precision corpus vectors and the
+    * broadcast query table `q` (`query_id`, `qv`, plus any `keep`
+    * columns that ride to the output) — the refine step every
+    * shortlist ends in.
+    */
+  private def exactTopK(cand: DataFrame, corpus: DataFrame, q: DataFrame,
+                        idCol: String, vecCol: String, k: Int,
+                        keep: Seq[String] = Nil): DataFrame =
+    rankByCosine(cand.join(corpusVecs(corpus, idCol, vecCol), "neighbor_id")
+      .join(q, "query_id")
+      .withColumn("cosine", cosineD(col("qv"), col("cv"))), k, keep)
+
+  /** Salted two-phase top-`size` of approximately scored candidates,
+    * ordered by `by` then neighbor_id: a per-(query, salt) window, then
+    * a window over the surviving `salts · size` rows — identical to one
+    * global window (the global top-S lies inside the union of per-salt
+    * top-S), without a corpus-sized single-task sort per query.
+    * Returns `(query_id, neighbor_id)`.
+    */
+  private def shortlist(scored: DataFrame, by: Column, size: Int,
+                        salts: Int): DataFrame = {
+    val wLocal = Window.partitionBy(col("query_id"), col("salt"))
+      .orderBy(by, col("neighbor_id"))
+    val wShort = Window.partitionBy(col("query_id"))
+      .orderBy(by, col("neighbor_id"))
+    scored.withColumn("salt", pmod(col("neighbor_id"), lit(salts)))
+      .withColumn("lrn", row_number().over(wLocal))
+      .filter(col("lrn") <= size)
+      .withColumn("srn", row_number().over(wShort))
+      .filter(col("srn") <= size)
+      .select(col("query_id"), col("neighbor_id"))
+  }
+
+  /** The shortlist+refine tail of every quantized search: the
+    * `overscan · k` best by the approximate score `by`, re-ranked by
+    * exact cosine.
+    */
+  private def refine(scored: DataFrame, by: Column, corpus: DataFrame,
+                     queries: DataFrame, idCol: String, vecCol: String,
+                     k: Int, overscan: Int, salts: Int): DataFrame =
+    exactTopK(shortlist(scored, by, k * overscan, salts), corpus,
+      broadcast(queryVecs(queries, idCol, vecCol)), idCol, vecCol, k)
+
+  /** Each query's `nProbe` nearest cells of the broadcast `coarse` table
+    * by cosine, ties toward the smallest cell_id:
+    * `(query_id, qv, cell_id, centroid, qsim, qrn)`, `qrn` the probe
+    * rank. Unhinted — callers broadcast the columns they keep, and the
+    * stored-index readers collect the probed cell list from it.
+    */
+  private def probe(queries: DataFrame, idCol: String, vecCol: String,
+                    coarse: DataFrame, nProbe: Int): DataFrame = {
+    val w = Window.partitionBy(col("query_id"))
+      .orderBy(col("qsim").desc, col("cell_id"))
+    queryVecs(queries, idCol, vecCol).join(coarse)
+      .withColumn("qsim", cosineD(col("qv"), col("centroid")))
+      .withColumn("qrn", row_number().over(w))
+      .filter(col("qrn") <= nProbe)
+  }
+
+  /** Coarse argmax assign of `(neighbor_id, cv)` vectors to their most
+    * cosine-similar cell of the broadcast `coarse` table, ties toward
+    * the smallest cell_id: `(neighbor_id, cell_id)`, plus `cv` when
+    * `withVec`. An AGGREGATION, not a window: max_by is
+    * partial-aggregatable, so the broadcast-NLJ'd n×C rows reduce
+    * map-side to one row per vector and the n×C stream is never
+    * shuffled or sorted. The winner stays a scalar cell id by default:
+    * an array-valued buffer forces Spark out of hash aggregation into a
+    * sort-based fallback (measured 6× slower at 100× data when the
+    * residual path carried the centroid through `max_by`). Only
+    * [[ivfCandidates]], which needs the vector for its cosine anyway,
+    * carries `cv` through the winner instead of a re-join.
+    */
+  private def assign(vecs: DataFrame, coarse: DataFrame,
+                     withVec: Boolean = false): DataFrame = {
+    val best = vecs.join(coarse)
+      .withColumn("csim", cosineD(col("cv"), col("centroid")))
+      .groupBy(col("neighbor_id"))
+      .agg(max_by(if (withVec) struct(col("cell_id"), col("cv"))
+        else col("cell_id"), struct(col("csim"), -col("cell_id")))
+        .as(if (withVec) "best" else "cell_id"))
+    if (!withVec) best
+    else best.select(col("best.cell_id").as("cell_id"), col("neighbor_id"),
+      col("best.cv").as("cv"))
+  }
+
+  /** Exact cosine of probed `(query, candidate)` pairs, self excluded:
+    * `(query_id, neighbor_id, cosine, qrn)`.
+    */
+  private def probedCosines(pairs: DataFrame): DataFrame =
+    pairs.filter(notSelf)
+      .withColumn("cosine", cosineD(col("qv"), col("cv")))
+      .select(col("query_id"), col("neighbor_id"), col("cosine"), col("qrn"))
+
+  /** The `m` contiguous subvectors (dim/m each) of the array<double>
+    * column `vec`, one row per subspace; every other column of `df` is
+    * kept as a key: `(keys.., sub, subvec)`.
+    */
+  private def subvectors(df: DataFrame, vec: String, dim: Int,
+                         m: Int): DataFrame = {
+    val d = dim / m
+    df.select(df.columns.filter(_ != vec).map(col) :+
+      posexplode(transform(sequence(lit(0), lit(m - 1)),
+        j => slice(col(vec), j * d + 1, lit(d)))).as(Seq("sub", "subvec")): _*)
+  }
+
+  /** A `(sub, cell_id, cvec)` codebook ([[kmeansSubCodebooks]] output,
+    * or a stored one) in the stages' `(sub, slot, cvec)` shape — "slot"
+    * keeps the codebook index apart from the coarse cell_id.
+    */
+  private def slots(codebook: DataFrame): DataFrame =
+    codebook.select(col("sub"), col("cell_id").as("slot"), col("cvec"))
+
+  /** The systematic sub-codebook: slot c of subspace j is the j-th
+    * subvector of the corpus vector with id c, for ids 0..ksub-1, so a
+    * code IS its position in the ADC table row. Deterministic by
+    * construction — it isolates the search machinery from k-means
+    * training and keeps the DuckDB oracle an exact replay. `nIds` is
+    * how many corpus ids are below ksub; anything short fails loudly
+    * (sparse/offset id spaces), naming the trained `remedy`. With
+    * `residualOf`, each sample vector is replaced by its residual to
+    * its nearest cell there — found on this ksub-row branch by a window
+    * (ksub×cells rows), so the broadcast codebook's lineage never
+    * re-plans the corpus-sized assignment.
+    */
+  private def systematicCodebook(corpus: DataFrame, idCol: String,
+                                 vecCol: String, nIds: Long, who: String,
+                                 remedy: String, dim: Int, m: Int,
+                                 ksub: Int,
+                                 residualOf: Option[DataFrame] = scala.None)
+      : DataFrame = {
+    require(nIds == ksub,
+      s"$who's systematic codebook needs contiguous ids 0..${ksub - 1} " +
+        s"in the corpus, found $nIds of $ksub — $remedy")
+    val low = corpus.filter(col(idCol) < ksub)
+      .select(col(idCol).as("slot"), asDouble(col(vecCol)).as("vec"))
+    val rows = residualOf.fold(low) { coarse =>
+      val w = Window.partitionBy(col("slot"))
+        .orderBy(col("csim").desc, col("cell_id"))
+      low.join(coarse)
+        .withColumn("csim", cosineD(col("vec"), col("centroid")))
+        .withColumn("rn", row_number().over(w))
+        .filter(col("rn") === 1)
+        .select(col("slot"),
+          zip_with(col("vec"), col("centroid"), (x, y) => x - y).as("vec"))
+    }
+    subvectors(rows, "vec", dim, m)
+      .select(col("sub"), col("slot"), col("subvec").as("cvec"))
+  }
+
+  /** PQ encode of `(neighbor_id, sub, subvec, rides..)` rows: per
+    * (vector, subspace) the L2-nearest codebook slot, ties to the
+    * smallest — min_by partial-aggregates against the broadcast
+    * codebook, never a shuffled n×ksub stream. The codes collapse to
+    * ONE array per vector via `sort_array(collect_list(struct(sub,
+    * code)))`, sub-ordered however the groups arrive (the determinism
+    * contract). `rides` are per-vector constants that come along:
+    * `(neighbor_id, rides.., codes)`.
+    */
+  private def encode(subs: DataFrame, codebook: DataFrame,
+                     rides: Seq[String] = Nil): DataFrame = {
+    val ride = rides.map(c => first(col(c)).as(c))
+    subs.join(broadcast(codebook), "sub")
+      .withColumn("dist", l2sqD(col("subvec"), col("cvec")))
+      .groupBy(col("neighbor_id"), col("sub"))
+      .agg(min_by(col("slot"), struct(col("dist"), col("slot"))).as("code"),
+        ride: _*)
+      .groupBy(col("neighbor_id"))
+      .agg(sort_array(collect_list(struct(col("sub"), col("code"))))
+        .as("sc"), ride: _*)
+      .select((col("neighbor_id") +: rides.map(col)) :+
+        transform(col("sc"), s => s("code")).as("codes"): _*)
+  }
+
+  /** Per-`keys` ADC tables from `(keys.., sub, subvec)` query rows:
+    * `tbl[j][c]` = squared L2 from subvector j to slot c, reshaped from
+    * the (sub, code)-sorted list so position j·ksub + c IS (sub j,
+    * code c). |keys| rows of m·ksub doubles, broadcast.
+    */
+  private def adcTables(subs: DataFrame, keys: Seq[String],
+                        codebook: DataFrame, m: Int, ksub: Int)
+      : DataFrame =
+    broadcast(subs.join(broadcast(codebook), "sub")
+      .withColumn("qdist", l2sqD(col("subvec"), col("cvec")))
+      .groupBy(keys.map(col): _*)
+      .agg(sort_array(collect_list(struct(col("sub"),
+        col("slot").cast("long").as("code"), col("qdist")))).as("e"))
+      .select(keys.map(col) :+
+        transform(sequence(lit(0), lit(m - 1)), j =>
+          transform(sequence(lit(0), lit(ksub - 1)), c =>
+            element_at(col("e"), (j * ksub + c + 1).cast("int"))("qdist")))
+          .as("tbl"): _*))
+
+  /** ADC distance of `(query_id, neighbor_id, codes, tbl)` pairs, self
+    * excluded: `adist = Σ_j tbl[j][codes[j]]`, a map-side expression
+    * fold in sub order (order-stable double sum, oracle-replayable) —
+    * no per-(pair, subspace) row ever shuffles.
+    */
+  private def adcScan(pairs: DataFrame, m: Int): DataFrame =
+    pairs.filter(notSelf)
+      .withColumn("adist",
+        aggregate(sequence(lit(0), lit(m - 1)), lit(0.0), (acc, j) =>
+          acc + element_at(
+            element_at(col("tbl"), (j + lit(1)).cast("int")),
+            (element_at(col("codes"), (j + lit(1)).cast("int")) + lit(1))
+              .cast("int"))))
+
+  // ---- exact, LSH and IVF search ----------------------------------------
+
   /** Exact top-k cosine neighbors of each query vector (self excluded).
     * Queries are broadcast; the only shuffle is the per-query window.
     */
   def bruteForce(corpus: DataFrame, queries: DataFrame,
-                 idCol: String, vecCol: String, k: Int): DataFrame = {
-    val q = broadcast(queries.select(col(idCol).as("query_id"),
-      asDouble(col(vecCol)).as("qv")))
-    val c = corpus.select(col(idCol).as("neighbor_id"),
-      asDouble(col(vecCol)).as("cv"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    c.join(q, col("neighbor_id") =!= col("query_id"))
-      .withColumn("cosine", cosineD(col("qv"), col("cv")))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("cosine"))
-  }
+                 idCol: String, vecCol: String, k: Int): DataFrame =
+    rankByCosine(corpusVecs(corpus, idCol, vecCol)
+      .join(broadcast(queryVecs(queries, idCol, vecCol)), notSelf)
+      .withColumn("cosine", cosineD(col("qv"), col("cv"))), k)
 
   /** D10: radius (range) search — ALL corpus vectors within cosine ≥
     * `tau` of each query, unbounded by k (the other half of the ANN
@@ -67,16 +300,12 @@ object Knn {
     * callers bound it with `tau`, not a cap.
     */
   def rangeSearch(corpus: DataFrame, queries: DataFrame, idCol: String,
-                  vecCol: String, tau: Double): DataFrame = {
-    val q = broadcast(queries.select(col(idCol).as("query_id"),
-      asDouble(col(vecCol)).as("qv")))
-    corpus.select(col(idCol).as("neighbor_id"),
-        asDouble(col(vecCol)).as("cv"))
-      .join(q, col("neighbor_id") =!= col("query_id"))
+                  vecCol: String, tau: Double): DataFrame =
+    corpusVecs(corpus, idCol, vecCol)
+      .join(broadcast(queryVecs(queries, idCol, vecCol)), notSelf)
       .withColumn("cosine", cosineD(col("qv"), col("cv")))
       .filter(col("cosine") >= tau)
       .select(col("query_id"), col("neighbor_id"), col("cosine"))
-  }
 
   /** Random-hyperplane LSH ANN: corpus and queries are bucketed by
     * `bands` independent sign-bit keys; a candidate is any corpus
@@ -95,8 +324,6 @@ object Knn {
           planesPerBand: Int = 6, seed: Long = 7L): DataFrame =
     lshTopK(corpus, queries, idCol, vecCol, dim, k, bands, planesPerBand,
         seed, filterCol = scala.None)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        col("cosine"))
 
   /** [[lsh]] and [[filteredLsh]]'s one shared body: band keys only ride
     * the bucket shuffle (vectors stay out of the exploded stream),
@@ -118,21 +345,15 @@ object Knn {
     val candIds = keyed(corpus, "neighbor_id")
       .join(broadcast(keyed(queries, "query_id")),
         fk ++ Seq("band", "bkey"))
-      .filter(col("neighbor_id") =!= col("query_id"))
+      .filter(notSelf)
       .select("query_id", "neighbor_id")
       .distinct() // a pair can collide in several bands
     val q = broadcast(queries.select(
       Seq(col(idCol).as("query_id")) ++
         fk.map(c => col(c).as("label")) :+
         asDouble(col(vecCol)).as("qv"): _*))
-    val c = corpus.select(col(idCol).as("neighbor_id"),
-      asDouble(col(vecCol)).as("cv"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    candIds.join(c, "neighbor_id").join(q, "query_id")
-      .withColumn("cosine", cosineD(col("qv"), col("cv")))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
+    exactTopK(candIds, corpus, q, idCol, vecCol, k,
+      keep = fk.map(_ => "label"))
   }
 
   /** The anchored-stride systematic coarse codebook, public so callers
@@ -217,56 +438,25 @@ object Knn {
         .withColumn("cosine", lit(null).cast("double")) // nullable, like cosineD's
         .select(col("query_id"), col("rank"), col("neighbor_id"),
           col("cosine"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    ivfCandidates(corpus, queries, idCol, vecCol, stride, nProbe,
-        maxCells, coarse, knownCount = Some(n))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("cosine"))
+    rankByCosine(ivfCandidates(corpus, queries, idCol, vecCol,
+      coarseTable(corpus, idCol, vecCol, stride, maxCells, coarse, "ivf",
+        knownCount = Some(n))._1, nProbe), k)
   }
 
-  /** The IVF candidate stream shared by top-k [[ivf]] and radius
-    * [[rangeSearchIvf]]: corpus assigned to its nearest coarse cell,
-    * queries probe their nProbe nearest cells (broadcast), exact
-    * cosine on the probed pairs, self excluded. The assignment is an
-    * argmax AGGREGATION (max_by is partial-aggregatable, so the
-    * broadcast-NLJ'd n×C rows reduce map-side to one row per vector —
-    * the n×C stream is never shuffled, unlike a row_number window
-    * which would materialize and sort it; ties on csim break toward
-    * the smallest cell_id).
+  /** The in-plan IVF candidate stream behind top-k [[ivf]], radius
+    * [[rangeSearchIvf]] and the [[recallSweep]]: the corpus assigned to
+    * its nearest cell of `centroids`, each query's `nProbe` nearest
+    * cells broadcast, exact cosine on the probed pairs —
+    * `(query_id, neighbor_id, cosine, qrn)`.
     */
   private def ivfCandidates(corpus: DataFrame, queries: DataFrame,
-                            idCol: String, vecCol: String, stride: Int,
-                            nProbe: Int, maxCells: Int,
-                            coarse: Option[DataFrame],
-                            knownCount: Option[Long]): DataFrame = {
-    val c = corpus.select(col(idCol).as("neighbor_id"),
-      asDouble(col(vecCol)).as("cv"))
-    val centroids = coarseTable(corpus, idCol, vecCol, stride, maxCells,
-      coarse, "ivf", knownCount)._1
-    val cells = c.join(centroids)
-      .withColumn("csim", cosineD(col("cv"), col("centroid")))
-      .groupBy(col("neighbor_id"))
-      .agg(max_by(struct(col("cell_id"), col("cv")),
-        struct(col("csim"), -col("cell_id"))).as("best"))
-      .select(col("best.cell_id").as("cell_id"), col("neighbor_id"),
-        col("best.cv").as("cv"))
-    // probe: nProbe nearest cells per query
-    val q = queries.select(col(idCol).as("query_id"),
-      asDouble(col(vecCol)).as("qv"))
-    val wProbe = Window.partitionBy(col("query_id"))
-      .orderBy(col("qsim").desc, col("cell_id"))
-    val probes = broadcast(q.join(centroids)
-      .withColumn("qsim", cosineD(col("qv"), col("centroid")))
-      .withColumn("qrn", row_number().over(wProbe))
-      .filter(col("qrn") <= nProbe)
-      .select(col("query_id"), col("qv"), col("cell_id")))
-    cells.join(probes, "cell_id")
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("cosine", cosineD(col("qv"), col("cv")))
-      .select(col("query_id"), col("neighbor_id"), col("cosine"))
-  }
+                            idCol: String, vecCol: String,
+                            centroids: DataFrame, nProbe: Int): DataFrame =
+    probedCosines(assign(corpusVecs(corpus, idCol, vecCol), centroids,
+        withVec = true)
+      .join(broadcast(probe(queries, idCol, vecCol, centroids, nProbe)
+        .select(col("query_id"), col("qv"), col("cell_id"), col("qrn"))),
+        "cell_id"))
 
   /** D10b: IVF-pruned radius search — the SCALE PATH for
     * [[rangeSearch]]: brute-force radius scans the whole corpus for
@@ -293,9 +483,11 @@ object Knn {
         .crossJoin(corpus.limit(0).select(col(idCol).as("neighbor_id")))
         .withColumn("cosine", lit(null).cast("double"))
         .select(col("query_id"), col("neighbor_id"), col("cosine"))
-    ivfCandidates(corpus, queries, idCol, vecCol, stride, nProbe,
-        maxCells, coarse, knownCount = Some(n))
+    ivfCandidates(corpus, queries, idCol, vecCol,
+        coarseTable(corpus, idCol, vecCol, stride, maxCells, coarse, "ivf",
+          knownCount = Some(n))._1, nProbe)
       .filter(col("cosine") >= tau)
+      .select(col("query_id"), col("neighbor_id"), col("cosine"))
   }
 
   /** Squared L2 over two ARRAY<DOUBLE> columns, sequential fold order
@@ -305,6 +497,8 @@ object Knn {
     aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)),
       lit(0.0), (acc, v) => acc + v)
 
+  // ---- product quantization ---------------------------------------------
+
   /** Product-quantization ANN with asymmetric distance (ADC) and exact
     * re-rank — the memory-compressed search path a 100 TB corpus needs:
     * each vector is stored as `m` small codes (one byte each at
@@ -313,11 +507,9 @@ object Knn {
     *
     *  1. Sub-codebooks: the vector space is split into `m` contiguous
     *     subspaces of dim/m dims; the codebook of subspace j is the j-th
-    *     subvector of the `ksub` lowest-id corpus vectors. Deterministic
-    *     by construction — like [[ivf]]'s systematic codebook, this
-    *     isolates the search machinery from k-means training (which a
-    *     production run would substitute; every downstream step is
-    *     unchanged) and keeps the DuckDB oracle an exact replay.
+    *     subvector of the `ksub` lowest-id corpus vectors
+    *     ([[systematicCodebook]]; a production run substitutes k-means,
+    *     [[pqTrained]] — every downstream step is unchanged).
     *  2. Encode: every corpus vector gets, per subspace, the id of its
     *     L2-nearest sub-centroid (ties to the smallest id) — an
     *     `m × ksub` broadcast map + partial-aggregating argmin, never a
@@ -325,15 +517,10 @@ object Knn {
     *  3. ADC scan: each query precomputes its `m × ksub` table of
     *     squared-L2 subdistances, reshaped to a nested array and
     *     BROADCAST; approx dist(q, x) = sum_j table[j][code_j(x)] is a
-    *     pure map-side expression fold (sub-ascending, so the double
-    *     sum is order-stable for the oracle) — no per-(pair, subspace)
-    *     rows ever shuffle.
+    *     pure map-side expression fold.
     *  4. The `overscan · k` best approx candidates per query are found
-    *     with a salted two-phase top-k (per-(query, salt) window, then
-    *     a window over the surviving `salts · overscan · k` rows — the
-    *     per-query sort never has a single-task corpus-sized
-    *     partition), then re-ranked by exact cosine — the standard PQ
-    *     shortlist+refine.
+    *     with a salted two-phase top-k, then re-ranked by exact cosine —
+    *     the standard PQ shortlist+refine.
     *
     * Scale posture: codes are O(n·m) small ints built by one
     * partial-agg shuffle; the scan is the canonical O(n·m) table
@@ -345,25 +532,15 @@ object Knn {
          vecCol: String, dim: Int, k: Int, m: Int = 8, ksub: Int = 16,
          overscan: Int = 4, salts: Int = 32): DataFrame = {
     require(dim % m == 0, s"dim $dim not divisible by m $m")
-    val d = dim / m
-    // the codebook sample is the ids 0..ksub-1, so a code IS its
-    // position in the table row; fail loudly on sparse/offset id spaces —
-    // this require applies ONLY to the systematic path; [[pqTrained]]
-    // works on any id space
-    val nCent = corpus.filter(col(idCol) < ksub).count()
-    require(nCent == ksub,
-      s"pq's systematic codebook needs contiguous ids 0..${ksub - 1} " +
-        s"in the corpus, found $nCent of $ksub — use pqTrained for " +
-        "non-contiguous id spaces")
-    def subs(df: DataFrame, id: String) =
-      df.select(col(idCol).as(id),
-          posexplode(transform(sequence(lit(0), lit(m - 1)),
-            j => slice(asDouble(col(vecCol)), j * d + 1, lit(d)))))
-        .toDF(id, "sub", "subvec")
-    val centroids = subs(corpus.filter(col(idCol) < ksub), "cell_id")
-      .select(col("sub"), col("cell_id"), col("subvec").as("cvec"))
-    pqSearch(corpus, queries, idCol, vecCol, centroids, dim, k, m, ksub,
-      overscan, salts)
+    val cb = systematicCodebook(corpus, idCol, vecCol,
+      corpus.filter(col(idCol) < ksub).count(), "pq",
+      "use pqTrained for non-contiguous id spaces", dim, m, ksub)
+    val approx = encode(subvectors(corpusVecs(corpus, idCol, vecCol), "cv",
+        dim, m), cb)
+      .join(adcTables(subvectors(queryVecs(queries, idCol, vecCol), "qv",
+        dim, m), Seq("query_id"), cb, m, ksub))
+    refine(adcScan(approx, m), col("adist"), corpus, queries, idCol, vecCol,
+      k, overscan, salts)
   }
 
   /** Lloyd's k-means sub-codebooks for [[pqTrained]] — the slot the
@@ -400,7 +577,8 @@ object Knn {
     *    unless `knownCount` supplies it) — the corpus never moves.
     *
     * Returns `(sub, cell_id, cvec)` with cell_id 0..ksub-1, the
-    * codebook shape [[pqSearch]] consumes.
+    * codebook shape [[pqTrained]], [[ivfpq]]'s `codebooks` and
+    * [[buildIvfPqIndex]] take.
     */
   def kmeansSubCodebooks(corpus: DataFrame, idCol: String, vecCol: String,
                          dim: Int, m: Int, ksub: Int, iters: Int = 2,
@@ -523,10 +701,14 @@ object Knn {
                 ksub: Int = 16, iters: Int = 2, trainMod: Int = 4,
                 maxTrain: Int = 8192, overscan: Int = 4,
                 salts: Int = 32): DataFrame = {
-    val centroids = kmeansSubCodebooks(corpus, idCol, vecCol, dim, m, ksub,
-      iters, trainMod, maxTrain)
-    pqSearch(corpus, queries, idCol, vecCol, centroids, dim, k, m, ksub,
-      overscan, salts)
+    val cb = slots(kmeansSubCodebooks(corpus, idCol, vecCol, dim, m, ksub,
+      iters, trainMod, maxTrain))
+    val approx = encode(subvectors(corpusVecs(corpus, idCol, vecCol), "cv",
+        dim, m), cb)
+      .join(adcTables(subvectors(queryVecs(queries, idCol, vecCol), "qv",
+        dim, m), Seq("query_id"), cb, m, ksub))
+    refine(adcScan(approx, m), col("adist"), corpus, queries, idCol, vecCol,
+      k, overscan, salts)
   }
 
   /** IVF × PQ — the composition a true 100 TB corpus needs: vectors are
@@ -536,7 +718,8 @@ object Knn {
     * per-query work is the probed fraction of the corpus instead of the
     * flat-PQ O(n·m) full scan ([[pq]]'s scale ceiling — its ratio100 was
     * the suite's worst precisely because every query touches every
-    * code). Exact cosine re-ranks the shortlist as usual.
+    * code). Exact cosine re-ranks the shortlist as usual. With one
+    * coarse cell and the same codebooks it IS flat PQ (spec-pinned).
     *
     * Plan shape: coarse assign and PQ encode are both broadcast +
     * partial-agg reductions over the corpus; their two per-vector
@@ -566,105 +749,28 @@ object Knn {
             codebooks: Option[DataFrame] = scala.None,
             coarse: Option[DataFrame] = scala.None): DataFrame = {
     require(dim % m == 0, s"dim $dim not divisible by m $m")
-    val d = dim / m
     // systematic-path constants in ONE eager pass (see coarseTable):
     // the stride anchor and the codebook contiguity count
-    val (coarseDf, nCentOpt) = coarseTable(corpus, idCol, vecCol, stride,
+    val (coarseDf, nIds) = coarseTable(corpus, idCol, vecCol, stride,
       maxCells, coarse, "ivfpq",
       countIdsBelow = if (codebooks.isEmpty) Some(ksub) else scala.None)
-    // coarse assign: partial-agg argmax, no cv carried (re-rank joins
-    // the corpus again); ties toward the smallest cell_id
-    val cells = corpus
-      .select(col(idCol).as("neighbor_id"), asDouble(col(vecCol)).as("cv"))
-      .join(coarseDf)
-      .withColumn("csim", cosineD(col("cv"), col("centroid")))
-      .groupBy(col("neighbor_id"))
-      .agg(max_by(col("cell_id"), struct(col("csim"), -col("cell_id")))
-        .as("cell_id"))
-    // query probes: top-nProbe cells per query (tiny; broadcast)
-    val q = queries.select(col(idCol).as("query_id"),
-      asDouble(col(vecCol)).as("qv"))
-    val wProbe = Window.partitionBy(col("query_id"))
-      .orderBy(col("qsim").desc, col("cell_id"))
-    val probes = broadcast(q.join(coarseDf)
-      .withColumn("qsim", cosineD(col("qv"), col("centroid")))
-      .withColumn("qrn", row_number().over(wProbe))
-      .filter(col("qrn") <= nProbe)
+    val cb = codebooks.map(slots).getOrElse(systematicCodebook(corpus,
+      idCol, vecCol, nIds.get, "ivfpq",
+      "pass kmeansSubCodebooks output for non-contiguous id spaces", dim,
+      m, ksub))
+    val probes = broadcast(probe(queries, idCol, vecCol, coarseDf, nProbe)
       .select(col("query_id"), col("cell_id")))
-    // ---- PQ codebooks (systematic unless trained ones are passed)
-    def subs(df: DataFrame, id: String) =
-      df.select(col(idCol).as(id),
-          posexplode(transform(sequence(lit(0), lit(m - 1)),
-            j => slice(asDouble(col(vecCol)), j * d + 1, lit(d)))))
-        .toDF(id, "sub", "subvec")
-    val pqCent = broadcast(codebooks.getOrElse {
-      val nCent = nCentOpt.get
-      require(nCent == ksub,
-        s"ivfpq's systematic codebook needs contiguous ids 0..${ksub - 1}" +
-          s" in the corpus, found $nCent of $ksub — pass " +
-          "kmeansSubCodebooks output for non-contiguous id spaces")
-      subs(corpus.filter(col(idCol) < ksub), "cell_id")
-        .select(col("sub"), col("cell_id"), col("subvec").as("cvec"))
-    })
-    // PQ encode (same partial-agg shape as pqSearch)
-    val codes = subs(corpus, "neighbor_id")
-      .join(pqCent, "sub")
-      .withColumn("dist", l2sqD(col("subvec"), col("cvec")))
-      .groupBy(col("neighbor_id"), col("sub"))
-      .agg(min_by(col("cell_id"), struct(col("dist"), col("cell_id")))
-        .as("code"))
-      .groupBy(col("neighbor_id"))
-      .agg(sort_array(collect_list(struct(col("sub"), col("code"))))
-        .as("sc"))
-      .select(col("neighbor_id"),
-        transform(col("sc"), s => s("code")).as("codes"))
-    // per-query ADC tables (same as pqSearch), broadcast
-    val qtab = broadcast(subs(queries, "query_id")
-      .join(pqCent, "sub")
-      .withColumn("qdist", l2sqD(col("subvec"), col("cvec")))
-      .groupBy(col("query_id"))
-      .agg(sort_array(collect_list(struct(col("sub"),
-        col("cell_id").cast("long").as("code"), col("qdist")))).as("e"))
-      .select(col("query_id"),
-        transform(sequence(lit(0), lit(m - 1)), j =>
-          transform(sequence(lit(0), lit(ksub - 1)), c =>
-            element_at(col("e"), (j * ksub + c + 1).cast("int"))("qdist")))
-          .as("tbl")))
-    // candidate set = vectors whose cell each query probed — the ONLY
-    // corpus-sized shuffle after encode is the codes⋈cells id join; the
-    // probes/qtab joins are broadcast, so pruning + ADC stay map-side
-    val approx = codes.join(cells, "neighbor_id")
+    // the ONLY corpus-sized shuffle after encode is the codes⋈cells id
+    // join; the probes/ADC-table joins are broadcast, so pruning + ADC
+    // stay map-side
+    val vecs = corpusVecs(corpus, idCol, vecCol)
+    val approx = encode(subvectors(vecs, "cv", dim, m), cb)
+      .join(assign(vecs, coarseDf), "neighbor_id")
       .join(probes, "cell_id")
-      .join(qtab, "query_id")
-      .withColumn("adist",
-        aggregate(sequence(lit(0), lit(m - 1)), lit(0.0), (acc, j) =>
-          acc + element_at(
-            element_at(col("tbl"), (j + lit(1)).cast("int")),
-            (element_at(col("codes"), (j + lit(1)).cast("int")) + lit(1))
-              .cast("int"))))
-    val wLocal = Window.partitionBy(col("query_id"), col("salt"))
-      .orderBy(col("adist"), col("neighbor_id"))
-    val wShort = Window.partitionBy(col("query_id"))
-      .orderBy(col("adist"), col("neighbor_id"))
-    val shortlist = approx
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("salt", pmod(col("neighbor_id"), lit(salts)))
-      .withColumn("lrn", row_number().over(wLocal))
-      .filter(col("lrn") <= k * overscan)
-      .withColumn("srn", row_number().over(wShort))
-      .filter(col("srn") <= k * overscan)
-      .select(col("query_id"), col("neighbor_id"))
-    val qv = broadcast(queries.select(col(idCol).as("query_id"),
-      asDouble(col(vecCol)).as("qv")))
-    val cv = corpus.select(col(idCol).as("neighbor_id"),
-      asDouble(col(vecCol)).as("cv"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    shortlist.join(cv, "neighbor_id").join(qv, "query_id")
-      .withColumn("cosine", cosineD(col("qv"), col("cv")))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("cosine"))
+      .join(adcTables(subvectors(queryVecs(queries, idCol, vecCol), "qv",
+        dim, m), Seq("query_id"), cb, m, ksub), "query_id")
+    refine(adcScan(approx, m), col("adist"), corpus, queries, idCol, vecCol,
+      k, overscan, salts)
   }
 
   /** Per-vector coarse residuals under a `(cell_id, centroid)` coarse
@@ -684,15 +790,9 @@ object Knn {
                 coarse: DataFrame): DataFrame = {
     val coarseDf = broadcast(coarse.select(col("cell_id"),
       asDouble(col("centroid")).as("centroid")))
-    val corpusVec = corpus.select(col(idCol).as("neighbor_id"),
-      asDouble(col(vecCol)).as("cv"))
-    val assign = corpusVec
-      .join(coarseDf)
-      .withColumn("csim", cosineD(col("cv"), col("centroid")))
-      .groupBy(col("neighbor_id"))
-      .agg(max_by(col("cell_id"), struct(col("csim"), -col("cell_id")))
-        .as("ccell"))
-    assign.join(corpusVec, "neighbor_id")
+    val corpusVec = corpusVecs(corpus, idCol, vecCol)
+    assign(corpusVec, coarseDf).withColumnRenamed("cell_id", "ccell")
+      .join(corpusVec, "neighbor_id")
       .join(broadcast(coarseDf.select(col("cell_id").as("ccell"),
         col("centroid"))), "ccell")
       .select(col("neighbor_id"), col("ccell"),
@@ -721,16 +821,12 @@ object Knn {
     * operator exists for.
     *
     * Plan shape: the coarse assign aggregates ONLY the scalar winning
-    * cell id (array-valued aggregation buffers force Spark out of hash
-    * aggregation into a sort-based fallback over the n×cells stream —
-    * measured 6× slower at 100× data when the centroid rode through
-    * `max_by`), and the residual is computed by re-attaching the vector
-    * (one id-keyed co-shuffle, the same join the raw path pays for
-    * codes⋈cells) and the centroid (broadcast). The 16 codebook
-    * residuals are built on a dedicated ksub-row branch so the
-    * broadcast codebook's lineage never re-plans the corpus-sized
-    * assignment; encode / probed-cell pruning / salted shortlist /
-    * exact re-rank all match [[ivfpq]].
+    * cell id (see [[assign]]), and the residual is computed by
+    * re-attaching the vector (one id-keyed co-shuffle, the same join
+    * the raw path pays for codes⋈cells) and the centroid (broadcast).
+    * The systematic codebook's residuals are built on a dedicated
+    * ksub-row branch ([[systematicCodebook]]); encode / probed-cell
+    * pruning / salted shortlist / exact re-rank all match [[ivfpq]].
     */
   def ivfpqResidual(corpus: DataFrame, queries: DataFrame, idCol: String,
                     vecCol: String, dim: Int, k: Int, stride: Int = 50,
@@ -740,118 +836,32 @@ object Knn {
                     codebooks: Option[DataFrame] = scala.None,
                     coarse: Option[DataFrame] = scala.None): DataFrame = {
     require(dim % m == 0, s"dim $dim not divisible by m $m")
-    val d = dim / m
     // systematic-path constants in ONE eager pass (see coarseTable):
     // the stride anchor and the codebook contiguity count
-    val (coarseDf, nCentOpt) = coarseTable(corpus, idCol, vecCol, stride,
+    val (coarseDf, nIds) = coarseTable(corpus, idCol, vecCol, stride,
       maxCells, coarse, "ivfpqResidual",
       countIdsBelow = if (codebooks.isEmpty) Some(ksub) else scala.None)
-    // coarse assign with a SCALAR aggregate only (see scaladoc), then
-    // re-attach the vector and the winning centroid to form residuals
-    val cells = residuals(corpus, idCol, vecCol, coarseDf)
+    val cb = codebooks.map(slots).getOrElse(systematicCodebook(corpus,
+      idCol, vecCol, nIds.get, "ivfpqResidual",
+      "pass codebooks trained on [[residuals]] for non-contiguous id " +
+        "spaces (see ivfpqResidualTrained)", dim, m, ksub,
+      residualOf = Some(coarseDf)))
     // probes keep the residual query vector per probed cell
-    val q = queries.select(col(idCol).as("query_id"),
-      asDouble(col(vecCol)).as("qv"))
-    val wProbe = Window.partitionBy(col("query_id"))
-      .orderBy(col("qsim").desc, col("cell_id"))
-    val probes = broadcast(q.join(coarseDf)
-      .withColumn("qsim", cosineD(col("qv"), col("centroid")))
-      .withColumn("qrn", row_number().over(wProbe))
-      .filter(col("qrn") <= nProbe)
+    val probes = broadcast(probe(queries, idCol, vecCol, coarseDf, nProbe)
       .select(col("query_id"), col("cell_id"),
         zip_with(col("qv"), col("centroid"), (x, y) => x - y).as("rqv")))
-    // residual sub-codebook ("slot" = codebook index, distinct from the
-    // coarse cell_id): TRAINED residual-space codebooks when passed
-    // ([[kmeansSubCodebooks]] over [[residuals]] — any id space), else
-    // the systematic residual subvectors of ids 0..ksub-1
-    def rsubs(df: DataFrame, id: String, vc: String, extra: Seq[String]) =
-      df.select((col(id) +: extra.map(col)) :+
-          posexplode(transform(sequence(lit(0), lit(m - 1)),
-            j => slice(col(vc), j * d + 1, lit(d)))): _*)
-        .toDF((Seq(id) ++ extra ++ Seq("sub", "subvec")): _*)
-    val pqCent = broadcast(codebooks
-      .map(_.select(col("sub"), col("cell_id").cast("long").as("slot"),
-        col("cvec")))
-      .getOrElse {
-        val nCent = nCentOpt.get
-        require(nCent == ksub,
-          s"ivfpqResidual's systematic codebook needs contiguous ids " +
-            s"0..${ksub - 1} in the corpus, found $nCent of $ksub — pass " +
-            "codebooks trained on [[residuals]] for non-contiguous id " +
-            "spaces (see ivfpqResidualTrained)")
-        // the ksub codebook residuals on their own ksub-row branch (same
-        // assignment rule, ksub×cells rows — trivial), so the broadcast
-        // codebook's lineage is corpus-free however many joins consume it
-        val wCb = Window.partitionBy(col("slot"))
-          .orderBy(col("csim").desc, col("cell_id"))
-        val cbRes = corpus.filter(col(idCol) < ksub)
-          .select(col(idCol).as("slot"), asDouble(col(vecCol)).as("cv"))
-          .join(coarseDf)
-          .withColumn("csim", cosineD(col("cv"), col("centroid")))
-          .withColumn("rn", row_number().over(wCb))
-          .filter(col("rn") === 1)
-          .select(col("slot"),
-            zip_with(col("cv"), col("centroid"), (x, y) => x - y).as("rv"))
-        rsubs(cbRes, "slot", "rv", Seq.empty)
-          .select(col("sub"), col("slot"), col("subvec").as("cvec"))
-      })
     // encode residuals; the coarse cell rides along to the code row
-    val codes = rsubs(cells, "neighbor_id", "rv", Seq("ccell"))
-      .join(pqCent, "sub")
-      .withColumn("dist", l2sqD(col("subvec"), col("cvec")))
-      .groupBy(col("neighbor_id"), col("sub"))
-      .agg(min_by(col("slot"), struct(col("dist"), col("slot"))).as("code"),
-        first(col("ccell")).as("ccell"))
-      .groupBy(col("neighbor_id"))
-      .agg(sort_array(collect_list(struct(col("sub"), col("code"))))
-        .as("sc"),
-        first(col("ccell")).as("cell_id"))
-      .select(col("neighbor_id"), col("cell_id"),
-        transform(col("sc"), s => s("code")).as("codes"))
+    val codes = encode(subvectors(residuals(corpus, idCol, vecCol, coarseDf)
+      .withColumnRenamed("ccell", "cell_id"), "rv", dim, m), cb,
+      rides = Seq("cell_id"))
     // per-(query, probed cell) ADC tables from the residual query
-    val qtab = broadcast(rsubs(probes, "query_id", "rqv", Seq("cell_id"))
-      .join(pqCent, "sub")
-      .withColumn("qdist", l2sqD(col("subvec"), col("cvec")))
-      .groupBy(col("query_id"), col("cell_id"))
-      .agg(sort_array(collect_list(struct(col("sub"),
-        col("slot").cast("long").as("code"), col("qdist")))).as("e"))
-      .select(col("query_id"), col("cell_id"),
-        transform(sequence(lit(0), lit(m - 1)), j =>
-          transform(sequence(lit(0), lit(ksub - 1)), c =>
-            element_at(col("e"), (j * ksub + c + 1).cast("int"))("qdist")))
-          .as("tbl")))
+    val qtab = adcTables(subvectors(probes, "rqv", dim, m),
+      Seq("query_id", "cell_id"), cb, m, ksub)
     val approx = codes
       .join(probes.select(col("query_id"), col("cell_id")), "cell_id")
       .join(qtab, Seq("query_id", "cell_id"))
-      .withColumn("adist",
-        aggregate(sequence(lit(0), lit(m - 1)), lit(0.0), (acc, j) =>
-          acc + element_at(
-            element_at(col("tbl"), (j + lit(1)).cast("int")),
-            (element_at(col("codes"), (j + lit(1)).cast("int")) + lit(1))
-              .cast("int"))))
-    val wLocal = Window.partitionBy(col("query_id"), col("salt"))
-      .orderBy(col("adist"), col("neighbor_id"))
-    val wShort = Window.partitionBy(col("query_id"))
-      .orderBy(col("adist"), col("neighbor_id"))
-    val shortlist = approx
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("salt", pmod(col("neighbor_id"), lit(salts)))
-      .withColumn("lrn", row_number().over(wLocal))
-      .filter(col("lrn") <= k * overscan)
-      .withColumn("srn", row_number().over(wShort))
-      .filter(col("srn") <= k * overscan)
-      .select(col("query_id"), col("neighbor_id"))
-    val qv = broadcast(queries.select(col(idCol).as("query_id"),
-      asDouble(col(vecCol)).as("qv")))
-    val cv = corpus.select(col(idCol).as("neighbor_id"),
-      asDouble(col(vecCol)).as("cv"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    shortlist.join(cv, "neighbor_id").join(qv, "query_id")
-      .withColumn("cosine", cosineD(col("qv"), col("cv")))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("cosine"))
+    refine(adcScan(approx, m), col("adist"), corpus, queries, idCol, vecCol,
+      k, overscan, salts)
   }
 
   /** [[ivfpqResidual]] with every quantizer TRAINED — the production
@@ -886,90 +896,6 @@ object Knn {
     ivfpqResidual(corpus, queries, idCol, vecCol, dim, k,
       nProbe = nProbe, m = m, ksub = ksub, overscan = overscan,
       salts = salts, codebooks = Some(cbs), coarse = Some(coarseCb))
-  }
-
-  /** The PQ search machinery shared by [[pq]] and [[pqTrained]]:
-    * encode → per-query ADC tables → map-side approx-distance fold →
-    * salted two-phase shortlist → exact re-rank. `centroids` must be
-    * `(sub: 0..m-1, cell_id: 0..ksub-1 CONTIGUOUS, cvec)` — a code
-    * indexes the ADC table row by position.
-    */
-  private def pqSearch(corpus: DataFrame, queries: DataFrame, idCol: String,
-                       vecCol: String, centroidsIn: DataFrame, dim: Int,
-                       k: Int, m: Int, ksub: Int, overscan: Int,
-                       salts: Int): DataFrame = {
-    val d = dim / m
-    // (id, sub, subvec): the m contiguous subvectors of each vector
-    def subs(df: DataFrame, id: String) =
-      df.select(col(idCol).as(id),
-          posexplode(transform(sequence(lit(0), lit(m - 1)),
-            j => slice(asDouble(col(vecCol)), j * d + 1, lit(d)))))
-        .toDF(id, "sub", "subvec")
-    val centroids = broadcast(centroidsIn)
-    // encode: per (vector, subspace) the L2-nearest sub-centroid id;
-    // min_by is partial-aggregatable (same shape as ivf's assign), and
-    // the per-vector codes collapse to ONE sub-ordered array row
-    val codes = subs(corpus, "neighbor_id")
-      .join(centroids, "sub")
-      .withColumn("dist", l2sqD(col("subvec"), col("cvec")))
-      .groupBy(col("neighbor_id"), col("sub"))
-      .agg(min_by(col("cell_id"), struct(col("dist"), col("cell_id")))
-        .as("code"))
-      .groupBy(col("neighbor_id"))
-      .agg(sort_array(collect_list(struct(col("sub"), col("code"))))
-        .as("sc"))
-      .select(col("neighbor_id"),
-        transform(col("sc"), s => s("code")).as("codes"))
-    // per-query subdistance tables reshaped to tbl[m][ksub] (sorted by
-    // (sub, code), so position j*ksub + c IS (sub j, code c)) — |Q| rows
-    // of m·ksub doubles, broadcast
-    val qtab = broadcast(subs(queries, "query_id")
-      .join(centroids, "sub")
-      .withColumn("qdist", l2sqD(col("subvec"), col("cvec")))
-      .groupBy(col("query_id"))
-      .agg(sort_array(collect_list(struct(col("sub"),
-        col("cell_id").cast("long").as("code"), col("qdist")))).as("e"))
-      .select(col("query_id"),
-        transform(sequence(lit(0), lit(m - 1)), j =>
-          transform(sequence(lit(0), lit(ksub - 1)), c =>
-            element_at(col("e"), (j * ksub + c + 1).cast("int"))("qdist")))
-          .as("tbl")))
-    // ADC: map-side fold of m table lookups per (vector, query) pair
-    val approx = codes.join(qtab)
-      .withColumn("adist",
-        aggregate(sequence(lit(0), lit(m - 1)), lit(0.0), (acc, j) =>
-          acc + element_at(
-            element_at(col("tbl"), (j + lit(1)).cast("int")),
-            (element_at(col("codes"), (j + lit(1)).cast("int")) + lit(1))
-              .cast("int"))))
-    // two-phase top-(overscan·k): local per-salt cut, then the global
-    // cut over salts·overscan·k survivors — identical result to one
-    // global window (the global top-S is inside the union of per-salt
-    // top-S), without a corpus-sized single-task sort per query
-    val wLocal = Window.partitionBy(col("query_id"), col("salt"))
-      .orderBy(col("adist"), col("neighbor_id"))
-    val wShort = Window.partitionBy(col("query_id"))
-      .orderBy(col("adist"), col("neighbor_id"))
-    val shortlist = approx
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("salt", pmod(col("neighbor_id"), lit(salts)))
-      .withColumn("lrn", row_number().over(wLocal))
-      .filter(col("lrn") <= k * overscan)
-      .withColumn("srn", row_number().over(wShort))
-      .filter(col("srn") <= k * overscan)
-      .select(col("query_id"), col("neighbor_id"))
-    // exact cosine re-rank of the shortlist
-    val q = broadcast(queries.select(col(idCol).as("query_id"),
-      asDouble(col(vecCol)).as("qv")))
-    val c = corpus.select(col(idCol).as("neighbor_id"),
-      asDouble(col(vecCol)).as("cv"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    shortlist.join(c, "neighbor_id").join(q, "query_id")
-      .withColumn("cosine", cosineD(col("qv"), col("cv")))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("cosine"))
   }
 
   /** D9: in-engine recall@k evaluation — the index-quality report a
@@ -1030,36 +956,10 @@ object Knn {
                   coarse: Option[DataFrame] = scala.None): DataFrame = {
     require(nProbes.nonEmpty && nProbes.forall(_ >= 1),
       s"nProbes must be non-empty positive settings, got $nProbes")
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val maxProbe = nProbes.max
-    val c = corpus.select(col(idCol).as("neighbor_id"),
-      asDouble(col(vecCol)).as("cv"))
-    val centroids = coarseTable(corpus, idCol, vecCol, stride, maxCells,
-      coarse, "recallSweep")._1
-    // the ivfCandidates assignment: broadcast argmax, partial-agg safe
-    val cells = c.join(centroids)
-      .withColumn("csim", cosineD(col("cv"), col("centroid")))
-      .groupBy(col("neighbor_id"))
-      .agg(max_by(struct(col("cell_id"), col("cv")),
-        struct(col("csim"), -col("cell_id"))).as("best"))
-      .select(col("best.cell_id").as("cell_id"), col("neighbor_id"),
-        col("best.cv").as("cv"))
-    val q = queries.select(col(idCol).as("query_id"),
-      asDouble(col(vecCol)).as("qv"))
-    val wProbe = Window.partitionBy(col("query_id"))
-      .orderBy(col("qsim").desc, col("cell_id"))
-    // ranked to the WIDEST setting; qrn is each cell's probe rank
-    val probes = broadcast(q.join(centroids)
-      .withColumn("qsim", cosineD(col("qv"), col("centroid")))
-      .withColumn("qrn", row_number().over(wProbe))
-      .filter(col("qrn") <= maxProbe)
-      .select(col("query_id"), col("qv"), col("cell_id"), col("qrn")))
-    val cand = cells.join(probes, "cell_id")
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("cosine", cosineD(col("qv"), col("cv")))
-      .select(col("query_id"), col("neighbor_id"), col("cosine"),
-        col("qrn"))
+    // candidates probed to the WIDEST setting; qrn is each cell's rank
+    val cand = ivfCandidates(corpus, queries, idCol, vecCol,
+      coarseTable(corpus, idCol, vecCol, stride, maxCells, coarse,
+        "recallSweep")._1, nProbes.max)
     sweepScore(cand, corpus, queries, idCol, vecCol, k, nProbes)
   }
 
@@ -1115,39 +1015,42 @@ object Knn {
       : DataFrame = {
     require(nProbes.nonEmpty && nProbes.forall(_ >= 1),
       s"nProbes must be non-empty positive settings, got $nProbes")
-    val maxProbe = nProbes.max
-    val coarseRaw = spark.read.parquet(s"$dir/coarse")
-    requireIndexDim(coarseRaw, dir, dim)
-    val coarseDf = broadcast(coarseRaw
-      .select(col("cell_id"), asDouble(col("centroid")).as("centroid")))
-    val q = queries.select(col(idCol).as("query_id"),
-      asDouble(col(vecCol)).as("qv"))
-    val wProbe = Window.partitionBy(col("query_id"))
-      .orderBy(col("qsim").desc, col("cell_id"))
-    val probes0 = q.join(coarseDf)
-      .withColumn("qsim", cosineD(col("qv"), col("centroid")))
-      .withColumn("qrn", row_number().over(wProbe))
-      .filter(col("qrn") <= maxProbe)
-      .select(col("query_id"), col("qv"), col("cell_id"), col("qrn"))
-    val probes = broadcast(probes0)
-    // O(|queries|·maxProbe) driver-side cell list -> partition filter:
-    // only probed cells' FILES are read. Collected from the UNHINTED
-    // frame: a broadcast hint atop a collected aggregate is not part of
-    // any join and only trips HintErrorLogger (r19 hygiene).
-    val probedCells = probes0.select(col("cell_id")).distinct()
+    sweepScore(indexedCandidates(spark, dir, queries, idCol, vecCol, dim,
+        corpus, nProbes.max), corpus, queries, idCol, vecCol, k, nProbes)
+  }
+
+  /** The stored twin of [[ivfCandidates]] behind [[recallSweepIndexed]]
+    * and [[rangeSearchIndexed]]: the stored layout IS the assignment,
+    * so only the probed cells' rows are read ([[probedCodes]]) and
+    * rejoined to `corpus` for exact cosine —
+    * `(query_id, neighbor_id, cosine, qrn)`.
+    */
+  private def indexedCandidates(spark: SparkSession, dir: String,
+                                queries: DataFrame, idCol: String,
+                                vecCol: String, dim: Int,
+                                corpus: DataFrame, nProbe: Int)
+      : DataFrame = {
+    val coarse = new IvfPqQuantizer(spark, dir).requireDim(dim).coarse
+    probedCosines(probedCodes(spark, dir,
+        probe(queries, idCol, vecCol, coarse, nProbe)
+          .select(col("query_id"), col("qv"), col("cell_id"), col("qrn")))
+      .join(corpusVecs(corpus, idCol, vecCol), "neighbor_id"))
+  }
+
+  /** The stored rows of each query's probed cells, joined to the
+    * (broadcast) `probes`: the probed cell list —
+    * O(|queries|·nProbe) rows, collected from the UNHINTED frame (a
+    * broadcast hint atop a collected aggregate is not part of any join
+    * and only trips HintErrorLogger) — becomes a `cell_id IN (...)`
+    * partition filter, so only those cells' FILES are read.
+    */
+  private def probedCodes(spark: SparkSession, dir: String,
+                          probes: DataFrame): DataFrame = {
+    val cells = probes.select(col("cell_id")).distinct()
       .collect().map(_.getLong(0)).sorted
-    val cv = corpus.select(col(idCol).as("neighbor_id"),
-      asDouble(col(vecCol)).as("cv"))
-    val cand = PersistedStore.readData(spark, dir, PersistedStore.IvfPq)
-      .filter(col("cell_id").isin(probedCells: _*))
-      .select(col("neighbor_id"), col("cell_id"))
-      .join(probes, "cell_id")
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .join(cv, "neighbor_id")
-      .withColumn("cosine", cosineD(col("qv"), col("cv")))
-      .select(col("query_id"), col("neighbor_id"), col("cosine"),
-        col("qrn"))
-    sweepScore(cand, corpus, queries, idCol, vecCol, k, nProbes)
+    PersistedStore.readData(spark, dir, PersistedStore.IvfPq)
+      .filter(col("cell_id").isin(cells: _*))
+      .join(broadcast(probes), "cell_id")
   }
 
   /** D8 (build): persisted IVF×PQ index — the "build once, search
@@ -1161,11 +1064,12 @@ object Knn {
     *
     * Both quantizers are the trained k-means tables
     * ([[kmeansSubCodebooks]], count-capped sample); assignment and
-    * encode are the same broadcast + partial-agg reductions [[ivfpq]]
-    * plans inline. The payoff over the in-plan path: the corpus-sized
-    * train/assign/encode cost is paid ONCE at build, and every later
-    * search scans only its probed `cell_id=` partitions — file-layer
-    * pruning, no per-run encode.
+    * encode are the same [[assign]] and [[encode]] stages [[ivfpq]]
+    * plans inline and [[appendToIvfPqIndex]] reuses (build-vs-append
+    * drift would silently corrupt the index). The payoff over the
+    * in-plan path: the corpus-sized train/assign/encode cost is paid
+    * ONCE at build, and every later search scans only its probed
+    * `cell_id=` partitions — file-layer pruning, no per-run encode.
     */
   def buildIvfPqIndex(corpus: DataFrame, idCol: String, vecCol: String,
                       dir: String, dim: Int, m: Int = 8, ksub: Int = 16,
@@ -1174,7 +1078,6 @@ object Knn {
                       coarse: Option[DataFrame] = scala.None,
                       codebooks: Option[DataFrame] = scala.None): Unit = {
     require(dim % m == 0, s"dim $dim not divisible by m $m")
-    val d = dim / m
     // `coarse` override = FAISS's pretrained-quantizer constructor
     // (IndexIVFPQ takes an already-trained coarse index): callers can
     // freeze e.g. [[strideCoarse]] — whose assignment a plain-SQL
@@ -1195,58 +1098,47 @@ object Knn {
         iters, trainMod))
     coarseTab.write.mode("overwrite").parquet(s"$dir/coarse")
     cbs.write.mode("overwrite").parquet(s"$dir/codebooks")
-    assignAndEncode(corpus, idCol, vecCol,
-        broadcast(coarseTab.select(col("cell_id"),
-          asDouble(col("centroid")).as("centroid"))), cbs, m, d)
+    val vecs = corpusVecs(corpus, idCol, vecCol)
+    encode(subvectors(vecs, "cv", dim, m), slots(cbs))
+      .join(assign(vecs, broadcast(coarseTab.select(col("cell_id"),
+        asDouble(col("centroid")).as("centroid")))), "neighbor_id")
       .write.mode("overwrite").partitionBy("cell_id")
       .parquet(s"$dir/codes")
   }
 
-  /** The ONE coarse-assign + PQ-encode pipeline shared by
-    * [[buildIvfPqIndex]] and [[appendToIvfPqIndex]] (build-vs-append
-    * drift would silently corrupt the persisted index): broadcast
-    * argmax cell assignment (ties toward the smallest cell_id — the
-    * [[ivfpq]] rule), broadcast argmin sub-code encode, both
-    * partial-agg reductions; returns `(neighbor_id, codes, cell_id)`.
+  /** The frozen quantizers of a [[buildIvfPqIndex]] layout, read once
+    * for every stored-index reader: the broadcast `(cell_id, centroid)`
+    * `coarse` table and the build `dim` (its centroid length, one tiny
+    * head()); then, only when a reader touches them, the stored
+    * `(sub, cell_id, cvec)` `codebooks` with their `m` and `ksub` (one
+    * small aggregate, which also checks `dim % m`). A caller's dim must
+    * match the build EXACTLY ([[requireDim]]): one that merely shares
+    * divisibility by m would slice mismatched subvectors and silently
+    * corrupt codes.
     */
-  private def assignAndEncode(rows: DataFrame, idCol: String,
-                              vecCol: String, coarseB: DataFrame,
-                              cbs: DataFrame, m: Int, d: Int): DataFrame = {
-    val cells = rows
-      .select(col(idCol).as("neighbor_id"), asDouble(col(vecCol)).as("cv"))
-      .join(coarseB)
-      .withColumn("csim", cosineD(col("cv"), col("centroid")))
-      .groupBy(col("neighbor_id"))
-      .agg(max_by(col("cell_id"), struct(col("csim"), -col("cell_id")))
-        .as("cell_id"))
-    val subs = rows.select(col(idCol).as("neighbor_id"),
-        posexplode(transform(sequence(lit(0), lit(m - 1)),
-          j => slice(asDouble(col(vecCol)), j * d + 1, lit(d)))))
-      .toDF("neighbor_id", "sub", "subvec")
-    val codes = subs.join(broadcast(cbs), "sub")
-      .withColumn("dist", l2sqD(col("subvec"), col("cvec")))
-      .groupBy(col("neighbor_id"), col("sub"))
-      .agg(min_by(col("cell_id"), struct(col("dist"), col("cell_id")))
-        .as("code"))
-      .groupBy(col("neighbor_id"))
-      .agg(sort_array(collect_list(struct(col("sub"), col("code"))))
-        .as("sc"))
-      .select(col("neighbor_id"),
-        transform(col("sc"), s => s("code")).as("codes"))
-    codes.join(cells, "neighbor_id")
-  }
+  private[graft] final class IvfPqQuantizer(spark: SparkSession,
+                                            dir: String) {
+    private val coarseRaw = spark.read.parquet(s"$dir/coarse")
+    val dim: Int = coarseRaw.select(size(col("centroid"))).head().getInt(0)
+    val coarse: DataFrame = broadcast(coarseRaw.select(col("cell_id"),
+      asDouble(col("centroid")).as("centroid")))
+    lazy val codebooks: DataFrame = spark.read.parquet(s"$dir/codebooks")
+    private lazy val shape: (Int, Int) = {
+      val r = codebooks.agg(max(col("sub")).cast("int"),
+        max(col("cell_id")).cast("int")).head()
+      val m = r.getInt(0) + 1
+      require(dim % m == 0,
+        s"index at $dir: dim $dim not divisible by index m $m")
+      (m, r.getInt(1) + 1)
+    }
+    def m: Int = shape._1
+    def ksub: Int = shape._2
 
-  /** The stored build dim of a [[buildIvfPqIndex]] layout is the
-    * coarse centroid length; append/search must match it EXACTLY — a
-    * caller whose dim merely shares divisibility by m would otherwise
-    * slice mismatched-length subvectors and silently corrupt the
-    * persisted codes (one tiny-read head() against the coarse table).
-    */
-  private def requireIndexDim(coarse: DataFrame, dir: String,
-                              dim: Int): Unit = {
-    val stored = coarse.select(size(col("centroid"))).head().getInt(0)
-    require(stored == dim,
-      s"index at $dir was built with dim $stored, caller passed $dim")
+    def requireDim(callerDim: Int): IvfPqQuantizer = {
+      require(callerDim == dim,
+        s"index at $dir was built with dim $dim, caller passed $callerDim")
+      this
+    }
   }
 
   /** D8 (append): add new vectors to a [[buildIvfPqIndex]] layout
@@ -1262,15 +1154,10 @@ object Knn {
     */
   def appendToIvfPqIndex(delta: DataFrame, idCol: String, vecCol: String,
                          dir: String, dim: Int): Unit = {
-    val spark = delta.sparkSession
-    val coarseRaw = spark.read.parquet(s"$dir/coarse")
-    requireIndexDim(coarseRaw, dir, dim)
-    val coarseB = broadcast(coarseRaw
-      .select(col("cell_id"), asDouble(col("centroid")).as("centroid")))
-    val cbs = spark.read.parquet(s"$dir/codebooks")
-    val m = cbs.agg(max(col("sub"))).head().getInt(0) + 1
-    require(dim % m == 0, s"dim $dim not divisible by index m $m")
-    assignAndEncode(delta, idCol, vecCol, coarseB, cbs, m, dim / m)
+    val ix = new IvfPqQuantizer(delta.sparkSession, dir).requireDim(dim)
+    val vecs = corpusVecs(delta, idCol, vecCol)
+    encode(subvectors(vecs, "cv", dim, ix.m), slots(ix.codebooks))
+      .join(assign(vecs, ix.coarse), "neighbor_id")
       .write.mode("append").partitionBy("cell_id")
       .parquet(s"$dir/codes")
   }
@@ -1298,11 +1185,8 @@ object Knn {
     */
   def ivfPqIndexDrift(spark: SparkSession, dir: String, corpus: DataFrame,
                       idCol: String, vecCol: String): DataFrame = {
-    val coarseRaw = spark.read.parquet(s"$dir/coarse")
-    val dim = coarseRaw.select(size(col("centroid"))).head().getInt(0)
-    val cbs = spark.read.parquet(s"$dir/codebooks")
-    val m = cbs.agg(max(col("sub"))).head().getInt(0) + 1
-    val d = dim / m
+    val ix = new IvfPqQuantizer(spark, dir)
+    val d = ix.dim / ix.m
     val vecs = corpus.select(col(idCol).cast("long").as("neighbor_id"),
       asDouble(col(vecCol)).as("cv"))
     val codes = PersistedStore.readData(spark, dir, PersistedStore.IvfPq)
@@ -1311,7 +1195,7 @@ object Knn {
     val parts = codes
       .select(col("neighbor_id"), col("cell_id"),
         posexplode(col("codes")).as(Seq("sub", "code")))
-      .join(broadcast(cbs.select(col("sub"),
+      .join(broadcast(ix.codebooks.select(col("sub"),
         col("cell_id").as("code"), col("cvec"))), Seq("sub", "code"))
       .join(vecs, "neighbor_id")
       .withColumn("slice", slice(col("cv"), col("sub") * d + 1, lit(d)))
@@ -1328,15 +1212,10 @@ object Knn {
       .withColumn("rcos", col("dot") / (sqrt(col("rn2")) * sqrt(col("vn2"))))
       .select(col("neighbor_id"), col("cell_id"), col("rcos"))
     // current-nearest coarse cell vs the stored one — the build's own
-    // argmax rule (ties toward the smallest cell_id)
-    val coarseB = broadcast(coarseRaw.select(col("cell_id").as("ncell"),
-      asDouble(col("centroid")).as("centroid")))
-    val nearest = codes.select(col("neighbor_id")).join(vecs, "neighbor_id")
-      .join(coarseB)
-      .withColumn("csim", cosineD(col("cv"), col("centroid")))
-      .groupBy(col("neighbor_id"))
-      .agg(max_by(col("ncell"), struct(col("csim"), -col("ncell")))
-        .as("ncell"))
+    // [[assign]] rule
+    val nearest = assign(codes.select(col("neighbor_id"))
+        .join(vecs, "neighbor_id"), ix.coarse)
+      .select(col("neighbor_id"), col("cell_id").as("ncell"))
     recon.join(nearest, "neighbor_id")
       .groupBy(col("cell_id"))
       .agg(count(lit(1)).as("n_codes"),
@@ -1350,15 +1229,12 @@ object Knn {
     * codebooks are tiny reads (broadcast); each query's nProbe cells
     * become a `cell_id IN (...)` partition filter on the codes dir —
     * only probed partitions' FILES are read (Hive-style pruning shown
-    * as PartitionFilters in the scan, pinned by the spec). ADC +
-    * shortlist + optional exact re-rank mirror [[ivfpq]] exactly, so
-    * with `rescoreWith` = the corpus the results are identical to the
-    * in-plan trained ivfpq — the spec asserts row equality. The qtab /
-    * ADC / salted-shortlist block below deliberately MIRRORS
-    * [[ivfpq]]'s (the spec's row-equality assertion is the drift
-    * guard); it reads codes from the index instead of encoding, so the
-    * two cannot share one body without threading the whole search
-    * through an indirection that obscures both.
+    * as PartitionFilters in the scan, pinned by the spec). The stored
+    * codes then go through [[ivfpq]]'s own stages — ADC tables, ADC
+    * scan, salted shortlist and, with `rescoreWith` = the corpus, the
+    * exact re-rank — so the results equal the in-plan trained ivfpq's
+    * (spec-pinned). Without `rescoreWith` the answer is the ADC top-k,
+    * `(query_id, rank, neighbor_id, adist)`.
     */
   def searchIvfPqIndex(spark: SparkSession, dir: String,
                        queries: DataFrame, idCol: String, vecCol: String,
@@ -1366,57 +1242,14 @@ object Knn {
                        overscan: Int = 4, salts: Int = 32,
                        rescoreWith: Option[DataFrame] = scala.None)
       : DataFrame = {
-    val coarseRaw = spark.read.parquet(s"$dir/coarse")
-    requireIndexDim(coarseRaw, dir, dim)
-    val coarseDf = broadcast(coarseRaw
-      .select(col("cell_id"), asDouble(col("centroid")).as("centroid")))
-    val cbs = spark.read.parquet(s"$dir/codebooks")
-    val mk = cbs.agg(max(col("sub")).as("m"), max(col("cell_id")).as("c"))
-      .head()
-    val m = mk.getInt(0) + 1
-    val ksub = mk.getLong(1).toInt + 1
-    require(dim % m == 0, s"dim $dim not divisible by index m $m")
-    val d = dim / m
-    val q = queries.select(col(idCol).as("query_id"),
-      asDouble(col(vecCol)).as("qv"))
-    val wProbe = Window.partitionBy(col("query_id"))
-      .orderBy(col("qsim").desc, col("cell_id"))
-    val probes0 = q.join(coarseDf)
-      .withColumn("qsim", cosineD(col("qv"), col("centroid")))
-      .withColumn("qrn", row_number().over(wProbe))
-      .filter(col("qrn") <= nProbe)
-      .select(col("query_id"), col("cell_id"))
-    val probes = broadcast(probes0)
-    // O(|queries|·nProbe) driver-side cell list -> a partition filter.
-    // Collected from the UNHINTED frame (see recallSweepIndexed).
-    val probedCells = probes0.select(col("cell_id")).distinct()
-      .collect().map(_.getLong(0)).sorted
-    val codes = PersistedStore.readData(spark, dir, PersistedStore.IvfPq)
-      .filter(col("cell_id").isin(probedCells: _*))
-    val qsubs = queries.select(col(idCol).as("query_id"),
-        posexplode(transform(sequence(lit(0), lit(m - 1)),
-          j => slice(asDouble(col(vecCol)), j * d + 1, lit(d)))))
-      .toDF("query_id", "sub", "subvec")
-    val qtab = broadcast(qsubs.join(broadcast(cbs), "sub")
-      .withColumn("qdist", l2sqD(col("subvec"), col("cvec")))
-      .groupBy(col("query_id"))
-      .agg(sort_array(collect_list(struct(col("sub"),
-        col("cell_id").cast("long").as("code"), col("qdist")))).as("e"))
-      .select(col("query_id"),
-        transform(sequence(lit(0), lit(m - 1)), j =>
-          transform(sequence(lit(0), lit(ksub - 1)), c =>
-            element_at(col("e"), (j * ksub + c + 1).cast("int"))("qdist")))
-          .as("tbl")))
-    val approx = codes
-      .join(probes, "cell_id")
-      .join(qtab, "query_id")
-      .withColumn("adist",
-        aggregate(sequence(lit(0), lit(m - 1)), lit(0.0), (acc, j) =>
-          acc + element_at(
-            element_at(col("tbl"), (j + lit(1)).cast("int")),
-            (element_at(col("codes"), (j + lit(1)).cast("int")) + lit(1))
-              .cast("int"))))
-      .filter(col("neighbor_id") =!= col("query_id"))
+    val ix = new IvfPqQuantizer(spark, dir).requireDim(dim)
+    val cb = slots(ix.codebooks)
+    val qtab = adcTables(subvectors(queryVecs(queries, idCol, vecCol), "qv",
+      dim, ix.m), Seq("query_id"), cb, ix.m, ix.ksub)
+    val approx = adcScan(probedCodes(spark, dir,
+        probe(queries, idCol, vecCol, ix.coarse, nProbe)
+          .select(col("query_id"), col("cell_id")))
+      .join(qtab, "query_id"), ix.m)
     rescoreWith match {
       case scala.None =>
         val w = Window.partitionBy(col("query_id"))
@@ -1426,29 +1259,8 @@ object Knn {
           .select(col("query_id"), col("rank"), col("neighbor_id"),
             col("adist"))
       case Some(corpus) =>
-        val wLocal = Window.partitionBy(col("query_id"), col("salt"))
-          .orderBy(col("adist"), col("neighbor_id"))
-        val wShort = Window.partitionBy(col("query_id"))
-          .orderBy(col("adist"), col("neighbor_id"))
-        val shortlist = approx
-          .withColumn("salt", pmod(col("neighbor_id"), lit(salts)))
-          .withColumn("lrn", row_number().over(wLocal))
-          .filter(col("lrn") <= k * overscan)
-          .withColumn("srn", row_number().over(wShort))
-          .filter(col("srn") <= k * overscan)
-          .select(col("query_id"), col("neighbor_id"))
-        val qv = broadcast(queries.select(col(idCol).as("query_id"),
-          asDouble(col(vecCol)).as("qv")))
-        val cv = corpus.select(col(idCol).as("neighbor_id"),
-          asDouble(col(vecCol)).as("cv"))
-        val w = Window.partitionBy(col("query_id"))
-          .orderBy(col("cosine").desc, col("neighbor_id"))
-        shortlist.join(cv, "neighbor_id").join(qv, "query_id")
-          .withColumn("cosine", cosineD(col("qv"), col("cv")))
-          .withColumn("rank", row_number().over(w).cast("long"))
-          .filter(col("rank") <= k)
-          .select(col("query_id"), col("rank"), col("neighbor_id"),
-            col("cosine"))
+        refine(approx, col("adist"), corpus, queries, idCol, vecCol, k,
+          overscan, salts)
     }
   }
 
@@ -1476,8 +1288,7 @@ object Knn {
                   seed: Long = 7L): DataFrame =
     lshTopK(corpus, queries, idCol, vecCol, dim, k, bands, planesPerBand,
         seed, filterCol = Some(filterCol))
-      .select(col("query_id"), col("label"), col("rank"),
-        col("neighbor_id"), col("cosine"))
+
 
   /** D6: multi-vector late-interaction retrieval (the MaxSim rule
     * ColBERT-style retrievers use): both sides split into m = dim/d
@@ -1510,30 +1321,26 @@ object Knn {
              bands: Int = 16, planesPerBand: Int = 6,
              seed: Long = 11L): DataFrame = {
     require(dim % m == 0, s"dim $dim not divisible by m $m")
-    val d = dim / m
-    val planes = Dedup.hyperplanes(bands * planesPerBand, d, seed)
-    def slices(df: DataFrame, id: String, out: String) =
-      df.select(col(idCol).as(id),
-          posexplode(transform(sequence(lit(0), lit(m - 1)),
-            j => slice(asDouble(col(vecCol)), j * d + 1, lit(d)))))
-        .toDF(id, "sl", out)
-    def keyed(df: DataFrame, id: String) =
-      slices(df, id, "sv").select(col(id),
-          posexplode(graft.functions.vec.hyperplaneBuckets(col("sv"),
+    val planes = Dedup.hyperplanes(bands * planesPerBand, dim / m, seed)
+    // (id, sub, subvec) token slices of each side
+    val qs = subvectors(queryVecs(queries, idCol, vecCol), "qv", dim, m)
+    val cs = subvectors(corpusVecs(corpus, idCol, vecCol), "cv", dim, m)
+    def keyed(slices: DataFrame, id: String) =
+      slices.select(col(id),
+          posexplode(graft.functions.vec.hyperplaneBuckets(col("subvec"),
             planes, planesPerBand)))
         .toDF(id, "band", "bkey")
-    val cand = keyed(corpus, "neighbor_id")
-      .join(broadcast(keyed(queries, "query_id")), Seq("band", "bkey"))
-      .filter(col("neighbor_id") =!= col("query_id"))
+    val cand = keyed(cs, "neighbor_id")
+      .join(broadcast(keyed(qs, "query_id")), Seq("band", "bkey"))
+      .filter(notSelf)
       .select("query_id", "neighbor_id").distinct()
-    val qs = broadcast(slices(queries, "query_id", "qv")
-      .select(col("query_id"), col("sl").as("qsl"), col("qv")))
-    val cs = slices(corpus, "neighbor_id", "sv")
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("score").desc, col("neighbor_id"))
-    cand.join(cs, "neighbor_id").join(qs, "query_id")
+    cand.join(cs, "neighbor_id")
+      .join(broadcast(qs.select(col("query_id"), col("sub").as("qsl"),
+        col("subvec").as("qv"))), "query_id")
       .withColumn("mq",
-        floor(graft.functions.vec.cosine(col("qv"), col("sv")) *
+        floor(graft.functions.vec.cosine(col("qv"), col("subvec")) *
           lit(1048576.0) + lit(0.5)).cast("long"))
       .groupBy(col("query_id"), col("neighbor_id"), col("qsl"))
       .agg(max(col("mq")).as("mqs"))
@@ -1637,44 +1444,21 @@ object Knn {
       salts)
   }
 
-  /** The ONE SQ8 scan → salted shortlist → exact re-rank body behind
-    * the in-plan [[sq]] and the persisted-index [[searchSqIndex]]
-    * (shared so the two can never drift — the spec's row-equality pin
-    * is then structural): `recon` supplies
-    * `(neighbor_id, rv: array<double>)` reconstructed vectors, from
-    * wherever the codes came.
+  /** The SQ8 scan behind the in-plan [[sq]] and the persisted-index
+    * [[searchSqIndex]] (shared so the two can never drift — the spec's
+    * row-equality pin is then structural): the full-precision query
+    * scores every reconstructed `(neighbor_id, rv)` vector by cosine
+    * (the asymmetric rule — the query is never quantized), then the
+    * shared [[refine]] tail.
     */
   private def sqScanRerank(recon: DataFrame, corpus: DataFrame,
                            queries: DataFrame, idCol: String,
                            vecCol: String, k: Int, overscan: Int,
-                           salts: Int): DataFrame = {
-    val q = broadcast(queries.select(col(idCol).as("query_id"),
-      asDouble(col(vecCol)).as("qv")))
-    val approx = recon.join(q)
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("acos", cosineD(col("qv"), col("rv")))
-    val wLocal = Window.partitionBy(col("query_id"), col("salt"))
-      .orderBy(col("acos").desc, col("neighbor_id"))
-    val wShort = Window.partitionBy(col("query_id"))
-      .orderBy(col("acos").desc, col("neighbor_id"))
-    val shortlist = approx
-      .withColumn("salt", pmod(col("neighbor_id"), lit(salts)))
-      .withColumn("lrn", row_number().over(wLocal))
-      .filter(col("lrn") <= k * overscan)
-      .withColumn("srn", row_number().over(wShort))
-      .filter(col("srn") <= k * overscan)
-      .select(col("query_id"), col("neighbor_id"))
-    val cv = corpus.select(col(idCol).as("neighbor_id"),
-      asDouble(col(vecCol)).as("cv"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    shortlist.join(cv, "neighbor_id").join(q, "query_id")
-      .withColumn("cosine", cosineD(col("qv"), col("cv")))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        col("cosine"))
-  }
+                           salts: Int): DataFrame =
+    refine(recon.join(broadcast(queryVecs(queries, idCol, vecCol)))
+        .filter(notSelf)
+        .withColumn("acos", cosineD(col("qv"), col("rv"))),
+      col("acos").desc, corpus, queries, idCol, vecCol, k, overscan, salts)
 
   /** D11b (build): persist the SQ8 store — the layout that actually
     * REALIZES the 8× memory posture ([[sq]] only models the
@@ -1784,7 +1568,7 @@ object Knn {
     * full-precision vectors (the only float read, shortlist-sized).
     * Identical answers to the in-plan [[sq]] when the store was built
     * from the same corpus (same grid, same codes, shared
-    * [[sqScanRerank]] body — spec-pinned).
+    * [[sqScanRerank]] — spec-pinned).
     */
   def searchSqIndex(spark: SparkSession, dir: String, queries: DataFrame,
                     idCol: String, vecCol: String, dim: Int, k: Int,
@@ -1828,36 +1612,9 @@ object Knn {
                          queries: DataFrame, idCol: String,
                          vecCol: String, dim: Int, tau: Double,
                          corpus: DataFrame, nProbe: Int = 5)
-      : DataFrame = {
-    val coarseRaw = spark.read.parquet(s"$dir/coarse")
-    requireIndexDim(coarseRaw, dir, dim)
-    val coarseDf = broadcast(coarseRaw
-      .select(col("cell_id"), asDouble(col("centroid")).as("centroid")))
-    val q = queries.select(col(idCol).as("query_id"),
-      asDouble(col(vecCol)).as("qv"))
-    val wProbe = Window.partitionBy(col("query_id"))
-      .orderBy(col("qsim").desc, col("cell_id"))
-    val probes0 = q.join(coarseDf)
-      .withColumn("qsim", cosineD(col("qv"), col("centroid")))
-      .withColumn("qrn", row_number().over(wProbe))
-      .filter(col("qrn") <= nProbe)
-      .select(col("query_id"), col("qv"), col("cell_id"))
-    val probes = broadcast(probes0)
-    // O(|queries|·nProbe) driver-side cell list -> a partition filter
-    // ([[searchIvfPqIndex]]'s pattern): only probed cells' FILES read.
-    // Collected from the UNHINTED frame (see recallSweepIndexed).
-    val probedCells = probes0.select(col("cell_id")).distinct()
-      .collect().map(_.getLong(0)).sorted
-    val cand = PersistedStore.readData(spark, dir, PersistedStore.IvfPq)
-      .filter(col("cell_id").isin(probedCells: _*))
-      .select(col("neighbor_id"), col("cell_id"))
-      .join(probes, "cell_id")
-      .filter(col("neighbor_id") =!= col("query_id"))
-    val cv = corpus.select(col(idCol).as("neighbor_id"),
-      asDouble(col(vecCol)).as("cv"))
-    cand.join(cv, "neighbor_id")
-      .withColumn("cosine", cosineD(col("qv"), col("cv")))
+      : DataFrame =
+    indexedCandidates(spark, dir, queries, idCol, vecCol, dim, corpus,
+        nProbe)
       .filter(col("cosine") >= tau)
       .select(col("query_id"), col("neighbor_id"), col("cosine"))
-  }
 }

@@ -484,9 +484,8 @@ object Streams {
     // freezes the index for the stream's lifetime, so the former
     // per-batch coarse read + head() was pure driver IO and latency
     // for a constant
-    val dim = queries.sparkSession.read.parquet(s"$dir/coarse")
-      .select(org.apache.spark.sql.functions.size(col("centroid")))
-      .head().getInt(0)
+    val dim =
+      new graft.operators.Knn.IvfPqQuantizer(queries.sparkSession, dir).dim
     queries.writeStream
       .outputMode(OutputMode.Append)
       .foreachBatch { (batch: Dataset[Row], epochId: Long) =>
@@ -584,8 +583,7 @@ object Streams {
     val dim =
       if (store == "sq")
         graft.operators.Knn.sqIndexGrid(spark0, indexDir)._1.length
-      else spark0.read.parquet(s"$indexDir/coarse")
-        .select(size(col("centroid"))).head().getInt(0)
+      else new graft.operators.Knn.IvfPqQuantizer(spark0, indexDir).dim
     vectors.writeStream
       .outputMode(OutputMode.Append)
       .foreachBatch { (batch0: Dataset[Row], epochId: Long) =>

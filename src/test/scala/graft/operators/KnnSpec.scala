@@ -1367,4 +1367,118 @@ class KnnSpec extends SparkSpec {
       .forall(_._2.length == 5), "append must restore a purged store")
   }
 
+  test("flat PQ equals one-cell IVF-PQ: one coarse centroid and the same " +
+      "trained sub-codebooks give pqTrained's rows exactly") {
+    // every vector lands in the one cell and every query probes it, so
+    // the ADC candidate set, shortlist and re-rank are flat PQ's
+    val oneCell = Seq((0L, Seq.fill(64)(1.0))).toDF("cell_id", "centroid")
+    val cbs = Knn.kmeansSubCodebooks(emb, "vec_id", "embedding", dim = 64,
+      m = 8, ksub = 16, iters = 2, trainMod = 4, maxTrain = 8192)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("query_id", "rank").collect().map(_.toString).toSeq
+    val flat = rows(Knn.pqTrained(emb, queries, "vec_id", "embedding",
+      dim = 64, k = 5))
+    val ivf = rows(Knn.ivfpq(emb, queries, "vec_id", "embedding", dim = 64,
+      k = 5, nProbe = 1, coarse = Some(oneCell), codebooks = Some(cbs)))
+    assert(flat.length == 50)
+    assert(ivf == flat)
+  }
+
+  test("ivfPqIndexDrift refuses codebooks whose m does not divide the " +
+      "stored dim instead of slicing garbage subvectors") {
+    val dir = java.nio.file.Files.createTempDirectory("ivfpq_dm").toString
+    Knn.buildIvfPqIndex(emb.filter($"vec_id" < 100), "vec_id", "embedding",
+      dir, dim = 64)
+    // a 3-subspace codebook sidecar under a 64-dim coarse table
+    Seq.tabulate(3)(j => (j, 0L, Seq.fill(21)(0.0)))
+      .toDF("sub", "cell_id", "cvec")
+      .write.mode("overwrite").parquet(s"$dir/codebooks")
+    val e = intercept[IllegalArgumentException] {
+      Knn.ivfPqIndexDrift(spark, dir, emb, "vec_id", "embedding")
+    }
+    assert(e.getMessage.contains("dim 64 not divisible by index m 3"),
+      e.getMessage)
+  }
+
+  test("eager driver jobs: building each PQ-family DataFrame (without " +
+      "running it) stays within the measured job budget") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
+      SparkListenerJobStart}
+    import scala.concurrent.{Await, Promise}
+    import scala.concurrent.duration._
+    val ivfDir = java.nio.file.Files.createTempDirectory("ivfpq_jobs")
+      .toString
+    Knn.buildIvfPqIndex(emb, "vec_id", "embedding", ivfDir, dim = 64)
+    val sqDir = java.nio.file.Files.createTempDirectory("sq_jobs").toString
+    Knn.buildSqIndex(emb, "vec_id", "embedding", sqDir, dim = 64)
+    emb.createOrReplaceTempView("knn_jobs_corpus")
+    queries.createOrReplaceTempView("knn_jobs_queries")
+    val sc = spark.sparkContext
+    val marker = "graft.test.jobMarker"
+    val started = new java.util.concurrent.atomic.AtomicInteger
+    val drained = new java.util.concurrent.atomic.AtomicReference(
+      Promise[Unit]())
+    val listener = new SparkListener {
+      private val markers =
+        java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty(marker) != null))
+          markers.add(e.jobId)
+        else started.incrementAndGet()
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (markers.remove(e.jobId)) drained.get.trySuccess(())
+    }
+    // the listener bus delivers events in order: once the marker job's
+    // end arrives, every job started before it has been counted
+    def drain(): Unit = {
+      val p = Promise[Unit]()
+      drained.set(p)
+      sc.setLocalProperty(marker, "1")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty(marker, null)
+      Await.result(p.future, 60.seconds)
+    }
+    def jobs(build: => org.apache.spark.sql.DataFrame): Int = {
+      drain()
+      started.set(0)
+      build
+      drain()
+      started.get
+    }
+    sc.addSparkListener(listener)
+    val counts = try Seq(
+      "pq" -> jobs(Knn.pq(emb, queries, "vec_id", "embedding", 64, 5)),
+      "pqTrained" -> jobs(Knn.pqTrained(emb, queries, "vec_id",
+        "embedding", 64, 5)),
+      "ivfpq" -> jobs(Knn.ivfpq(emb, queries, "vec_id", "embedding", 64,
+        5)),
+      "ivfpqResidual" -> jobs(Knn.ivfpqResidual(emb, queries, "vec_id",
+        "embedding", 64, 5)),
+      "sq" -> jobs(Knn.sq(emb, queries, "vec_id", "embedding", 64, 5)),
+      "searchIvfPqIndex" -> jobs(Knn.searchIvfPqIndex(spark, ivfDir,
+        queries, "vec_id", "embedding", 64, 5, rescoreWith = Some(emb))),
+      "searchSqIndex" -> jobs(Knn.searchSqIndex(spark, sqDir, queries,
+        "vec_id", "embedding", 64, 5, corpus = emb)),
+      "graft_knn_index_search" -> jobs(spark.sql(
+        s"SELECT * FROM graft_knn_index_search('$ivfDir', " +
+          "'knn_jobs_queries', 'vec_id', 'embedding', 5)")),
+      "graft_knn_index_range" -> jobs(spark.sql(
+        s"SELECT * FROM graft_knn_index_range('$ivfDir', " +
+          "'knn_jobs_queries', 'knn_jobs_corpus', 'vec_id', 'embedding', " +
+          "0.3)"))
+    ) finally sc.removeSparkListener(listener)
+    info(counts.map { case (n, c) => s"$n=$c" }.mkString(" "))
+    // the measured counts (schema inference, quantizer reads, probed
+    // cell lists); a stage that adds an eager action to a plan build
+    // fails here
+    val budget = Map("pq" -> 2, "pqTrained" -> 3, "ivfpq" -> 4,
+      "ivfpqResidual" -> 4, "sq" -> 2, "searchIvfPqIndex" -> 10,
+      "searchSqIndex" -> 3, "graft_knn_index_search" -> 12,
+      "graft_knn_index_range" -> 9)
+    counts.foreach { case (name, n) =>
+      assert(n <= budget(name), s"$name ran $n eager jobs, budget " +
+        budget(name))
+    }
+  }
+
 }

@@ -301,4 +301,20 @@ class PlanShapeSpec extends SparkSpec {
     assert(!p.contains("size(") && !p.contains("isnotnull(wordshingle"), p)
     assert("wordshinglehashes\\(".r.findAllIn(p).size == 1, p)
   }
+
+  test("knn_pq / knn_ivfpq / knn_ivfpq_res / knn_sq: hash exchanges and " +
+      "broadcast joins stay at their measured counts") {
+    val counts = Seq("knn_pq", "knn_ivfpq", "knn_ivfpq_res", "knn_sq")
+      .map { q =>
+        val p = plan(q)
+        q -> ("Exchange hashpartitioning".r.findAllIn(p).size,
+          "BroadcastHashJoin".r.findAllIn(p).size)
+      }.toMap
+    val expected = Map(
+      "knn_pq" -> (5, 4),
+      "knn_ivfpq" -> (7, 6),
+      "knn_ivfpq_res" -> (7, 8),
+      "knn_sq" -> (2, 2))
+    assert(counts == expected)
+  }
 }
