@@ -710,9 +710,9 @@ object GraftExtensions {
         val vecCol = strArg(args(3), n)
         val k = numArg(args(4), n).toInt
         val nProbe = if (args.length > 5) numArg(args(5), n).toInt else 5
-        val dim = new operators.Knn.IvfPqQuantizer(spark, dir).dim
-        operators.Knn.searchIvfPqIndex(spark, dir, queries, idCol, vecCol,
-          dim, k, nProbe).queryExecution.logical
+        operators.Knn.searchIvfPqStore(spark, operators.PersistedStore.IvfPq
+          .open(spark, dir), queries, idCol, vecCol, k, nProbe)
+          .queryExecution.logical
       }),
     (FunctionIdentifier("graft_knn_index_range"),
       info("graft_knn_index_range",
@@ -732,9 +732,8 @@ object GraftExtensions {
         val vecCol = strArg(args(4), n)
         val tau = numArg(args(5), n)
         val nProbe = if (args.length > 6) numArg(args(6), n).toInt else 5
-        val dim = new operators.Knn.IvfPqQuantizer(spark, dir).dim
-        operators.Knn.rangeSearchIndexed(spark, dir, queries, idCol,
-            vecCol, dim, tau, corpus, nProbe)
+        operators.Knn.rangeSearchStore(spark, operators.PersistedStore.IvfPq
+          .open(spark, dir), queries, idCol, vecCol, tau, corpus, nProbe)
           .queryExecution.logical
       }),
     (FunctionIdentifier("graft_knn_index_sq"),
@@ -753,9 +752,9 @@ object GraftExtensions {
         val idCol = strArg(args(3), n)
         val vecCol = strArg(args(4), n)
         val k = numArg(args(5), n).toInt
-        val dim = operators.Knn.sqIndexGrid(spark, dir)._1.length
-        operators.Knn.searchSqIndex(spark, dir, queries, idCol, vecCol,
-          dim, k, corpus).queryExecution.logical
+        operators.Knn.searchSqStore(spark, operators.PersistedStore.Sq
+          .open(spark, dir), queries, idCol, vecCol, k, corpus)
+          .queryExecution.logical
       }),
     (FunctionIdentifier("graft_chunk"),
       info("graft_chunk",

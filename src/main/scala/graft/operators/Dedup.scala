@@ -254,9 +254,11 @@ object Dedup {
         col(out))
 
   /** The flat (band, bkey, corpus_id) band-key table one LSH pass
-    * produces — the row layout of the persisted index. */
-  private def lshBandKeys(docs: DataFrame, idCol: String, textCol: String,
-                          k: Int, perms: Int, bands: Int): DataFrame = {
+    * produces — the row layout of the persisted index, and the encode
+    * body its build and every append share. */
+  private[graft] def lshBandKeys(docs: DataFrame, idCol: String,
+                                 textCol: String, k: Int, perms: Int,
+                                 bands: Int): DataFrame = {
     require(perms % bands == 0, "perms must be divisible by bands")
     bandKeysOf(
       docs.select(col(idCol).as("corpus_id"),
@@ -279,26 +281,17 @@ object Dedup {
     * byte-identical) and the probe aggregates only the batch's
     * colliding buckets. Signature params ride a sidecar so a probe or
     * append under different (k, perms, bands) fails loudly instead of
-    * silently mixing incompatible signatures
-    * ([[graft.operators.Knn.IvfPqQuantizer]] `requireDim` precedent).
+    * silently mixing incompatible signatures (the
+    * [[PersistedStore.VectorStore.requireDim]] precedent).
     */
   def buildLshIndex(corpus: DataFrame, idCol: String, textCol: String,
                     dir: String, k: Int = 3, perms: Int = 128,
                     bands: Int = 16): Unit = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    Seq((k, perms, bands)).toDF("k", "perms", "bands")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/params")
-    lshBandKeys(corpus, idCol, textCol, k, perms, bands)
-      .write.mode("overwrite").partitionBy("band")
-      .parquet(s"$dir/buckets")
-  }
-
-  /** C25 lifecycle (params): read the index's signature sidecar. */
-  def lshIndexParams(spark: org.apache.spark.sql.SparkSession,
-                     dir: String): (Int, Int, Int) = {
-    val r = spark.read.parquet(s"$dir/params").head()
-    (r.getAs[Int]("k"), r.getAs[Int]("perms"), r.getAs[Int]("bands"))
+    PersistedStore.create(dir, PersistedStore.Lsh,
+      Seq(Seq((k, perms, bands)).toDF("k", "perms", "bands").coalesce(1)),
+      lshBandKeys(corpus, idCol, textCol, k, perms, bands))
   }
 
   /** C25 lifecycle (append): add a batch's surviving docs to the
@@ -307,13 +300,9 @@ object Dedup {
     * file-add per band directory).
     */
   def appendToLshIndex(survivors: DataFrame, idCol: String,
-                       textCol: String, dir: String): Unit = {
-    val (k, perms, bands) =
-      lshIndexParams(survivors.sparkSession, dir)
-    lshBandKeys(survivors, idCol, textCol, k, perms, bands)
-      .write.mode("append").partitionBy("band")
-      .parquet(s"$dir/buckets")
-  }
+                       textCol: String, dir: String): Unit =
+    PersistedStore.Lsh.open(survivors.sparkSession, dir)
+      .append(survivors, idCol, textCol)
 
   /** [[lshIndexRecall]] with an ABSOLUTE-size probe batch — the C35b
     * posture for the persisted-store report: the registered harness
@@ -368,12 +357,10 @@ object Dedup {
                                 shingledBatch: Option[DataFrame] =
                                   scala.None)
       : DataFrame = {
-    val spark = batch.sparkSession
-    val (k, perms, bands) = lshIndexParams(spark, dir)
-    incrementalMinhash(corpus, batch, idCol, textCol, k, perms, bands,
-      threshold, maxBucket, cacheShingles, broadcastBatch,
-      bucketIndex = Some(PersistedStore.readData(spark, dir, PersistedStore.Lsh)
-        .select(col("band"), col("bkey"), col("corpus_id"))),
+    val store = PersistedStore.Lsh.open(batch.sparkSession, dir)
+    incrementalMinhash(corpus, batch, idCol, textCol, store.k, store.perms,
+      store.bands, threshold, maxBucket, cacheShingles, broadcastBatch,
+      bucketIndex = Some(store.buckets(batch.sparkSession)),
       shingledCorpus = shingledCorpus, shingledBatch = shingledBatch)
   }
 
@@ -410,9 +397,8 @@ object Dedup {
                      idCol: String, textCol: String,
                      threshold: Double = 0.7): DataFrame = {
     val spark = batch.sparkSession
-    val (k, _, _) = lshIndexParams(spark, dir)
-    val indexed = PersistedStore.readData(spark, dir, PersistedStore.Lsh)
-      .select(col("corpus_id")).distinct()
+    val store = PersistedStore.Lsh.open(spark, dir)
+    val indexed = store.data(spark).select(col("corpus_id")).distinct()
     val corpusIn = corpus
       .withColumn("_cid", col(idCol).cast("long"))
       .join(indexed, col("_cid") === col("corpus_id"), "left_semi")
@@ -428,11 +414,11 @@ object Dedup {
     // never re-shuffle for the size join.
     val csets = corpusIn
       .select(col("_cid").as("corpus_id"),
-        shingleHashes(col(textCol), k).as("sh"))
+        shingleHashes(col(textCol), store.k).as("sh"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val bsets = batch
       .select(col(idCol).cast("long").as("batch_id"),
-        shingleHashes(col(textCol), k).as("sh"))
+        shingleHashes(col(textCol), store.k).as("sh"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val csh = csets.select(col("corpus_id"), explode(col("sh")).as("v"))
     val bsh = bsets.select(col("batch_id"), explode(col("sh")).as("v"))
@@ -447,8 +433,9 @@ object Dedup {
       .filter(col("c").cast("double") /
         (col("_nc") + col("_nb") - col("c")) >= threshold)
       .select(col("batch_id"), col("corpus_id"))
-    val found = incrementalMinhashIndexed(dir, corpusIn.drop("_cid"),
-        batch, idCol, textCol, threshold,
+    val found = incrementalMinhash(corpusIn.drop("_cid"), batch, idCol,
+        textCol, store.k, store.perms, store.bands, threshold,
+        bucketIndex = Some(store.buckets(spark)),
         shingledCorpus = Some(csets), shingledBatch = Some(bsets))
       .select(col("batch_id"), col("corpus_id"), lit(1L).as("_hit"))
     truth.join(found, Seq("batch_id", "corpus_id"), "left")

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import PersistedStore.{IvfPqStore, SqStore}
 
 /** Similarity search (SURVEY.md §2 D-series): exact brute-force top-k
   * as the correctness baseline; random-hyperplane LSH and IVF cell
@@ -1015,8 +1016,10 @@ object Knn {
       : DataFrame = {
     require(nProbes.nonEmpty && nProbes.forall(_ >= 1),
       s"nProbes must be non-empty positive settings, got $nProbes")
-    sweepScore(indexedCandidates(spark, dir, queries, idCol, vecCol, dim,
-        corpus, nProbes.max), corpus, queries, idCol, vecCol, k, nProbes)
+    sweepScore(indexedCandidates(spark,
+        PersistedStore.IvfPq.open(spark, dir).requireDim(dim), queries,
+        idCol, vecCol, corpus, nProbes.max),
+      corpus, queries, idCol, vecCol, k, nProbes)
   }
 
   /** The stored twin of [[ivfCandidates]] behind [[recallSweepIndexed]]
@@ -1025,17 +1028,14 @@ object Knn {
     * rejoined to `corpus` for exact cosine —
     * `(query_id, neighbor_id, cosine, qrn)`.
     */
-  private def indexedCandidates(spark: SparkSession, dir: String,
+  private def indexedCandidates(spark: SparkSession, ix: IvfPqStore,
                                 queries: DataFrame, idCol: String,
-                                vecCol: String, dim: Int,
-                                corpus: DataFrame, nProbe: Int)
-      : DataFrame = {
-    val coarse = new IvfPqQuantizer(spark, dir).requireDim(dim).coarse
-    probedCosines(probedCodes(spark, dir,
-        probe(queries, idCol, vecCol, coarse, nProbe)
+                                vecCol: String, corpus: DataFrame,
+                                nProbe: Int): DataFrame =
+    probedCosines(probedCodes(spark, ix,
+        probe(queries, idCol, vecCol, ix.coarse, nProbe)
           .select(col("query_id"), col("qv"), col("cell_id"), col("qrn")))
       .join(corpusVecs(corpus, idCol, vecCol), "neighbor_id"))
-  }
 
   /** The stored rows of each query's probed cells, joined to the
     * (broadcast) `probes`: the probed cell list —
@@ -1044,12 +1044,11 @@ object Knn {
     * and only trips HintErrorLogger) — becomes a `cell_id IN (...)`
     * partition filter, so only those cells' FILES are read.
     */
-  private def probedCodes(spark: SparkSession, dir: String,
+  private def probedCodes(spark: SparkSession, ix: IvfPqStore,
                           probes: DataFrame): DataFrame = {
     val cells = probes.select(col("cell_id")).distinct()
       .collect().map(_.getLong(0)).sorted
-    PersistedStore.readData(spark, dir, PersistedStore.IvfPq)
-      .filter(col("cell_id").isin(cells: _*))
+    ix.data(spark).filter(col("cell_id").isin(cells: _*))
       .join(broadcast(probes), "cell_id")
   }
 
@@ -1064,9 +1063,9 @@ object Knn {
     *
     * Both quantizers are the trained k-means tables
     * ([[kmeansSubCodebooks]], count-capped sample); assignment and
-    * encode are the same [[assign]] and [[encode]] stages [[ivfpq]]
-    * plans inline and [[appendToIvfPqIndex]] reuses (build-vs-append
-    * drift would silently corrupt the index). The payoff over the
+    * encode are the [[assign]] and [[encode]] stages [[ivfpq]] plans
+    * inline, in the one [[ivfPqCodes]] body [[appendToIvfPqIndex]]
+    * shares. The payoff over the
     * in-plan path: the corpus-sized train/assign/encode cost is paid
     * ONCE at build, and every later search scans only its probed
     * `cell_id=` partitions — file-layer pruning, no per-run encode.
@@ -1096,50 +1095,27 @@ object Knn {
       .map(_.select(col("sub"), col("cell_id"), col("cvec")))
       .getOrElse(kmeansSubCodebooks(corpus, idCol, vecCol, dim, m, ksub,
         iters, trainMod))
-    coarseTab.write.mode("overwrite").parquet(s"$dir/coarse")
-    cbs.write.mode("overwrite").parquet(s"$dir/codebooks")
-    val vecs = corpusVecs(corpus, idCol, vecCol)
-    encode(subvectors(vecs, "cv", dim, m), slots(cbs))
-      .join(assign(vecs, broadcast(coarseTab.select(col("cell_id"),
-        asDouble(col("centroid")).as("centroid")))), "neighbor_id")
-      .write.mode("overwrite").partitionBy("cell_id")
-      .parquet(s"$dir/codes")
+    PersistedStore.create(dir, PersistedStore.IvfPq, Seq(coarseTab, cbs),
+      ivfPqCodes(corpus, idCol, vecCol, frozenCoarse(coarseTab), cbs, dim,
+        m))
   }
 
-  /** The frozen quantizers of a [[buildIvfPqIndex]] layout, read once
-    * for every stored-index reader: the broadcast `(cell_id, centroid)`
-    * `coarse` table and the build `dim` (its centroid length, one tiny
-    * head()); then, only when a reader touches them, the stored
-    * `(sub, cell_id, cvec)` `codebooks` with their `m` and `ksub` (one
-    * small aggregate, which also checks `dim % m`). A caller's dim must
-    * match the build EXACTLY ([[requireDim]]): one that merely shares
-    * divisibility by m would slice mismatched subvectors and silently
-    * corrupt codes.
-    */
-  private[graft] final class IvfPqQuantizer(spark: SparkSession,
-                                            dir: String) {
-    private val coarseRaw = spark.read.parquet(s"$dir/coarse")
-    val dim: Int = coarseRaw.select(size(col("centroid"))).head().getInt(0)
-    val coarse: DataFrame = broadcast(coarseRaw.select(col("cell_id"),
+  /** The IVF×PQ encode body build and append share (a drift between
+    * them would silently corrupt the index): the stored `(neighbor_id,
+    * codes, cell_id)` row — [[encode]] codes, [[assign]]ed cell. */
+  private[graft] def ivfPqCodes(df: DataFrame, idCol: String, vecCol: String,
+      coarse: DataFrame, codebooks: DataFrame, dim: Int, m: Int)
+      : DataFrame = {
+    val vecs = corpusVecs(df, idCol, vecCol)
+    encode(subvectors(vecs, "cv", dim, m), slots(codebooks))
+      .join(assign(vecs, coarse), "neighbor_id")
+  }
+
+  /** A trained or stored `(cell_id, centroid)` table as the broadcast
+    * double table [[probe]] and [[assign]] read. */
+  private[graft] def frozenCoarse(coarse: DataFrame): DataFrame =
+    broadcast(coarse.select(col("cell_id"),
       asDouble(col("centroid")).as("centroid")))
-    lazy val codebooks: DataFrame = spark.read.parquet(s"$dir/codebooks")
-    private lazy val shape: (Int, Int) = {
-      val r = codebooks.agg(max(col("sub")).cast("int"),
-        max(col("cell_id")).cast("int")).head()
-      val m = r.getInt(0) + 1
-      require(dim % m == 0,
-        s"index at $dir: dim $dim not divisible by index m $m")
-      (m, r.getInt(1) + 1)
-    }
-    def m: Int = shape._1
-    def ksub: Int = shape._2
-
-    def requireDim(callerDim: Int): IvfPqQuantizer = {
-      require(callerDim == dim,
-        s"index at $dir was built with dim $dim, caller passed $callerDim")
-      this
-    }
-  }
 
   /** D8 (append): add new vectors to a [[buildIvfPqIndex]] layout
     * WITHOUT retraining — the FAISS `add` lifecycle an ingest cycle
@@ -1153,14 +1129,9 @@ object Knn {
     * recall decays.
     */
   def appendToIvfPqIndex(delta: DataFrame, idCol: String, vecCol: String,
-                         dir: String, dim: Int): Unit = {
-    val ix = new IvfPqQuantizer(delta.sparkSession, dir).requireDim(dim)
-    val vecs = corpusVecs(delta, idCol, vecCol)
-    encode(subvectors(vecs, "cv", dim, ix.m), slots(ix.codebooks))
-      .join(assign(vecs, ix.coarse), "neighbor_id")
-      .write.mode("append").partitionBy("cell_id")
-      .parquet(s"$dir/codes")
-  }
+                         dir: String, dim: Int): Unit =
+    PersistedStore.IvfPq.open(delta.sparkSession, dir).requireDim(dim)
+      .append(delta, idCol, vecCol)
 
   /** D8 (drift): the REBUILD TRIGGER's number — append/remove run
     * under frozen quantizers, and "rebuild when recall decays" is
@@ -1185,11 +1156,11 @@ object Knn {
     */
   def ivfPqIndexDrift(spark: SparkSession, dir: String, corpus: DataFrame,
                       idCol: String, vecCol: String): DataFrame = {
-    val ix = new IvfPqQuantizer(spark, dir)
+    val ix = PersistedStore.IvfPq.open(spark, dir)
     val d = ix.dim / ix.m
     val vecs = corpus.select(col(idCol).cast("long").as("neighbor_id"),
       asDouble(col(vecCol)).as("cv"))
-    val codes = PersistedStore.readData(spark, dir, PersistedStore.IvfPq)
+    val codes = ix.data(spark)
     // recon cosine, decomposed per sub: dot(recon, v) = Σ_j dot(cvec_j,
     // slice_j), |recon|² = Σ_j |cvec_j|², |v|² computed once
     val parts = codes
@@ -1241,12 +1212,20 @@ object Knn {
                        dim: Int, k: Int, nProbe: Int = 5,
                        overscan: Int = 4, salts: Int = 32,
                        rescoreWith: Option[DataFrame] = scala.None)
-      : DataFrame = {
-    val ix = new IvfPqQuantizer(spark, dir).requireDim(dim)
+      : DataFrame =
+    searchIvfPqStore(spark, PersistedStore.IvfPq.open(spark, dir)
+      .requireDim(dim), queries, idCol, vecCol, k, nProbe, overscan, salts,
+      rescoreWith)
+
+  /** [[searchIvfPqIndex]] through an opened store. */
+  private[graft] def searchIvfPqStore(spark: SparkSession, ix: IvfPqStore,
+      queries: DataFrame, idCol: String, vecCol: String, k: Int,
+      nProbe: Int = 5, overscan: Int = 4, salts: Int = 32,
+      rescoreWith: Option[DataFrame] = scala.None): DataFrame = {
     val cb = slots(ix.codebooks)
     val qtab = adcTables(subvectors(queryVecs(queries, idCol, vecCol), "qv",
-      dim, ix.m), Seq("query_id"), cb, ix.m, ix.ksub)
-    val approx = adcScan(probedCodes(spark, dir,
+      ix.dim, ix.m), Seq("query_id"), cb, ix.m, ix.ksub)
+    val approx = adcScan(probedCodes(spark, ix,
         probe(queries, idCol, vecCol, ix.coarse, nProbe)
           .select(col("query_id"), col("cell_id")))
       .join(qtab, "query_id"), ix.m)
@@ -1484,39 +1463,27 @@ object Knn {
       s"grid override length ${lo.length}/${scale.length} != dim $dim")
     val spark = corpus.sparkSession
     import spark.implicits._
-    lo.zip(scale).zipWithIndex
-      .map { case ((l, s), j) => (j, l, s) }.toSeq
-      .toDF("j", "lo", "scale")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/grid")
-    corpus.select(col(idCol).cast("long").as("neighbor_id"),
-        sqCodes(col(vecCol), lo, scale).as("codes"))
-      .write.mode("overwrite").parquet(s"$dir/codes")
+    PersistedStore.create(dir, PersistedStore.Sq,
+      Seq(lo.zip(scale).zipWithIndex
+        .map { case ((l, s), j) => (j, l, s) }.toSeq
+        .toDF("j", "lo", "scale").coalesce(1)),
+      sqRows(corpus, idCol, vecCol, lo, scale))
   }
 
-  /** The stored affine grid of a [[buildSqIndex]] layout, dim-length
-    * arrays — the frozen quantizer append/search must reuse. */
-  def sqIndexGrid(spark: SparkSession, dir: String)
-      : (Array[Double], Array[Double]) = {
-    val rows = spark.read.parquet(s"$dir/grid").collect()
-      .map(r => (r.getAs[Int]("j"), r.getAs[Double]("lo"),
-        r.getAs[Double]("scale")))
-      .sortBy(_._1)
-    (rows.map(_._2), rows.map(_._3))
-  }
+  /** The SQ8 encode body [[buildSqIndex]] and every append share: the
+    * stored `(neighbor_id, codes)` row under the grid `(lo, scale)`. */
+  private[graft] def sqRows(df: DataFrame, idCol: String, vecCol: String,
+      lo: Array[Double], scale: Array[Double]): DataFrame =
+    df.select(col(idCol).cast("long").as("neighbor_id"),
+      sqCodes(col(vecCol), lo, scale).as("codes"))
 
   /** D11b (append): encode a delta under the FROZEN grid and file-add
     * it — the [[appendToIvfPqIndex]] posture (no retrain; rebuild
     * when the grid's [lo, hi] no longer covers the data). */
   def appendToSqIndex(delta: DataFrame, idCol: String, vecCol: String,
-                      dir: String, dim: Int): Unit = {
-    StoreMaintenance.recoverFlat(delta.sparkSession, s"$dir/codes")
-    val (lo, scale) = sqIndexGrid(delta.sparkSession, dir)
-    require(lo.length == dim,
-      s"index at $dir was built with dim ${lo.length}, caller passed $dim")
-    delta.select(col(idCol).cast("long").as("neighbor_id"),
-        sqCodes(col(vecCol), lo, scale).as("codes"))
-      .write.mode("append").parquet(s"$dir/codes")
-  }
+                      dir: String, dim: Int): Unit =
+    PersistedStore.Sq.open(delta.sparkSession, dir).requireDim(dim)
+      .append(delta, idCol, vecCol)
 
   /** D11b (drift): the SQ store's rebuild trigger — the frozen affine
     * grid was trained on the build corpus's per-dimension [lo, hi];
@@ -1531,9 +1498,9 @@ object Knn {
     */
   def sqIndexDrift(spark: SparkSession, dir: String, corpus: DataFrame,
                    vecCol: String): DataFrame = {
-    val (lo, scale) = sqIndexGrid(spark, dir)
-    val loL = array(lo.map(lit(_)): _*)
-    val scL = array(scale.map(lit(_)): _*)
+    val sq = PersistedStore.Sq.open(spark, dir)
+    val loL = array(sq.lo.map(lit(_)): _*)
+    val scL = array(sq.scale.map(lit(_)): _*)
     corpus.select(posexplode(asDouble(col(vecCol))).as(Seq("j", "x")))
       .withColumn("_lo", element_at(loL, col("j") + 1))
       .withColumn("_sc", element_at(scL, col("j") + 1))
@@ -1573,15 +1540,17 @@ object Knn {
   def searchSqIndex(spark: SparkSession, dir: String, queries: DataFrame,
                     idCol: String, vecCol: String, dim: Int, k: Int,
                     corpus: DataFrame, overscan: Int = 4,
-                    salts: Int = 32): DataFrame = {
-    val (lo, scale) = sqIndexGrid(spark, dir)
-    require(lo.length == dim,
-      s"index at $dir was built with dim ${lo.length}, caller passed $dim")
-    val recon = PersistedStore.readData(spark, dir, PersistedStore.Sq)
-      .select(col("neighbor_id"), sqRecon(col("codes"), lo, scale).as("rv"))
-    sqScanRerank(recon, corpus, queries, idCol, vecCol, k, overscan,
-      salts)
-  }
+                    salts: Int = 32): DataFrame =
+    searchSqStore(spark, PersistedStore.Sq.open(spark, dir).requireDim(dim),
+      queries, idCol, vecCol, k, corpus, overscan, salts)
+
+  /** [[searchSqIndex]] through an opened store. */
+  private[graft] def searchSqStore(spark: SparkSession, sq: SqStore,
+      queries: DataFrame, idCol: String, vecCol: String, k: Int,
+      corpus: DataFrame, overscan: Int = 4, salts: Int = 32): DataFrame =
+    sqScanRerank(sq.data(spark).select(col("neighbor_id"),
+        sqRecon(col("codes"), sq.lo, sq.scale).as("rv")),
+      corpus, queries, idCol, vecCol, k, overscan, salts)
 
   /** D10c: radius search over the PERSISTED index — the scale path
     * [[rangeSearchIvf]]'s scaladoc promises ("a production deployment
@@ -1613,8 +1582,14 @@ object Knn {
                          vecCol: String, dim: Int, tau: Double,
                          corpus: DataFrame, nProbe: Int = 5)
       : DataFrame =
-    indexedCandidates(spark, dir, queries, idCol, vecCol, dim, corpus,
-        nProbe)
+    rangeSearchStore(spark, PersistedStore.IvfPq.open(spark, dir)
+      .requireDim(dim), queries, idCol, vecCol, tau, corpus, nProbe)
+
+  /** [[rangeSearchIndexed]] through an opened store. */
+  private[graft] def rangeSearchStore(spark: SparkSession, ix: IvfPqStore,
+      queries: DataFrame, idCol: String, vecCol: String, tau: Double,
+      corpus: DataFrame, nProbe: Int = 5): DataFrame =
+    indexedCandidates(spark, ix, queries, idCol, vecCol, corpus, nProbe)
       .filter(col("cosine") >= tau)
       .select(col("query_id"), col("neighbor_id"), col("cosine"))
 }

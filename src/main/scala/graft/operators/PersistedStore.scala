@@ -18,7 +18,10 @@ import org.apache.spark.sql.types._
   * freeze the quantizer or signature, what a valid row is and which
   * copy of a duplicate survives. Every verb is written once against
   * that description, and the kind is detected from the sidecars in
-  * `dir`. Build, append, search and drift stay with their stores.
+  * `dir`. Build, append, search and drift go through a [[Store]]
+  * handle: [[open]] reads the frozen sidecars once, and every data read
+  * re-lists the files. The sidecar and data paths are spelled only
+  * here.
   *
   * Single-writer posture: callers serialize maintenance against
   * append/remove/search on the same dir.
@@ -78,10 +81,14 @@ object PersistedStore {
     val survivorOrder: Seq[Column]
     /** The stats report's row-count column. */
     val countCol: String
-    /** Where a fragmented store's advice points. */
-    val compactHint: String
-    /** Whether the advisor has a drift leg (and so needs a corpus). */
-    val hasDrift: Boolean
+    /** The advisor's drift leg, when the kind has one (and so needs a
+      * corpus): the aggregate folding the [[drift]] report to one
+      * number, and the rebuild reason after that number, formatted
+      * with the threshold. */
+    val driftLeg: Option[(Column, String)]
+    final def hasDrift: Boolean = driftLeg.nonEmpty
+    /** Read the frozen sidecars at `dir` into a handle. */
+    def open(spark: SparkSession, dir: String): Store
     def parse(sidecar: String => DataFrame): P
     def checks: Seq[Check[P]]
     /** Partition values the store may hold; repair deletes the others
@@ -109,8 +116,12 @@ object PersistedStore {
     val keyCols = Seq("neighbor_id")
     val survivorOrder = Seq(col("cell_id"), hash(col("codes")))
     val countCol = "n_codes"
-    val compactHint = "compactIvfPqIndex"
-    val hasDrift = true
+    val driftLeg = Some((sum(col("frac_misassigned") * col("n_codes")) /
+        sum(col("n_codes")),
+      "of stored codes are coarse-misassigned vs the current corpus " +
+        "(> %.2f) - the frozen quantizers no longer fit; rebuild"))
+    def open(spark: SparkSession, dir: String): IvfPqStore =
+      new IvfPqStore(spark, dir)
     def parse(sidecar: String => DataFrame): IvfPqParams = {
       val coarse = sidecar("coarse")
       val dimCounts = coarse.groupBy(size(col("centroid")).as("d"))
@@ -152,7 +163,9 @@ object PersistedStore {
     override def knownPartition(p: IvfPqParams)(v: Int): Boolean = p.cells(v)
   }
 
-  private[graft] final case class SqParams(dim: Int, gridBad: Long)
+  /** `lo`/`scale` are the grid sorted by dimension, the handle's view. */
+  private[graft] final case class SqParams(dim: Int, gridBad: Long,
+      lo: Array[Double], scale: Array[Double])
 
   /** `grid/`, `codes/part-*.parquet` — one flat codes dir. */
   private[graft] case object Sq extends Layout[SqParams] {
@@ -169,15 +182,20 @@ object PersistedStore {
     // the same row; the hash only makes the pick deterministic
     val survivorOrder = Seq(xxhash64(col("codes")))
     val countCol = "n_codes"
-    val compactHint = "compactSqIndex"
-    val hasDrift = true
+    val driftLeg = Some((avg(col("frac_out_of_range")),
+      "of current corpus values fall outside the frozen affine grid " +
+        "(> %.2f) - codes clamp; rebuild"))
+    def open(spark: SparkSession, dir: String): SqStore =
+      new SqStore(spark, dir)
     def parse(sidecar: String => DataFrame): SqParams = {
       val grid = sidecar("grid").select(col("j"), col("lo"), col("scale"))
         .collect().map(r => (r.getInt(0), r.getDouble(1), r.getDouble(2)))
-      val dim = grid.map(_._1).max + 1
+        .sortBy(_._1)
+      val dim = grid.map(_._1 + 1).maxOption.getOrElse(0)
       SqParams(dim,
         (0 until dim).count(j => grid.count(_._1 == j) != 1).toLong +
-          grid.count(g => g._2.isNaN || g._3.isNaN || g._3 < 0).toLong)
+          grid.count(g => g._2.isNaN || g._3.isNaN || g._3 < 0).toLong,
+        grid.map(_._2), grid.map(_._3))
     }
     val checks: Seq[Check[SqParams]] = Seq(
       SidecarCheck("grid_complete", "grid", p =>
@@ -211,8 +229,9 @@ object PersistedStore {
     val keyCols = Seq("band", "bkey", "corpus_id")
     val survivorOrder = Seq(col("corpus_id"))
     val countCol = "n_rows"
-    val compactHint = "compactLshIndex"
-    val hasDrift = false
+    val driftLeg = scala.None
+    def open(spark: SparkSession, dir: String): LshStore =
+      new LshStore(spark, dir)
     def parse(sidecar: String => DataFrame): LshParams = {
       val r = sidecar("params").head()
       LshParams(r.getAs[Int]("k"), r.getAs[Int]("perms"),
@@ -259,14 +278,17 @@ object PersistedStore {
   private def dataRoot(dir: String, l: Layout[_]): Path =
     new Path(dir, l.dataDir)
 
+  private def sidecar(spark: SparkSession, dir: String)(s: String) =
+    spark.read.parquet(s"$dir/$s")
+
   /** The store's data rows — the read every search, probe and verb of
     * the three stores goes through. Tolerates the fully-purged state (a
     * legal retention outcome): with no data file left, an empty frame in
     * the layout's schema comes back instead of a parquet
     * schema-inference failure, so search answers "no neighbors" and a
     * later append restores the store. */
-  private[graft] def readData(spark: SparkSession, dir: String,
-                              l: Layout[_]): DataFrame = {
+  private def readData(spark: SparkSession, dir: String,
+                       l: Layout[_]): DataFrame = {
     val root = dataRoot(dir, l)
     if (l.recoversFlat) StoreMaintenance.recoverFlat(spark, root.toString)
     val hasData = l.partCol match {
@@ -278,13 +300,132 @@ object PersistedStore {
     else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], l.schema)
   }
 
+  /** The one data write of build, append and file surgery, into the
+    * layout's data dir and partition column; a flat store first sweeps
+    * a crashed compaction ([[StoreMaintenance.recoverFlat]]). */
+  private def writeData(dir: String, l: Layout[_], rows: DataFrame,
+                        mode: String): Unit = {
+    val root = dataRoot(dir, l).toString
+    if (l.recoversFlat) StoreMaintenance.recoverFlat(rows.sparkSession, root)
+    val w = rows.write.mode(mode)
+    l.partCol.fold(w)(w.partitionBy(_)).parquet(root)
+  }
+
+  /** Build: the frozen `sidecars` (in the layout's order), then the
+    * encoded `rows`, each replacing what `dir` held. */
+  private[graft] def create(dir: String, l: Layout[_],
+                            sidecars: Seq[DataFrame], rows: DataFrame): Unit = {
+    l.sidecars.zip(sidecars).foreach { case (s, df) =>
+      df.write.mode("overwrite").parquet(s"$dir/$s") }
+    writeData(dir, l, rows, "overwrite")
+  }
+
+  // ---- the store handle -------------------------------------------------
+
+  /** An opened store: the frozen sidecars are read ONCE, at open, and
+    * every [[data]] read re-lists the files under the caller's session,
+    * so rows appended after the open are seen. A rebuild (new sidecars)
+    * needs a new handle. */
+  sealed abstract class Store(private[graft] val layout: Layout[_]) {
+    val dir: String
+    /** The data rows, listed now ([[readData]]). */
+    def data(spark: SparkSession): DataFrame = readData(spark, dir, layout)
+    /** Encode `delta`'s `valueCol` (vectors, or LSH text) under the
+      * frozen sidecars and add it as new files. */
+    def append(delta: DataFrame, idCol: String, valueCol: String): Unit
+    protected def write(rows: DataFrame): Unit =
+      writeData(dir, layout, rows, "append")
+  }
+
+  /** A vector store (IVF×PQ or SQ8) and its build `dim`. */
+  sealed abstract class VectorStore(layout: Layout[_])
+      extends Store(layout) {
+    val dim: Int
+    /** A caller's dim must match the build EXACTLY: one merely divisible
+      * by m would slice mismatched subvectors and corrupt codes. */
+    def requireDim(callerDim: Int): this.type = {
+      require(callerDim == dim,
+        s"index at $dir was built with dim $dim, caller passed $callerDim")
+      this
+    }
+    /** Top-`k` by exact cosine against `corpus`:
+      * `(query_id, rank, neighbor_id, cosine)`. */
+    private[graft] def search(spark: SparkSession, queries: DataFrame,
+                              idCol: String, vecCol: String, k: Int,
+                              corpus: DataFrame): DataFrame
+  }
+
+  /** An IVF×PQ store: the broadcast `coarse` table and `dim` (one tiny
+    * head()) at open; the `codebooks` with their `m` and `ksub` (one
+    * small aggregate, which checks `dim % m`) when first touched. */
+  final class IvfPqStore private[PersistedStore] (spark: SparkSession,
+                                                  val dir: String)
+      extends VectorStore(IvfPq) {
+    private val coarseRaw = sidecar(spark, dir)("coarse")
+    val dim: Int = coarseRaw.select(size(col("centroid"))).head().getInt(0)
+    val coarse: DataFrame = Knn.frozenCoarse(coarseRaw)
+    lazy val codebooks: DataFrame = sidecar(spark, dir)("codebooks")
+    private lazy val shape: (Int, Int) = {
+      val r = codebooks.agg(max(col("sub")).cast("int"),
+        max(col("cell_id")).cast("int")).head()
+      val m = r.getInt(0) + 1
+      require(dim % m == 0,
+        s"index at $dir: dim $dim not divisible by index m $m")
+      (m, r.getInt(1) + 1)
+    }
+    def m: Int = shape._1
+    def ksub: Int = shape._2
+    def append(delta: DataFrame, idCol: String, vecCol: String): Unit =
+      write(Knn.ivfPqCodes(delta, idCol, vecCol, coarse, codebooks, dim, m))
+    private[graft] def search(spark: SparkSession, queries: DataFrame,
+                              idCol: String, vecCol: String, k: Int,
+                              corpus: DataFrame): DataFrame =
+      Knn.searchIvfPqStore(spark, this, queries, idCol, vecCol, k,
+        rescoreWith = Some(corpus))
+  }
+
+  /** An SQ8 store: the affine grid as dim-length `lo`/`scale`. */
+  final class SqStore private[PersistedStore] (spark: SparkSession,
+                                               val dir: String)
+      extends VectorStore(Sq) {
+    private val grid = Sq.parse(sidecar(spark, dir))
+    val lo: Array[Double] = grid.lo
+    val scale: Array[Double] = grid.scale
+    val dim: Int = lo.length
+    def append(delta: DataFrame, idCol: String, vecCol: String): Unit =
+      write(Knn.sqRows(delta, idCol, vecCol, lo, scale))
+    private[graft] def search(spark: SparkSession, queries: DataFrame,
+                              idCol: String, vecCol: String, k: Int,
+                              corpus: DataFrame): DataFrame =
+      Knn.searchSqStore(spark, this, queries, idCol, vecCol, k, corpus)
+  }
+
+  /** An LSH store: the MinHash signature `(k, perms, bands)`. */
+  final class LshStore private[PersistedStore] (spark: SparkSession,
+                                                val dir: String)
+      extends Store(Lsh) {
+    private val params = Lsh.parse(sidecar(spark, dir))
+    val k: Int = params.k
+    val perms: Int = params.perms
+    val bands: Int = params.bands
+    /** The `bucketIndex` [[Dedup.incrementalMinhash]] probes. */
+    def buckets(spark: SparkSession): DataFrame =
+      data(spark).select(col("band"), col("bkey"), col("corpus_id"))
+    def append(survivors: DataFrame, idCol: String, textCol: String): Unit =
+      write(Dedup.lshBandKeys(survivors, idCol, textCol, k, perms, bands))
+  }
+
+  /** Open the store at `dir`, its kind detected from the sidecars. */
+  def open(spark: SparkSession, dir: String): Store =
+    detect(spark, dir).open(spark, dir)
+
   /** Read every sidecar — a missing, empty or unreadable one is named,
     * not thrown — and parse the params from them. */
-  private def open[P](spark: SparkSession, dir: String,
-                      l: Layout[P]): Either[Map[String, String], P] = {
+  private def readSidecars[P](spark: SparkSession, dir: String,
+                             l: Layout[P]): Either[Map[String, String], P] = {
     val frames = l.sidecars.map { s =>
       s -> (try {
-        val df = spark.read.parquet(s"$dir/$s")
+        val df = sidecar(spark, dir)(s)
         if (df.head(1).isEmpty) Left(s"$s sidecar is EMPTY") else Right(df)
       } catch {
         case e: Exception => Left(s"$s sidecar unreadable: ${
@@ -327,7 +468,7 @@ object PersistedStore {
   private def fsckOf[P](spark: SparkSession, dir: String,
                         l: Layout[P]): DataFrame = {
     import spark.implicits._
-    val report = open(spark, dir, l) match {
+    val report = readSidecars(spark, dir, l) match {
       case Left(bad) => l.checks.map {
         case SidecarCheck(n, s, _) => bad.get(s)
           .fold((n, true, 0L, "readable"))(e => (n, false, 1L, e))
@@ -431,8 +572,7 @@ object PersistedStore {
       val kept = survivors.select(l.schema.fieldNames.toSeq.map(col): _*)
         .localCheckpoint()
       val n = kept.count()
-      val w = kept.write.mode("append")
-      l.partCol.fold(w)(w.partitionBy(_)).parquet(root.toString)
+      writeData(dir, l, kept, "append")
       val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
       val paths = files.map(f => new Path(new java.net.URI(f)))
       paths.foreach(fs.delete(_, false))
@@ -492,7 +632,7 @@ object PersistedStore {
 
   private def repairOf[P](spark: SparkSession, dir: String,
                           l: Layout[P]): (Long, Int) = {
-    val p = open(spark, dir, l) match {
+    val p = readSidecars(spark, dir, l) match {
       case Left(bad) =>
         val (s, e) = bad.head
         throw new IllegalArgumentException(s"$dir $s sidecar is empty or " +
@@ -681,25 +821,13 @@ object PersistedStore {
     val l = detect(spark, dir)
     require(!l.hasDrift || corpus.nonEmpty,
       s"the ${l.kind} advisor needs a corpus for its drift leg")
-    def rebuild: Option[String] = l match {
-      case IvfPq =>
-        val d = Knn.ivfPqIndexDrift(spark, dir, corpus.get, idCol, vecCol)
-          .agg((sum(col("frac_misassigned") * col("n_codes")) /
-            sum(col("n_codes"))).as("w"))
-          .head().getAs[Double]("w")
-        Option.when(d > maxMisassigned)(
-          f"$d%.4f of stored codes are coarse-misassigned vs the " +
-            f"current corpus (> $maxMisassigned%.2f) - the frozen " +
-            "quantizers no longer fit; rebuild")
-      case Sq =>
-        val d = Knn.sqIndexDrift(spark, dir, corpus.get, vecCol)
-          .agg(avg(col("frac_out_of_range")).as("w"))
-          .head().getAs[Double]("w")
-        Option.when(d > maxOutOfRange)(
-          f"$d%.4f of current corpus values fall outside the frozen " +
-            f"affine grid (> $maxOutOfRange%.2f) - codes clamp; rebuild")
-      case Lsh => scala.None
+    def rebuild: Option[String] = l.driftLeg.flatMap { case (score, why) =>
+      val limit = if (l == IvfPq) maxMisassigned else maxOutOfRange
+      val d = drift(spark, dir, corpus.get, idCol, vecCol)
+        .agg(score.as("w")).head().getAs[Double]("w")
+      Option.when(d > limit)(f"$d%.4f " + why.format(limit))
     }
+    val compactVerb = "run graft_store_compact (PersistedStore.compact)"
     def compact: Option[String] = {
       val root = dataRoot(dir, l)
       l.partCol match {
@@ -708,19 +836,19 @@ object PersistedStore {
             .partitionFileStats(spark, root.toString, pc)
             .count(_._2 > maxFilesPerPartition)
           Option.when(fragged > 0)(s"$fragged ${l.partUnit} partition(s) " +
-            s"over $maxFilesPerPartition file(s) - ${l.compactHint}")
+            s"over $maxFilesPerPartition file(s) - $compactVerb")
         case scala.None =>
           val small = StoreMaintenance.dataFiles(spark, root)
             .count(_._2 < minBytes)
           Option.when(small >= minSmallFiles)(
-            s"$small files under $minBytes bytes - ${l.compactHint}")
+            s"$small files under $minBytes bytes - $compactVerb")
       }
     }
     val fsckBad = fsck(spark, dir).filter(!col("ok")).count()
     val (action, reason) =
       if (fsckBad > 0)
-        ("repair", s"fsck flags $fsckBad failing check(s) - run the " +
-          "store's repair verb, then re-advise")
+        ("repair", s"fsck flags $fsckBad failing check(s) - run " +
+          "graft_store_repair (PersistedStore.repair), then re-advise")
       else rebuild.map(("rebuild", _))
         .orElse(compact.map(("compact", _)))
         .getOrElse(("ok",

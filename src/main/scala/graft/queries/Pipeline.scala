@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.{Dedup, GraphOps, Knn, Multimodal, Packing, Sampling, TextOps}
 
@@ -90,30 +90,37 @@ object Pipeline {
       .orderBy("batch_id", "corpus_id")
   }
 
-  /** One persisted LSH layout per sf dir for [[dedupRecallIndexed]],
-    * built ONCE over the corpus slice (doc_id % 10 != 0 — C22's
-    * split, the same corpus [[dedupFuzzyIncremental]] indexes
-    * in-plan); the [[ensureKnnIndexDir]] build-once pattern (TrieMap
-    * per JVM, `_done` marker per machine).
-    */
-  private val lshIndexDirs =
-    scala.collection.concurrent.TrieMap[String, String]()
-  private[graft] def ensureLshIndexDir(documents: DataFrame,
-                                       sfDir: String): String =
-    lshIndexDirs.getOrElseUpdate(sfDir, {
+  /** The build-once fixture store of the store-backed rows: one
+    * `graft_<kind>idx_v1_<sf key>` dir per sf dir under java.io.tmpdir,
+    * built by `build(dir)` once per JVM (TrieMap) and per machine
+    * (`_done` marker; [[HModel.ensureLookupDir]]'s precedent) — a
+    * changed build path must delete the old dirs, or it reuses them. */
+  private val storeDirs =
+    scala.collection.concurrent.TrieMap[(String, String), String]()
+  private def ensureStoreDir(spark: SparkSession, kind: String,
+                             sfDir: String)(build: String => Unit): String =
+    storeDirs.getOrElseUpdate((kind, sfDir), {
       val dir = s"${System.getProperty("java.io.tmpdir")}/" +
-        s"graft_lshidx_v1_${HModel.dirKey(sfDir)}"
-      val spark = documents.sparkSession
+        s"graft_${kind}idx_v1_${HModel.dirKey(sfDir)}"
       val root = new org.apache.hadoop.fs.Path(dir)
       val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
       val done = new org.apache.hadoop.fs.Path(root, "_done")
       if (!fs.exists(done)) {
-        Dedup.buildLshIndex(documents.filter(col("doc_id") % 10 =!= 0),
-          "doc_id", "text", dir, k = 3, perms = 128, bands = 16)
+        build(dir)
         fs.create(done, true).close()
       }
       dir
     })
+
+  /** One persisted LSH layout per sf dir for [[dedupRecallIndexed]],
+    * built over the corpus slice (doc_id % 10 != 0 — C22's split, the
+    * same corpus [[dedupFuzzyIncremental]] indexes in-plan).
+    */
+  private[graft] def ensureLshIndexDir(documents: DataFrame,
+                                       sfDir: String): String =
+    ensureStoreDir(documents.sparkSession, "lsh", sfDir)(
+      Dedup.buildLshIndex(documents.filter(col("doc_id") % 10 =!= 0),
+        "doc_id", "text", _, k = 3, perms = 128, bands = 16))
 
   /** C37 registered: recall of the PERSISTED LSH index on the
     * incoming batch (doc_id % 10 == 0) — truth is the exact cross-set
@@ -952,34 +959,19 @@ object Pipeline {
       .withColumn("cosine", round(col("cosine"), 6))
       .orderBy("query_id", "neighbor_id")
 
-  /** One persisted IVF×PQ layout per sf dir for [[knnRangeIndexed]],
-    * built ONCE (TrieMap per JVM, `_done` marker per machine — bench
-    * reruns and the verify run reuse it; [[HModel.ensureLookupDir]]'s
-    * precedent). The coarse table is the FROZEN [[Knn.strideCoarse]]
-    * — identical to the one D10b derives in-plan — so the registered
-    * row's answers equal knn_range_ivf's and the plain-SQL oracle
-    * replays the stored assignment without replaying a k-means train.
+  /** One persisted IVF×PQ layout per sf dir for [[knnRangeIndexed]]
+    * ([[ensureStoreDir]]). The coarse table is the FROZEN
+    * [[Knn.strideCoarse]] — identical to the one D10b derives in-plan —
+    * so the registered row's answers equal knn_range_ivf's and the
+    * plain-SQL oracle replays the stored assignment without replaying a
+    * k-means train.
     */
-  private val knnIndexDirs =
-    scala.collection.concurrent.TrieMap[String, String]()
   private[graft] def ensureKnnIndexDir(embeddings: DataFrame,
                                        sfDir: String): String =
-    knnIndexDirs.getOrElseUpdate(sfDir, {
-      val dir = s"${System.getProperty("java.io.tmpdir")}/" +
-        s"graft_knnidx_v1_${HModel.dirKey(sfDir)}"
-      val spark = embeddings.sparkSession
-      val root = new org.apache.hadoop.fs.Path(dir)
-      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val done = new org.apache.hadoop.fs.Path(root, "_done")
-      if (!fs.exists(done)) {
-        Knn.buildIvfPqIndex(embeddings, "vec_id", "embedding", dir,
-          dim = EmbeddingDim,
-          coarse = Some(Knn.strideCoarse(embeddings, "vec_id",
-            "embedding")))
-        fs.create(done, true).close()
-      }
-      dir
-    })
+    ensureStoreDir(embeddings.sparkSession, "knn", sfDir)(
+      Knn.buildIvfPqIndex(embeddings, "vec_id", "embedding", _,
+        dim = EmbeddingDim,
+        coarse = Some(Knn.strideCoarse(embeddings, "vec_id", "embedding"))))
 
   /** D10c registered: radius search off the PERSISTED index — the
     * production path [[knnRangeIvf]]'s scaladoc promises. The
@@ -1076,40 +1068,19 @@ object Pipeline {
       .withColumn("cosine", round(col("cosine"), 6))
       .orderBy("query_id", "rank")
 
-  /** One persisted SQ8 store per sf dir for [[knnSqIndexed]] —
-    * [[ensureKnnIndexDir]]'s build-once pattern applied to the D11b
-    * byte-codes layout. Grid and codes are trained/encoded from the
-    * full embeddings table, so the stored state equals what the
-    * in-plan [[knnSq]] derives and the oracle is knn_sq's verbatim.
-    */
-  private val sqIndexDirs =
-    scala.collection.concurrent.TrieMap[String, String]()
-  private[graft] def ensureSqIndexDir(embeddings: DataFrame,
-                                      sfDir: String): String =
-    sqIndexDirs.getOrElseUpdate(sfDir, {
-      val dir = s"${System.getProperty("java.io.tmpdir")}/" +
-        s"graft_sqidx_v1_${HModel.dirKey(sfDir)}"
-      val spark = embeddings.sparkSession
-      val root = new org.apache.hadoop.fs.Path(dir)
-      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val done = new org.apache.hadoop.fs.Path(root, "_done")
-      if (!fs.exists(done)) {
-        Knn.buildSqIndex(embeddings, "vec_id", "embedding", dir,
-          dim = EmbeddingDim)
-        fs.create(done, true).close()
-      }
-      dir
-    })
-
   /** D11b registered: the SQ8 flat scan off the PERSISTED byte-codes
     * store — the read path whose IO matches the 8× memory claim (the
-    * in-plan [[knnSq]] models only the arithmetic). Same grid, codes,
-    * queries, and shortlist rules as D11 ⇒ identical answers
+    * in-plan [[knnSq]] models only the arithmetic), built once per sf
+    * dir ([[ensureStoreDir]]) from the full embeddings table. Same grid,
+    * codes, queries, and shortlist rules as D11 ⇒ identical answers
     * (KnnSpec pins parity), oracle = knn_sq's SQL verbatim.
     */
   def knnSqIndexed(embeddings: DataFrame, sfDir: String): DataFrame =
     Knn.searchSqIndex(embeddings.sparkSession,
-        ensureSqIndexDir(embeddings, sfDir), querySet(embeddings),
+        ensureStoreDir(embeddings.sparkSession, "sq", sfDir)(
+          Knn.buildSqIndex(embeddings, "vec_id", "embedding", _,
+            dim = EmbeddingDim)),
+        querySet(embeddings),
         "vec_id", "embedding", dim = EmbeddingDim, k = 5,
         corpus = embeddings)
       .withColumn("cosine", round(col("cosine"), 6))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupStateTimeout, OutputMode, StreamingQuery}
 import org.apache.spark.sql.types.DecimalType
-import graft.operators.{PersistedStore, StoreMaintenance}
+import graft.operators.{Dedup, Knn, PersistedStore, StoreMaintenance}
 
 /** Typed event record for the stateful streaming operators. */
 case class EventRec(user_id: Long, ts_ms: Long, event_id: Long, value: Double)
@@ -230,7 +230,9 @@ object Streams {
     * verdicts are independent across micro-batches, the union over
     * batches equals one batch run over the same docs (spec-pinned),
     * and no epoch markers are needed: a redelivered epoch recomputes
-    * identical rows.
+    * identical rows. The index is opened once, when the stream is
+    * defined (its signature sidecar is frozen); each batch re-lists
+    * only the bucket files.
     */
   def decontaminateFuzzyStream(docs: DataFrame, evalIndexDir: String,
                                evalSet: DataFrame, idCol: String,
@@ -238,13 +240,15 @@ object Streams {
                                threshold: Double = 0.7)
                               (sink: (DataFrame, Long) => Unit)
       : DataStreamWriter[Row] = {
+    val store = PersistedStore.Lsh.open(docs.sparkSession, evalIndexDir)
     docs.writeStream
       .outputMode(OutputMode.Append)
       .foreachBatch { (batch0: Dataset[Row], epochId: Long) =>
         if (!batch0.isEmpty) {
           val batch = batch0.toDF()
-          val hits = graft.operators.Dedup.incrementalMinhashIndexed(
-            evalIndexDir, evalSet, batch, idCol, textCol, threshold)
+          val hits = Dedup.incrementalMinhash(evalSet, batch, idCol,
+            textCol, store.k, store.perms, store.bands, threshold,
+            bucketIndex = Some(store.buckets(batch0.sparkSession)))
           val rolled = hits.groupBy(col("batch_id"))
             .agg(count(lit(1)).as("n_eval_matches"),
               round(max(col("jaccard")), 6).as("max_jaccard"))
@@ -472,27 +476,22 @@ object Streams {
     * is bit-identical to ONE batch search over the same queries
     * (spec-pinned) — no reconciliation pass downstream. State-free:
     * the index is the static side; nothing carries between batches.
-    * `dim` is self-served from the index's stored coarse table, the
-    * TVF's no-drift rule.
+    * The store is opened ONCE, at stream definition: the frozen
+    * quantizers are never re-read per batch, while each batch re-lists
+    * the probed code partitions, so concurrent appends are served.
     */
   def indexSearchStream(queries: DataFrame, dir: String, idCol: String,
                         vecCol: String, k: Int, nProbe: Int = 5,
                         rescoreWith: Option[DataFrame] = None)
                        (sink: (DataFrame, Long) => Unit)
       : DataStreamWriter[Row] = {
-    // dim resolved ONCE at stream definition: the contract already
-    // freezes the index for the stream's lifetime, so the former
-    // per-batch coarse read + head() was pure driver IO and latency
-    // for a constant
-    val dim =
-      new graft.operators.Knn.IvfPqQuantizer(queries.sparkSession, dir).dim
+    val store = PersistedStore.IvfPq.open(queries.sparkSession, dir)
     queries.writeStream
       .outputMode(OutputMode.Append)
       .foreachBatch { (batch: Dataset[Row], epochId: Long) =>
         if (!batch.isEmpty) {
-          sink(graft.operators.Knn.searchIvfPqIndex(batch.sparkSession,
-            dir, batch.toDF(), idCol, vecCol, dim, k, nProbe,
-            rescoreWith = rescoreWith), epochId)
+          sink(Knn.searchIvfPqStore(batch.sparkSession, store, batch.toDF(),
+            idCol, vecCol, k, nProbe, rescoreWith = rescoreWith), epochId)
         }
       }
   }
@@ -503,11 +502,8 @@ object Streams {
     * against the PERSISTED byte-codes dir (the scan reads only the
     * int-code column; the stored affine grid reconstructs map-side;
     * the `overscan·k` shortlist re-ranks against `corpus`
-    * full-precision vectors). The grid — and with it `dim` — is
-    * resolved ONCE at stream definition (the G16 no-per-batch-IO
-    * rule): the serving contract freezes the store for the stream's
-    * lifetime, so per-batch sidecar reads would be pure driver
-    * latency for a constant.
+    * full-precision vectors). The store is opened ONCE, at stream
+    * definition (G16's rule): the grid is never re-read per batch.
     *
     * Per-query results are independent (the salted top-k windows all
     * partition by query id), so the union over micro-batches is
@@ -521,15 +517,13 @@ object Streams {
                      overscan: Int = 4)
                     (sink: (DataFrame, Long) => Unit)
       : DataStreamWriter[Row] = {
-    val dim = graft.operators.Knn
-      .sqIndexGrid(queries.sparkSession, dir)._1.length
+    val store = PersistedStore.Sq.open(queries.sparkSession, dir)
     queries.writeStream
       .outputMode(OutputMode.Append)
       .foreachBatch { (batch: Dataset[Row], epochId: Long) =>
         if (!batch.isEmpty) {
-          sink(graft.operators.Knn.searchSqIndex(batch.sparkSession,
-            dir, batch.toDF(), idCol, vecCol, dim, k, corpus,
-            overscan), epochId)
+          sink(Knn.searchSqStore(batch.sparkSession, store, batch.toDF(),
+            idCol, vecCol, k, corpus, overscan), epochId)
         }
       }
   }
@@ -537,60 +531,97 @@ object Streams {
   /** G19: streaming vector INGEST-append — the write half of the
     * vector-store serving story (G16/G18 read the stores; this is the
     * loop that continuously FEEDS them), [[dedupIngestStream]]'s G17
-    * shape for embeddings: each micro-batch of vectors probes the
-    * persisted store for near-dups (exact-rescored top-`probeK`
-    * against the full-precision `vecStoreDir` twin), every batch
-    * vector gets a verdict row `(id, is_dup, match_id, best_cosine)`,
-    * and the SURVIVORS (best exact cosine < `dupCosine`) append to
-    * BOTH the index (encode under the FROZEN quantizers — a pure
-    * file-add) and the vector store, so the next micro-batch dedups
-    * against them. `store` picks the layout: "ivfpq"
+    * loop ([[ingestStream]]) for embeddings: each micro-batch of
+    * vectors probes the persisted store for near-dups (exact-rescored
+    * top-`probeK` against the full-precision `vecStoreDir` twin), every
+    * batch vector gets a verdict row `(id, is_dup, match_id,
+    * best_cosine)`, and the SURVIVORS (best exact cosine < `dupCosine`)
+    * append to BOTH the index (encode under the FROZEN quantizers — a
+    * pure file-add) and the vector store (marker `.vec`), so the next
+    * micro-batch dedups against them. The layout — IVF×PQ
     * ([[graft.operators.Knn.searchIvfPqIndex]] /
-    * [[graft.operators.Knn.appendToIvfPqIndex]]) or "sq"
+    * [[graft.operators.Knn.appendToIvfPqIndex]]) or SQ8
     * ([[graft.operators.Knn.searchSqIndex]] /
-    * [[graft.operators.Knn.appendToSqIndex]]). Caller bootstraps the
-    * two directories consistently (build the index from a corpus and
-    * write the same corpus' `(id, vec)` rows to `vecStoreDir`).
-    * `dim` is resolved ONCE at stream definition from the store's own
-    * sidecar (the G16/G18 no-per-batch-IO rule).
-    *
-    * G17's contract carries over verbatim: duplicates are judged vs
-    * HISTORY (two near-dup vectors inside one micro-batch both
-    * survive — corpus-level dedup is C6/C18's job); the probe result
-    * is localCheckpointed BEFORE the appends mutate the directories
-    * its plan reads; state lives in the directories, not the stream.
-    * At-least-once hardening is G17's marker set under
-    * `_epochs/<streamId>/<epoch>`: `.done` skips committed epochs,
-    * `.idx`/`.vec` make each append at-most-once across redeliveries,
-    * and the probe EXCLUDES matches whose history side is one of the
-    * batch's own ids so a retry over a half-committed append
-    * reproduces the original verdicts — here the exclusion trims the
-    * top-`probeK` candidate list, so `probeK` > 1 keeps a true
-    * history match visible behind a batch-self hit (the flat-append
-    * residual window is G17's, documented there).
+    * [[graft.operators.Knn.appendToSqIndex]]) — is detected from the
+    * store's sidecars, which are read once, when the stream is defined.
+    * Caller bootstraps the two directories consistently (build the
+    * index from a corpus and write the same corpus' `(id, vec)` rows to
+    * `vecStoreDir`). The loop's self-match exclusion trims the
+    * top-`probeK` candidate list, so `probeK` > 1 keeps a true history
+    * match visible behind a batch-self hit.
     */
   def vectorIngestStream(vectors: DataFrame, idCol: String,
                          vecCol: String, indexDir: String,
-                         vecStoreDir: String, store: String = "ivfpq",
+                         vecStoreDir: String,
                          dupCosine: Double = 0.995, probeK: Int = 4,
                          streamId: String = "default")
                         (sink: (DataFrame, Long) => Unit)
       : DataStreamWriter[Row] = {
-    require(store == "ivfpq" || store == "sq",
-      s"store must be 'ivfpq' or 'sq', got $store")
-    val spark0 = vectors.sparkSession
-    // the store's dim, resolved once at stream definition
-    val dim =
-      if (store == "sq")
-        graft.operators.Knn.sqIndexGrid(spark0, indexDir)._1.length
-      else new graft.operators.Knn.IvfPqQuantizer(spark0, indexDir).dim
-    vectors.writeStream
+    val store = PersistedStore.open(vectors.sparkSession, indexDir) match {
+      case v: PersistedStore.VectorStore => v
+      case _ => throw new IllegalArgumentException(
+        s"$indexDir is an LSH store, not a vector store")
+    }
+    ingestStream(vectors, store, idCol, vecCol, vecStoreDir, "vec",
+        "cosine", streamId) { (batch, history) =>
+      store.search(batch.sparkSession, batch, idCol, vecCol, probeK, history)
+        .filter(col("cosine") >= dupCosine)
+        .select(col("query_id").as("batch_id"),
+          col("neighbor_id").as("match_id"), col("cosine"))
+    }(sink)
+  }
+
+  /** The epoch-marked ingest loop of G17 ([[dedupIngestStream]]) and
+    * G19 ([[vectorIngestStream]]). Per micro-batch: `probe` the batch
+    * against the store and the `sideDir` history (its duplicate pairs
+    * `(batch_id, match_id, <score>)`), one verdict row `(id, is_dup,
+    * match_id, best_<score>)` per batch record, the SURVIVORS'
+    * `(idCol, valueCol)` appended to the store and to `sideDir`, then
+    * the sink.
+    *
+    * Duplicates are judged vs HISTORY (the store as of the batch's
+    * arrival): two near-dups inside ONE micro-batch both survive (a
+    * corpus-level pass owns in-batch dedup). The verdict and survivors
+    * are localCheckpointed BEFORE the appends, because the probe plan
+    * reads the data files lazily and a post-append action would re-list
+    * them and match the batch against itself; their blocks are freed
+    * once the sink has consumed them. State lives in the directories,
+    * not the stream.
+    *
+    * At-least-once hardening: `foreachBatch` may re-deliver an epoch
+    * after a partial failure, and the body runs three non-atomic
+    * mutations (store append, side append, sink). Three guards make a
+    * redelivery converge: (1) an `_epochs/<streamId>/<epoch>.done`
+    * marker in the store dir skips fully-committed epochs; (2) the
+    * probe EXCLUDES pairs whose history side is one of the batch's own
+    * ids, so a retry over a half-committed append reproduces the
+    * ORIGINAL verdict; (3) per-mutation markers (`.idx`,
+    * `.<sideMarker>`) make each append run at most once. Residual
+    * window: a crash BETWEEN an append completing and its marker write
+    * re-appends that batch's rows on retry — verdicts stay correct
+    * (guard 2; max_by is duplicate-insensitive) but the store carries
+    * duplicate rows until a repair or rebuild (fsck flags them); closing
+    * it fully would need an atomic-rename staging layout, which the
+    * pure-file-add appends deliberately trade away.
+    *
+    * `streamId` namespaces the markers: epoch numbers restart at 0
+    * with a FRESH checkpoint, so a new logical stream over an existing
+    * store must pass a new streamId (or its early epochs would be
+    * skipped as already-committed), while a restart-from-checkpoint
+    * keeps the same one so redelivered epochs ARE recognized.
+    */
+  private def ingestStream(input: DataFrame, store: PersistedStore.Store,
+      idCol: String, valueCol: String, sideDir: String, sideMarker: String,
+      score: String, streamId: String)
+      (probe: (DataFrame, DataFrame) => DataFrame)
+      (sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+    input.writeStream
       .outputMode(OutputMode.Append)
       .foreachBatch { (batch0: Dataset[Row], epochId: Long) =>
         val batch = batch0.toDF()
         val spark = batch0.sparkSession
         val epochsRoot = new org.apache.hadoop.fs.Path(
-          new org.apache.hadoop.fs.Path(indexDir, "_epochs"), streamId)
+          new org.apache.hadoop.fs.Path(store.dir, "_epochs"), streamId)
         val fs = epochsRoot.getFileSystem(
           spark.sparkContext.hadoopConfiguration)
         def marker(suffix: String) =
@@ -598,59 +629,35 @@ object Streams {
         def commit(suffix: String): Unit =
           fs.create(marker(suffix), true).close()
         if (fs.exists(marker("done"))) {
-          // redelivered fully-committed epoch: everything already ran
+          // guard (1): a redelivered committed epoch — everything ran
         } else if (!batch.isEmpty) {
-          // the epoch's checkpoints (verdict, survivors) are freed once
-          // the sink has consumed them — a long-running stream must not
-          // accumulate one block set per micro-batch
           StoreMaintenance.freeingBlocks(spark) {
-            val vecStore = spark.read.parquet(vecStoreDir)
-            val hits =
-              if (store == "sq")
-                graft.operators.Knn.searchSqIndex(spark, indexDir, batch,
-                  idCol, vecCol, dim, probeK, corpus = vecStore)
-              else
-                graft.operators.Knn.searchIvfPqIndex(spark, indexDir,
-                  batch, idCol, vecCol, dim, probeK,
-                  rescoreWith = Some(vecStore))
-            // G17 guard (2): drop candidates whose history side is a
-            // batch id (retry over a half-committed append)
-            val best = hits
-              .join(batch.select(batch(idCol).cast("long")
-                  .as("neighbor_id")),
-                Seq("neighbor_id"), "left_anti")
-              .filter(col("cosine") >= dupCosine)
-              .groupBy(col("query_id"))
-              .agg(max_by(col("neighbor_id"),
-                  struct(col("cosine"), -col("neighbor_id")))
-                  .as("match_id"),
-                max(col("cosine")).as("best_cosine"))
-            // EAGER verdicts/survivors before the appends below mutate
-            // the directories the probe plan reads
+            val pairs = probe(batch, spark.read.parquet(sideDir))
+              .join(batch.select(batch(idCol).as("match_id")),
+                Seq("match_id"), "left_anti") // guard (2)
+            val best = pairs.groupBy(col("batch_id"))
+              .agg(max_by(col("match_id"),
+                  struct(col(score), -col("match_id"))).as("match_id"),
+                max(col(score)).as(s"best_$score"))
+            // EAGER: pin the verdict before the appends below mutate the
+            // directories its plan reads
             val verdict = batch.select(col(idCol))
-              .join(best, batch(idCol).cast("long") === best("query_id"),
-                "left")
+              .join(best, batch(idCol) === best("batch_id"), "left")
               .select(col(idCol), col("match_id").isNotNull.as("is_dup"),
-                col("match_id"), col("best_cosine"))
+                col("match_id"), col(s"best_$score"))
               .localCheckpoint()
-            val survivors = batch.select(col(idCol), col(vecCol))
-              .join(verdict.filter(col("is_dup"))
-                  .select(col(idCol)),
+            val survivors = batch.select(col(idCol), col(valueCol))
+              .join(verdict.filter(col("is_dup")).select(col(idCol)),
                 Seq(idCol), "left_anti")
               .localCheckpoint()
-            // G17 guard (3): each append at most once across retries
+            // guard (3): each append at most once across redeliveries
             if (!fs.exists(marker("idx"))) {
-              if (store == "sq")
-                graft.operators.Knn.appendToSqIndex(survivors, idCol,
-                  vecCol, indexDir, dim)
-              else
-                graft.operators.Knn.appendToIvfPqIndex(survivors, idCol,
-                  vecCol, indexDir, dim)
+              store.append(survivors, idCol, valueCol)
               commit("idx")
             }
-            if (!fs.exists(marker("vec"))) {
-              survivors.write.mode("append").parquet(vecStoreDir)
-              commit("vec")
+            if (!fs.exists(marker(sideMarker))) {
+              survivors.write.mode("append").parquet(sideDir)
+              commit(sideMarker)
             }
             sink(verdict, epochId)
           }
@@ -659,7 +666,6 @@ object Streams {
           commit("done") // empty epoch: nothing to mutate
         }
       }
-  }
 
   /** G20: streaming store MAINTENANCE — the babysitter loop that
     * closes the advisor story: G19 ingests continuously, so
@@ -823,131 +829,38 @@ object Streams {
   }
 
   /** G17: streaming ingest dedup — the crawl-ingest LOOP the C25
-    * persisted LSH index exists for, run as a stream: each micro-batch
-    * of documents probes the index
-    * ([[graft.operators.Dedup.incrementalMinhashIndexed]] — the flat
-    * bucket table filtered map-side to the batch's colliding keys,
+    * persisted LSH index exists for, run as a stream ([[ingestStream]],
+    * where its contract and at-least-once guards are documented): each
+    * micro-batch of documents probes the index
+    * ([[graft.operators.Dedup.incrementalMinhash]] over the store's
+    * bucket table, filtered map-side to the batch's colliding keys,
     * candidate docs' text served from `docStoreDir`), every batch doc
     * gets a verdict row `(id, is_dup, match_id, best_jaccard)`, and the
-    * SURVIVORS (no history match) append to BOTH the index
-    * (`appendToLshIndex` — a pure file-add) and the doc store, so the
-    * next micro-batch dedups against them. Caller bootstraps the two
+    * SURVIVORS (no history match) append to BOTH the index (a pure
+    * file-add) and the doc store (marker `.doc`), so the next
+    * micro-batch dedups against them — exactly like the sequential
+    * batch loop this is spec-pinned against. Caller bootstraps the two
     * directories consistently: `buildLshIndex(corpus, …, indexDir)` and
     * the same corpus' `(id, text)` written to `docStoreDir` (an empty
-    * corpus is a legal bootstrap).
-    *
-    * Contract notes: duplicates are judged vs HISTORY (the index as of
-    * the batch's arrival) — two near-dup docs inside ONE micro-batch
-    * both survive and both enter the index, exactly like the
-    * sequential batch loop this is spec-pinned against (a corpus-level
-    * C3/C10 pass owns in-corpus dedup); the probe result is
-    * localCheckpointed BEFORE the append, because the probe plan reads
-    * `indexDir/buckets` lazily and a post-append action would re-list
-    * the directory and match the batch against itself. State lives in
-    * the two directories, not the stream — a restart resumes from
-    * whatever was durably appended.
-    *
-    * At-least-once hardening: Spark's `foreachBatch` contract may
-    * re-deliver an epoch after a partial failure, and this body runs
-    * three non-atomic mutations (index append, doc-store append,
-    * sink). Three guards make a redelivery converge instead of
-    * corrupting state: (1) an `_epochs/<id>.done` marker in
-    * `indexDir` skips fully-committed epochs outright; (2) the probe
-    * EXCLUDES pairs whose history side is one of the batch's own ids,
-    * so a retry whose earlier attempt already appended survivors
-    * reproduces the ORIGINAL verdict (batch docs never match
-    * themselves or same-batch peers through the half-committed
-    * index); (3) per-mutation markers (`.idx`, `.doc`) make each
-    * append run at most once across retries. Residual window: a crash
-    * BETWEEN an append completing and its marker write re-appends
-    * that batch's rows on retry — verdicts stay correct (guard 2, and
-    * the per-pair max_by is duplicate-insensitive) but the index
-    * carries duplicate bucket rows until a rebuild; closing it fully
-    * would need an atomic-rename staging layout, which the flat
-    * band-partitioned format deliberately trades away to keep appends
-    * pure file-adds.
-    *
-    * `streamId` namespaces the epoch markers
-    * (`_epochs/<streamId>/<epoch>.*`): epoch numbers restart at 0
-    * with a FRESH checkpoint, so a new logical stream over an
-    * existing index must pass a new streamId (or its early epochs
-    * would be skipped as already-committed), while a
-    * restart-from-checkpoint keeps the same one so redelivered
-    * epochs ARE recognized.
+    * corpus is a legal bootstrap). The index's signature sidecar is
+    * read once, when the stream is defined.
     */
   def dedupIngestStream(docs: DataFrame, idCol: String, textCol: String,
                         indexDir: String, docStoreDir: String,
                         threshold: Double = 0.7, maxBucket: Int = 1000,
                         streamId: String = "default")
                        (sink: (DataFrame, Long) => Unit)
-      : DataStreamWriter[Row] =
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch0: Dataset[Row], epochId: Long) =>
-        val batch = batch0.toDF()
-        val spark0 = batch0.sparkSession
-        val epochsRoot = new org.apache.hadoop.fs.Path(
-          new org.apache.hadoop.fs.Path(indexDir, "_epochs"), streamId)
-        val fs = epochsRoot.getFileSystem(
-          spark0.sparkContext.hadoopConfiguration)
-        def marker(suffix: String) =
-          new org.apache.hadoop.fs.Path(epochsRoot, s"$epochId.$suffix")
-        def commit(suffix: String): Unit =
-          fs.create(marker(suffix), true).close()
-        if (fs.exists(marker("done"))) {
-          // redelivered fully-committed epoch (at-least-once
-          // foreachBatch): every mutation and the sink already ran
-        } else if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          // the probe's internal persists (shingle tables + candidate
-          // set) and the epoch's checkpoints are freed once the sink has
-          // consumed them — a long-running stream must not accumulate
-          // one block set per micro-batch
-          StoreMaintenance.freeingBlocks(spark) {
-            val corpus = spark.read.parquet(docStoreDir)
-            // guard (2): drop pairs whose HISTORY side is a batch id —
-            // on a clean run no such pair exists (the batch was never in
-            // the index), and on a retry after a half-committed append
-            // the probe reproduces the original verdict instead of
-            // matching batch docs against their own earlier append
-            val rawPairs = graft.operators.Dedup.incrementalMinhashIndexed(
-                indexDir, corpus, batch, idCol, textCol, threshold,
-                maxBucket)
-              .join(batch.select(batch(idCol).as("corpus_id")),
-                Seq("corpus_id"), "left_anti")
-            // EAGER: pin the probe result before the appends below
-            // mutate the directories its plan reads
-            val pairs = rawPairs.localCheckpoint()
-            val best = pairs.groupBy(col("batch_id"))
-              .agg(max_by(col("corpus_id"),
-                  struct(col("jaccard"), -col("corpus_id"))).as("match_id"),
-                max(col("jaccard")).as("best_jaccard"))
-            val verdict = batch.select(col(idCol))
-              .join(best, batch(idCol) === best("batch_id"), "left")
-              .select(col(idCol), col("match_id").isNotNull.as("is_dup"),
-                col("match_id"), col("best_jaccard"))
-              .localCheckpoint()
-            val survivors = batch.select(col(idCol), col(textCol))
-              .join(pairs.select(col("batch_id").as(idCol)).distinct(),
-                Seq(idCol), "left_anti")
-              .localCheckpoint()
-            // guard (3): each append at most once across redeliveries
-            if (!fs.exists(marker("idx"))) {
-              graft.operators.Dedup.appendToLshIndex(survivors, idCol,
-                textCol, indexDir)
-              commit("idx")
-            }
-            if (!fs.exists(marker("doc"))) {
-              survivors.write.mode("append").parquet(docStoreDir)
-              commit("doc")
-            }
-            sink(verdict, epochId)
-          }
-          commit("done")
-        } else {
-          commit("done") // empty epoch: nothing to mutate, mark applied
-        }
-      }
+      : DataStreamWriter[Row] = {
+    val store = PersistedStore.Lsh.open(docs.sparkSession, indexDir)
+    ingestStream(docs, store, idCol, textCol, docStoreDir, "doc", "jaccard",
+        streamId) { (batch, history) =>
+      Dedup.incrementalMinhash(history, batch, idCol, textCol, store.k,
+          store.perms, store.bands, threshold, maxBucket,
+          bucketIndex = Some(store.buckets(batch.sparkSession)))
+        .select(col("batch_id"), col("corpus_id").as("match_id"),
+          col("jaccard"))
+    }(sink)
+  }
 
   /** G4: streaming enrichment lookup join — the reference's
     * HBaseRowDataLookupFunction role (point-GET a dimension row per

@@ -482,7 +482,8 @@ class DedupSpec extends SparkSpec {
     val batch = docs.filter(isBatch)
     val dir = java.nio.file.Files.createTempDirectory("lsh_idx").toString
     Dedup.buildLshIndex(corpus, "doc_id", "text", dir)
-    assert(Dedup.lshIndexParams(spark, dir) == ((3, 128, 16)))
+    val store = PersistedStore.Lsh.open(spark, dir)
+    assert((store.k, store.perms, store.bands) == ((3, 128, 16)))
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getAs[Long]("batch_id"), r.getAs[Long]("corpus_id"),
         math.round(r.getAs[Double]("jaccard") * 1e6))).toSet
@@ -723,7 +724,7 @@ class DedupSpec extends SparkSpec {
     val cp = PersistedStore.advise(spark, dir).head()
     assert(cp.getAs[String]("action") == "compact",
       s"fragmented index must advise compact: $cp")
-    assert(cp.getAs[String]("reason").contains("compactLshIndex"))
+    assert(cp.getAs[String]("reason").contains("graft_store_compact"))
     // a torn append corrupts: repair wins over the fragmentation
     Seq((1234L, 8888L, 0)).toDF("bkey", "corpus_id", "band")
       .write.mode("append").partitionBy("band").parquet(s"$dir/buckets")

@@ -1208,6 +1208,7 @@ class KnnSpec extends SparkSpec {
     val cp = advise(emb)
     assert(cp.getAs[String]("action") == "compact",
       s"fragmented store must advise compact: $cp")
+    assert(cp.getAs[String]("reason").contains("graft_store_compact"))
     // a replayed append duplicates ids: fsck flags, and repair WINS
     // over the still-present fragmentation (precedence)
     Knn.appendToIvfPqIndex(emb.limit(30), "vec_id", "embedding", dir,
@@ -1240,6 +1241,7 @@ class KnnSpec extends SparkSpec {
     val scp = adviseSq(evens, minBytes = 4L << 20)
     assert(scp.getAs[String]("action") == "compact",
       s"small-file store must advise compact: $scp")
+    assert(scp.getAs[String]("reason").contains("graft_store_compact"))
   }
 
   test("repairSqIndex: malformed rows drop, replayed-append dups " +
@@ -1413,6 +1415,9 @@ class KnnSpec extends SparkSpec {
     Knn.buildSqIndex(emb, "vec_id", "embedding", sqDir, dim = 64)
     emb.createOrReplaceTempView("knn_jobs_corpus")
     queries.createOrReplaceTempView("knn_jobs_queries")
+    // opened before the counting starts: its search pays no sidecar read
+    // the open already paid
+    val ivfStore = PersistedStore.IvfPq.open(spark, ivfDir)
     val sc = spark.sparkContext
     val marker = "graft.test.jobMarker"
     val started = new java.util.concurrent.atomic.AtomicInteger
@@ -1457,6 +1462,8 @@ class KnnSpec extends SparkSpec {
       "sq" -> jobs(Knn.sq(emb, queries, "vec_id", "embedding", 64, 5)),
       "searchIvfPqIndex" -> jobs(Knn.searchIvfPqIndex(spark, ivfDir,
         queries, "vec_id", "embedding", 64, 5, rescoreWith = Some(emb))),
+      "searchIvfPqStore" -> jobs(Knn.searchIvfPqStore(spark, ivfStore,
+        queries, "vec_id", "embedding", 5, rescoreWith = Some(emb))),
       "searchSqIndex" -> jobs(Knn.searchSqIndex(spark, sqDir, queries,
         "vec_id", "embedding", 64, 5, corpus = emb)),
       "graft_knn_index_search" -> jobs(spark.sql(
@@ -1465,7 +1472,10 @@ class KnnSpec extends SparkSpec {
       "graft_knn_index_range" -> jobs(spark.sql(
         s"SELECT * FROM graft_knn_index_range('$ivfDir', " +
           "'knn_jobs_queries', 'knn_jobs_corpus', 'vec_id', 'embedding', " +
-          "0.3)"))
+          "0.3)")),
+      "graft_knn_index_sq" -> jobs(spark.sql(
+        s"SELECT * FROM graft_knn_index_sq('$sqDir', 'knn_jobs_queries', " +
+          "'knn_jobs_corpus', 'vec_id', 'embedding', 5)"))
     ) finally sc.removeSparkListener(listener)
     info(counts.map { case (n, c) => s"$n=$c" }.mkString(" "))
     // the measured counts (schema inference, quantizer reads, probed
@@ -1473,12 +1483,16 @@ class KnnSpec extends SparkSpec {
     // fails here
     val budget = Map("pq" -> 2, "pqTrained" -> 3, "ivfpq" -> 4,
       "ivfpqResidual" -> 4, "sq" -> 2, "searchIvfPqIndex" -> 10,
-      "searchSqIndex" -> 3, "graft_knn_index_search" -> 12,
-      "graft_knn_index_range" -> 9)
+      "searchIvfPqStore" -> 8, "searchSqIndex" -> 3,
+      "graft_knn_index_search" -> 10, "graft_knn_index_range" -> 7,
+      "graft_knn_index_sq" -> 3)
     counts.foreach { case (name, n) =>
       assert(n <= budget(name), s"$name ran $n eager jobs, budget " +
         budget(name))
     }
+    val c = counts.toMap
+    assert(c("searchIvfPqStore") < c("searchIvfPqIndex"),
+      s"a search through an open handle must skip the open's jobs: $c")
   }
 
 }

@@ -860,4 +860,57 @@ class StoreMaintenanceSpec extends SparkSpec {
       s"LSH drift must point at lshIndexRecall: $drift")
   }
 
+  test("a store handle sees rows appended after it was opened: IVF×PQ " +
+      "and SQ8 search and the LSH probe find the ids the public append " +
+      "verbs add") {
+    def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
+    val Fresh = 1000000L
+    // vector stores: built from the even ids; the odd queries' exact
+    // copies, re-keyed past Fresh, arrive by append after the open
+    val emb = sf("embeddings").select("vec_id", "embedding")
+    val evens = emb.filter(col("vec_id") % 2 === 0)
+    val queries = emb.filter(col("vec_id") % 2 === 1 && col("vec_id") < 60)
+    val delta = queries.select((col("vec_id") + Fresh).as("vec_id"),
+      col("embedding"))
+    val corpus = evens.unionByName(delta)
+    Seq[(String, String => Unit, String => Unit)](
+      ("ivfpq",
+        Knn.buildIvfPqIndex(evens, "vec_id", "embedding", _, dim = 64),
+        Knn.appendToIvfPqIndex(delta, "vec_id", "embedding", _, dim = 64)),
+      ("sq", Knn.buildSqIndex(evens, "vec_id", "embedding", _, dim = 64),
+        Knn.appendToSqIndex(delta, "vec_id", "embedding", _, dim = 64))
+    ).foreach { case (kind, build, append) =>
+      val dir = tmp(s"handle_$kind")
+      build(dir)
+      val store = PersistedStore.open(spark, dir) match {
+        case v: PersistedStore.VectorStore => v
+        case other => fail(s"$kind opened as ${other.layout.kind}")
+      }
+      def copiesFound(): Long = store.search(spark, queries, "vec_id",
+          "embedding", 5, corpus)
+        .filter(col("neighbor_id") === col("query_id") + Fresh).count()
+      assert(copiesFound() == 0L, s"$kind: nothing appended yet")
+      append(dir)
+      assert(copiesFound() == 30L, s"$kind: a search through the handle " +
+        "opened before the append must find every appended copy")
+    }
+    // LSH: the odd docs' exact-text copies, re-keyed past Fresh
+    val docs = sf("documents").select("doc_id", "text")
+    val base = docs.filter(col("doc_id") % 2 === 0)
+    val batch = docs.filter(col("doc_id") % 2 === 1 && col("doc_id") < 60)
+    val moved = batch.select((col("doc_id") + Fresh).as("doc_id"),
+      col("text"))
+    val lsh = tmp("handle_lsh")
+    Dedup.buildLshIndex(base, "doc_id", "text", lsh)
+    val store = PersistedStore.Lsh.open(spark, lsh)
+    def copiesFound(): Long = Dedup.incrementalMinhash(
+        base.unionByName(moved), batch, "doc_id", "text", store.k,
+        store.perms, store.bands, bucketIndex = Some(store.buckets(spark)))
+      .filter(col("corpus_id") === col("batch_id") + Fresh).count()
+    assert(copiesFound() == 0L, "lsh: nothing appended yet")
+    Dedup.appendToLshIndex(moved, "doc_id", "text", lsh)
+    assert(copiesFound() == 30L, "lsh: a probe through the handle opened " +
+      "before the append must find every appended copy")
+  }
+
 }

@@ -1356,7 +1356,7 @@ class StreamsSpec extends SparkSpec {
         .ArrayBuffer[(Long, Boolean, Option[Long])]()
       val q = Streams.vectorIngestStream(
         input.toDF().toDF("vec_id", "embedding"), "vec_id", "embedding",
-        idx, vst, store = store) { (verdict, _) =>
+        idx, vst) { (verdict, _) =>
         val rows = verdict.collect().map(r => (r.getAs[Long]("vec_id"),
           r.getAs[Boolean]("is_dup"),
           Option(r.getAs[java.lang.Long]("match_id")).map(_.toLong)))
@@ -1379,7 +1379,7 @@ class StreamsSpec extends SparkSpec {
         val input2 = MemoryStream[(Long, Seq[Float])]
         val q2 = Streams.vectorIngestStream(
           input2.toDF().toDF("vec_id", "embedding"), "vec_id",
-          "embedding", idx, vst, store = store) { (verdict, _) =>
+          "embedding", idx, vst) { (verdict, _) =>
           buf.synchronized { buf += ((verdict.count(), false, None)) }
         }.start()
         try {
@@ -1777,7 +1777,7 @@ class StreamsSpec extends SparkSpec {
     val vBefore = sc.getPersistentRDDs.size
     val vin = MemoryStream[(Long, Seq[Float])]
     val vq = Streams.vectorIngestStream(vin.toDF().toDF("vec_id",
-        "embedding"), "vec_id", "embedding", idx, vst, store = "sq") {
+        "embedding"), "vec_id", "embedding", idx, vst) {
       (v, _) => v.collect()
     }.start()
     try (0 until 3).foreach { i =>
