@@ -666,9 +666,8 @@ object GraftExtensions {
           // the compaction's cell semantics without the rewrite:
           // deletes resolved, versions retained — same rows the real
           // call would hand back from outDir
-          operators.Compaction.retainVersions(
-            operators.Compaction.applyDeletes(
-              operators.BulkLoad.readHFiles(spark, inDir)), versions)
+          operators.Compaction.resolve(
+            operators.BulkLoad.readHFiles(spark, inDir), versions)
             .queryExecution.logical
         } else {
           operators.Compaction.compact(spark, inDir, outDir,

@@ -192,8 +192,8 @@ object BulkLoad {
   def readHFiles(spark: SparkSession, path: String): DataFrame =
     readHFiles(spark, path, HFileDir.Glob)
 
-  /** [[readHFiles]] with an explicit file glob under `path` — e.g. the
-    * `epoch=N`-prefixed hfile glob, to scan every micro-batch run a
+  /** [[readHFiles]] with an explicit file glob under `path` — e.g. a
+    * `HFileDir.runsGlob`, to scan every micro-batch run a
     * streaming sink accumulated as ONE constant-size plan (the run a
     * cell came from is recoverable from the `file` column), instead of
     * an N-way union whose analysis cost grows with the epoch count.

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.sources.HFile
+import graft.sources.{HFile, HFileDir}
 
 /** Major compaction for bulk-load HFile directories (SURVEY.md §2 B14).
   *
@@ -151,26 +151,55 @@ object Compaction {
               encoding: String = "none",
               familyTtlMs: Map[String, Long] = Map.empty,
               nowMs: Long = -1L): Unit = {
-    require(familyTtlMs.isEmpty || nowMs >= 0,
-      "TTL compaction needs an explicit nowMs (expiry must be deterministic)")
     // cluster-written inputs may carry cell tags (TTLs) and mvcc ids;
     // a rewrite that drops them silently changes semantics — probe the
     // file infos (file-count-scale short reads) and preserve the layout
-    val carryTags = BulkLoad.dirHasTagsOrMvcc(spark, inDir)
-    val cells0 = BulkLoad.readHFiles(spark, inDir)
-    // cell-TTL tags only exist when the tags layout is present; family
-    // TTLs apply either way
-    val cells =
-      if (nowMs >= 0 && (familyTtlMs.nonEmpty || carryTags))
-        applyTtl(cells0, nowMs, familyTtlMs)
-      else cells0
-    val kept = retainVersions(applyDeletes(cells), versions)
+    rewrite(BulkLoad.readHFiles(spark, inDir), outDir,
+      carryTags = BulkLoad.dirHasTagsOrMvcc(spark, inDir),
+      collectMarkers = true, versions, numPartitions, blockSize,
+      compression, encoding, familyTtlMs, nowMs)
+  }
+
+  /** The cells a compaction keeps, in the compaction-scanner order: TTL
+    * expiry ([[applyTtl]]; cell-TTL tags need the tags layout,
+    * `withTags`), then marker resolution ([[applyDeletes]]) and
+    * `versions` retention ([[retainVersions]]). A minor fold
+    * (`collectMarkers = false`) expires PUTS only and carries markers
+    * and every version verbatim.
+    */
+  private[graft] def resolve(cells: DataFrame, versions: Int,
+                             collectMarkers: Boolean = true,
+                             familyTtlMs: Map[String, Long] = Map.empty,
+                             nowMs: Long = -1L,
+                             withTags: Boolean = false): DataFrame = {
+    val live =
+      if (nowMs >= 0 && (familyTtlMs.nonEmpty || withTags))
+        applyTtl(cells, nowMs, familyTtlMs, putsOnly = !collectMarkers)
+      else cells
+    if (collectMarkers) retainVersions(applyDeletes(live), versions)
+    else live
+  }
+
+  /** [[resolve]], then one range-sorted rewrite into `outDir`; a minor
+    * fold keeps each cell's key type, a tags+mvcc input its layout.
+    */
+  private def rewrite(cells: DataFrame, outDir: String, carryTags: Boolean,
+                      collectMarkers: Boolean, versions: Int,
+                      numPartitions: Int, blockSize: Int,
+                      compression: String, encoding: String,
+                      familyTtlMs: Map[String, Long], nowMs: Long): Unit = {
+    require(familyTtlMs.isEmpty || nowMs >= 0,
+      "TTL compaction needs an explicit nowMs (expiry must be deterministic)")
+    val kept = resolve(cells, versions, collectMarkers, familyTtlMs, nowMs,
+      withTags = carryTags)
     val prepared = kept
       .select(Seq(col("bucket"), col("rowkey").as("salted_key"),
         col("family"), col("qualifier"), col("ts"), col("value")) ++
+        (if (collectMarkers) Seq.empty else Seq(col("key_type"))) ++
         (if (carryTags) Seq(col("tags"), col("mvcc")) else Seq.empty): _*)
       .repartitionByRange(numPartitions, col("bucket"), col("salted_key"))
     BulkLoad.writeHFiles(prepared, outDir, tsCol = Some("ts"),
+      typeCol = if (collectMarkers) scala.None else Some("key_type"),
       blockSize = blockSize, compression = compression, encoding = encoding,
       tagsCol = if (carryTags) Some("tags") else None,
       mvccCol = if (carryTags) Some("mvcc") else None)
@@ -218,12 +247,13 @@ object Compaction {
     best.map(_._3)
   }
 
-  /** Major compaction across the `epoch=N` run directories a
+  /** Major compaction across the runs ([[HFileDir.runs]]) a
     * [[graft.streaming.Streams.bulkLoadStream]] sink accumulates: N
     * micro-batches leave N overlapping runs that every reader must
     * merge; this folds them into ONE set of non-overlapping sorted runs
     * per bucket under `outDir` (readable by `graft-hfile` / readHFiles,
-    * `_manifest` included).
+    * `_manifest` included). The input runs are left in place; the sink
+    * publishes `outDir` ([[HFileDir.publishFold]]) before it deletes them.
     *
     * Epoch-aware precedence, the HBase sequence-id analogue: when two
     * epochs wrote the exact same cell coordinate (rowkey, family,
@@ -231,32 +261,21 @@ object Compaction {
     * cells all carry ts=0 — the HIGHEST epoch's value is the cell, and
     * older epochs' same-coordinate cells are discarded before marker
     * resolution. Across *different* timestamps, plain HBase semantics
-    * apply unchanged via [[applyDeletes]]/[[retainVersions]]: delete
-    * markers mask by timestamp regardless of which epoch wrote them
-    * (HBase masks a same-ts put written after the marker too, until a
-    * major compaction collects the marker — which is what this is).
-    *
-    * The input epochs are left in place; callers swap `outDir` in and
-    * delete the consumed `epoch=*` directories once the compacted run
-    * is live.
+    * apply unchanged via [[resolve]]: delete markers mask by timestamp
+    * regardless of which epoch wrote them (HBase masks a same-ts put
+    * written after the marker too, until a major compaction collects
+    * the marker — which is what this is).
     *
     * `epochs` restricts the fold to an explicit CONTIGUOUS id window
     * (e.g. one picked by [[selectCompaction]]); runs outside it are
     * untouched and keep their precedence relative to the fold.
     *
-    * `familyTtlMs`/`nowMs` apply [[applyTtl]] before marker resolution
-    * (the compaction-scanner order); in minor mode only PUTS expire —
-    * delete markers travel verbatim until a major fold collects them.
-    *
-    * `collectMarkers = false` is the MINOR-compaction mode: the fold
-    * merges runs and resolves epoch precedence, but delete markers and
-    * all cell versions are carried through VERBATIM (written with
-    * their key types), and `versions` retention is NOT applied. This is
-    * mandatory whenever older data exists outside the fold — collecting
-    * a marker while an older run still holds the put it masks would
-    * resurrect that put; HBase minor compactions keep markers for the
-    * same reason. Only a fold covering the OLDEST live run may collect
-    * (major mode, the default).
+    * `collectMarkers = false` is the MINOR-compaction mode (see
+    * [[resolve]]): mandatory whenever older data exists outside the
+    * fold — collecting a marker while an older run still holds the put
+    * it masks would resurrect that put; HBase minor compactions keep
+    * markers for the same reason. Only a fold covering the OLDEST live
+    * run may collect (major mode, the default).
     */
   def compactEpochs(spark: SparkSession, dir: String, outDir: String,
                     versions: Int = 1, numPartitions: Int = 32,
@@ -268,17 +287,11 @@ object Compaction {
                     collectMarkers: Boolean = true,
                     familyTtlMs: Map[String, Long] = Map.empty,
                     nowMs: Long = -1L): Unit = {
-    require(familyTtlMs.isEmpty || nowMs >= 0,
-      "TTL compaction needs an explicit nowMs (expiry must be deterministic)")
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val liveIds = Option(fs.globStatus(new org.apache.hadoop.fs.Path(root, "epoch=*")))
-      .getOrElse(Array.empty)
-      .filter(_.isDirectory)
-      .map(_.getPath.getName.stripPrefix("epoch=").toLong)
+    val liveIds = HFileDir.runs(dir, spark.sparkContext.hadoopConfiguration)
+      .map(_.id)
       .filter(e => beforeEpoch.forall(e < _))
       .filter(e => epochs.forall(_.contains(e)))
-    require(liveIds.nonEmpty, s"no epoch=* run directories under $dir" +
+    require(liveIds.nonEmpty, s"no run directories under $dir" +
       beforeEpoch.map(b => s" with epoch < $b").getOrElse("") +
       epochs.map(ids => s" within ${ids.mkString("{", ",", "}")}").getOrElse(""))
     epochs.foreach { ids =>
@@ -291,26 +304,15 @@ object Compaction {
     // micro-batch runs accumulated (an N-way unionByName here made
     // analysis/optimization cost grow linearly with N). When the fold
     // is BOUNDED (`epochs`/`beforeEpoch`), the glob enumerates only the
-    // selected epoch directories via {} alternation — a tiered fold
-    // must not RE-READ every live epoch each round, or total read
-    // volume over a stream's life becomes O(N²/maxEpochs) and undoes
-    // the O(N log N) economics tiered mode exists for (ADVICE r8).
-    val selected = liveIds.sorted
-    val epochGlob =
-      if (beforeEpoch.isEmpty && epochs.isEmpty) "epoch=*/bucket=*/*.hfile"
-      else s"epoch={${selected.mkString(",")}}/bucket=*/*.hfile"
-    val carryTags = BulkLoad.dirHasTagsOrMvcc(spark, dir, epochGlob)
-    val cells0 = BulkLoad.readHFiles(spark, dir, epochGlob)
-      .withColumn("_epoch",
-        regexp_extract(col("file"), "epoch=(\\d+)", 1).cast("long"))
+    // selected run directories — a tiered fold must not RE-READ every
+    // live run each round, or total read volume over a stream's life
+    // becomes O(N²/maxEpochs) and undoes the O(N log N) economics
+    // tiered mode exists for (ADVICE r8).
+    val runsGlob = HFileDir.runsGlob(
+      if (beforeEpoch.isEmpty && epochs.isEmpty) scala.None else Some(liveIds))
+    val cells = BulkLoad.readHFiles(spark, dir, runsGlob)
+      .withColumn("_epoch", HFileDir.runIdOf(col("file")))
       .drop("file")
-    // `beforeEpoch` bounds the fold to COMPLETED runs — the streaming
-    // sink folds ids below its in-flight batch so a failed attempt's
-    // orphan directory is never baked into a published fold
-    val cells1 = beforeEpoch
-      .map(b => cells0.filter(col("_epoch") < b)).getOrElse(cells0)
-    val cells = epochs
-      .map(ids => cells1.filter(col("_epoch").isin(ids: _*))).getOrElse(cells1)
     val latest = cells
       .groupBy(col("rowkey"), col("family"), col("qualifier"), col("ts"),
         col("key_type"))
@@ -325,25 +327,9 @@ object Compaction {
       .select(col("rowkey"), col("family"), col("qualifier"), col("ts"),
         col("key_type"), col("w.value").as("value"), col("w.tags").as("tags"),
         col("w.mvcc").as("mvcc"), col("bucket"))
-    // TTL expiry before marker resolution (the compaction-scanner order);
-    // a minor fold expires PUTS only — its markers travel verbatim
-    val live =
-      if (nowMs >= 0 && (familyTtlMs.nonEmpty || carryTags))
-        applyTtl(latest, nowMs, familyTtlMs, putsOnly = !collectMarkers)
-      else latest
-    val kept =
-      if (collectMarkers) retainVersions(applyDeletes(live), versions)
-      else live
-    val prepared = kept
-      .select(Seq(col("bucket"), col("rowkey").as("salted_key"),
-        col("family"), col("qualifier"), col("ts"), col("value")) ++
-        (if (collectMarkers) Seq.empty else Seq(col("key_type"))) ++
-        (if (carryTags) Seq(col("tags"), col("mvcc")) else Seq.empty): _*)
-      .repartitionByRange(numPartitions, col("bucket"), col("salted_key"))
-    BulkLoad.writeHFiles(prepared, outDir, tsCol = Some("ts"),
-      typeCol = if (collectMarkers) scala.None else Some("key_type"),
-      blockSize = blockSize, compression = compression, encoding = encoding,
-      tagsCol = if (carryTags) Some("tags") else None,
-      mvccCol = if (carryTags) Some("mvcc") else None)
+    rewrite(latest, outDir,
+      carryTags = BulkLoad.dirHasTagsOrMvcc(spark, dir, runsGlob),
+      collectMarkers, versions, numPartitions, blockSize, compression,
+      encoding, familyTtlMs, nowMs)
   }
 }

@@ -563,10 +563,6 @@ object Dedup {
         struct(get(arr, i - 1).as("a"), b.as("b")))))
   }
 
-  /** Banded-LSH candidate pairs over a signature column: explode each
-    * row into (band, band-hash) keys, group, and emit pairs per bucket.
-    * Buckets larger than `maxBucket` are dropped (degenerate keys).
-    */
   /** The ONE MinHash band-key expression (C3's and C25's shared
     * blocking key — the incremental-vs-full parity guarantee depends
     * on both paths hashing identical slices identically).
@@ -578,6 +574,10 @@ object Dedup {
         xxhash64(b, slice(col(sigCol), b * rowsPerBand + 1,
           lit(rowsPerBand))).as("bkey")))
 
+  /** Banded-LSH candidate pairs over a signature column: explode each
+    * row into (band, band-hash) keys, group, and emit pairs per bucket.
+    * Buckets larger than `maxBucket` are dropped (degenerate keys).
+    */
   def lshCandidatePairs(sigs: DataFrame, idCol: String, sigCol: String,
                         bands: Int, rowsPerBand: Int,
                         maxBucket: Int = 1000): DataFrame = {

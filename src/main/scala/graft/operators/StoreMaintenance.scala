@@ -679,7 +679,11 @@ private[graft] object StoreMaintenance {
   private def readManifest(spark: SparkSession, backupDir: String)
       : Either[String, Seq[ManifestRow]] =
     try {
-      val raw = spark.read.parquet(s"$backupDir/_backup_manifest")
+      // its part files: Spark ignores (and warns on) a `_`-prefixed root
+      val mdir = new Path(backupDir, "_backup_manifest")
+      val raw = spark.read.parquet(mdir.getFileSystem(spark.sparkContext
+          .hadoopConfiguration).listStatus(mdir).map(_.getPath.toString)
+        .filter(_.endsWith(".parquet")).toSeq: _*)
       def opt(name: String, typ: String) =
         if (raw.schema.fieldNames.contains(name)) col(name)
         else lit(null).cast(typ)

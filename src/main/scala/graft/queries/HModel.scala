@@ -122,10 +122,9 @@ object HModel {
     *    the runner-up view becomes version 1.
     * The oracle replays the thresholds with joins + a rank window.
     */
-  def compactCells(events: DataFrame, versions: Int = 2,
-                   cacheCells: Boolean = true): DataFrame = {
+  def compactCells(events: DataFrame, versions: Int = 2): DataFrame = {
     import graft.operators.Compaction
-    val all = cellsWithMarkers(events, cacheCells)
+    val all = cellsWithMarkers(events)
     val kept = Compaction.retainVersions(Compaction.applyDeletes(all), versions)
     kept.select(hex(col("rowkey")).as("rk_hex"), col("qualifier"),
         col("ts").as("ts_ms"), col("value"))
@@ -135,15 +134,14 @@ object HModel {
   /** The shared put+marker cell stream compact_cells / compact_cells_ttl
     * resolve (columns rowkey/family/qualifier/ts/value/key_type).
     */
-  private def cellsWithMarkers(events: DataFrame,
-                               cacheCells: Boolean): DataFrame = {
+  private def cellsWithMarkers(events: DataFrame): DataFrame = {
     import graft.sources.HFile
     // the typed cell projection feeds seven plan branches (three marker
     // derivations + the four key_type filters in applyDeletes); without
     // caching, each branch re-scans events and re-runs hb.encode. Persist
     // it once (the Dedup.cacheShingles pattern) — LRU-evictable, sized
-    // O(cells); pass cacheCells = false when memory is tighter than CPU.
-    val cellsPlan = events.select(
+    // O(cells).
+    val cells = events.select(
       hb.encode(col("user_id")).as("rowkey"),
       lit("m").as("family"),
       col("event_type").as("qualifier"),
@@ -151,9 +149,7 @@ object HModel {
       col("value"),
       lit(HFile.KeyTypePut.toInt).as("key_type"),
       col("user_id"))
-    val cells = if (cacheCells)
-      cellsPlan.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else cellsPlan
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val noValue = lit(null).cast("double").as("value")
     // ONE threshold aggregation for all three marker classes (r19): the
     // per-class groupBys each shuffled their filtered slice of the
@@ -175,20 +171,18 @@ object HModel {
           col("qualifier") === "click") ||
         (pmod(col("user_id"), lit(11)) === 0 &&
           col("qualifier") === "view"))
-    // the threshold frame is PERSISTED (same cacheCells flag): the three
-    // marker filters are on the grouping key, so without a cache barrier
+    // the threshold frame is PERSISTED too: the three marker filters
+    // are on the grouping key, so without a cache barrier
     // PushDownPredicates splits them back below the aggregation into
     // three separate shuffles — each now of the WHOLE marked set
     // (measured at the x100 scale cell: compact_cells_ttl ratio100 3.1 →
     // 6.7 before this persist). The frame is one row per marked user —
     // tiny at any scale.
-    val thrPlan = marked.groupBy(col("rowkey"), col("user_id"))
+    val thr = marked.groupBy(col("rowkey"), col("user_id"))
       .agg(expr("(min(ts) + max(ts)) DIV 2").as("_mid"),
         max(when(col("qualifier") === "click", col("ts"))).as("_maxclick"),
         max(when(col("qualifier") === "view", col("ts"))).as("_maxview"))
-    val thr = if (cacheCells)
-      thrPlan.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else thrPlan
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val famDel = thr.filter(pmod(col("user_id"), lit(5)) === 0)
       .select(col("rowkey"), lit("m").as("family"), lit("").as("qualifier"),
         col("_mid").as("ts"), noValue,
@@ -223,8 +217,7 @@ object HModel {
     * The oracle replays both thresholds as plain ts predicates, then the
     * marker/versions pipeline exactly as compact_cells.
     */
-  def compactCellsTtl(events: DataFrame, versions: Int = 2,
-                      cacheCells: Boolean = true): DataFrame = {
+  def compactCellsTtl(events: DataFrame, versions: Int = 2): DataFrame = {
     import graft.operators.Compaction
     import graft.functions.BytesCodec
     import graft.sources.HFile
@@ -236,7 +229,7 @@ object HModel {
       BytesCodec.encodeShort(3.toShort) ++ Array[Byte](1, 0x7f, 0x01) ++
         BytesCodec.encodeShort(9.toShort) ++ Array[Byte](8) ++
         BytesCodec.encodeLong(clickTtlMs)
-    val all = cellsWithMarkers(events, cacheCells)
+    val all = cellsWithMarkers(events)
     val tagged = all.withColumn("tags",
       when(col("key_type") === HFile.KeyTypePut.toInt &&
         col("qualifier") === "click", lit(clickTags))

@@ -1,12 +1,16 @@
 package graft.sources
 
+import java.io.IOException
+import java.nio.charset.StandardCharsets.UTF_8
 import java.util.concurrent.{Callable, Executors}
 
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FSDataOutputStream, FileStatus, FileSystem, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.hadoop.io.IOUtils
+import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.functions.regexp_extract
 
 /** The layout of one bulk-load directory, shared by
   * [[graft.operators.BulkLoad]] and the `graft-hfile` source: how its
@@ -18,6 +22,19 @@ import org.apache.spark.sql.SparkSession
   *  dir/bucket=N/part-....hfile     one sorted run per file
   *  dir/_manifest                   per-file stats ([[HFileManifest]])
   *  dir/_inprogress/attempt-...     task temp files, renamed at task end
+  * }}}
+  *
+  * A streamed bulk load (the G7 sink, tailed by the G10 source and
+  * folded by `Compaction.compactEpochs`) holds one such directory per
+  * micro-batch, a RUN, and this object is the only code that knows
+  * the run files ([[runs]] and the writers below it):
+  *
+  * {{{
+  *  sink/epoch=N/bucket=.../_manifest   one run: a bulk-load directory
+  *  sink/epoch=N/_complete              published: every file committed
+  *  sink/epoch=N/_consumed              a fold's provenance: the run ids
+  *                                      it folded, one per line
+  *  sink/_compact_tmp/                  a fold being staged
   * }}}
   */
 private[graft] object HFileDir {
@@ -149,6 +166,113 @@ private[graft] object HFileDir {
   def clearTemp(path: String, conf: Configuration): Unit = {
     val root = new Path(path)
     root.getFileSystem(conf).delete(new Path(root, "_inprogress"), true)
+  }
+
+  // ---- runs of a streamed bulk load --------------------------------------
+
+  private val RunPrefix = "epoch="
+
+  /** Marker a published run carries (see [[markPublished]]). */
+  val CompleteFile = "_complete"
+
+  /** Provenance file a published fold carries (see [[publishFold]]). */
+  val ConsumedFile = "_consumed"
+
+  /** One run: `published` when it carries [[CompleteFile]]; `consumed`
+    * is a fold's provenance (None for a batch-written run).
+    */
+  final case class Run(id: Long, path: Path, published: Boolean,
+                       consumed: Option[Seq[Long]]) {
+    /** A published batch run — folds only rearrange delivered cells. */
+    def deliverable: Boolean = published && consumed.isEmpty
+  }
+
+  def runPath(path: String, id: Long): String =
+    new Path(new Path(path), s"$RunPrefix$id").toString
+
+  /** HFile glob, relative to the sink dir, over the runs `ids` (every
+    * run when None) — one constant-size scan, however many runs.
+    */
+  def runsGlob(ids: Option[Seq[Long]]): String = ids match {
+    case None    => s"$RunPrefix*/$Glob"
+    case Some(s) => s"$RunPrefix{${s.sorted.mkString(",")}}/$Glob"
+  }
+
+  /** The id of the run a [[runsGlob]]-scanned `file` path lives in. */
+  def runIdOf(file: Column): Column =
+    regexp_extract(file, s"$RunPrefix(\\d+)/bucket=[^/]*/[^/]*$$", 1)
+      .cast("long")
+
+  /** Every run under `path`, by id: one listStatus per run dir (the tail
+    * polls this per trigger; on an object store each probe is a round
+    * trip) plus a read of each fold's provenance. A run dir that is gone
+    * after an IOException — a fold swept it; the local FS then reports
+    * `AccessDeniedException`, as it checks `exists` before it lists — is
+    * skipped. Anything else is rethrown, and an unreadable provenance in
+    * a live fold fails loudly: its consumed leftovers could not be told
+    * from live runs.
+    */
+  def runs(path: String, conf: Configuration): Seq[Run] = {
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
+    Option(fs.globStatus(new Path(root, s"$RunPrefix*")))
+      .getOrElse(Array.empty).toSeq.filter(_.isDirectory)
+      .flatMap { st =>
+        val p = st.getPath
+        try {
+          val names = fs.listStatus(p).map(_.getPath.getName).toSet
+          Some(Run(p.getName.stripPrefix(RunPrefix).toLong, p,
+            names.contains(CompleteFile),
+            if (names.contains(ConsumedFile)) Some(readConsumed(fs, p))
+            else None))
+        } catch { case _: IOException if !fs.exists(p) => None }
+      }
+      .sortBy(_.id)
+  }
+
+  private def readConsumed(fs: FileSystem, run: Path): Seq[Long] = {
+    val cf = new Path(run, ConsumedFile)
+    try {
+      val in = fs.open(cf)
+      try new String(IOUtils.readFullyToByteArray(in), UTF_8)
+        .split("\n").filter(_.nonEmpty).map(_.toLong).toSeq
+      finally in.close()
+    } catch {
+      case e: IOException if !fs.exists(run) => throw e // swept: skipped
+      case e: Exception =>
+        throw new IllegalStateException(s"unreadable fold provenance $cf", e)
+    }
+  }
+
+  /** Publishes a written run to tailing readers. Written AFTER every
+    * file's commit rename landed, so a marker always names a fully
+    * loadable run; re-marking (a replayed batch) is idempotent.
+    */
+  def markPublished(run: String, conf: Configuration): Unit = {
+    val p = new Path(run, CompleteFile)
+    p.getFileSystem(conf).create(p, true).close()
+  }
+
+  /** Where a fold is staged: hidden from the run glob, and discarded by
+    * the sink's recovery sweep (its sources are still intact).
+    */
+  def foldStage(path: String): String =
+    new Path(new Path(path), "_compact_tmp").toString
+
+  /** Publishes a fold of the runs `consumed` as run `id`: `stage` writes
+    * it under [[foldStage]], then its provenance goes INSIDE it, then the
+    * rename — so a published fold always carries complete provenance.
+    */
+  def publishFold(path: String, conf: Configuration, id: Long,
+                  consumed: Seq[Long])(stage: String => Unit): Unit = {
+    val staged = new Path(foldStage(path))
+    val fs = staged.getFileSystem(conf)
+    stage(staged.toString)
+    val out = fs.create(new Path(staged, ConsumedFile), true)
+    try out.write(consumed.sorted.mkString("", "\n", "\n").getBytes(UTF_8))
+    finally out.close()
+    val pub = new Path(runPath(path, id))
+    require(fs.rename(staged, pub), s"failed to publish compacted run as $pub")
   }
 
   /** How every file of one write is encoded. */

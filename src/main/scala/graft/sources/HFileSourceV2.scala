@@ -39,9 +39,11 @@ import org.apache.spark.unsafe.types.UTF8String
   *    filters are reported pushed but conservatively re-evaluated by
   *    Spark — the source skips files, not rows.
   *
-  * The schema matches [[graft.operators.HFileCellRow]], so
-  * `spark.read.format("graft-hfile")` and `BulkLoad.readHFiles` are
-  * drop-in interchangeable.
+  * The two reads are NOT interchangeable: the data columns are
+  * [[graft.operators.HFileCellRow]]'s without `tags` and `mvcc` (this
+  * source does not read them), and `file` is a metadata column that is
+  * only there when selected. `BulkLoad.readHFiles` without those three
+  * columns is this source's default scan.
   */
 class HFileSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "graft-hfile"
@@ -419,10 +421,10 @@ class HFileScan(path: String, required: StructType, pushed: Array[Filter],
   }
 }
 
-/** Streaming offset for a tailed bulk-load directory: the highest epoch
-  * id delivered so far (-1 = nothing yet). Epoch ids are
-  * strictly increasing by construction — plain sinks use the batch id,
-  * capped sinks stride it ([[graft.streaming.Streams.EpochStride]]).
+/** Streaming offset for a tailed bulk-load directory: the highest run
+  * id delivered so far (-1 = nothing yet). Run ids are strictly
+  * increasing by construction — plain sinks use the batch id, capped
+  * sinks stride it (`Streams.EpochStride`).
   */
 case class HFileEpochOffset(epoch: Long) extends rstreaming.Offset {
   override def json(): String = s"""{"epoch":$epoch}"""
@@ -437,17 +439,17 @@ object HFileEpochOffset {
   }
 }
 
-/** G10 — incremental tail of a [[graft.streaming.Streams.bulkLoadStream]]
-  * directory: each micro-batch delivers the cell stream of the epoch
-  * runs published since the last offset, so a downstream consumer
-  * (incremental rollup, replication, index build) follows the bulk-load
-  * sink without rescanning the directory — the HBase-replication-tails-
-  * WALs role, re-expressed as a DSv2 streaming scan.
+/** G10 — incremental tail of a streamed bulk-load directory (the G7
+  * sink, `Streams.bulkLoadStream`): each micro-batch delivers the cell
+  * stream of the runs published since the last offset, so a downstream
+  * consumer (incremental rollup, replication, index build) follows the
+  * bulk-load sink without rescanning the directory — the HBase-
+  * replication-tails-WALs role, re-expressed as a DSv2 streaming scan.
   *
-  * A run is DELIVERABLE when its `epoch=N` directory carries the sink's
-  * `_complete` marker (written after every file's commit rename, so a
-  * marked run is always fully loadable) and no `_consumed` provenance
-  * file (fold outputs rearrange already-delivered cells — skipping them
+  * A run ([[HFileDir.runs]]) is DELIVERABLE when it is published (its
+  * marker is written after every file's commit rename, so a marked run
+  * is always fully loadable) and carries no fold provenance (fold
+  * outputs rearrange already-delivered cells — skipping them
   * keeps delivery exactly-once; their consumed sources are already past
   * offsets). Exactly-once therefore holds unconditionally on append-only
   * sinks (`maxEpochs = 0`); under a self-compacting sink the consumer
@@ -455,7 +457,7 @@ object HFileEpochOffset {
   * be folded (and swept) before it is read — the same freshness contract
   * HBase replication has with WAL cleanup.
   *
-  * Plan shape: offsets and run listings are driver-side globs (O(runs));
+  * Plan shape: offsets and run listings are driver-side (O(runs));
   * each micro-batch plans one InputPartition per new HFile through the
   * same reader/pruning machinery as the batch scan (consumed exact
   * `bucket` filters are honored here; residual rowkey filters re-filter
@@ -467,36 +469,7 @@ class HFileMicroBatchStream(path: String, required: StructType,
     extends rstreaming.MicroBatchStream {
   import HFileSource._
 
-  private def fs = {
-    val root = new Path(path)
-    (root, root.getFileSystem(HFileDir.confOf(confMap)))
-  }
-
-  /** `(id, hasComplete, hasConsumed)` per epoch directory. ONE listStatus
-    * per dir (not two exists probes): on an object store every RPC is a
-    * round trip and latestOffset polls this once per trigger — two
-    * exists made each trigger O(2·runs) round trips. A dir that vanishes
-    * between the glob and the list (concurrent fold recovery sweep) is
-    * skipped: a swept run's cells are necessarily past offsets.
-    */
-  private def epochStates(): Seq[(Long, Boolean, Boolean)] = {
-    val (root, f) = fs
-    Option(f.globStatus(new Path(root, "epoch=*")))
-      .getOrElse(Array.empty)
-      .filter(_.isDirectory)
-      .flatMap { st =>
-        try {
-          val names = f.listStatus(st.getPath).map(_.getPath.getName).toSet
-          Some((st.getPath.getName.stripPrefix("epoch=").toLong,
-            names.contains(graft.streaming.Streams.CompleteFile),
-            names.contains(graft.streaming.Streams.ConsumedFile)))
-        } catch { case _: java.io.FileNotFoundException => None }
-      }.toSeq
-  }
-
-  /** Published, never-folded epoch ids (see class doc). */
-  private def deliverable(): Seq[Long] =
-    epochStates().collect { case (id, true, false) => id }
+  private def runs() = HFileDir.runs(path, HFileDir.confOf(confMap))
 
   /** Highest offset ever observed by THIS stream instance: latestOffset
     * must never regress, but the max DELIVERABLE id transiently drops
@@ -513,7 +486,7 @@ class HFileMicroBatchStream(path: String, required: StructType,
 
   override def initialOffset(): rstreaming.Offset = HFileEpochOffset(-1L)
   override def latestOffset(): rstreaming.Offset = {
-    maxSeen = math.max(maxSeen, deliverable().foldLeft(-1L)(math.max))
+    maxSeen = runs().filter(_.deliverable).foldLeft(maxSeen)(_ max _.id)
     HFileEpochOffset(maxSeen)
   }
   override def deserializeOffset(json: String): rstreaming.Offset = {
@@ -534,36 +507,18 @@ class HFileMicroBatchStream(path: String, required: StructType,
     val s = start.asInstanceOf[HFileEpochOffset].epoch
     val e = end.asInstanceOf[HFileEpochOffset].epoch
     if (e <= s) return Array.empty
-    val (root, f) = fs
-    val states = epochStates()
+    val live = runs()
     // LOUD lag detection (a silent skip would record data loss as
     // successful delivery): if any run id inside this batch's range was
-    // CONSUMED by a still-live fold — its `_consumed` provenance names
-    // exactly the folded sources — the reader fell behind the sink's
-    // fold window and the folded cells can no longer be delivered
-    // individually. A batch replayed from the offset WAL after a crash
-    // hits this instead of quietly planning an empty range. (Best
-    // effort by construction: a fold-of-a-fold chain erases the older
-    // provenance with its sources; one fold generation is the
-    // detectable — and, under EpochStride, the realistic — lag window.)
-    val foldConsumedInRange = states
-      .filter(_._3) // live fold dirs carry the provenance
-      .flatMap { case (id, _, _) =>
-        val cf = new Path(root, s"epoch=$id/" +
-          graft.streaming.Streams.ConsumedFile)
-        // the fold dir can vanish between the state glob and this open
-        // (a concurrent next-fold recovery sweep deletes consumed fold
-        // dirs): a swept fold's sources are necessarily past offsets, so
-        // skipping it is correct — without the guard the benign race is
-        // a FileNotFoundException failing the micro-batch
-        try {
-          val in = f.open(cf)
-          try new String(
-              org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8")
-            .split("\n").filter(_.nonEmpty).map(_.toLong).toSeq
-          finally in.close()
-        } catch { case _: java.io.FileNotFoundException => Seq.empty[Long] }
-      }
+    // CONSUMED by a still-live fold — its provenance names exactly the
+    // folded sources — the reader fell behind the sink's fold window and
+    // the folded cells can no longer be delivered individually. A batch
+    // replayed from the offset WAL after a crash hits this instead of
+    // quietly planning an empty range. (Best effort by construction: a
+    // fold-of-a-fold chain erases the older provenance with its sources;
+    // one fold generation is the detectable — and, under EpochStride,
+    // the realistic — lag window.)
+    val foldConsumedInRange = live.flatMap(_.consumed.getOrElse(Nil))
       .filter(id => id > s && id <= e)
     if (foldConsumedInRange.nonEmpty)
       throw new IllegalStateException(
@@ -571,10 +526,8 @@ class HFileMicroBatchStream(path: String, required: StructType,
           s"($s, $e] were folded away before this reader delivered them " +
           "— the tail fell more than one fold window behind the sink " +
           "(see HFileMicroBatchStream's keep-pace contract)")
-    val epochs = states.collect { case (id, true, false) => id }
-      .filter(id => id > s && id <= e)
-    epochs.sorted.flatMap { id =>
-      HFileDir.list(s"$path/epoch=$id", HFileDir.confOf(confMap)).paths
+    live.filter(r => r.deliverable && r.id > s && r.id <= e).flatMap { r =>
+      HFileDir.list(r.path.toString, HFileDir.confOf(confMap)).paths
         .map(p => HFileInputPartition(p, bucketOf(p)))
         // residual filters re-filter rows upstream
         .filter(p => pushed.forall(bucketMayMatch(p.bucket, _)))

@@ -1,10 +1,12 @@
 package graft.streaming
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupStateTimeout, OutputMode, StreamingQuery}
 import org.apache.spark.sql.types.DecimalType
 import graft.operators.{Dedup, Knn, PersistedStore, StoreMaintenance}
+import graft.sources.HFileDir
 
 /** Typed event record for the stateful streaming operators. */
 case class EventRec(user_id: Long, ts_ms: Long, event_id: Long, value: Double)
@@ -915,7 +917,8 @@ object Streams {
     * job (a stream of rows → salted sorted KVs → HFiles → bulk import,
     * TsdbBulkload.java + HadoopOutputFormat2.java) run incrementally:
     * each micro-batch becomes one complete bulk-load run directory
-    * `epoch=N` (holding `bucket=B` HFiles) under `dir`, written with the same
+    * (holding `bucket=B` HFiles) under `dir` — the run layout is
+    * [[graft.sources.HFileDir]]'s — written with the same
     * salt / range-sort / roll-on-bucket invariants (and bloom + index
     * blocks) as the batch [[graft.operators.BulkLoad.writeHFiles]] — a
     * cluster hands each finished epoch to LoadIncrementalHFiles. Epoch
@@ -933,26 +936,23 @@ object Streams {
     * reader must merge and the sink's file count grows without bound).
     * Crash-safe by construction:
     *
-    *  - batch N writes its run as `epoch=N·1024` — a replayed batch can
+    *  - batch N writes its run as id N·1024 — a replayed batch can
     *    only ever overwrite its own directory, never a run holding
     *    other batches' history; the id stride leaves free slots above
     *    every run for folds to publish into;
     *  - when `maxEpochs` completed runs (ids < the batch's own) have
     *    accumulated, the batch FIRST folds a run window through
-    *    [[graft.operators.Compaction.compactEpochs]] into a temp dir,
-    *    writes the window's ids to a `_consumed` file INSIDE it, and
-    *    publishes it by rename as `epoch=<window max + 1>` — inside the
-    *    id gap above the window, so it outranks exactly what it folded
-    *    and is outranked by everything newer — and only THEN deletes
-    *    the consumed runs: the folded run (with its provenance) is live
-    *    before any source byte disappears;
-    *  - every batch starts with a recovery sweep that closes the crash
-    *    windows: a leftover `_compact_tmp` is discarded (its sources
-    *    are still intact — refolding is safe), and any live run listed
-    *    in a published fold's `_consumed` file is a consumed leftover
-    *    and is deleted — which also re-collects any delete markers a
-    *    crash transiently resurrected. Recovery never infers from ids
-    *    alone, so it is exact for full AND partial (tiered) folds.
+    *    [[graft.operators.Compaction.compactEpochs]] and publishes it
+    *    with its provenance ([[graft.sources.HFileDir.publishFold]]) as
+    *    run `<window max + 1>` — it outranks exactly what it folded and
+    *    is outranked by everything newer — and only THEN deletes the
+    *    consumed runs: no source byte disappears before the fold is live;
+    *  - every batch starts with a recovery sweep: a leftover fold stage
+    *    is discarded (its sources are intact), and any live run a
+    *    published fold's provenance names is deleted — which also
+    *    re-collects delete markers a crash transiently resurrected.
+    *    Recovery never infers from ids alone, so it is exact for full
+    *    AND partial (tiered) folds.
     *
     * `tiered = false` (default): every fold covers ALL completed runs —
     * markers collected, `versions` retention applied, live run count
@@ -994,34 +994,19 @@ object Streams {
       .outputMode(OutputMode.Append)
       .foreachBatch { (batch: Dataset[Row], epochId: Long) =>
         val spark = batch.sparkSession
-        // without folding, keep the plain epoch=<batchId> naming
+        // without folding, keep the plain batch-id naming
         val runId = if (maxEpochs > 0) EpochStride * epochId else epochId
         if (maxEpochs > 0)
           foldEpochRuns(spark, dir, runId, maxEpochs, versions,
             numPartitions, compression, tiered, compactRatio)
         val prepared = graft.operators.BulkLoad.prepare(
           batch.toDF(), buckets, numPartitions)
-        graft.operators.BulkLoad.writeHFiles(prepared,
-          s"$dir/epoch=$runId", tsCol = tsCol, typeCol = typeCol,
-          compression = compression)
-        // publish the run to tailing readers (the `graft-hfile` streaming
-        // source reads only `_complete`-marked, non-fold epochs): written
-        // AFTER every file's first-wins rename landed, so a marker always
-        // names a fully-loadable run; a replayed batch re-marks its own
-        // dir idempotently
-        val runDir = new org.apache.hadoop.fs.Path(s"$dir/epoch=$runId")
-        val mfs = runDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        mfs.create(new org.apache.hadoop.fs.Path(runDir, CompleteFile), true)
-          .close()
+        val run = HFileDir.runPath(dir, runId)
+        graft.operators.BulkLoad.writeHFiles(prepared, run, tsCol = tsCol,
+          typeCol = typeCol, compression = compression)
+        HFileDir.markPublished(run, spark.sparkContext.hadoopConfiguration)
       }
   }
-
-  /** Completion marker a [[bulkLoadStream]] batch drops into its
-    * `epoch=N` directory once every file is committed — the streaming
-    * source's publish signal (fold directories carry [[ConsumedFile]]
-    * instead and are never re-delivered).
-    */
-  val CompleteFile = "_complete"
 
   /** G10: incrementally tail a [[bulkLoadStream]] directory — each
     * micro-batch is the cell stream of the epoch runs published since
@@ -1052,87 +1037,49 @@ object Streams {
                             versions: Int, numPartitions: Int,
                             compression: String, tiered: Boolean,
                             compactRatio: Double): Unit = {
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(root, "_compact_tmp")
-    def epochDirs() = Option(fs.globStatus(
-        new org.apache.hadoop.fs.Path(root, "epoch=*")))
-      .getOrElse(Array.empty).filter(_.isDirectory)
-      .map(st => (st.getPath.getName.stripPrefix("epoch=").toLong,
-        st.getPath))
-    def consumedListOf(p: org.apache.hadoop.fs.Path): Seq[Long] = {
-      val cf = new org.apache.hadoop.fs.Path(p, ConsumedFile)
-      if (!fs.exists(cf)) Seq.empty
-      else {
-        // _consumed is written BEFORE the atomic publish rename, so a
-        // published fold always has a complete provenance file: an
-        // unreadable one is a real fault and must fail the batch (a
-        // silent Seq.empty would skip deleting consumed leftovers and
-        // permanently resurrect puts a major fold's markers collected)
-        val in = fs.open(cf)
-        try new String(
-            org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8")
-          .split("\n").filter(_.nonEmpty).map(_.toLong).toSeq
-        catch {
-          case e: Exception => throw new IllegalStateException(
-            s"unreadable fold provenance $cf — refusing to run the " +
-              "recovery sweep with incomplete deletion info", e)
-        }
-        finally in.close()
-      }
-    }
-    // ---- recovery sweep (idempotent driver fs ops): a published
-    // fold's _consumed provenance names exactly the leftovers to drop
-    fs.delete(tmp, true)
-    val pre = epochDirs()
-    val consumedIds = pre.flatMap(p => consumedListOf(p._2)).toSet
-    pre.filter(p => consumedIds.contains(p._1))
-      .foreach(p => fs.delete(p._2, true))
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = new Path(dir).getFileSystem(conf)
+    // ---- recovery sweep (idempotent driver fs ops): a leftover stage is
+    // discarded, and a published fold's provenance names exactly the
+    // leftovers to drop
+    fs.delete(new Path(HFileDir.foldStage(dir)), true)
+    val live = HFileDir.runs(dir, conf)
+    val consumedIds = live.flatMap(_.consumed.getOrElse(Nil)).toSet
+    val (swept, kept) = live.partition(r => consumedIds.contains(r.id))
+    swept.foreach(r => fs.delete(r.path, true))
     // ---- drop empty completed runs (nothing to fold there)
-    def bytesOf(p: org.apache.hadoop.fs.Path): Long = Option(
-        fs.globStatus(new org.apache.hadoop.fs.Path(p, graft.sources.HFileDir.Glob)))
-      .getOrElse(Array.empty).map(_.getLen).sum
-    val sized = epochDirs().filter(_._1 < runId)
-      .map { case (e, p) => (e, p, bytesOf(p)) }
-    sized.filter(_._3 == 0L).foreach(p => fs.delete(p._2, true))
-    val completed = sized.filter(_._3 > 0L)
+    val sized = kept.filter(_.id < runId).map(r =>
+      (r, HFileDir.list(r.path.toString, conf).files.map(_.getLen).sum))
+    sized.filter(_._2 == 0L).foreach(s => fs.delete(s._1.path, true))
+    val completed = sized.filter(_._2 > 0L)
+    val ids = completed.map(_._1.id)
     if (completed.length < maxEpochs) return
     // ---- pick the fold window
     val window: Option[Seq[Long]] =
       if (tiered)
         graft.operators.Compaction.selectCompaction(
-          completed.map(c => (c._1, c._3)).toSeq, ratio = compactRatio,
+          completed.map(c => (c._1.id, c._2)), ratio = compactRatio,
           minRuns = 2, maxRuns = maxEpochs)
-      else Some(completed.map(_._1).toSeq.sorted)
-    window.foreach { ids =>
-      val publishId = ids.max + 1
-      val nextAbove = (completed.map(_._1).filter(_ > ids.max) :+ runId).min
+      else Some(ids)
+    window.foreach { win =>
+      val publishId = win.max + 1
+      val nextAbove = (ids.filter(_ > win.max) :+ runId).min
       // the id gap above the window is free by construction (see
       // EpochStride); refuse the fold if it ever is not
       if (publishId < nextAbove) {
-        val isMajor = ids.min == completed.map(_._1).min
-        graft.operators.Compaction.compactEpochs(spark, dir,
-          tmp.toString, versions = versions,
-          numPartitions = numPartitions, compression = compression,
-          beforeEpoch = Some(runId), epochs = Some(ids),
-          collectMarkers = isMajor)
-        val cf = fs.create(new org.apache.hadoop.fs.Path(tmp, ConsumedFile),
-          true)
-        try cf.write(ids.sorted.mkString("", "\n", "\n").getBytes("UTF-8"))
-        finally cf.close()
-        val pub = new org.apache.hadoop.fs.Path(root, s"epoch=$publishId")
-        require(fs.rename(tmp, pub),
-          s"failed to publish compacted run as $pub")
-        completed.filter(c => ids.contains(c._1))
-          .foreach(c => fs.delete(c._2, true))
+        HFileDir.publishFold(dir, conf, publishId, win) { stage =>
+          graft.operators.Compaction.compactEpochs(spark, dir, stage,
+            versions = versions,
+            numPartitions = numPartitions, compression = compression,
+            epochs = Some(win),
+            // only a window holding the oldest live run may collect
+            collectMarkers = win.min == ids.min)
+        }
+        completed.filter(c => win.contains(c._1.id))
+          .foreach(c => fs.delete(c._1.path, true))
       }
     }
   }
-
-  /** Provenance file a published fold carries: the run ids it consumed,
-    * one per line — the recovery sweep's exact deletion list.
-    */
-  val ConsumedFile = "_consumed"
 
   /** G3: upsert mutation stream (the reference's buffered Put/Delete
     * sink, HBaseSerde.java:119-173): each micro-batch is converted to a

@@ -5,6 +5,7 @@ import java.io.{File, PrintWriter}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import graft.sources.HFileDir
 
 /** Measured write-volume proof for the tiered fold mode of
   * [[graft.streaming.Streams.bulkLoadStream]] (VERDICT r8 #4): stream N
@@ -56,8 +57,10 @@ object FoldEconomics {
     val q = graft.streaming.Streams.bulkLoadStream(cells, dir, buckets = 2,
       numPartitions = 2, maxEpochs = maxEpochs, tiered = tiered)
       .option("checkpointLocation", ckpt).start()
+    val conf = spark.sparkContext.hadoopConfiguration
+    def files(run: HFileDir.Run) = HFileDir.list(run.path.toString, conf).files
     val seen = scala.collection.mutable.Set[String]()
-    val seenEpochs = scala.collection.mutable.Set[String]()
+    val seenRuns = scala.collection.mutable.Set[Long]()
     var bytesWritten = 0L
     var maxLiveRuns = 0
     try {
@@ -66,32 +69,20 @@ object FoldEconomics {
           (1 to rowsPerEpoch).map(j => (1000L + i.toLong * rowsPerEpoch + j,
             i.toDouble)))
         q.processAllAvailable()
-        val root = new File(dir)
-        val runs = Option(root.listFiles()).getOrElse(Array.empty)
-          .filter(f => f.isDirectory && f.getName.startsWith("epoch="))
+        val runs = HFileDir.runs(dir, conf)
         maxLiveRuns = math.max(maxLiveRuns, runs.length)
         runs.foreach { run =>
-          seenEpochs += run.getName
-          Option(run.listFiles()).getOrElse(Array.empty)
-            .filter(_.isDirectory).foreach { bucket =>
-              Option(bucket.listFiles()).getOrElse(Array.empty)
-                .filter(_.getName.endsWith(".hfile")).foreach { f =>
-                  val id = s"${run.getName}/${bucket.getName}/${f.getName}"
-                  if (seen.add(id)) bytesWritten += f.length()
-                }
-            }
+          seenRuns += run.id
+          files(run).foreach { f =>
+            if (seen.add(f.getPath.toString)) bytesWritten += f.getLen
+          }
         }
       }
     } finally q.stop()
-    val finalBytes = Option(new File(dir).listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith("epoch="))
-      .flatMap(run => Option(run.listFiles()).getOrElse(Array.empty)
-        .filter(_.isDirectory)
-        .flatMap(b => Option(b.listFiles()).getOrElse(Array.empty)))
-      .filter(_.getName.endsWith(".hfile")).map(_.length()).sum
-    // every published fold takes a fresh epoch=<window max + 1> slot, so
+    val finalBytes = HFileDir.runs(dir, conf).flatMap(files).map(_.getLen).sum
+    // every published fold takes a fresh run id (window max + 1), so
     // folds = distinct run dirs ever seen minus the batch-written ones
-    val folds = seenEpochs.size - epochs
+    val folds = seenRuns.size - epochs
     FoldStats(epochs, rowsPerEpoch, bytesWritten, finalBytes, maxLiveRuns,
       folds)
   }

@@ -384,7 +384,7 @@ class StoreMaintenanceSpec extends SparkSpec {
     val physical = StoreMaintenance.allFiles(spark, new Path(s"$parent/s2"))
       .filterNot(_._1.startsWith("_backup_manifest/"))
     assert(physical.size == 2, s"s2 must hold only the delta: $physical")
-    val manifest = spark.read.parquet(s"$parent/s2/_backup_manifest")
+    val manifest = spark.read.parquet(s"$parent/s2/_backup_manifest/*.parquet")
     assert(manifest.count() == 6)
     assert(manifest.filter(col("src").isNotNull).count() == 4,
       "the four unchanged data files carry by reference")
@@ -568,7 +568,7 @@ class StoreMaintenanceSpec extends SparkSpec {
       s"$parent/m2", base = Some(s"$parent/m1"))
     assert(copied == 1L,
       s"the rewritten file must re-copy, the stable one carries: $copied")
-    val manifest = spark.read.parquet(s"$parent/m2/_backup_manifest")
+    val manifest = spark.read.parquet(s"$parent/m2/_backup_manifest/*.parquet")
       .collect().map(r => r.getAs[String]("rel_path") ->
         (r.getAs[String]("src") == null)).toMap
     assert(manifest("mutant.bin") && !manifest("stable.bin"),
@@ -601,7 +601,7 @@ class StoreMaintenanceSpec extends SparkSpec {
     // the worst case a coarse-mtime FS can produce: rewrite the file
     // and PIN its stamp back to the base's recorded value, so the
     // (rel_path, bytes, mtime) identity matches despite new bytes
-    val baseMt = spark.read.parquet(s"$parent/c1/_backup_manifest")
+    val baseMt = spark.read.parquet(s"$parent/c1/_backup_manifest/*.parquet")
       .collect().map(r => r.getAs[String]("rel_path") ->
         r.getAs[Long]("mtime_ms")).toMap
     put("mutant.bin", "payload-C-9876543210")
@@ -619,7 +619,7 @@ class StoreMaintenanceSpec extends SparkSpec {
       s"$parent/c3", base = Some(s"$parent/c1"), verifyCarryCrc = true)
     assert(recopied == 1L,
       s"CRC cross-check must demote exactly the rewrite: $recopied")
-    val m3 = spark.read.parquet(s"$parent/c3/_backup_manifest")
+    val m3 = spark.read.parquet(s"$parent/c3/_backup_manifest/*.parquet")
       .collect().map(r => r.getAs[String]("rel_path") ->
         (r.getAs[String]("src") == null)).toMap
     assert(m3("mutant.bin") && !m3("stable.bin"),
@@ -674,7 +674,7 @@ class StoreMaintenanceSpec extends SparkSpec {
     // shape): s2's rows claim s1 holds the bytes (true), s3's rows
     // claim s2 does (false — s2 is pure manifest)
     def handChain(name: String, src: String): Unit =
-      spark.read.parquet(s"$parent/s1/_backup_manifest")
+      spark.read.parquet(s"$parent/s1/_backup_manifest/*.parquet")
         .withColumn("src", lit(src))
         .coalesce(1).write.mode("overwrite")
         .parquet(s"$parent/$name/_backup_manifest")
@@ -732,7 +732,7 @@ class StoreMaintenanceSpec extends SparkSpec {
     // originals, h2 for its own delta) — never a second indirection
     StoreMaintenance.backupStore(spark, store, s"$parent/h3",
       base = Some(s"$parent/h2"))
-    val rows = spark.read.parquet(s"$parent/h3/_backup_manifest")
+    val rows = spark.read.parquet(s"$parent/h3/_backup_manifest/*.parquet")
       .filter(col("src").isNotNull)
       .select("rel_path", "src").collect()
       .map(r => (r.getString(0), r.getString(1)))

@@ -392,7 +392,8 @@ class StreamsSpec extends SparkSpec {
     graft.operators.Compaction.compactEpochs(spark, dir, tmp.toString,
       numPartitions = 2) // folded copy of everything currently live
     val cf = fs.create(
-      new org.apache.hadoop.fs.Path(tmp, Streams.ConsumedFile), true)
+      new org.apache.hadoop.fs.Path(tmp, graft.sources.HFileDir.ConsumedFile),
+      true)
     try cf.write(liveIds.sorted.mkString("", "\n", "\n").getBytes("UTF-8"))
     finally cf.close()
     val maxId = liveIds.max
@@ -487,6 +488,92 @@ class StreamsSpec extends SparkSpec {
         .as[Double].collect().toSeq
       assert(v1 == Seq(5.0), s"got $v1")
     } finally q.stop()
+  }
+
+  test("G7/G10 run layer: a run dir swept between the run glob and its " +
+      "listing is skipped by the fold and by the tail") {
+    implicit val sqlCtx = spark.sqlContext
+    spark.sparkContext.hadoopConfiguration.set("fs.vanishing.impl",
+      classOf[VanishingRunFileSystem].getName)
+    val local = java.nio.file.Files.createTempDirectory("runs_vanish").toFile
+    val dir = s"vanishing://${local.getAbsolutePath}"
+    val input = MemoryStream[(Long, Double)]
+    val cells = input.toDF().toDF("key", "value")
+      .select(
+        graft.functions.hb.encode(col("key")).as("rowkey"),
+        lit("f").as("family"), lit("v").as("qualifier"),
+        graft.functions.hb.encode(col("value")).as("value"))
+    val w = Streams.bulkLoadStream(cells, dir, buckets = 2,
+        numPartitions = 2, maxEpochs = 2)
+      .option("checkpointLocation",
+        java.nio.file.Files.createTempDirectory("runs_vanish_w").toString)
+      .start()
+    var tq: org.apache.spark.sql.streaming.StreamingQuery = null
+    try {
+      def doomRun(id: Long): Unit = {
+        val run = new java.io.File(local, s"epoch=$id")
+        assert(run.mkdir())
+        VanishingRunFileSystem.doom(run)
+      }
+      input.addData((1L, 1.0)); w.processAllAvailable()
+      // the next batch's fold lists a run that vanishes under it
+      doomRun(1)
+      input.addData((2L, 2.0)); w.processAllAvailable()
+      assert(!VanishingRunFileSystem.pending, "the fold never listed the run")
+      // the tail's first poll lists a run that vanishes under it
+      doomRun(3)
+      tq = Streams.readBulkLoadStream(spark, dir)
+        .select(graft.functions.hb.decode(expr("substring(rowkey, 3, 8)"),
+          LongType).as("k"))
+        .writeStream.format("memory").queryName("vanish_tail")
+        .option("checkpointLocation",
+          java.nio.file.Files.createTempDirectory("runs_vanish_r").toString)
+        .start()
+      tq.processAllAvailable()
+      assert(!VanishingRunFileSystem.pending, "the tail never listed the run")
+      // a fold over the surviving runs, then one more batch delivered
+      input.addData((3L, 3.0)); w.processAllAvailable()
+      tq.processAllAvailable()
+      assert(spark.sql("SELECT k FROM vanish_tail").as[Long].collect()
+        .sorted.toSeq == Seq(1L, 2L, 3L))
+    } finally { if (tq != null) tq.stop(); w.stop() }
+  }
+
+  test("G7 run layer: an unreadable fold provenance in a live run fails " +
+      "the next fold batch loudly") {
+    implicit val sqlCtx = spark.sqlContext
+    import org.apache.spark.sql.streaming.StreamingQueryException
+    val dir = java.nio.file.Files.createTempDirectory("runs_prov").toString
+    val input = MemoryStream[(Long, Double)]
+    val cells = input.toDF().toDF("key", "value")
+      .select(
+        graft.functions.hb.encode(col("key")).as("rowkey"),
+        lit("f").as("family"), lit("v").as("qualifier"),
+        graft.functions.hb.encode(col("value")).as("value"))
+    val w = Streams.bulkLoadStream(cells, dir, buckets = 2,
+        numPartitions = 2, maxEpochs = 2)
+      .option("checkpointLocation",
+        java.nio.file.Files.createTempDirectory("runs_prov_w").toString)
+      .start()
+    try {
+      // the third batch folds the first two into a run with provenance
+      (1 to 3).foreach { i =>
+        input.addData((i.toLong, i.toDouble)); w.processAllAvailable()
+      }
+      val prov = new java.io.File(dir).listFiles.toSeq
+        .map(new java.io.File(_, graft.sources.HFileDir.ConsumedFile))
+        .filter(_.isFile)
+      assert(prov.size == 1, s"expected one fold, got $prov")
+      // unreadable, and not by permission bits (root ignores them)
+      assert(prov.head.delete() && prov.head.mkdir())
+      input.addData((4L, 4.0))
+      val e = intercept[StreamingQueryException](w.processAllAvailable())
+      def chain(t: Throwable): Seq[Throwable] =
+        if (t == null) Seq.empty else t +: chain(t.getCause)
+      assert(chain(e).exists(c => c.isInstanceOf[IllegalStateException] &&
+        c.getMessage.contains("unreadable fold provenance")),
+        s"expected the provenance fail-loud, got: $e")
+    } finally w.stop()
   }
 
   test("G10 tail feeds the engine's own operators: an incremental " +
@@ -768,7 +855,7 @@ class StreamsSpec extends SparkSpec {
           new org.apache.hadoop.fs.Path(e0.toString), fs, tmp, false,
           spark.sparkContext.hadoopConfiguration)
         fs.delete(new org.apache.hadoop.fs.Path(tmp,
-          Streams.CompleteFile), false)
+          graft.sources.HFileDir.CompleteFile), false)
         extras.foreach { m =>
           val out = fs.create(new org.apache.hadoop.fs.Path(tmp, m), true)
           out.write("0\n".getBytes("UTF-8")); out.close()
@@ -777,7 +864,8 @@ class StreamsSpec extends SparkSpec {
       }
       cloneEpoch("epoch=97", Seq.empty)                 // unpublished
       cloneEpoch("epoch=98",
-        Seq(Streams.CompleteFile, Streams.ConsumedFile)) // fold output
+        Seq(graft.sources.HFileDir.CompleteFile,
+          graft.sources.HFileDir.ConsumedFile)) // fold output
       // a second sink batch: only ITS cells arrive (exactly-once — the
       // first epoch is not re-delivered, the 97/98 dirs never deliver)
       input.addData((4L, 4.0), (5L, 5.0))
@@ -1646,7 +1734,7 @@ class StreamsSpec extends SparkSpec {
     val snapB = s"$parent/pre_repair_epoch_${repairs.last}"
     // snapshot B chained on A: carried rows present, strictly fewer
     // physical files than manifested files
-    val mB = spark.read.parquet(s"$snapB/_backup_manifest")
+    val mB = spark.read.parquet(s"$snapB/_backup_manifest/*.parquet")
     val carried = mB.filter(col("src").isNotNull).count()
     assert(carried > 0, "the unchanged bands must carry by reference")
     // retention keep=1 ran inside the stream: A survives only as B's
