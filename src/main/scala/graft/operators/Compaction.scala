@@ -151,6 +151,8 @@ object Compaction {
               encoding: String = "none",
               familyTtlMs: Map[String, Long] = Map.empty,
               nowMs: Long = -1L): Unit = {
+    require(familyTtlMs.isEmpty || nowMs >= 0,
+      "TTL compaction needs an explicit nowMs (expiry must be deterministic)")
     // cluster-written inputs may carry cell tags (TTLs) and mvcc ids;
     // a rewrite that drops them silently changes semantics — probe the
     // file infos (file-count-scale short reads) and preserve the layout
@@ -188,8 +190,6 @@ object Compaction {
                       numPartitions: Int, blockSize: Int,
                       compression: String, encoding: String,
                       familyTtlMs: Map[String, Long], nowMs: Long): Unit = {
-    require(familyTtlMs.isEmpty || nowMs >= 0,
-      "TTL compaction needs an explicit nowMs (expiry must be deterministic)")
     val kept = resolve(cells, versions, collectMarkers, familyTtlMs, nowMs,
       withTags = carryTags)
     val prepared = kept
@@ -282,17 +282,16 @@ object Compaction {
                     blockSize: Int = HFile.DefaultBlockSize,
                     compression: String = "none",
                     encoding: String = "none",
-                    beforeEpoch: Option[Long] = scala.None,
                     epochs: Option[Seq[Long]] = scala.None,
                     collectMarkers: Boolean = true,
                     familyTtlMs: Map[String, Long] = Map.empty,
                     nowMs: Long = -1L): Unit = {
+    require(familyTtlMs.isEmpty || nowMs >= 0,
+      "TTL compaction needs an explicit nowMs (expiry must be deterministic)")
     val liveIds = HFileDir.runs(dir, spark.sparkContext.hadoopConfiguration)
       .map(_.id)
-      .filter(e => beforeEpoch.forall(e < _))
       .filter(e => epochs.forall(_.contains(e)))
     require(liveIds.nonEmpty, s"no run directories under $dir" +
-      beforeEpoch.map(b => s" with epoch < $b").getOrElse("") +
       epochs.map(ids => s" within ${ids.mkString("{", ",", "}")}").getOrElse(""))
     epochs.foreach { ids =>
       require(ids.forall(liveIds.contains),
@@ -303,13 +302,12 @@ object Compaction {
     // `file` path — the plan stays constant-size however many
     // micro-batch runs accumulated (an N-way unionByName here made
     // analysis/optimization cost grow linearly with N). When the fold
-    // is BOUNDED (`epochs`/`beforeEpoch`), the glob enumerates only the
+    // is BOUNDED (`epochs`), the glob enumerates only the
     // selected run directories — a tiered fold must not RE-READ every
     // live run each round, or total read volume over a stream's life
     // becomes O(N²/maxEpochs) and undoes the O(N log N) economics
     // tiered mode exists for (ADVICE r8).
-    val runsGlob = HFileDir.runsGlob(
-      if (beforeEpoch.isEmpty && epochs.isEmpty) scala.None else Some(liveIds))
+    val runsGlob = HFileDir.runsGlob(epochs.map(_ => liveIds))
     val cells = BulkLoad.readHFiles(spark, dir, runsGlob)
       .withColumn("_epoch", HFileDir.runIdOf(col("file")))
       .drop("file")

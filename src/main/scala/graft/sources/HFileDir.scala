@@ -178,13 +178,11 @@ private[graft] object HFileDir {
   /** Provenance file a published fold carries (see [[publishFold]]). */
   val ConsumedFile = "_consumed"
 
-  /** One run: `published` when it carries [[CompleteFile]]; `consumed`
-    * is a fold's provenance (None for a batch-written run).
-    */
+  /** One run; `published`/`folded`: [[CompleteFile]]/[[ConsumedFile]] there. */
   final case class Run(id: Long, path: Path, published: Boolean,
-                       consumed: Option[Seq[Long]]) {
+                       folded: Boolean) {
     /** A published batch run — folds only rearrange delivered cells. */
-    def deliverable: Boolean = published && consumed.isEmpty
+    def deliverable: Boolean = published && !folded
   }
 
   def runPath(path: String, id: Long): String =
@@ -203,14 +201,12 @@ private[graft] object HFileDir {
     regexp_extract(file, s"$RunPrefix(\\d+)/bucket=[^/]*/[^/]*$$", 1)
       .cast("long")
 
-  /** Every run under `path`, by id: one listStatus per run dir (the tail
-    * polls this per trigger; on an object store each probe is a round
-    * trip) plus a read of each fold's provenance. A run dir that is gone
-    * after an IOException — a fold swept it; the local FS then reports
+  /** Every run under `path`, by id: one listStatus per run dir and no
+    * file reads (the tail polls this per trigger; on an object store
+    * each probe is a round trip). A run dir that is gone after an
+    * IOException — a fold swept it; the local FS then reports
     * `AccessDeniedException`, as it checks `exists` before it lists — is
-    * skipped. Anything else is rethrown, and an unreadable provenance in
-    * a live fold fails loudly: its consumed leftovers could not be told
-    * from live runs.
+    * skipped. Anything else is rethrown.
     */
   def runs(path: String, conf: Configuration): Seq[Run] = {
     val root = new Path(path)
@@ -222,27 +218,33 @@ private[graft] object HFileDir {
         try {
           val names = fs.listStatus(p).map(_.getPath.getName).toSet
           Some(Run(p.getName.stripPrefix(RunPrefix).toLong, p,
-            names.contains(CompleteFile),
-            if (names.contains(ConsumedFile)) Some(readConsumed(fs, p))
-            else None))
+            names.contains(CompleteFile), names.contains(ConsumedFile)))
         } catch { case _: IOException if !fs.exists(p) => None }
       }
       .sortBy(_.id)
   }
 
-  private def readConsumed(fs: FileSystem, run: Path): Seq[Long] = {
-    val cf = new Path(run, ConsumedFile)
-    try {
-      val in = fs.open(cf)
-      try new String(IOUtils.readFullyToByteArray(in), UTF_8)
-        .split("\n").filter(_.nonEmpty).map(_.toLong).toSeq
-      finally in.close()
-    } catch {
-      case e: IOException if !fs.exists(run) => throw e // swept: skipped
-      case e: Exception =>
-        throw new IllegalStateException(s"unreadable fold provenance $cf", e)
+  /** The run ids a fold consumed (Nil for a batch run, or for a fold
+    * swept since [[runs]] listed it — the same vanished-dir rule). An
+    * unreadable provenance in a live fold fails loudly: its consumed
+    * leftovers could not be told from live runs.
+    */
+  def consumed(run: Run, conf: Configuration): Seq[Long] =
+    if (!run.folded) Nil
+    else {
+      val fs = run.path.getFileSystem(conf)
+      val cf = new Path(run.path, ConsumedFile)
+      try {
+        val in = fs.open(cf)
+        try new String(IOUtils.readFullyToByteArray(in), UTF_8)
+          .split("\n").filter(_.nonEmpty).map(_.toLong).toSeq
+        finally in.close()
+      } catch {
+        case _: IOException if !fs.exists(run.path) => Nil
+        case e: Exception =>
+          throw new IllegalStateException(s"unreadable fold provenance $cf", e)
+      }
     }
-  }
 
   /** Publishes a written run to tailing readers. Written AFTER every
     * file's commit rename landed, so a marker always names a fully

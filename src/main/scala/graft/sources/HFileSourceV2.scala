@@ -469,8 +469,6 @@ class HFileMicroBatchStream(path: String, required: StructType,
     extends rstreaming.MicroBatchStream {
   import HFileSource._
 
-  private def runs() = HFileDir.runs(path, HFileDir.confOf(confMap))
-
   /** Highest offset ever observed by THIS stream instance: latestOffset
     * must never regress, but the max DELIVERABLE id transiently drops
     * mid-fold (the sink folds the newest completed runs away before its
@@ -486,7 +484,8 @@ class HFileMicroBatchStream(path: String, required: StructType,
 
   override def initialOffset(): rstreaming.Offset = HFileEpochOffset(-1L)
   override def latestOffset(): rstreaming.Offset = {
-    maxSeen = runs().filter(_.deliverable).foldLeft(maxSeen)(_ max _.id)
+    maxSeen = HFileDir.runs(path, HFileDir.confOf(confMap))
+      .filter(_.deliverable).foldLeft(maxSeen)(_ max _.id)
     HFileEpochOffset(maxSeen)
   }
   override def deserializeOffset(json: String): rstreaming.Offset = {
@@ -507,7 +506,8 @@ class HFileMicroBatchStream(path: String, required: StructType,
     val s = start.asInstanceOf[HFileEpochOffset].epoch
     val e = end.asInstanceOf[HFileEpochOffset].epoch
     if (e <= s) return Array.empty
-    val live = runs()
+    val conf = HFileDir.confOf(confMap)
+    val live = HFileDir.runs(path, conf)
     // LOUD lag detection (a silent skip would record data loss as
     // successful delivery): if any run id inside this batch's range was
     // CONSUMED by a still-live fold — its provenance names exactly the
@@ -518,7 +518,7 @@ class HFileMicroBatchStream(path: String, required: StructType,
     // fold-of-a-fold chain erases the older provenance with its sources;
     // one fold generation is the detectable — and, under EpochStride,
     // the realistic — lag window.)
-    val foldConsumedInRange = live.flatMap(_.consumed.getOrElse(Nil))
+    val foldConsumedInRange = live.flatMap(HFileDir.consumed(_, conf))
       .filter(id => id > s && id <= e)
     if (foldConsumedInRange.nonEmpty)
       throw new IllegalStateException(
@@ -527,7 +527,7 @@ class HFileMicroBatchStream(path: String, required: StructType,
           "— the tail fell more than one fold window behind the sink " +
           "(see HFileMicroBatchStream's keep-pace contract)")
     live.filter(r => r.deliverable && r.id > s && r.id <= e).flatMap { r =>
-      HFileDir.list(r.path.toString, HFileDir.confOf(confMap)).paths
+      HFileDir.list(r.path.toString, conf).paths
         .map(p => HFileInputPartition(p, bucketOf(p)))
         // residual filters re-filter rows upstream
         .filter(p => pushed.forall(bucketMayMatch(p.bucket, _)))

@@ -1044,7 +1044,7 @@ object Streams {
     // leftovers to drop
     fs.delete(new Path(HFileDir.foldStage(dir)), true)
     val live = HFileDir.runs(dir, conf)
-    val consumedIds = live.flatMap(_.consumed.getOrElse(Nil)).toSet
+    val consumedIds = live.flatMap(HFileDir.consumed(_, conf)).toSet
     val (swept, kept) = live.partition(r => consumedIds.contains(r.id))
     swept.foreach(r => fs.delete(r.path, true))
     // ---- drop empty completed runs (nothing to fold there)

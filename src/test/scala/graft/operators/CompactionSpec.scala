@@ -435,6 +435,17 @@ class CompactionSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       Compaction.compact(spark, in, out, familyTtlMs = Map("f" -> 1000L))
     }
+    // ... by both entry points, before the input is listed or read (an
+    // absent input dir would fail any listing or read differently)
+    val absent = new java.io.File(in, "absent").toString
+    Seq[() => Unit](
+      () => Compaction.compact(spark, absent, out, familyTtlMs = Map("f" -> 1L)),
+      () => Compaction.compactEpochs(spark, absent, out,
+        familyTtlMs = Map("f" -> 1L))
+    ).foreach { call =>
+      val e = intercept[IllegalArgumentException](call())
+      assert(e.getMessage.contains("explicit nowMs"), e.getMessage)
+    }
   }
 
   test("compactEpochs TTL: a minor fold expires puts but carries markers " +
