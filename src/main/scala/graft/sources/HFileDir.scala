@@ -81,10 +81,12 @@ private[graft] object HFileDir {
   /** `f` over `items` through a bounded pool of 16 threads — per-file
     * short reads at 100k files would gate a job if serial (the parquet
     * parallel-footer analogue). Results come back in `items` order;
-    * `shutdownNow` so a failure leaves no queued reads running.
+    * `shutdownNow` so a failure leaves no queued reads running. A single
+    * item runs inline: a one-file probe or read needs no pool.
     */
   def pooled[A, B](items: Seq[A])(f: A => B): Seq[B] =
     if (items.isEmpty) Nil
+    else if (items.sizeIs == 1) Seq(f(items.head))
     else {
       val pool = Executors.newFixedThreadPool(math.min(16, items.size))
       try items.map(a => pool.submit(new Callable[B] { def call(): B = f(a) }))

@@ -576,6 +576,23 @@ object HFileReader {
       lower, upper, readBlock(r, _, AnyPrevOffset, trailer.compressionCodec))
         .map { case (off, size, _) => (off, size) }
 
+  /** How many data blocks may intersect `[lower, upper]`, as far as it
+    * matters against `limit`: the descent of [[dataBlocksInRange]], given
+    * up once one level selects more than `limit` entries, so any result
+    * above `limit` means only "more than `limit`". A wide range costs the
+    * index blocks of its first few entries, not its whole index.
+    */
+  private[sources] def dataBlockCount(r: RandomRead,
+                                      lower: Option[Array[Byte]],
+                                      upper: Option[Array[Byte]],
+                                      limit: Int): Int = {
+    val trailer = readTrailer(r)
+    if (trailer.entryCount == 0) 0
+    else coveringBlocks(rootIndex(r, trailer), trailer.numDataIndexLevels,
+      lower, upper, readBlock(r, _, AnyPrevOffset, trailer.compressionCodec),
+      limit).size
+  }
+
   /** The one index descent, under [[validate]] (unbounded),
     * [[dataBlocksInRange]] and [[multiGet]] (a point get is the `[k, k]`
     * range): from the root, keep every entry whose span may intersect
@@ -584,11 +601,18 @@ object HFileReader {
     * boundary — verifying each sub-level's index magic on the way down.
     * Returns the data entries `(offset, onDiskSizeWithHeader, firstKey)`;
     * `block` loads an index block by offset.
+    *
+    * With a `limit`, the descent stops as soon as one level has selected
+    * more than `limit` entries and returns that partial level. Each
+    * selected entry's child block selects at least one entry of its own
+    * (its last entry with first row <= `upper`), so a level's count never
+    * exceeds the data blocks below it.
     */
   private def coveringBlocks(root: Block, levels: Int,
                              lower: Option[Array[Byte]],
                              upper: Option[Array[Byte]],
-                             block: Long => Block)
+                             block: Long => Block,
+                             limit: Int = Int.MaxValue)
       : Seq[(Long, Int, Array[Byte])] = {
     def select(payload: Array[Byte]): Array[(Long, Int, Array[Byte])] = {
       val entries = parseIndexEntries(payload)
@@ -604,14 +628,21 @@ object HFileReader {
     }
     var level = select(root.payload)
     var depth = levels
-    while (depth > 1) {
+    while (depth > 1 && level.length <= limit) {
       val magic = if (depth == 2) BlockMagicLeafIndex
         else BlockMagicIntermediateIndex
-      level = level.flatMap { case (off, _, _) =>
+      val next = Array.newBuilder[(Long, Int, Array[Byte])]
+      var selected = 0
+      val it = level.iterator
+      while (it.hasNext && selected <= limit) {
+        val off = it.next()._1
         val b = block(off)
         require(b.magic.sameElements(magic), s"expected index block at $off")
-        select(b.payload)
+        val entries = select(b.payload)
+        next ++= entries
+        selected += entries.length
       }
+      level = next.result()
       depth -= 1
     }
     level.toSeq

@@ -4,6 +4,7 @@ import java.util
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
@@ -31,13 +32,18 @@ import org.apache.spark.unsafe.types.UTF8String
   *    with every [[HFileReader]] structural check active;
   *  - '''column pruning''' ([[SupportsPushDownRequiredColumns]]) — a
   *    `select(qualifier)` never materializes values;
-  *  - '''file pruning''' ([[SupportsPushDownFilters]]) — `bucket` equality
-  *    and `rowkey` range predicates skip whole files at plan time using
-  *    the `bucket=N` directory name and [[HFileReader.rowkeyRange]] (the
-  *    trailer + first-index-key + LASTKEY triple: three short reads per
-  *    file, the HFile analogue of a parquet footer's min/max). Pruning
-  *    filters are reported pushed but conservatively re-evaluated by
-  *    Spark — the source skips files, not rows.
+  *  - '''filter pushdown''' ([[SupportsPushDownFilters]]) — `bucket`
+  *    equality/membership and `rowkey` comparisons ([[PushedFilters]])
+  *    skip whole files at plan time using the `bucket=N` directory name
+  *    and [[HFileReader.rowkeyRange]] (the trailer + first-index-key +
+  *    LASTKEY triple: three short reads per file, the HFile analogue of a
+  *    parquet footer's min/max), and the readers then evaluate them
+  *    exactly on every cell, so Spark keeps no `Filter` above the scan;
+  *  - '''driver-local bounded reads''' — a scan whose pushed rowkey
+  *    envelope is bounded on both sides and covers at most
+  *    [[HFileScan.LocalBlockLimit]] data blocks is an [[HFileLocalScan]]:
+  *    the driver reads those blocks, at physical planning, and the
+  *    query runs no Spark job.
   *
   * The two reads are NOT interchangeable: the data columns are
   * [[graft.operators.HFileCellRow]]'s without `tags` and `mvcc` (this
@@ -99,18 +105,129 @@ object HFileSource {
       .map(_.group(1).toInt).getOrElse(-1)
   }
   private val BucketDir = "^bucket=(-?\\d+)$".r
+}
 
-  /** Whether a file of bucket `b` can satisfy `f`: exact `bucket`
-    * filters decide from the `bucket=N` directory name; anything else
-    * may match.
+/** The filters the `graft-hfile` source accepts, and what it derives from
+  * them: the per-bucket test ([[forBucket]]) the readers apply to every
+  * cell, file pruning by key range ([[mayMatch]]), and the rowkey
+  * envelope a reader seeks to ([[envelope]]).
+  *
+  * Accepted: `>`, `>=`, `<`, `<=` and `=` on `rowkey` (Spark's unsigned
+  * binary order), `bucket` `=` and `IN`, and And/Or trees of these — the
+  * multi-range disjunction a Z-order box scan pushes as ONE filter, so an
+  * interval set needs one scan node and one directory listing.
+  */
+private[sources] object PushedFilters {
+  private def cmp(a: Array[Byte], b: Array[Byte]): Int =
+    java.util.Arrays.compareUnsigned(a, b)
+
+  def accepts(f: Filter): Boolean = f match {
+    case And(l, r)                                    => accepts(l) && accepts(r)
+    case Or(l, r)                                     => accepts(l) && accepts(r)
+    case EqualTo("bucket", _: Int)                    => true
+    case In("bucket", vs)                             => vs.forall(_.isInstanceOf[Int])
+    case GreaterThan("rowkey", _: Array[Byte])        => true
+    case GreaterThanOrEqual("rowkey", _: Array[Byte]) => true
+    case LessThan("rowkey", _: Array[Byte])           => true
+    case LessThanOrEqual("rowkey", _: Array[Byte])    => true
+    case EqualTo("rowkey", _: Array[Byte])            => true
+    case _                                            => false
+  }
+
+  /** A tree's verdict on the cells of one file: `Left` when the file's
+    * bucket alone decides it (for all cells, or for none), else `Right`
+    * with the rowkey test left after the bucket leaves are folded away.
     */
-  private[sources] def bucketMayMatch(b: Int, f: Filter): Boolean = f match {
-    case EqualTo("bucket", v: Int) => b == v
-    case In("bucket", vs) => vs.exists {
-      case v: Int => v == b
-      case _      => true
+  type Verdict = Either[Boolean, Array[Byte] => Boolean]
+
+  private def and(l: Verdict, r: Verdict): Verdict = (l, r) match {
+    case (Left(false), _) | (_, Left(false)) => Left(false)
+    case (Left(true), x)                     => x
+    case (x, Left(true))                     => x
+    case (Right(p), Right(q))                => Right(k => p(k) && q(k))
+  }
+
+  private def or(l: Verdict, r: Verdict): Verdict = (l, r) match {
+    case (Left(true), _) | (_, Left(true)) => Left(true)
+    case (Left(false), x)                  => x
+    case (x, Left(false))                  => x
+    case (Right(p), Right(q))              => Right(k => p(k) || q(k))
+  }
+
+  private def verdict(f: Filter, bucket: Int): Verdict = f match {
+    case And(l, r)                 => and(verdict(l, bucket), verdict(r, bucket))
+    case Or(l, r)                  => or(verdict(l, bucket), verdict(r, bucket))
+    case EqualTo("bucket", v: Int) => Left(v == bucket)
+    case In("bucket", vs)          => Left(vs.contains(bucket))
+    case GreaterThan("rowkey", v: Array[Byte])        => Right(cmp(_, v) > 0)
+    case GreaterThanOrEqual("rowkey", v: Array[Byte]) => Right(cmp(_, v) >= 0)
+    case LessThan("rowkey", v: Array[Byte])           => Right(cmp(_, v) < 0)
+    case LessThanOrEqual("rowkey", v: Array[Byte])    => Right(cmp(_, v) <= 0)
+    case EqualTo("rowkey", v: Array[Byte]) => Right(java.util.Arrays.equals(_, v))
+    case other => throw new IllegalArgumentException(
+      s"not a pushed graft-hfile filter: $other")
+  }
+
+  /** The conjunction `pushed`, compiled once for the cells of a file in
+    * `bucket`: a scan with no pushed rowkey filter gets `Left` and tests
+    * nothing per cell.
+    */
+  def forBucket(pushed: Seq[Filter], bucket: Int): Verdict =
+    pushed.foldLeft(Left(true): Verdict)((v, f) => and(v, verdict(f, bucket)))
+
+  /** Whether some cell of a file in `bucket` with rowkeys in `range` may
+    * satisfy `f` (conservative: any doubt keeps the file; None = a
+    * cell-less file). And/Or trees recurse — an Or of ranges keeps the
+    * file iff ANY disjunct can match.
+    */
+  def mayMatch(bucket: Int, range: Option[(Array[Byte], Array[Byte])],
+               f: Filter): Boolean = f match {
+    case And(l, r) => mayMatch(bucket, range, l) && mayMatch(bucket, range, r)
+    case Or(l, r)  => mayMatch(bucket, range, l) || mayMatch(bucket, range, r)
+    case _ if !f.references.contains("rowkey") => forBucket(Seq(f), bucket) != Left(false)
+    case _ => range match {
+      case None => false
+      case Some((first, last)) => f match {
+        case GreaterThan("rowkey", v: Array[Byte])        => cmp(last, v) > 0
+        case GreaterThanOrEqual("rowkey", v: Array[Byte]) => cmp(last, v) >= 0
+        case LessThan("rowkey", v: Array[Byte])           => cmp(first, v) < 0
+        case LessThanOrEqual("rowkey", v: Array[Byte])    => cmp(first, v) <= 0
+        case EqualTo("rowkey", v: Array[Byte]) =>
+          cmp(first, v) <= 0 && cmp(last, v) >= 0
+        case _ => true
+      }
     }
-    case _ => true
+  }
+
+  private def maxKey(a: Array[Byte], b: Array[Byte]) = if (cmp(a, b) >= 0) a else b
+  private def minKey(a: Array[Byte], b: Array[Byte]) = if (cmp(a, b) <= 0) a else b
+
+  /** Inclusive `[lower, upper]` rowkey envelope of the conjunction
+    * `pushed` (None = unbounded on that side; exclusive edges are
+    * included): And intersects envelopes, Or unions them — so a pushed
+    * multi-range disjunction still gives a tight outer seek window.
+    */
+  def envelope(pushed: Seq[Filter]): (Option[Array[Byte]], Option[Array[Byte]]) = {
+    def env(f: Filter): (Option[Array[Byte]], Option[Array[Byte]]) = f match {
+      case And(l, r) =>
+        val (ll, lu) = env(l); val (rl, ru) = env(r)
+        ((ll ++ rl).reduceOption(maxKey), (lu ++ ru).reduceOption(minKey))
+      case Or(l, r) =>
+        val (ll, lu) = env(l); val (rl, ru) = env(r)
+        (for (a <- ll; b <- rl) yield minKey(a, b),
+          for (a <- lu; b <- ru) yield maxKey(a, b))
+      case GreaterThan("rowkey", v: Array[Byte])        => (Some(v), None)
+      case GreaterThanOrEqual("rowkey", v: Array[Byte]) => (Some(v), None)
+      case LessThan("rowkey", v: Array[Byte])           => (None, Some(v))
+      case LessThanOrEqual("rowkey", v: Array[Byte])    => (None, Some(v))
+      case EqualTo("rowkey", v: Array[Byte])            => (Some(v), Some(v))
+      case _                                            => (None, None)
+    }
+    pushed.map(env).foldLeft(
+      (Option.empty[Array[Byte]], Option.empty[Array[Byte]])) {
+      case ((lo, hi), (l, u)) =>
+        ((lo ++ l).reduceOption(maxKey), (hi ++ u).reduceOption(minKey))
+    }
   }
 }
 
@@ -139,56 +256,27 @@ class HFileScanBuilder(path: String) extends ScanBuilder
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = requiredSchema
 
-  private def isExactBucketFilter(f: Filter): Boolean = f match {
-    case EqualTo("bucket", _: Int) => true
-    case In("bucket", vs)          => vs.forall(_.isInstanceOf[Int])
-    case _                         => false
-  }
-
-  private def isRowkeyLeaf(f: Filter): Boolean = f match {
-    case GreaterThan("rowkey", _: Array[Byte])        => true
-    case GreaterThanOrEqual("rowkey", _: Array[Byte]) => true
-    case LessThan("rowkey", _: Array[Byte])           => true
-    case LessThanOrEqual("rowkey", _: Array[Byte])    => true
-    case EqualTo("rowkey", _: Array[Byte])            => true
-    case _                                            => false
-  }
-
-  /** And/Or trees over acceptable leaves prune too — the multi-range
-    * shape a Z-order box scan pushes as ONE disjunction
-    * (`(k>=a AND k<b) OR (k>=c AND k<d) OR …`), so an interval set
-    * needs one scan node and one directory listing, not one branch
-    * per interval.
-    */
-  private def acceptableTree(f: Filter): Boolean = f match {
-    case And(l, r) => acceptableTree(l) && acceptableTree(r)
-    case Or(l, r)  => acceptableTree(l) && acceptableTree(r)
-    case leaf      => isRowkeyLeaf(leaf) || isExactBucketFilter(leaf)
-  }
-
-  /** Accepts `bucket` equality/membership, `rowkey` comparisons, and
-    * And/Or trees of those, for FILE pruning. Top-level bucket filters
-    * are CONSUMED (the `bucket=N` directory name is authoritative, so
-    * directory pruning evaluates them exactly); everything else comes
-    * back as residual — the source skips whole files whose key range /
-    * bloom can't match, it does not filter rows.
+  /** Consumes every filter [[PushedFilters]] accepts: the source prunes
+    * files by them and its readers evaluate them exactly on each cell.
+    * Only the others come back as residual for Spark to evaluate.
     */
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    pushed = filters.filter(acceptableTree)
-    filters.filterNot(isExactBucketFilter)
+    pushed = filters.filter(PushedFilters.accepts)
+    filters.filterNot(PushedFilters.accepts)
   }
 
   override def pushedFilters(): Array[Filter] = pushed
 
   /** COUNT(*) / MIN(rowkey) / MAX(rowkey), globally or grouped by
     * `bucket`, answer from file trailers and key ranges — no data block
-    * is read at any scale. Only reachable when every remaining filter is
-    * an exact bucket filter (rowkey filters stay residual, so Spark
-    * never offers the aggregate).
+    * is read at any scale. Only when every pushed filter is on `bucket`
+    * alone (the directory name decides it exactly); a pushed rowkey
+    * filter keeps the row scan.
     */
   override def supportCompletePushDown(
       agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Boolean =
-    HFileStatsScan.plan(agg).isDefined && pushed.forall(isExactBucketFilter)
+    HFileStatsScan.plan(agg).isDefined &&
+      pushed.forall(!_.references.contains("rowkey"))
 
   override def pushAggregation(
       agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Boolean = {
@@ -197,13 +285,15 @@ class HFileScanBuilder(path: String) extends ScanBuilder
   }
   private var pushedAgg: Option[(Boolean, Seq[String])] = None
 
-  override def build(): Scan = pushedAgg match {
-    case Some((byBucket, funcs)) =>
-      new HFileStatsScan(path, pushed, byBucket, funcs,
-        HFileDir.confMap(SparkSession.active))
-    case None =>
-      new HFileScan(path, required, pushed,
-        HFileDir.confMap(SparkSession.active))
+  override def build(): Scan = {
+    val spark = SparkSession.active
+    pushedAgg match {
+      case Some((byBucket, funcs)) =>
+        new HFileStatsScan(path, pushed, byBucket, funcs, HFileDir.confMap(spark))
+      case None =>
+        HFileScan(path, required, pushed, HFileDir.confMap(spark),
+          spark.sparkContext.hadoopConfiguration)
+    }
   }
 }
 
@@ -246,7 +336,6 @@ object HFileStatsScan {
 class HFileStatsScan(path: String, pushed: Array[Filter], byBucket: Boolean,
                      funcs: Seq[String], confMap: Map[String, String])
     extends LocalScan {
-  import HFileSource._
 
   override def readSchema(): StructType = {
     val aggFields = funcs.map {
@@ -273,7 +362,7 @@ class HFileStatsScan(path: String, pushed: Array[Filter], byBucket: Boolean,
     // `_manifest` sidecar matches the listing, 1-3 pooled short reads per
     // file when not
     val stats = dir.stats(needRange = funcs.exists(f => f == "min" || f == "max"),
-      keep = b => pushed.forall(bucketMayMatch(b, _)))
+      keep = b => PushedFilters.forBucket(pushed, b) != Left(false))
     val unsigned = Ordering.fromLessThan[Array[Byte]](
       java.util.Arrays.compareUnsigned(_, _) < 0)
     def rowOf(bucket: Option[Int], group: Seq[HFileDir.FileStat]): InternalRow = {
@@ -294,9 +383,14 @@ class HFileStatsScan(path: String, pushed: Array[Filter], byBucket: Boolean,
 
 case class HFileInputPartition(file: String, bucket: Int) extends InputPartition
 
+/** The row scan: one [[HFileInputPartition]] per surviving file, read by
+  * executor tasks. `planned` carries the files already pruned in
+  * [[HFileScan.apply]], so planning lists and probes the directory once.
+  */
 class HFileScan(path: String, required: StructType, pushed: Array[Filter],
-                confMap: Map[String, String]) extends Scan with Batch {
-  import HFileSource._
+                confMap: Map[String, String],
+                planned: Option[Seq[HFileInputPartition]] = None)
+    extends Scan with Batch {
 
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
@@ -306,61 +400,76 @@ class HFileScan(path: String, required: StructType, pushed: Array[Filter],
   override def description(): String =
     s"graft-hfile $path, pruned by [${pushed.mkString(", ")}]"
 
-  private def cmp(a: Array[Byte], b: Array[Byte]): Int =
-    java.util.Arrays.compareUnsigned(a, b)
+  override def planInputPartitions(): Array[InputPartition] =
+    planned.getOrElse(HFileScan.survivors(path, pushed, HFileDir.confOf(confMap)))
+      .toArray
 
-  /** File survives iff every pushed predicate can match somewhere in the
-    * file's [first, last] rowkey range (conservative: any doubt keeps
-    * the file). And/Or trees recurse — an Or of ranges keeps the file
-    * iff ANY disjunct can match, which is exactly the multi-interval
-    * pruning a Z-order box scan needs from its single pushed
-    * disjunction.
+  override def createReaderFactory(): PartitionReaderFactory =
+    new HFileReaderFactory(required, confMap, pushed)
+}
+
+object HFileScan {
+  /** Most data blocks a scan may cover and still be read on the driver:
+    * 16 blocks, about 1 MiB at the default 64 KiB block size, which is
+    * also what [[HFileLocalScan.rows]] holds in driver memory. Measured
+    * on local[4] (4-core VM, 64 KiB blocks, p50 driver vs job): a range
+    * collected to the driver is faster on the driver at every size
+    * (1 block 53 vs 100 ms, 16 blocks 51 vs 95, 64 blocks 87 vs 150,
+    * 245 blocks 212 vs 288), but a range aggregated on top runs a job
+    * either way, breaks even up to 2 blocks, and then falls behind
+    * (16 blocks 120-148 vs 111-126 ms, 64 blocks 179 vs 133, 245 blocks
+    * 369 vs 197). 16 keeps gets and row-prefix scans (1-2 blocks) local
+    * and holds an aggregate's loss to about a tenth.
     */
-  private def mayMatch(bucket: Int, range: Option[(Array[Byte], Array[Byte])],
-                       f: Filter): Boolean = f match {
-    case And(l, r) =>
-      mayMatch(bucket, range, l) && mayMatch(bucket, range, r)
-    case Or(l, r) =>
-      mayMatch(bucket, range, l) || mayMatch(bucket, range, r)
-    case EqualTo("bucket", _: Int) | In("bucket", _) => bucketMayMatch(bucket, f)
-    case _ => range match {
-      case None => false // empty file: no rowkey can match
-      case Some((first, last)) => f match {
-        case GreaterThan("rowkey", v: Array[Byte])        => cmp(last, v) > 0
-        case GreaterThanOrEqual("rowkey", v: Array[Byte]) => cmp(last, v) >= 0
-        case LessThan("rowkey", v: Array[Byte])           => cmp(first, v) < 0
-        case LessThanOrEqual("rowkey", v: Array[Byte])    => cmp(first, v) <= 0
-        case EqualTo("rowkey", v: Array[Byte]) =>
-          cmp(first, v) <= 0 && cmp(last, v) >= 0
-        case _ => true
-      }
-    }
-  }
+  val LocalBlockLimit = 16
 
-  override def planInputPartitions(): Array[InputPartition] = {
-    val dir = HFileDir.list(path, HFileDir.confOf(confMap))
+  /** The scan for `pushed`: an [[HFileLocalScan]] when its rowkey
+    * envelope is bounded on both sides and the surviving files' covering
+    * data blocks are at most [[LocalBlockLimit]]; else the row scan. The
+    * count descends each file's index only as far as the budget left
+    * ([[HFileReader.dataBlockCount]]) and opens no file once it is spent.
+    */
+  private[sources] def apply(path: String, required: StructType,
+                             pushed: Array[Filter], confMap: Map[String, String],
+                             conf: Configuration): HFileScan =
+    PushedFilters.envelope(pushed) match {
+      case (lower @ Some(_), upper @ Some(_)) =>
+        val files = survivors(path, pushed, conf)
+        val blocks = files.iterator.scanLeft(0) { (sofar, p) =>
+          val r = HFileDir.open(p.file, conf)
+          try sofar + HFileReader.dataBlockCount(r, lower, upper,
+            LocalBlockLimit - sofar)
+          finally r.close()
+        }
+        if (blocks.forall(_ <= LocalBlockLimit))
+          new HFileLocalScan(path, required, pushed, confMap, files, conf)
+        else new HFileScan(path, required, pushed, confMap, Some(files))
+      case _ => new HFileScan(path, required, pushed, confMap)
+    }
+
+  /** The files of `path` that may hold a cell satisfying `pushed`. */
+  private[sources] def survivors(path: String, pushed: Array[Filter],
+                                 conf: Configuration): Seq[HFileInputPartition] = {
+    val dir = HFileDir.list(path, conf)
     if (dir.files.isEmpty) {
       // an existing-but-empty directory is a valid empty scan (count() = 0,
       // like every other Spark source); only a missing path is an error
       require(dir.fs.exists(dir.root), s"no HFiles found under $path")
-      return Array.empty
+      return Nil
     }
-    // anything touching rowkey (leaf OR tree) must see the file's key
-    // range; only rowkey-free filters may evaluate with range = None
-    val (bucketFilters, rowkeyFilters) =
-      pushed.partition(!_.references.contains("rowkey"))
     // directory-name pruning first: costs nothing, avoids the trailer
     // reads for buckets that can't match
-    val bucketOk = (b: Int) => bucketFilters.forall(mayMatch(b, None, _))
-    val survivors =
+    val bucketOk = (b: Int) => PushedFilters.forBucket(pushed, b) != Left(false)
+    val rowkeyFilters = pushed.filter(_.references.contains("rowkey"))
+    val kept =
       if (rowkeyFilters.isEmpty)
-        dir.paths.map(f => (f, bucketOf(f))).filter(p => bucketOk(p._2))
+        dir.paths.map(f => (f, HFileSource.bucketOf(f))).filter(p => bucketOk(p._2))
       else {
         // key ranges come free from the `_manifest` sidecar when it
         // matches the listing; only its absence costs 3 short reads
         // (trailer / first index key / LASTKEY) per file
         val inRange = dir.stats(keep = bucketOk)
-          .filter(s => rowkeyFilters.forall(mayMatch(s.bucket, s.range, _)))
+          .filter(s => rowkeyFilters.forall(PushedFilters.mayMatch(s.bucket, s.range, _)))
           .map(s => (s.file, s.bucket))
         val eqKeys = rowkeyFilters.collect {
           case EqualTo("rowkey", v: Array[Byte]) => v
@@ -378,47 +487,35 @@ class HFileScan(path: String, required: StructType, pushed: Array[Filter],
           }).collect { case (p, true) => p }
         }
       }
-    survivors.map { case (f, b) => HFileInputPartition(f, b): InputPartition }
-      .toArray
+    kept.map { case (f, b) => HFileInputPartition(f, b) }
   }
+}
 
-  override def createReaderFactory(): PartitionReaderFactory = {
-    // inclusive rowkey bounds for task-side block skipping: a task with a
-    // point-GET predicate seeks via the file's index instead of streaming
-    // the whole file (LT's exclusive edge is conservatively included; the
-    // row-level Filter above the scan stays exact)
-    def maxKey(a: Array[Byte], b: Array[Byte]) =
-      if (java.util.Arrays.compareUnsigned(a, b) >= 0) a else b
-    def minKey(a: Array[Byte], b: Array[Byte]) =
-      if (java.util.Arrays.compareUnsigned(a, b) <= 0) a else b
-    // inclusive [lo, hi] envelope of rowkeys a filter can accept
-    // (None = unbounded on that side): And intersects envelopes, Or
-    // unions them — so a pushed multi-range disjunction still gives
-    // the task a tight outer seek window over all its intervals
-    def env(f: Filter): (Option[Array[Byte]], Option[Array[Byte]]) =
-      f match {
-        case And(l, r) =>
-          val (ll, lu) = env(l); val (rl, ru) = env(r)
-          ((ll ++ rl).reduceOption(maxKey), (lu ++ ru).reduceOption(minKey))
-        case Or(l, r) =>
-          val (ll, lu) = env(l); val (rl, ru) = env(r)
-          (for (a <- ll; b <- rl) yield minKey(a, b),
-            for (a <- lu; b <- ru) yield maxKey(a, b))
-        case GreaterThan("rowkey", v: Array[Byte])        => (Some(v), None)
-        case GreaterThanOrEqual("rowkey", v: Array[Byte]) => (Some(v), None)
-        case LessThan("rowkey", v: Array[Byte])           => (None, Some(v))
-        case LessThanOrEqual("rowkey", v: Array[Byte])    => (None, Some(v))
-        case EqualTo("rowkey", v: Array[Byte]) => (Some(v), Some(v))
-        case _                                 => (None, None)
-      }
-    // top-level filters are conjunctive
-    val (lower, upper) = pushed.map(env).foldLeft(
-      (Option.empty[Array[Byte]], Option.empty[Array[Byte]])) {
-      case ((lo, hi), (l, u)) =>
-        ((lo ++ l).reduceOption(maxKey), (hi ++ u).reduceOption(minKey))
-    }
-    new HFileReaderFactory(required, confMap, lower, upper)
-  }
+/** A bounded scan answered on the driver: [[rows]] reads the covering
+  * blocks of `files` through the same reader as a task, so the plan is a
+  * bare `LocalTableScan` and the query runs no Spark job. Still an
+  * [[HFileScan]], so `toBatch.planInputPartitions()` names its files.
+  *
+  * Spark calls [[rows]] while it builds the physical plan, so the blocks
+  * are read at planning: `explain()` and `queryExecution.executedPlan`
+  * read data, a corrupt block fails planning rather than execution, and
+  * the rows are fixed in the Dataset's cached plan — running the same
+  * Dataset again does not re-read (a new Dataset re-plans and does).
+  */
+class HFileLocalScan(path: String, required: StructType, pushed: Array[Filter],
+                     confMap: Map[String, String], files: Seq[HFileInputPartition],
+                     conf: Configuration)
+    extends HFileScan(path, required, pushed, confMap, Some(files)) with LocalScan {
+
+  override def rows(): Array[InternalRow] =
+    HFileDir.pooled(files) { p =>
+      val r = new HFilePartitionReader(p, required, conf, pushed)
+      try {
+        val out = Array.newBuilder[InternalRow]
+        while (r.next()) out += r.get()
+        out.result()
+      } finally r.close()
+    }.flatten.toArray
 }
 
 /** Streaming offset for a tailed bulk-load directory: the highest run
@@ -458,10 +555,9 @@ object HFileEpochOffset {
   * HBase replication has with WAL cleanup.
   *
   * Plan shape: offsets and run listings are driver-side (O(runs));
-  * each micro-batch plans one InputPartition per new HFile through the
-  * same reader/pruning machinery as the batch scan (consumed exact
-  * `bucket` filters are honored here; residual rowkey filters re-filter
-  * rows upstream as in the batch path).
+  * each micro-batch plans one InputPartition per new HFile of a bucket
+  * the pushed filters admit, read by the same readers as the batch scan,
+  * which evaluate every pushed filter exactly.
   */
 class HFileMicroBatchStream(path: String, required: StructType,
                             pushed: Array[Filter],
@@ -529,13 +625,12 @@ class HFileMicroBatchStream(path: String, required: StructType,
     live.filter(r => r.deliverable && r.id > s && r.id <= e).flatMap { r =>
       HFileDir.list(r.path.toString, conf).paths
         .map(p => HFileInputPartition(p, bucketOf(p)))
-        // residual filters re-filter rows upstream
-        .filter(p => pushed.forall(bucketMayMatch(p.bucket, _)))
+        .filter(p => PushedFilters.forBucket(pushed, p.bucket) != Left(false))
     }.toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new HFileReaderFactory(required, confMap)
+    new HFileReaderFactory(required, confMap, pushed)
 }
 
 // ---- DSv2 write path ------------------------------------------------------
@@ -702,19 +797,20 @@ class HFileDataWriter(path: String, schema: StructType,
 }
 
 class HFileReaderFactory(required: StructType, confMap: Map[String, String],
-                         lower: Option[Array[Byte]] = None,
-                         upper: Option[Array[Byte]] = None)
+                         pushed: Array[Filter])
     extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[HFileInputPartition]
-    new HFilePartitionReader(p, required, confMap, lower, upper)
-  }
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    new HFilePartitionReader(partition.asInstanceOf[HFileInputPartition],
+      required, HFileDir.confOf(confMap), pushed)
 }
 
+/** One file's cells that satisfy `pushed`, projected to `required`. With
+  * a bounded rowkey envelope it seeks through the index and streams only
+  * the covering blocks; otherwise it scans the whole file with every
+  * structural check.
+  */
 class HFilePartitionReader(p: HFileInputPartition, required: StructType,
-                           confMap: Map[String, String],
-                           lower: Option[Array[Byte]] = None,
-                           upper: Option[Array[Byte]] = None)
+                           conf: Configuration, pushed: Array[Filter])
     extends PartitionReader[InternalRow] {
   import HFile.HCell
 
@@ -733,16 +829,20 @@ class HFilePartitionReader(p: HFileInputPartition, required: StructType,
     case other => throw new IllegalArgumentException(s"unknown column $other")
   }
 
-  private val rr = HFileDir.open(p.file, HFileDir.confOf(confMap))
+  private val rr = HFileDir.open(p.file, conf)
   // a corrupt trailer/header throws before the reader is constructed, so
-  // close() would never run — release the stream on the failure path.
-  // With rowkey bounds, seek through the index and stream only covering
-  // blocks; otherwise full scan with every structural check
+  // close() would never run — release the stream on the failure path
   private val cells =
-    try {
-      if (lower.isDefined || upper.isDefined)
-        HFileReader.scanRange(rr, lower, upper)
-      else HFileReader.scan(rr)
+    // compiled once for this file's bucket: no per-cell test when the
+    // bucket alone decides the pushed filters
+    try PushedFilters.forBucket(pushed, p.bucket) match {
+      case Left(false) => Iterator.empty
+      case verdict =>
+        val (lower, upper) = PushedFilters.envelope(pushed)
+        val read =
+          if (lower.isDefined || upper.isDefined) HFileReader.scanRange(rr, lower, upper)
+          else HFileReader.scan(rr)
+        verdict.fold(_ => read, test => read.filter(c => test(c.rowkey)))
     } catch {
       case t: Throwable =>
         try rr.close() catch { case _: Throwable => () }

@@ -1404,10 +1404,6 @@ class KnnSpec extends SparkSpec {
 
   test("eager driver jobs: building each PQ-family DataFrame (without " +
       "running it) stays within the measured job budget") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
-      SparkListenerJobStart}
-    import scala.concurrent.{Await, Promise}
-    import scala.concurrent.duration._
     val ivfDir = java.nio.file.Files.createTempDirectory("ivfpq_jobs")
       .toString
     Knn.buildIvfPqIndex(emb, "vec_id", "embedding", ivfDir, dim = 64)
@@ -1418,39 +1414,8 @@ class KnnSpec extends SparkSpec {
     // opened before the counting starts: its search pays no sidecar read
     // the open already paid
     val ivfStore = PersistedStore.IvfPq.open(spark, ivfDir)
-    val sc = spark.sparkContext
-    val marker = "graft.test.jobMarker"
-    val started = new java.util.concurrent.atomic.AtomicInteger
-    val drained = new java.util.concurrent.atomic.AtomicReference(
-      Promise[Unit]())
-    val listener = new SparkListener {
-      private val markers =
-        java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty(marker) != null))
-          markers.add(e.jobId)
-        else started.incrementAndGet()
-      override def onJobEnd(e: SparkListenerJobEnd): Unit =
-        if (markers.remove(e.jobId)) drained.get.trySuccess(())
-    }
-    // the listener bus delivers events in order: once the marker job's
-    // end arrives, every job started before it has been counted
-    def drain(): Unit = {
-      val p = Promise[Unit]()
-      drained.set(p)
-      sc.setLocalProperty(marker, "1")
-      try sc.parallelize(Seq(1), 1).count()
-      finally sc.setLocalProperty(marker, null)
-      Await.result(p.future, 60.seconds)
-    }
-    def jobs(build: => org.apache.spark.sql.DataFrame): Int = {
-      drain()
-      started.set(0)
-      build
-      drain()
-      started.get
-    }
-    sc.addSparkListener(listener)
+    val counter = new graft.JobCounter(spark)
+    def jobs(build: => org.apache.spark.sql.DataFrame): Int = counter.jobs(build)
     val counts = try Seq(
       "pq" -> jobs(Knn.pq(emb, queries, "vec_id", "embedding", 64, 5)),
       "pqTrained" -> jobs(Knn.pqTrained(emb, queries, "vec_id",
@@ -1476,7 +1441,7 @@ class KnnSpec extends SparkSpec {
       "graft_knn_index_sq" -> jobs(spark.sql(
         s"SELECT * FROM graft_knn_index_sq('$sqDir', 'knn_jobs_queries', " +
           "'knn_jobs_corpus', 'vec_id', 'embedding', 5)"))
-    ) finally sc.removeSparkListener(listener)
+    ) finally counter.close()
     info(counts.map { case (n, c) => s"$n=$c" }.mkString(" "))
     // the measured counts (schema inference, quantizer reads, probed
     // cell lists); a stage that adds an eager action to a plan build

@@ -1,8 +1,8 @@
 package graft.plans
 
 import graft.SparkSpec
+import graft.sources.HFileSourceSpec
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 
 /** [[PrefixRangeRewrite]]: binary `startswith` filters become pushable
   * rowkey ranges (the session is built with graft.GraftExtensions, so
@@ -93,21 +93,15 @@ class PrefixRangeRewriteSpec extends SparkSpec {
       .orderBy("event_id").collect()
     assert(got.nonEmpty && got.length == expected.length)
     got.zip(expected).foreach { case (a, b) => assert(a == b) }
-    // the scan is pruned: fewer input partitions than hfiles on disk
+    // the scan is pruned: fewer planned files than hfiles on disk, and
+    // the prefix's few blocks are read on the driver
     val dir = graft.queries.HModel.ensureLookupDir(events, sfDir, 4)
     val totalFiles = new java.io.File(dir).listFiles
       .filter(_.getName.startsWith("bucket="))
       .flatMap(_.listFiles).count(_.getName.endsWith(".hfile"))
-    def scansOf(p: org.apache.spark.sql.execution.SparkPlan): Seq[BatchScanExec] =
-      p.collect {
-        case s: BatchScanExec => Seq(s)
-        case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-          scansOf(q.plan)
-        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-          scansOf(a.executedPlan)
-      }.flatten
-    val scans = scansOf(df.queryExecution.executedPlan)
-    val nParts = scans.head.inputRDD.getNumPartitions
+    assert(HFileSourceSpec.localScans(df.queryExecution.executedPlan).nonEmpty,
+      df.queryExecution.executedPlan.toString)
+    val nParts = HFileSourceSpec.plannedFiles(df)
     assert(nParts >= 1 && nParts < totalFiles,
       s"expected pruned scan, got $nParts of $totalFiles files")
   }

@@ -15,6 +15,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   */
 class HFileSourceSpec extends SparkSpec {
   import spark.implicits._
+  import HFileSourceSpec.{localScans, plannedFiles}
 
   // one shared bulk-load directory: 4 buckets, small blocks
   private lazy val out: String = {
@@ -439,23 +440,15 @@ class HFileSourceSpec extends SparkSpec {
       .orderBy("event_id").collect()
     assert(rows.nonEmpty && rows.length == expected.length)
     rows.zip(expected).foreach { case (a, b) => assert(a == b) }
-    // plan shape: bucket + rowkey pushdown leave a near-point scan
+    // plan shape: bucket + rowkey pushdown leave a near-point scan, read
+    // on the driver
     val dir = graft.queries.HModel.ensureLookupDir(events, sfDir, 4)
     val totalFiles = new java.io.File(dir).listFiles
       .filter(_.getName.startsWith("bucket="))
       .flatMap(_.listFiles).count(_.getName.endsWith(".hfile"))
-    // the orderBy makes this an AQE plan; the scan hides inside query-stage
-    // leaves, so collect recursively
-    def scansOf(p: org.apache.spark.sql.execution.SparkPlan): Seq[BatchScanExec] =
-      p.collect {
-        case s: BatchScanExec => Seq(s)
-        case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-          scansOf(q.plan)
-        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-          scansOf(a.executedPlan)
-      }.flatten
-    val scans = scansOf(df.queryExecution.executedPlan)
-    val nParts = scans.head.inputRDD.getNumPartitions
+    assert(localScans(df.queryExecution.executedPlan).nonEmpty,
+      df.queryExecution.executedPlan.toString)
+    val nParts = plannedFiles(df)
     assert(nParts >= 1 && nParts < totalFiles,
       s"expected pruned scan, got $nParts of $totalFiles files")
   }
@@ -539,12 +532,148 @@ class HFileSourceSpec extends SparkSpec {
     val someKey = full.select($"rowkey").head().getAs[Array[Byte]](0)
     val hit = partitionsFor(EqualTo("rowkey", someKey))
     assert(hit.length == 1)
-    // and the row-level filter still applies above the pruned scan
+    // and the pushed filter is exact: the get is a bare local scan
     val got = full.filter($"rowkey" === lit(someKey))
     assert(got.count() >= 1)
-    val scans = got.queryExecution.executedPlan.collect {
-      case s: BatchScanExec => s
+    assert(localScans(got.queryExecution.executedPlan).nonEmpty,
+      got.queryExecution.executedPlan.toString)
+    assert(plannedFiles(got) == 1)
+  }
+
+  // --- exact pushed filters and driver-local reads -----------------------
+
+  private def isLocal(df: org.apache.spark.sql.DataFrame): Boolean =
+    localScans(df.queryExecution.executedPlan).nonEmpty
+
+  private def isBatchScan(df: org.apache.spark.sql.DataFrame): Boolean =
+    df.queryExecution.executedPlan.collect { case s: BatchScanExec => s }.nonEmpty
+
+  test("pushed filters are exact on the local and the distributed path: " +
+      "boundary keys, an Or of ranges and In(bucket) match readHFiles " +
+      "plus the same Spark-side filter") {
+    val v2 = spark.read.format("graft-hfile").load(out)
+    val raw = BulkLoad.readHFiles(spark, out).cache()
+    def cells(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.select(col("bucket"), hex(col("rowkey")), col("family"),
+        col("qualifier"), col("ts"), hex(col("value")))
+        .collect().map(_.toString).sorted.toSeq
+    var local, distributed = 0
+    def check(cond: org.apache.spark.sql.Column): Unit = {
+      val got = v2.filter(cond)
+      if (isLocal(got)) local += 1 else distributed += 1
+      assert(cells(got) == cells(raw.filter(cond)), s"differs on $cond")
     }
-    assert(scans.head.inputRDD.getNumPartitions == 1)
+    val unsigned = Ordering.fromLessThan[Array[Byte]](
+      java.util.Arrays.compareUnsigned(_, _) < 0)
+    val ranges = HFileDir.list(out, spark.sparkContext.hadoopConfiguration)
+      .stats().flatMap(_.range).sortBy(_._1)(unsigned)
+    assert(ranges.size >= 2, "the fixture must hold several files")
+    val (firstA, lastA) = ranges(0)
+    val (firstB, lastB) = ranges(1)
+    val between = lastA :+ 0.toByte // after file A's last key, before B
+    val absent = firstA :+ 0.toByte // inside file A's range, not a key
+    val keys = Seq(firstA, lastA, between, firstB, absent)
+    val rk = col("rowkey")
+    try {
+      // every comparison at every boundary key (one-sided: distributed)
+      keys.foreach { k =>
+        Seq(rk > lit(k), rk >= lit(k), rk < lit(k), rk <= lit(k),
+          rk === lit(k)).foreach(check)
+      }
+      // both sides bounded, every pair of boundary keys and edge kinds
+      for (a <- keys; b <- keys if unsigned.lteq(a, b);
+           lo <- Seq(rk > lit(a), rk >= lit(a));
+           hi <- Seq(rk < lit(b), rk <= lit(b))) check(lo && hi)
+      // Spark's binary order is unsigned: 0x80 sorts above the 0x00-0x7f
+      // bytes that follow each fixture key's bucket prefix
+      check(rk >= lit(firstA.take(2) :+ 0x80.toByte) && rk <= lit(lastB))
+      // an Or of ranges, a bucket-mixed Or, In(bucket), and an Or with a
+      // leaf the source does not accept (left to Spark)
+      check((rk >= lit(firstA) && rk <= lit(absent)) ||
+        (rk > lit(lastA) && rk <= lit(firstB)))
+      check((col("bucket") === 0 && rk <= lit(absent)) ||
+        (col("bucket") === 2 && rk > lit(lastB)))
+      check(col("bucket").isin(0, 2) && rk >= lit(firstA) &&
+        rk < lit(firstB))
+      check(rk === lit(firstB) || col("qualifier") === "nope")
+      // a range over every file covers more than the block limit
+      check(rk >= lit(ranges.head._1) && rk <= lit(ranges.last._2))
+    } finally raw.unpersist()
+    assert(local > 0 && distributed > 0, s"local $local, distributed $distributed")
+  }
+
+  test("a get and a local multiGet issued after an append see its files") {
+    val dir = writeRangedDir()
+    val table = spark.read.format("graft-hfile").load(dir)
+    def get(k: String) =
+      table.filter($"bucket" === 0 && $"rowkey" === lit(k.getBytes("UTF-8")))
+    def multiGet(ks: String*) = BulkLoad.multiGet(spark, dir,
+      ks.map(_.getBytes("UTF-8")).toDF("rowkey"))
+      .select(col("rowkey").cast("string")).as[String].collect().sorted.toSeq
+    assert(get("k0005x").collect().isEmpty)
+    assert(multiGet("k0005", "k0005x") == Seq("k0005"))
+    // the second write appends one file to bucket 0
+    Seq((0, "k0005x".getBytes("UTF-8"), "f", "q", 7L, Array[Byte](2), 4))
+      .toDF("bucket", "rowkey", "family", "qualifier", "ts", "value",
+        "key_type")
+      .write.format("graft-hfile").mode("append").save(dir)
+    val got = get("k0005x")
+    assert(isLocal(got), got.queryExecution.executedPlan.toString)
+    assert(got.select(col("ts")).as[Long].collect().toSeq == Seq(7L))
+    assert(multiGet("k0005", "k0005x") == Seq("k0005", "k0005x"))
+  }
+
+  test("driver-local reads launch no job; wide ranges and non-local key " +
+      "frames keep theirs") {
+    val v2 = spark.read.format("graft-hfile").load(out)
+    val key = v2.select($"rowkey").head().getAs[Array[Byte]](0)
+    // bucket, hour and user: one user's cells in one hour
+    val prefix = key.take(14)
+    val counter = new graft.JobCounter(spark)
+    val (get, prefixScan, localMultiGet, keyedMultiGet) =
+      try (
+        counter.jobs(assert(v2.filter($"rowkey" === lit(key)).collect().nonEmpty)),
+        counter.jobs(assert(v2.filter(startswith($"rowkey", lit(prefix)))
+          .collect().nonEmpty)),
+        counter.jobs(assert(BulkLoad.multiGet(spark, out,
+          Seq(key).toDF("rowkey")).collect().nonEmpty)),
+        counter.jobs(assert(BulkLoad.multiGet(spark, out,
+          v2.select($"rowkey").limit(3)).collect().nonEmpty)))
+      finally counter.close()
+    assert(get == 0 && prefixScan == 0 && localMultiGet == 0,
+      s"get $get, prefix $prefixScan, local multiGet $localMultiGet jobs")
+    assert(keyedMultiGet > 0, "a non-local key frame keeps its job")
+    // a bounded range over every file covers more than the block limit
+    val bounds = v2.agg(min($"rowkey"), max($"rowkey")).head()
+    val wide = v2.filter($"rowkey" >= lit(bounds.getAs[Array[Byte]](0)) &&
+      $"rowkey" <= lit(bounds.getAs[Array[Byte]](1)))
+    assert(isBatchScan(wide) && !isLocal(wide),
+      wide.queryExecution.executedPlan.toString)
+  }
+}
+
+object HFileSourceSpec {
+  import org.apache.spark.sql.DataFrame
+  import org.apache.spark.sql.execution.{LocalTableScanExec, SparkPlan}
+  import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+  import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
+
+  /** The plan's `LocalTableScan` leaves; an orderBy makes an AQE plan
+    * whose scans hide inside query-stage leaves, so collect recursively.
+    */
+  def localScans(p: SparkPlan): Seq[LocalTableScanExec] =
+    p.collect {
+      case s: LocalTableScanExec    => Seq(s)
+      case q: QueryStageExec        => localScans(q.plan)
+      case a: AdaptiveSparkPlanExec => localScans(a.executedPlan)
+    }.flatten
+
+  /** Files the query's one planned `graft-hfile` scan reads. */
+  def plannedFiles(df: DataFrame): Int = {
+    val scans = df.queryExecution.optimizedPlan.collect {
+      case r: DataSourceV2ScanRelation => r.scan
+    }
+    assert(scans.size == 1, s"expected one graft-hfile scan, got $scans")
+    scans.head.toBatch.planInputPartitions().length
   }
 }

@@ -399,6 +399,25 @@ class HFileSpec extends SparkSpec {
     val tail = HFileReader.scanRange(new HFileReader.BytesRead(bytes),
       Some("row00490".getBytes), None).toSeq
     assert(tail.size == 10)
+    // the bounded count: exact within its limit, "more" past it, and a
+    // whole-file count capped at 2 stops after a few index blocks
+    var reads = 0
+    val counted = new HFileReader.RandomRead {
+      private val r = new HFileReader.BytesRead(bytes)
+      def length: Long = r.length
+      def readFully(pos: Long, len: Int): Array[Byte] = {
+        reads += 1; r.readFully(pos, len)
+      }
+    }
+    assert(HFileReader.dataBlockCount(counted, lo, hi, covering.size) == covering.size)
+    assert(HFileReader.dataBlockCount(counted, lo, hi, covering.size - 1) >= covering.size)
+    val (first, last) = (Some("row00000".getBytes), Some("row00499".getBytes))
+    reads = 0
+    assert(HFileReader.dataBlockCount(counted, first, last, Int.MaxValue) == total)
+    val uncappedReads = reads
+    reads = 0
+    assert(HFileReader.dataBlockCount(counted, first, last, 2) > 2)
+    assert(reads < uncappedReads / 2, s"$reads of $uncappedReads reads")
   }
 
   test("gz compression: corrupted byte still fails the checksum") {

@@ -876,6 +876,57 @@ class StreamsSpec extends SparkSpec {
     } finally { tq.stop(); w.stop() }
   }
 
+  test("G10 tail with a rowkey filter delivers exactly the cells the " +
+      "filter admits") {
+    implicit val sqlCtx = spark.sqlContext
+    import graft.functions.BytesCodec
+    val dir = java.nio.file.Files.createTempDirectory("tail_filter").toString
+    val input = MemoryStream[(Long, Double)]
+    val cells = input.toDF().toDF("key", "value")
+      .select(
+        graft.functions.hb.encode(col("key")).as("rowkey"),
+        lit("f").as("family"), lit("v").as("qualifier"),
+        graft.functions.hb.encode(col("value")).as("value"))
+    val w = Streams.bulkLoadStream(cells, dir, buckets = 2,
+        numPartitions = 2)
+      .option("checkpointLocation",
+        java.nio.file.Files.createTempDirectory("tail_f_wc").toString)
+      .start()
+    // the sink's salt: abs(Arrays.hashCode(key bytes)) % 2, as 2 bytes
+    def bucketOf(k: Long) =
+      math.abs(java.util.Arrays.hashCode(BytesCodec.encodeLong(k)) % 2)
+    def salted(k: Long) =
+      BytesCodec.encodeShort(bucketOf(k).toShort) ++ BytesCodec.encodeLong(k)
+    val inBucket1 = (1L to 20L).filter(bucketOf(_) == 1)
+    // bucket 1, below a present key (the exclusive edge is exercised)
+    val edge = inBucket1(inBucket1.size / 2)
+    val cond = col("rowkey") >= lit(Array[Byte](0, 1)) &&
+      col("rowkey") < lit(salted(edge))
+    val tail = Streams.readBulkLoadStream(spark, dir).filter(cond)
+      .select(graft.functions.hb.decode(expr("substring(rowkey, 3, 8)"),
+        LongType).as("k"))
+    val tq = tail.writeStream.format("memory").queryName("hfile_tail_filter")
+      .option("checkpointLocation",
+        java.nio.file.Files.createTempDirectory("tail_f_rc").toString)
+      .start()
+    try {
+      input.addData((1L to 10L).map(k => (k, k.toDouble)): _*)
+      w.processAllAvailable(); tq.processAllAvailable()
+      input.addData((11L to 20L).map(k => (k, k.toDouble)): _*)
+      w.processAllAvailable(); tq.processAllAvailable()
+      val streamed = spark.sql("SELECT k FROM hfile_tail_filter")
+        .as[Long].collect().sorted.toSeq
+      val batch = graft.operators.BulkLoad
+        .readHFiles(spark, dir, "epoch=*/bucket=*/*.hfile").filter(cond)
+        .select(graft.functions.hb.decode(expr("substring(rowkey, 3, 8)"),
+          LongType).as("k"))
+        .as[Long].collect().sorted.toSeq
+      val want = inBucket1.filter(_ < edge)
+      assert(want.nonEmpty && streamed == want && batch == want,
+        s"streamed $streamed, batch $batch, want $want")
+    } finally { tq.stop(); w.stop() }
+  }
+
   test("G12 streaming near-dup candidates: cross-batch and in-batch " +
     "collisions emit against the bucket representative, uniques stay " +
     "silent, hot buckets stop at the cap") {
