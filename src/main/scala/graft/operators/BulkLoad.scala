@@ -1,8 +1,6 @@
 package graft.operators
 
-import org.apache.hadoop.conf.Configuration
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
-import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.hb
 import graft.sources.{HFile, HFileDir, HFileManifest, HFileReader}
@@ -255,36 +253,31 @@ object BulkLoad {
     found.get()
   }
 
-  /** Keyed lookup (multi-get) against a [[writeHFiles]] directory — the
-    * reference's point-GET-by-rowkey lookup
+  /** Distributed keyed lookup (multi-get) against a [[writeHFiles]]
+    * directory — the reference's point-GET-by-rowkey lookup
     * (HBaseRowDataLookupFunction.java) as a batch operator. The driver
     * takes each file's key range from the `_manifest` sidecar (or a
-    * bounded pool of trailer reads when it is stale); each key routes to
-    * the files whose range covers it; each file is opened ONCE and probes
-    * its whole sorted key batch through the bloom and the multi-level
-    * index ([[HFileReader.multiGet]]) — a handful of short reads per key,
-    * never a file scan. Result schema matches [[readHFiles]].
-    *
-    * A key frame that is a local relation (e.g. `Seq(...).toDF`) is
-    * probed on the driver through [[HFileDir.pooled]] and answered as a
-    * local Dataset: no Spark job. Its keys are already in driver memory,
-    * and the driver probe beat the job at every size measured — local[4]
-    * on a 4-core VM, 500k cells in 5 files, a fifth of keys absent,
-    * p50 driver vs job: 64 keys 61 vs 240 ms, 1,024 keys 155 vs 475 ms,
-    * 16,384 keys 592 vs 1,490 ms, 65,536 keys 1.85 vs 5.07 s, and still
-    * 2-2.5x faster with an aggregate on top — so there is no key cutoff.
-    * Any other key frame broadcasts the tiny (file, bucket, range) table
-    * and probes in tasks, so keys and files both scale horizontally.
+    * bounded pool of trailer reads when it is stale) and broadcasts
+    * the tiny (file, bucket, range) table; each key routes to the
+    * files whose range covers it; each task then opens its file ONCE and
+    * probes its whole sorted key batch through the bloom and the
+    * multi-level index ([[HFileReader.multiGet]]) — a handful of short
+    * reads per key, never a file scan. Keys and files both scale
+    * horizontally; result schema matches [[readHFiles]].
     */
   def multiGet(spark: SparkSession, path: String, keys: DataFrame,
                keyCol: String = "rowkey"): DataFrame = {
+    import spark.implicits._
+    val confMap = HFileDir.confMap(spark)
     // key ranges from the `_manifest` sidecar when it matches the
     // listing; pooled per-file short reads only when it doesn't
     val fileRanges = filesOf(spark, path).stats().collect {
       case HFileDir.FileStat(f, b, _, Some((lo, hi))) => (f, b, lo, hi)
     }
-    // ranges sorted by first key, with a prefix running-max of last keys
-    // for the walk in `covering` (ranges overlap only across append runs)
+    // key → covering files in O(log F + matches), not O(F): ranges sorted
+    // by first key, with a prefix running-max of last keys so the left
+    // walk stops as soon as no earlier run can still reach the key
+    // (ranges overlap only across append runs)
     val sorted = fileRanges.sortWith((a, b) =>
       java.util.Arrays.compareUnsigned(a._3, b._3) < 0).toArray
     val prefixMaxHi = new Array[Array[Byte]](sorted.length)
@@ -295,80 +288,38 @@ object BulkLoad {
           sorted(i)._4, prefixMaxHi(i - 1)) >= 0) sorted(i)._4
         else prefixMaxHi(i - 1)
     }
-    val keyBytes = keys.select(col(keyCol).cast("binary"))
-    keyBytes.queryExecution.optimizedPlan match {
-      case l: LocalRelation if !l.isStreaming =>
-        val hconf = spark.sparkContext.hadoopConfiguration
-        val byFile = l.data.filterNot(_.isNullAt(0))
-          .flatMap(r => covering(sorted, prefixMaxHi, r.getBinary(0)))
-          .groupBy(t => (t._1, t._2)).toSeq
-        val cells = HFileDir.pooled(byFile) { case ((f, b), batch) =>
-          probe(f, b, batch.map(_._3), hconf)
-        }.flatten
-        spark.createDataset(cells)(CellRowEncoder).toDF()
-      case _ => distributedMultiGet(spark, keyBytes, sorted, prefixMaxHi)
-    }
-  }
-
-  private lazy val CellRowEncoder = Encoders.product[HFileCellRow]
-
-  /** The files of `ranges` (sorted by first key; `maxHi` their prefix
-    * running-max of last keys) whose range covers `k`, paired with `k`:
-    * O(log F + matches), not O(F) — the left walk stops as soon as no
-    * earlier range can still reach the key.
-    */
-  private def covering(ranges: Array[(String, Int, Array[Byte], Array[Byte])],
-                       maxHi: Array[Array[Byte]],
-                       k: Array[Byte]): Seq[(String, Int, Array[Byte])] = {
-    def cmp(a: Array[Byte], b: Array[Byte]) =
-      java.util.Arrays.compareUnsigned(a, b)
-    // last range whose first key <= k
-    var lo = 0; var hi = ranges.length - 1; var idx = -1
-    while (lo <= hi) {
-      val mid = (lo + hi) >>> 1
-      if (cmp(ranges(mid)._3, k) <= 0) { idx = mid; lo = mid + 1 }
-      else hi = mid - 1
-    }
-    val out = scala.collection.mutable.ArrayBuffer[(String, Int, Array[Byte])]()
-    var j = idx
-    while (j >= 0 && cmp(maxHi(j), k) >= 0) {
-      if (cmp(ranges(j)._4, k) >= 0) out += ((ranges(j)._1, ranges(j)._2, k))
-      j -= 1
-    }
-    out.toSeq
-  }
-
-  /** [[multiGet]] as a job: the range table broadcast, keys routed in
-    * tasks, one task group per covering file.
-    */
-  private def distributedMultiGet(spark: SparkSession, keyBytes: DataFrame,
-                                  sorted: Array[(String, Int, Array[Byte], Array[Byte])],
-                                  prefixMaxHi: Array[Array[Byte]]): DataFrame = {
-    import spark.implicits._
-    val confMap = HFileDir.confMap(spark)
     val bc = spark.sparkContext.broadcast((sorted, prefixMaxHi))
-    keyBytes.as[Array[Byte]]
+    keys.select(col(keyCol).cast("binary")).as[Array[Byte]]
       .flatMap { k =>
         val (ranges, maxHi) = bc.value
-        covering(ranges, maxHi, k)
+        def cmp(a: Array[Byte], b: Array[Byte]) =
+          java.util.Arrays.compareUnsigned(a, b)
+        // last range whose first key <= k
+        var lo = 0; var hi = ranges.length - 1; var idx = -1
+        while (lo <= hi) {
+          val mid = (lo + hi) >>> 1
+          if (cmp(ranges(mid)._3, k) <= 0) { idx = mid; lo = mid + 1 }
+          else hi = mid - 1
+        }
+        val out = scala.collection.mutable.ArrayBuffer[(String, Int, Array[Byte])]()
+        var j = idx
+        while (j >= 0 && cmp(maxHi(j), k) >= 0) {
+          if (cmp(ranges(j)._4, k) >= 0) out += ((ranges(j)._1, ranges(j)._2, k))
+          j -= 1
+        }
+        out
       }
       .groupByKey(t => (t._1, t._2))
       .flatMapGroups { (fb: (String, Int),
                         batch: Iterator[(String, Int, Array[Byte])]) =>
         val (f, b) = fb
-        probe(f, b, batch.map(_._3).toSeq, HFileDir.confOf(confMap)).iterator
+        val rr = HFileDir.open(f, HFileDir.confOf(confMap))
+        // multiGet materializes its result, so closing before returning
+        // the iterator is safe
+        try HFileReader.multiGet(rr, batch.map(_._3).toSeq)
+          .map(cellRow(f, b, _)).iterator
+        finally rr.close()
       }.toDF()
-  }
-
-  /** One file's [[multiGet]] probe: opens `f` once, looks up the
-    * `keys` batch and closes it ([[HFileReader.multiGet]] materializes
-    * its result, so nothing reads the file afterwards).
-    */
-  private def probe(f: String, b: Int, keys: Seq[Array[Byte]],
-                    conf: Configuration): Seq[HFileCellRow] = {
-    val rr = HFileDir.open(f, conf)
-    try HFileReader.multiGet(rr, keys).map(cellRow(f, b, _))
-    finally rr.close()
   }
 
   /** Distributed, validating backup of a bulk-load directory — the

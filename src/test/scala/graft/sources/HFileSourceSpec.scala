@@ -602,7 +602,7 @@ class HFileSourceSpec extends SparkSpec {
     assert(local > 0 && distributed > 0, s"local $local, distributed $distributed")
   }
 
-  test("a get and a local multiGet issued after an append see its files") {
+  test("a get and a multiGet issued after an append see its files") {
     val dir = writeRangedDir()
     val table = spark.read.format("graft-hfile").load(dir)
     def get(k: String) =
@@ -623,26 +623,23 @@ class HFileSourceSpec extends SparkSpec {
     assert(multiGet("k0005", "k0005x") == Seq("k0005", "k0005x"))
   }
 
-  test("driver-local reads launch no job; wide ranges and non-local key " +
-      "frames keep theirs") {
+  test("driver-local reads launch no job; wide ranges and multiGet keep " +
+      "theirs") {
     val v2 = spark.read.format("graft-hfile").load(out)
     val key = v2.select($"rowkey").head().getAs[Array[Byte]](0)
     // bucket, hour and user: one user's cells in one hour
     val prefix = key.take(14)
     val counter = new graft.JobCounter(spark)
-    val (get, prefixScan, localMultiGet, keyedMultiGet) =
+    val (get, prefixScan, multiGet) =
       try (
         counter.jobs(assert(v2.filter($"rowkey" === lit(key)).collect().nonEmpty)),
         counter.jobs(assert(v2.filter(startswith($"rowkey", lit(prefix)))
           .collect().nonEmpty)),
         counter.jobs(assert(BulkLoad.multiGet(spark, out,
-          Seq(key).toDF("rowkey")).collect().nonEmpty)),
-        counter.jobs(assert(BulkLoad.multiGet(spark, out,
-          v2.select($"rowkey").limit(3)).collect().nonEmpty)))
+          Seq(key).toDF("rowkey")).collect().nonEmpty)))
       finally counter.close()
-    assert(get == 0 && prefixScan == 0 && localMultiGet == 0,
-      s"get $get, prefix $prefixScan, local multiGet $localMultiGet jobs")
-    assert(keyedMultiGet > 0, "a non-local key frame keeps its job")
+    assert(get == 0 && prefixScan == 0, s"get $get, prefix $prefixScan jobs")
+    assert(multiGet > 0, "multiGet probes in tasks, even for a local key frame")
     // a bounded range over every file covers more than the block limit
     val bounds = v2.agg(min($"rowkey"), max($"rowkey")).head()
     val wide = v2.filter($"rowkey" >= lit(bounds.getAs[Array[Byte]](0)) &&
