@@ -96,56 +96,50 @@ object Dedup {
     * keys are broadcast, so the index is probed map-side — history is
     * never re-shuffled when a batch arrives — and only colliding
     * (corpus, batch) pairs reach exact-Jaccard verification, bounded
-    * by the batch's collision set. Degenerate buckets whose COMBINED
-    * corpus + batch membership exceeds `maxBucket` emit NOTHING — the
-    * SAME drop rule (and the same count) as [[lshCandidatePairs]], so
-    * the incremental result stays exactly the full [[minhashLsh]] run
-    * restricted to cross-set pairs (the parity the spec pins,
-    * including a deliberately-flooded bucket) even when a boilerplate
-    * text floods one bucket. The (id, shingles) projections are persisted for the run
-    * (the [[lshVerifiedPairs]] cacheShingles rationale: the shingle
-    * kernel feeds both the band keys and the verification join);
-    * `cacheShingles = false` opts out. Batch-internal near-dups are
-    * the batch's own [[minhashLsh]] run at batch scale.
+    * by the batch's collision set; the batch side (keys, counts,
+    * candidate set, shingle payloads) must fit the broadcast budget.
+    * Degenerate buckets whose
+    * COMBINED corpus + batch membership exceeds `maxBucket` emit
+    * NOTHING — the SAME drop rule (and the same count) as
+    * [[lshCandidatePairs]], so the incremental result stays exactly
+    * the full [[minhashLsh]] run restricted to cross-set pairs (the
+    * parity the spec pins, including a deliberately-flooded bucket)
+    * even when a boilerplate text floods one bucket. Both sides'
+    * shingle sets are persisted for the run ([[shingleSets]]: they
+    * feed both the band keys and the verification join).
+    * Batch-internal near-dups are the batch's own [[minhashLsh]] run
+    * at batch scale. `bucketIndex` serves the corpus buckets from a
+    * [[buildLshIndex]] layout ([[PersistedStore.LshStore.probe]]).
     */
   def incrementalMinhash(corpus: DataFrame, batch: DataFrame,
                          idCol: String, textCol: String, k: Int = 3,
                          perms: Int = 128, bands: Int = 16,
                          threshold: Double = 0.7,
                          maxBucket: Int = 1000,
-                         cacheShingles: Boolean = true,
-                         broadcastBatch: Boolean = true,
-                         bucketIndex: Option[DataFrame] = scala.None,
-                         shingledCorpus: Option[DataFrame] = scala.None,
-                         shingledBatch: Option[DataFrame] = scala.None)
+                         bucketIndex: Option[DataFrame] = scala.None)
+      : DataFrame =
+    crossSetPairs(corpus, batch, idCol, textCol, k, perms, bands,
+      threshold, maxBucket, bucketIndex, shingled = scala.None)
+
+  /** The body of [[incrementalMinhash]]. `shingled` hands in the
+    * caller's own persisted `(corpus_id, sh)` and `(batch_id, sh)`
+    * frames — a caller that already computed the identical kernel for
+    * another leg of its plan (the [[lshIndexRecall]] truth leg) shares
+    * ONE cached pass instead of paying the kernel + a second cache
+    * entry. */
+  private[graft] def crossSetPairs(corpus: DataFrame, batch: DataFrame,
+                                   idCol: String, textCol: String, k: Int,
+                                   perms: Int, bands: Int,
+                                   threshold: Double, maxBucket: Int,
+                                   bucketIndex: Option[DataFrame],
+                                   shingled: Option[(DataFrame, DataFrame)])
       : DataFrame = {
-    require(perms % bands == 0, "perms must be divisible by bands")
-    val rpb = perms / bands
-    // `broadcastBatch = true` asserts the ingest delta (keys, counts,
-    // candidate set, AND shingle payloads) fits the broadcast budget —
-    // the normal posture for an ingest cycle, and what keeps the
-    // corpus index from ever re-shuffling on batch arrival. A caller
-    // landing a jumbo batch passes false: the same plan runs with
-    // unhinted joins (AQE picks sides; the corpus side then may
-    // shuffle for that one oversized batch). Results are identical
-    // either way (spec-pinned).
-    def bc(df: DataFrame): DataFrame =
-      if (broadcastBatch) broadcast(df) else df
-    // pre-shingled `(batch_id|corpus_id, sh)` frames (caller-owned
-    // persistence) replace the internal projections when given — a
-    // caller that already computed the identical kernel for another
-    // leg of its plan (the [[lshIndexRecall]] truth leg) shares ONE
-    // cached pass instead of paying the kernel + a second cache entry
-    def shingled(df: DataFrame, out: String) = {
-      val p = df.select(col(idCol).as(out),
-        shingleHashes(col(textCol), k).as("sh"))
-      if (cacheShingles)
-        p.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else p
-    }
-    val bs = shingledBatch.getOrElse(shingled(batch, "batch_id"))
-    val batchKeys = bandKeysOf(bs, "batch_id", perms, rpb, bands)
-      .select(col("band"), col("bkey"), col("batch_id")).distinct()
+    val rpb = rowsPerBand(perms, bands)
+    def sets(df: DataFrame, out: String) =
+      shingleSets(df, col(idCol).as(out), textCol, k, persist = true)
+    val (shingledCorpus, shingledBatch) = shingled.unzip
+    val bs = shingledBatch.getOrElse(sets(batch, "batch_id"))
+    val batchKeys = bandKeysOf(bs, "batch_id", perms, rpb, bands).distinct()
     // the per-(band, key) corpus bucket table: either built in-plan
     // from the corpus text (one minhash pass per call), or served from
     // a [[buildLshIndex]] layout — then the corpus text is never
@@ -158,11 +152,11 @@ object Dedup {
     // the in-plan form shingles the corpus ONCE (persisted) and feeds
     // both the band keys and the verification join; the indexed form
     // never touches corpus text until the candidate set is known
-    lazy val cs = shingledCorpus.getOrElse(shingled(corpus, "corpus_id"))
+    lazy val cs = shingledCorpus.getOrElse(sets(corpus, "corpus_id"))
     val index = bucketIndex match {
       case Some(flat) =>
-        flat.join(bc(batchKeys.select(col("band"), col("bkey")).distinct()),
-            Seq("band", "bkey"))
+        flat.join(broadcast(batchKeys.select(col("band"), col("bkey"))
+            .distinct()), Seq("band", "bkey"))
           .groupBy(col("band"), col("bkey"))
           .agg(sort_array(collect_list(col("corpus_id"))).as("ids"))
       case scala.None =>
@@ -175,35 +169,35 @@ object Dedup {
     val batchCnt = batchKeys.groupBy(col("band"), col("bkey"))
       .agg(count(lit(1)).as("_bcnt"))
     val cand0 = index
-      .join(bc(batchKeys), Seq("band", "bkey"))
-      .join(bc(batchCnt), Seq("band", "bkey"))
+      .join(broadcast(batchKeys), Seq("band", "bkey"))
+      .join(broadcast(batchCnt), Seq("band", "bkey"))
       .filter(size(col("ids")) + col("_bcnt") <= maxBucket)
       .select(col("batch_id"), explode(col("ids")).as("corpus_id"))
       .distinct()
     // the indexed path consumes the candidate set twice (id derivation
     // + the verify join): persist it so the on-disk bucket read and
     // its aggregation run once per probe, not twice (MEMORY_AND_DISK,
-    // evictable — the cs/bs posture)
+    // evictable — the shingle-set posture)
     val cand =
       if (bucketIndex.isDefined)
         cand0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       else cand0
     // verification: the corpus shingle table is probed BY the
     // batch-bounded candidate set — history is never shuffle-joined
-    // on batch arrival under the default broadcast posture — then the
-    // batch payloads attach, and the shared [[withJaccard]] rule
-    // scores each pair. The indexed form shingles ONLY the candidate
-    // docs: an INNER join with the broadcast candidate ids prunes
-    // corpus rows map-side BEFORE the shingle kernel runs (inner, not
-    // outer — an outer join preserving the small side cannot broadcast
-    // it, and would shuffle the whole corpus text), so a probe's
-    // corpus-side CPU is bounded by the batch's collision set — the
-    // cost posture the persisted index exists for. Because the inner
-    // join would SILENTLY drop a candidate id the passed corpus no
-    // longer covers (index/corpus drift, e.g. probing an appended
-    // index with a pre-append corpus snapshot), a separate bounded
-    // check raises first: candIds is collision-bounded and the anti
-    // join scans only the column-pruned corpus id column.
+    // on batch arrival — then the batch payloads attach, and the
+    // shared [[withJaccard]] rule scores each pair. The indexed form
+    // shingles ONLY the candidate docs: an INNER join with the
+    // broadcast candidate ids prunes corpus rows map-side BEFORE the
+    // shingle kernel runs (inner, not outer — an outer join preserving
+    // the small side cannot broadcast it, and would shuffle the whole
+    // corpus text), so a probe's corpus-side CPU is bounded by the
+    // batch's collision set — the cost posture the persisted index
+    // exists for. Because the inner join would SILENTLY drop a
+    // candidate id the passed corpus no longer covers (index/corpus
+    // drift, e.g. probing an appended index with a pre-append corpus
+    // snapshot), a separate bounded check raises first: candIds is
+    // collision-bounded and the anti join scans only the column-pruned
+    // corpus id column.
     val verifySh = bucketIndex match {
       case Some(_) =>
         val candIds = cand.select(col("corpus_id")).distinct()
@@ -220,51 +214,72 @@ object Dedup {
             "is absent from the passed corpus DataFrame — index and " +
             "corpus have drifted (probe with the corpus the index was " +
             "built/appended from)")
-        shingledCorpus match {
-          case Some(sc) => sc.join(bc(candIds), Seq("corpus_id"))
-          case scala.None =>
-            shingled(corpus.select(col(idCol), col(textCol))
-              .join(bc(candIds.select(col("corpus_id").as(idCol))),
-                Seq(idCol)),
-              "corpus_id")
-        }
+        shingledCorpus.map(_.join(broadcast(candIds), Seq("corpus_id")))
+          .getOrElse(sets(corpus.select(col(idCol), col(textCol))
+            .join(broadcast(candIds.select(col("corpus_id").as(idCol))),
+              Seq(idCol)), "corpus_id"))
       case scala.None => cs
     }
     withJaccard(verifySh.select(col("corpus_id"), col("sh").as("pa"))
-        .join(bc(cand), "corpus_id")
-        .join(bc(bs.select(col("batch_id"), col("sh").as("pb"))),
+        .join(broadcast(cand), "corpus_id")
+        .join(broadcast(bs.select(col("batch_id"), col("sh").as("pb"))),
           "batch_id"))
       .filter(col("jaccard") >= threshold)
       .select(col("batch_id"), col("corpus_id"), col("jaccard"))
   }
 
+  /** `perms / bands`, the signature rows one band hashes — `bands`
+    * must divide `perms`. */
+  private[graft] def rowsPerBand(perms: Int, bands: Int): Int = {
+    require(perms % bands == 0, "perms must be divisible by bands")
+    perms / bands
+  }
+
+  /** The `(id, sh)` distinct shingle-hash sets of `docs` — the first
+    * stage of every MinHash-LSH verb. `persist` keeps the projection
+    * MEMORY_AND_DISK for a plan that reads it from several branches
+    * (signatures and the verification join), so the shingling kernel —
+    * the most expensive step — runs once per document; the cache is
+    * LRU-evictable, sized O(corpus shingle sets) ≪ the exploded band
+    * stream, and OWNED BY THE CALLER (`spark.catalog.clearCache()`
+    * drops it). A one-pass plan (the band keys of a persisted layout,
+    * the exact-truth legs, a stream) does not persist.
+    */
+  private[graft] def shingleSets(docs: DataFrame, id: Column,
+                                 textCol: String, k: Int,
+                                 persist: Boolean): DataFrame = {
+    val sets = docs.select(id, shingleHashes(col(textCol), k).as("sh"))
+    if (persist)
+      sets.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    else sets
+  }
+
+  /** The `(id, sig)` MinHash signatures of a shingled `(id, sh)` frame. */
+  private def signatures(sets: DataFrame, id: String, perms: Int): DataFrame =
+    sets.select(col(id), txt.minhash(col("sh"), perms).as("sig"))
+
   /** Band keys of a shingled `(out, sh)` projection: minhash signature
     * → banded slices → one (band, bkey, out) row per band. The ONE
-    * body behind the in-plan corpus index, the batch probe keys, and
-    * the persisted [[buildLshIndex]] layout — any drift between those
-    * three makes persisted buckets silently stop colliding with probe
-    * keys, so they all call here.
+    * body behind the in-plan corpus index, the batch probe keys, the
+    * persisted [[buildLshIndex]] layout and the G12 stream's blocking
+    * — any drift between those makes persisted buckets silently stop
+    * colliding with probe keys, so they all call here.
     */
-  private def bandKeysOf(sh: DataFrame, out: String, perms: Int,
+  private def bandKeysOf(sets: DataFrame, out: String, perms: Int,
                          rpb: Int, bands: Int): DataFrame =
-    sh.select(col(out), txt.minhash(col("sh"), perms).as("sig"))
-      .select(col(out),
-        explode(minhashBandKeys("sig", bands, rpb)).as("bk"))
+    signatures(sets, out, perms)
+      .select(col(out), explode(minhashBandKeys("sig", bands, rpb)).as("bk"))
       .select(col("bk.band").as("band"), col("bk.bkey").as("bkey"),
         col(out))
 
-  /** The flat (band, bkey, corpus_id) band-key table one LSH pass
-    * produces — the row layout of the persisted index, and the encode
-    * body its build and every append share. */
-  private[graft] def lshBandKeys(docs: DataFrame, idCol: String,
+  /** The flat (band, bkey, out) band-key table one LSH pass over `docs`
+    * produces — the row layout of the persisted index (the encode body
+    * its build and every append share) and the G12 stream's keys. */
+  private[graft] def lshBandKeys(docs: DataFrame, id: Column, out: String,
                                  textCol: String, k: Int, perms: Int,
-                                 bands: Int): DataFrame = {
-    require(perms % bands == 0, "perms must be divisible by bands")
-    bandKeysOf(
-      docs.select(col(idCol).as("corpus_id"),
-        shingleHashes(col(textCol), k).as("sh")),
-      "corpus_id", perms, perms / bands, bands)
-  }
+                                 bands: Int): DataFrame =
+    bandKeysOf(shingleSets(docs, id.as(out), textCol, k, persist = false),
+      out, perms, rowsPerBand(perms, bands), bands)
 
   /** C25 lifecycle (build): PERSIST the corpus LSH bucket index a
     * crawl cycle maintains — the D8 posture (build once, probe every
@@ -291,7 +306,7 @@ object Dedup {
     import spark.implicits._
     PersistedStore.create(dir, PersistedStore.Lsh,
       Seq(Seq((k, perms, bands)).toDF("k", "perms", "bands").coalesce(1)),
-      lshBandKeys(corpus, idCol, textCol, k, perms, bands))
+      lshBandKeys(corpus, col(idCol), "corpus_id", textCol, k, perms, bands))
   }
 
   /** C25 lifecycle (append): add a batch's surviving docs to the
@@ -310,33 +325,25 @@ object Dedup {
     * 100× replication makes even the batch-bounded cross-set truth
     * quadratic in practice; a production probe batch is an
     * absolute-sized crawl micro-batch, and a fixed ~`sampleDocs`
-    * salted-hash slice of the batch (the C8 predicate — membership
-    * depends only on (id, seed)) keeps the truth join corpus-linear ×
-    * constant, so the store-recall number is RECORDABLE at any scale.
-    * Both legs (exact truth and the index probe) see the same sliced
-    * batch, so the ratio is store recall over the sliced probes — an
-    * unbiased estimate of the full-batch number (spec-pinned: the
-    * sliced report EQUALS the full report over the pre-filtered
-    * batch; `sampleDocs` ≥ batch is byte-identical to
-    * [[lshIndexRecall]]). `knownCount` skips the batch count scan
-    * when the caller has a catalog count, identical report either
-    * way.
+    * [[Sampling.docSlice]] of the batch keeps the truth join
+    * corpus-linear × constant, so the store-recall number is
+    * RECORDABLE at any scale. Both legs (exact truth and the index
+    * probe) see the same sliced batch, so the ratio is store recall
+    * over the sliced probes — an unbiased estimate of the full-batch
+    * number (spec-pinned: the sliced report EQUALS the full report
+    * over the pre-filtered batch; `sampleDocs` ≥ batch is
+    * byte-identical to [[lshIndexRecall]]). `knownCount` skips the
+    * batch count scan when the caller has a catalog count, identical
+    * report either way.
     */
   def lshIndexRecallSlice(dir: String, corpus: DataFrame,
                           batch: DataFrame, idCol: String,
                           textCol: String, threshold: Double = 0.7,
                           sampleDocs: Long = 300L, seed: Long = 42L,
-                          knownCount: Option[Long] = None): DataFrame = {
-    require(sampleDocs > 0, s"sampleDocs must be positive, got $sampleDocs")
-    require(knownCount.forall(_ > 0),
-      s"knownCount must be positive when given, got $knownCount")
-    val n = knownCount.getOrElse(batch.count())
-    val p = math.min(1.0, sampleDocs.toDouble / n)
-    val batchIn = if (p >= 1.0) batch
-      else batch.filter(Sampling.hashKey(col(idCol), seed) <
-        lit(Sampling.hexThreshold(p)))
-    lshIndexRecall(dir, corpus, batchIn, idCol, textCol, threshold)
-  }
+                          knownCount: Option[Long] = None): DataFrame =
+    lshIndexRecall(dir, corpus,
+      Sampling.docSlice(batch, idCol, sampleDocs, seed, knownCount),
+      idCol, textCol, threshold)
 
   /** C25 lifecycle (probe): [[incrementalMinhash]] served from a
     * [[buildLshIndex]] layout instead of re-hashing the corpus text
@@ -349,20 +356,10 @@ object Dedup {
   def incrementalMinhashIndexed(dir: String, corpus: DataFrame,
                                 batch: DataFrame, idCol: String,
                                 textCol: String, threshold: Double = 0.7,
-                                maxBucket: Int = 1000,
-                                cacheShingles: Boolean = true,
-                                broadcastBatch: Boolean = true,
-                                shingledCorpus: Option[DataFrame] =
-                                  scala.None,
-                                shingledBatch: Option[DataFrame] =
-                                  scala.None)
-      : DataFrame = {
-    val store = PersistedStore.Lsh.open(batch.sparkSession, dir)
-    incrementalMinhash(corpus, batch, idCol, textCol, store.k, store.perms,
-      store.bands, threshold, maxBucket, cacheShingles, broadcastBatch,
-      bucketIndex = Some(store.buckets(batch.sparkSession)),
-      shingledCorpus = shingledCorpus, shingledBatch = shingledBatch)
-  }
+                                maxBucket: Int = 1000): DataFrame =
+    PersistedStore.Lsh.open(batch.sparkSession, dir)
+      .probe(batch.sparkSession, corpus, batch, idCol, textCol, threshold,
+        maxBucket)
 
   /** C37: recall of the PERSISTED LSH index on an incoming batch —
     * the D9-over-D8 discipline for the dedup store. C35 measures the
@@ -388,10 +385,10 @@ object Dedup {
     * not the staleness of the caller's corpus view (spec-pinned:
     * purge makes the purged doc's pairs leave the report entirely;
     * truth equals a driver-side exact all-pairs replay). Found =
-    * [[incrementalMinhashIndexed]]'s verified pairs off the stored
-    * buckets — a subset of truth by construction (it exact-verifies).
-    * `k`/`perms`/`bands` come from the index's own sidecar. Returns
-    * ONE row: (n_truth, n_found, recall).
+    * the store's [[PersistedStore.LshStore.probe]] — a subset of
+    * truth by construction (it exact-verifies). `k`/`perms`/`bands`
+    * come from the index's own sidecar. Returns ONE row:
+    * (n_truth, n_found, recall).
     */
   def lshIndexRecall(dir: String, corpus: DataFrame, batch: DataFrame,
                      idCol: String, textCol: String,
@@ -402,24 +399,14 @@ object Dedup {
     val corpusIn = corpus
       .withColumn("_cid", col(idCol).cast("long"))
       .join(indexed, col("_cid") === col("corpus_id"), "left_semi")
-    // ONE shingle pass per side (r19): the truth leg used to project the
-    // kernel under its own names (shc/shb) and re-evaluate it in BOTH its
-    // inverted-join branch and its size-attach branch, while the probe
-    // leg cached its own third copy of each side — 4 kernel evaluations
-    // over corpus + batch and 2 extra cache entries for identical bits.
-    // Both legs now share these two persisted projections (the
-    // [[lshRecallSweep]] pattern: MEMORY_AND_DISK, caller-owned —
-    // Bench/Verify clearCache() between runs). The truth sizes attach
-    // from a `size(sh)` projection of the cached frame, so the arrays
-    // never re-shuffle for the size join.
-    val csets = corpusIn
-      .select(col("_cid").as("corpus_id"),
-        shingleHashes(col(textCol), store.k).as("sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val bsets = batch
-      .select(col(idCol).cast("long").as("batch_id"),
-        shingleHashes(col(textCol), store.k).as("sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // ONE persisted shingle pass per side (r19), shared by the truth
+    // leg and the probe: the truth sizes attach from a `size(sh)`
+    // projection of the cached frame, so the arrays never re-shuffle
+    // for the size join
+    val csets = shingleSets(corpusIn, col("_cid").as("corpus_id"),
+      textCol, store.k, persist = true)
+    val bsets = shingleSets(batch, col(idCol).cast("long").as("batch_id"),
+      textCol, store.k, persist = true)
     val csh = csets.select(col("corpus_id"), explode(col("sh")).as("v"))
     val bsh = bsets.select(col("batch_id"), explode(col("sh")).as("v"))
     val shared = csh.join(bsh, "v")
@@ -430,19 +417,11 @@ object Dedup {
         "corpus_id")
       .join(bsets.select(col("batch_id"), size(col("sh")).as("_nb")),
         "batch_id")
-      .filter(col("c").cast("double") /
-        (col("_nc") + col("_nb") - col("c")) >= threshold)
+      .filter(jaccard(col("c"), col("_nc"), col("_nb")) >= threshold)
       .select(col("batch_id"), col("corpus_id"))
-    val found = incrementalMinhash(corpusIn.drop("_cid"), batch, idCol,
-        textCol, store.k, store.perms, store.bands, threshold,
-        bucketIndex = Some(store.buckets(spark)),
-        shingledCorpus = Some(csets), shingledBatch = Some(bsets))
-      .select(col("batch_id"), col("corpus_id"), lit(1L).as("_hit"))
-    truth.join(found, Seq("batch_id", "corpus_id"), "left")
-      .agg(count(lit(1)).as("n_truth"),
-        sum(coalesce(col("_hit"), lit(0L))).as("n_found"))
-      .withColumn("recall",
-        round(col("n_found").cast("double") / col("n_truth"), 6))
+    val found = store.probe(spark, corpusIn.drop("_cid"), batch, idCol,
+      textCol, threshold, shingled = Some((csets, bsets)))
+    recallReport(truth, found, Seq("batch_id", "corpus_id"))
   }
 
   /** C15: paragraph-level exact dedup — the Dolma/RefinedWeb
@@ -617,32 +596,39 @@ object Dedup {
     */
   private def withJaccard(df: DataFrame): DataFrame =
     df.withColumn("_inter", size(array_intersect(col("pa"), col("pb"))))
-      .withColumn("jaccard", col("_inter").cast("double") /
-        (size(col("pa")) + size(col("pb")) - col("_inter")))
+      .withColumn("jaccard",
+        jaccard(col("_inter"), size(col("pa")), size(col("pb"))))
+
+  /** J = c / (n_a + n_b − c) of two sets of sizes n_a, n_b sharing c
+    * elements — the ONE Jaccard formula of every verify and truth leg. */
+  private def jaccard(common: Column, na: Column, nb: Column): Column =
+    common.cast("double") / (na + nb - common)
+
+  /** One (n_truth, n_found, recall) row: how many of the exact `truth`
+    * pairs the `found` pairs (keyed the same `keys`) cover. Every
+    * found side exact-verifies its candidates, so it is a SUBSET of
+    * truth by construction and recall measures the banding's misses
+    * alone. */
+  private def recallReport(truth: DataFrame, found: DataFrame,
+                           keys: Seq[String]): DataFrame =
+    truth.join(found.select(keys.map(col) :+ lit(1L).as("_hit"): _*),
+        keys, "left")
+      .agg(count(lit(1)).as("n_truth"),
+        sum(coalesce(col("_hit"), lit(0L))).as("n_found"))
+      .withColumn("recall",
+        round(col("n_found").cast("double") / col("n_truth"), 6))
 
   // ---- MinHash + LSH ---------------------------------------------------
 
   /** Shared MinHash banding + exact-Jaccard verification: the shingle
-    * hash sets feed three plan branches (the signature and both sides
-    * of the verification join), so without caching the shingling kernel
-    * — the most expensive step — runs 3× per document. With
-    * `cacheShingles` (the default) the `(id, shingles)` projection is
-    * persisted MEMORY_AND_DISK and computed once; the cache is
-    * LRU-evictable and sized O(corpus shingle sets) ≪ the exploded
-    * band stream. Pass `cacheShingles = false` for one-shot runs where
-    * executor memory is tighter than CPU, or `spark.catalog.clearCache()`
-    * to drop it afterwards.
+    * sets ([[shingleSets]], persisted) feed three plan branches — the
+    * signature and both sides of the verification join.
     */
   private def lshVerifiedPairs(docs: DataFrame, idCol: String, textCol: String,
-                               k: Int, perms: Int, bands: Int,
-                               cacheShingles: Boolean): DataFrame = {
-    require(perms % bands == 0, "perms must be divisible by bands")
-    val shPlan = docs.select(col(idCol), shingleHashes(col(textCol), k).as("sh"))
-    val sh = if (cacheShingles)
-      shPlan.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else shPlan
-    val sigs = sh.select(col(idCol), txt.minhash(col("sh"), perms).as("sig"))
-    lshVerifiedPairsFrom(sh, sigs, idCol, bands, perms / bands)
+                               k: Int, perms: Int, bands: Int): DataFrame = {
+    val rpb = rowsPerBand(perms, bands)
+    val sh = shingleSets(docs, col(idCol), textCol, k, persist = true)
+    lshVerifiedPairsFrom(sh, signatures(sh, idCol, perms), idCol, bands, rpb)
   }
 
   /** One banding + exact-Jaccard verification leg over PRECOMPUTED
@@ -663,9 +649,8 @@ object Dedup {
     */
   def minhashLsh(docs: DataFrame, idCol: String, textCol: String,
                  k: Int = 3, perms: Int = 128, bands: Int = 16,
-                 threshold: Double = 0.7,
-                 cacheShingles: Boolean = true): DataFrame =
-    lshVerifiedPairs(docs, idCol, textCol, k, perms, bands, cacheShingles)
+                 threshold: Double = 0.7): DataFrame =
+    lshVerifiedPairs(docs, idCol, textCol, k, perms, bands)
       .select(col("a").as("doc_a"), col("b").as("doc_b"), col("jaccard"))
       .filter(col("jaccard") >= threshold)
 
@@ -673,9 +658,9 @@ object Dedup {
     * the verification-path view (SURVEY C5).
     */
   def ngramJaccardCandidates(docs: DataFrame, idCol: String, textCol: String,
-                             k: Int = 3, perms: Int = 128, bands: Int = 16,
-                             cacheShingles: Boolean = true): DataFrame =
-    lshVerifiedPairs(docs, idCol, textCol, k, perms, bands, cacheShingles)
+                             k: Int = 3, perms: Int = 128,
+                             bands: Int = 16): DataFrame =
+    lshVerifiedPairs(docs, idCol, textCol, k, perms, bands)
       .select(col("a").as("doc_a"), col("b").as("doc_b"),
         col("_inter").cast("long").as("n_common"), col("jaccard"))
 
@@ -694,88 +679,51 @@ object Dedup {
     * candidates, so it is a SUBSET of truth by construction and
     * recall = |found| / |truth| measures the BANDING's misses alone.
     *
-    * Returns ONE row: (n_truth, n_found, recall).
+    * Returns ONE row: (n_truth, n_found, recall). At corpus scale run
+    * it over a salted-hash doc slice ([[lshRecallSlice]]): exact truth
+    * is quadratic in the duplicate structure BY CONSTRUCTION.
     *
-    * Scale posture — `sampleFrac`: exact truth is quadratic in the
-    * duplicate structure BY CONSTRUCTION (even prefix-filtered, a
-    * duplicate-storm corpus where every doc shares shingles with
-    * hundreds of partners explodes), so at corpus scale the report
-    * runs on a deterministic salted-hash DOC SLICE (the C8
-    * machinery: membership depends only on (id, seed), never on
-    * partitioning): both the truth side and the LSH side see the
-    * same slice, so the ratio is banding recall over within-slice
-    * pairs — an unbiased estimate of the corpus number, at
-    * slice-quadratic cost (spec-pinned: the sampled report EQUALS
-    * the full report over the pre-filtered slice). `sampleFrac = 1`
-    * (the gate default) is the exact report; hot-shingle df caps
-    * upstream compose when even the slice is stormy.
+    * Sharing ONE persisted (id, sh) frame between the truth leg and
+    * the LSH leg (the [[lshIndexRecall]] r19 pattern) was tried here
+    * and MEASURED SLOWER: dedup_recall 1.44 → 1.84–2.43 s across three
+    * iso re-records (sampled/sweep_abs flat). The truth leg's three
+    * kernel consumers run fully pipelined inside scan-stage codegen;
+    * replacing them with columnar-cache reads trades a cheap fused
+    * recompute for cache build + three deserializing scans. Kept the
+    * r18 shape: truth recomputes, the LSH leg caches its own pass.
     */
   def lshRecall(docs: DataFrame, idCol: String, textCol: String,
                 k: Int = 3, perms: Int = 128, bands: Int = 16,
-                threshold: Double = 0.7, sampleFrac: Double = 1.0,
-                seed: Long = 42L): DataFrame = {
-    require(sampleFrac > 0 && sampleFrac <= 1,
-      s"sampleFrac must be in (0, 1], got $sampleFrac")
-    val docsIn = if (sampleFrac >= 1.0) docs
-      else docs.filter(Sampling.hashKey(col(idCol), seed) <
-        lit(Sampling.hexThreshold(sampleFrac)))
-    lshRecallExact(docsIn, idCol, textCol, k, perms, bands, threshold)
-  }
+                threshold: Double = 0.7): DataFrame =
+    recallReport(lshRecallTruth(docs, idCol, textCol, k, threshold),
+      minhashLsh(docs, idCol, textCol, k, perms, bands, threshold),
+      Seq("doc_a", "doc_b"))
 
-  /** [[lshRecall]] over an ABSOLUTE-size salted-hash slice — the
-    * eval-sized posture whose cost stays flat as the corpus grows: a
-    * FRACTION slice's pair space still grows as (f·N)² (measured:
-    * 20% at the 100× replication = ratio100 177), while a fixed
-    * ~`sampleDocs` slice keeps the quadratic truth work constant and
-    * pays only the corpus-linear count + filter scan. On
-    * duplicate-heavy data the expected within-slice truth-pair count
-    * is replication-invariant (each doc's twin density scales with
-    * 1/N exactly as the slice's pair count scales with N), so the
-    * recall estimate keeps its signal. The fraction is derived as
-    * min(1, sampleDocs/n) with one count pass — or from
-    * `knownCount` when the caller already has a catalog count (the
-    * C13 `knownCounts` precedent), skipping the corpus scan: at
-    * 100 TB a full `count()` for one constant is a real job, and
-    * every warehouse catalog serves row counts for free. The report
-    * is IDENTICAL either way (spec-pinned): the fraction is the same
-    * IEEE arithmetic from the same integer. The oracle replays it
-    * from its own COUNT(*).
+  /** [[lshRecall]] over an ABSOLUTE-size salted-hash slice
+    * ([[Sampling.docSlice]]) — the eval-sized posture whose cost stays
+    * flat as the corpus grows: a FRACTION slice's pair space still
+    * grows as (f·N)² (measured: 20% at the 100× replication =
+    * ratio100 177), while a fixed ~`sampleDocs` slice keeps the
+    * quadratic truth work constant and pays only the corpus-linear
+    * count + filter scan. On duplicate-heavy data the expected
+    * within-slice truth-pair count is replication-invariant (each
+    * doc's twin density scales with 1/N exactly as the slice's pair
+    * count scales with N), so the recall estimate keeps its signal.
+    * Both legs see the same slice, so the ratio is banding recall over
+    * within-slice pairs — an unbiased estimate of the corpus number
+    * (spec-pinned: the sliced report EQUALS the full report over the
+    * pre-filtered slice). `knownCount` skips the corpus count when the
+    * caller already has a catalog count (the C13 `knownCounts`
+    * precedent): at 100 TB a full `count()` for one constant is a real
+    * job. The oracle replays it from its own COUNT(*).
     */
   def lshRecallSlice(docs: DataFrame, idCol: String, textCol: String,
                      k: Int = 3, perms: Int = 128, bands: Int = 16,
                      threshold: Double = 0.7, sampleDocs: Long = 300L,
                      seed: Long = 42L,
-                     knownCount: Option[Long] = None): DataFrame = {
-    require(sampleDocs > 0, s"sampleDocs must be positive, got $sampleDocs")
-    require(knownCount.forall(_ > 0),
-      s"knownCount must be positive when given, got $knownCount")
-    val n = knownCount.getOrElse(docs.count())
-    val p = math.min(1.0, sampleDocs.toDouble / n)
-    lshRecall(docs, idCol, textCol, k, perms, bands, threshold,
-      sampleFrac = p, seed = seed)
-  }
-
-  private def lshRecallExact(docs: DataFrame, idCol: String,
-                             textCol: String, k: Int, perms: Int,
-                             bands: Int, threshold: Double): DataFrame = {
-    // Sharing ONE persisted (id, sh) frame between the truth leg and
-    // the LSH leg (the [[lshIndexRecall]] r19 pattern) was tried here
-    // and MEASURED SLOWER: dedup_recall 1.44 → 1.84–2.43 s across three
-    // iso re-records (sampled/sweep_abs flat). The truth leg's three
-    // kernel consumers run fully pipelined inside scan-stage codegen;
-    // replacing them with columnar-cache reads trades a cheap fused
-    // recompute for cache build + three deserializing scans. Kept the
-    // r18 shape: truth recomputes, the LSH leg caches its own pass.
-    val truth = lshRecallTruth(docs, idCol, textCol, k, threshold)
-    val found = minhashLsh(docs, idCol, textCol, k, perms, bands,
-        threshold)
-      .select(col("doc_a"), col("doc_b"), lit(1L).as("_hit"))
-    truth.join(found, Seq("doc_a", "doc_b"), "left")
-      .agg(count(lit(1)).as("n_truth"),
-        sum(coalesce(col("_hit"), lit(0L))).as("n_found"))
-      .withColumn("recall",
-        round(col("n_found").cast("double") / col("n_truth"), 6))
-  }
+                     knownCount: Option[Long] = None): DataFrame =
+    lshRecall(Sampling.docSlice(docs, idCol, sampleDocs, seed, knownCount),
+      idCol, textCol, k, perms, bands, threshold)
 
   /** The exact threshold-τ near-dup pair TRUTH both recall reports
     * score against — (doc_a, doc_b), doc_a < doc_b.
@@ -800,8 +748,8 @@ object Dedup {
     // deliberately NOT persisted: a persisted base under this
     // self-join replanned catastrophically (682 s vs 1.9 s cold at
     // sf0.1), recompute is the fast posture.
-    val sets = docs.select(col(idCol).as("id"),
-      shingleHashes(col(textCol), k).as("sh"))
+    val sets = shingleSets(docs, col(idCol).as("id"), textCol, k,
+      persist = false)
     val sh = sets.select(col("id"), explode(col("sh")).as("v"))
     val dfv = sh.groupBy(col("v")).agg(count(lit(1)).as("df"))
     // per-doc shingles re-assembled in (df, v) order; the per-doc
@@ -831,15 +779,12 @@ object Dedup {
           col("a.n") >= col("b.n") * lit(threshold) - lit(1e-9))
       .select(col("a.id").as("doc_a"), col("b.id").as("doc_b"))
       .distinct()
-    cand
-      .join(sets.select(col("id").as("doc_a"), col("sh").as("sha")),
-        "doc_a")
-      .join(sets.select(col("id").as("doc_b"), col("sh").as("shb")),
-        "doc_b")
-      .withColumn("inter",
-        size(array_intersect(col("sha"), col("shb"))).cast("double"))
-      .filter(col("inter") /
-        (size(col("sha")) + size(col("shb")) - col("inter")) >= threshold)
+    withJaccard(cand
+        .join(sets.select(col("id").as("doc_a"), col("sh").as("pa")),
+          "doc_a")
+        .join(sets.select(col("id").as("doc_b"), col("sh").as("pb")),
+          "doc_b"))
+      .filter(col("jaccard") >= threshold)
       .select(col("doc_a"), col("doc_b"))
   }
 
@@ -873,26 +818,20 @@ object Dedup {
     // only re-slices it — so recomputing the minhash kernel per leg
     // (what per-leg [[minhashLsh]] calls did) paid the O(perms·|sh|)
     // kernel bandsList.size times for identical bits. Both frames are
-    // MEMORY_AND_DISK like [[lshVerifiedPairs]]'s shingle cache:
-    // LRU-evictable, O(corpus sets), caller-owned. (r19: feeding the
-    // TRUTH leg from the same persisted frame was tried and measured
-    // slower — see [[lshRecallExact]]; truth deliberately recomputes.)
-    val sh = docs
-      .select(col(idCol), shingleHashes(col(textCol), k).as("sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val sigs = sh.select(col(idCol), txt.minhash(col("sh"), perms).as("sig"))
+    // persisted like [[shingleSets]]: LRU-evictable, O(corpus sets),
+    // caller-owned. (r19: feeding the TRUTH leg from the same
+    // persisted frame was tried and measured slower — see
+    // [[lshRecall]]; truth deliberately recomputes.)
+    val sh = shingleSets(docs, col(idCol), textCol, k, persist = true)
+    val sigs = signatures(sh, idCol, perms)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     bandsList.distinct.sorted.map { b =>
       val found = lshVerifiedPairsFrom(sh, sigs, idCol, b, perms / b)
         .select(col("a").as("doc_a"), col("b").as("doc_b"), col("jaccard"))
         .filter(col("jaccard") >= threshold)
-        .select(col("doc_a"), col("doc_b"), lit(1L).as("_hit"))
-      truth.join(found, Seq("doc_a", "doc_b"), "left")
-        .agg(count(lit(1)).as("n_truth"),
-          sum(coalesce(col("_hit"), lit(0L))).as("n_found"))
+      recallReport(truth, found, Seq("doc_a", "doc_b"))
         .select(lit(b).as("bands"), col("n_truth"), col("n_found"),
-          round(col("n_found").cast("double") / col("n_truth"), 6)
-            .as("recall"))
+          col("recall"))
     }.reduce(_ unionAll _).orderBy("bands")
   }
 
@@ -903,29 +842,19 @@ object Dedup {
     * slice, whose pair space still grows as (f·N)²) is structurally
     * unrecordable at scale, while a fixed ~`sampleDocs` slice keeps
     * the truth work constant and pays only the corpus-linear count +
-    * filter scan — the C37b discipline applied to C35c. One count
-    * pass (or `knownCount` from the catalog) derives the fraction;
-    * the slice is salted-hash deterministic, so every banding sees
-    * the SAME docs and the rows remain one comparable curve.
-    * Spec-pinned: each row equals the single-setting
-    * [[lshRecallSlice]] at that banding.
+    * filter scan — the C37b discipline applied to C35c. The slice is
+    * salted-hash deterministic, so every banding sees the SAME docs
+    * and the rows remain one comparable curve. Spec-pinned: each row
+    * equals the single-setting [[lshRecallSlice]] at that banding.
     */
   def lshRecallSweepSlice(docs: DataFrame, idCol: String,
                           textCol: String, k: Int = 3, perms: Int = 128,
                           bandsList: Seq[Int] = Seq(8, 16, 32),
                           threshold: Double = 0.7,
                           sampleDocs: Long = 300L, seed: Long = 42L,
-                          knownCount: Option[Long] = None): DataFrame = {
-    require(sampleDocs > 0, s"sampleDocs must be positive, got $sampleDocs")
-    require(knownCount.forall(_ > 0),
-      s"knownCount must be positive when given, got $knownCount")
-    val n = knownCount.getOrElse(docs.count())
-    val p = math.min(1.0, sampleDocs.toDouble / n)
-    val sliced = if (p >= 1.0) docs
-      else docs.filter(Sampling.hashKey(col(idCol), seed) <
-        lit(Sampling.hexThreshold(p)))
-    lshRecallSweep(sliced, idCol, textCol, k, perms, bandsList, threshold)
-  }
+                          knownCount: Option[Long] = None): DataFrame =
+    lshRecallSweep(Sampling.docSlice(docs, idCol, sampleDocs, seed,
+      knownCount), idCol, textCol, k, perms, bandsList, threshold)
 
   // ---- decontamination -------------------------------------------------
 
@@ -1082,16 +1011,13 @@ object Dedup {
     * same codegen one-pass expression as C3-C5/C12, persisted once
     * across its two consumers.
     *
-    * Like [[lshVerifiedPairs]], the persisted projection is
-    * LRU-evictable and OWNED BY THE CALLER: it stays cached for the
-    * session so repeated actions on the returned frame stay cheap —
-    * pass `persistShingles = false` for one-shot runs where executor
-    * memory is tighter than CPU, or `spark.catalog.clearCache()` to
-    * drop it after the consuming action.
+    * Like [[shingleSets]], the persisted projection is LRU-evictable
+    * and OWNED BY THE CALLER: it stays cached for the session so
+    * repeated actions on the returned frame stay cheap —
+    * `spark.catalog.clearCache()` drops it after the consuming action.
     */
   def boilerplate(docs: DataFrame, idCol: String, textCol: String,
-                  k: Int = 3, minDf: Long = 3L,
-                  persistShingles: Boolean = true): DataFrame = {
+                  k: Int = 3, minDf: Long = 3L): DataFrame = {
     require(k >= 1, s"shingle size k must be >= 1, got $k")
     require(minDf >= 2, s"minDf must be >= 2, got $minDf")
     // EvalOnce: the `n_grams >= 1` filter would otherwise be pushed
@@ -1104,8 +1030,7 @@ object Dedup {
       .select(col(idCol), size(col("sh")).cast("long").as("n_grams"),
         col("sh"))
       .filter(col("n_grams") >= 1)
-    if (persistShingles)
-      sh.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val grams = sh.select(col(idCol), explode(col("sh")).as("g"))
     // grams are DISTINCT per doc, so count == document frequency
     val freq = grams.groupBy("g").agg(count(lit(1)).as("df"))

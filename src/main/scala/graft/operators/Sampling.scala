@@ -52,6 +52,25 @@ object Sampling {
   def hashKey(id: Column, seed: Long): Column =
     substring(md5(concat(id.cast("string"), lit(":" + seed))), 1, HexDigits)
 
+  /** The ~`sampleDocs`-row salted-hash slice of `df`: fraction
+    * p = min(1, sampleDocs / n), kept where [[hashKey]] <
+    * [[hexThreshold]](p) — membership depends only on (id, seed), so
+    * every leg of a report that reads the slice sees the same rows.
+    * `n` is one count pass, or `knownCount` when the caller has a
+    * catalog count (same integer, same IEEE fraction, identical slice).
+    * p = 1 adds no filter: the plan is `df`'s own.
+    */
+  def docSlice(df: DataFrame, idCol: String, sampleDocs: Long, seed: Long,
+               knownCount: Option[Long] = None): DataFrame = {
+    require(sampleDocs > 0, s"sampleDocs must be positive, got $sampleDocs")
+    require(knownCount.forall(_ > 0),
+      s"knownCount must be positive when given, got $knownCount")
+    val p = math.min(1.0,
+      sampleDocs.toDouble / knownCount.getOrElse(df.count()))
+    if (p >= 1.0) df
+    else df.filter(hashKey(col(idCol), seed) < lit(hexThreshold(p)))
+  }
+
   /** Assigns every row a named split with exact cumulative-threshold
     * probabilities, e.g. `Seq("train" -> 0.8, "val" -> 0.1,
     * "test" -> 0.1)`. Weights must sum to 1 (±1e-9); the final split

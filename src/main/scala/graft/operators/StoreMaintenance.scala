@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.sources.HFileDir
 
 /** File-maintenance cores shared by the persisted index stores (the
   * IVF×PQ codes dir, the SQ8 flat codes dir, the LSH bucket dir).
@@ -321,8 +322,7 @@ private[graft] object StoreMaintenance {
                            pairs: Seq[(String, String)],
                            filesPerTask: Int = 4): Map[String, Long] = {
     if (pairs.isEmpty) return Map.empty
-    val bc = org.apache.spark.graftbridge.ConfBridge
-      .broadcastConf(spark.sparkContext)
+    val confMap = HFileDir.confMap(spark)
     val slices = math.max(1,
       (pairs.size + filesPerTask - 1) / filesPerTask)
     // mapPartitions+collect, not foreachPartition: the per-file hash is
@@ -330,7 +330,7 @@ private[graft] object StoreMaintenance {
     // manifest this feeds.
     val sums = spark.sparkContext.parallelize(pairs, slices)
       .mapPartitions { it =>
-        val conf = org.apache.spark.graftbridge.ConfBridge.conf(bc)
+        val conf = HFileDir.confOf(confMap)
         it.map { case (s, d) =>
           val sp = new Path(s)
           val dp = new Path(d)
@@ -384,13 +384,12 @@ private[graft] object StoreMaintenance {
   def checksumFiles(spark: SparkSession, paths: Seq[String],
                     filesPerTask: Int = 4): Map[String, Option[Long]] = {
     if (paths.isEmpty) return Map.empty
-    val bc = org.apache.spark.graftbridge.ConfBridge
-      .broadcastConf(spark.sparkContext)
+    val confMap = HFileDir.confMap(spark)
     val slices = math.max(1,
       (paths.size + filesPerTask - 1) / filesPerTask)
     spark.sparkContext.parallelize(paths, slices)
       .mapPartitions { it =>
-        val conf = org.apache.spark.graftbridge.ConfBridge.conf(bc)
+        val conf = HFileDir.confOf(confMap)
         it.map { p =>
           val sum: Option[Long] =
             try {

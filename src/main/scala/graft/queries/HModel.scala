@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType}
 import graft.functions.hb
@@ -139,7 +139,7 @@ object HModel {
     // the typed cell projection feeds seven plan branches (three marker
     // derivations + the four key_type filters in applyDeletes); without
     // caching, each branch re-scans events and re-runs hb.encode. Persist
-    // it once (the Dedup.cacheShingles pattern) — LRU-evictable, sized
+    // it once (the Dedup.shingleSets pattern) — LRU-evictable, sized
     // O(cells).
     val cells = events.select(
       hb.encode(col("user_id")).as("rowkey"),
@@ -242,37 +242,26 @@ object HModel {
       .orderBy(col("rk_hex"), col("qualifier"), col("ts_ms"))
   }
 
-  /** One bulk-load fixture directory per sf dir for [[hfilePointLookup]],
-    * written once per JVM (TrieMap) and once per machine (`_done` marker)
-    * — bench's repeated runs and the verify run reuse it.
+  /** One bulk-load fixture directory per sf dir for [[hfilePointLookup]]
+    * ([[ensureFixtureDir]]) — bench's repeated runs and the verify run
+    * reuse it.
     */
-  private val lookupDirs =
-    scala.collection.concurrent.TrieMap[(String, Int), String]()
   private[graft] def ensureLookupDir(events: DataFrame, sfDir: String,
                                      buckets: Int): String =
-    lookupDirs.getOrElseUpdate((sfDir, buckets), {
-      val dir = s"${System.getProperty("java.io.tmpdir")}/" +
-        s"graft_lookup_v1_b${buckets}_${dirKey(sfDir)}"
-      val spark = events.sparkSession
-      val root = new org.apache.hadoop.fs.Path(dir)
-      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val done = new org.apache.hadoop.fs.Path(root, "_done")
-      if (!fs.exists(done)) {
-        val cells = events.select(
-          col("user_id"),
-          concat(hb.encode(col("user_id")), hb.encode(col("event_id")))
-            .as("rowkey"),
-          lit("f").as("family"),
-          lit("v").as("qualifier"),
-          hb.encode(col("value")).as("value"),
-          expr("ts DIV 1000000").as("ms"))
-        val prepared = BulkLoad.prepare(cells, buckets, numPartitions = 16,
-          saltBase = Some(hb.encode(col("user_id"))))
-        BulkLoad.writeHFiles(prepared, dir, tsCol = Some("ms"))
-        fs.create(done, true).close()
-      }
-      dir
-    })
+    ensureFixtureDir(events.sparkSession, s"lookup_v1_b$buckets",
+        sfDir) { dir =>
+      val cells = events.select(
+        col("user_id"),
+        concat(hb.encode(col("user_id")), hb.encode(col("event_id")))
+          .as("rowkey"),
+        lit("f").as("family"),
+        lit("v").as("qualifier"),
+        hb.encode(col("value")).as("value"),
+        expr("ts DIV 1000000").as("ms"))
+      val prepared = BulkLoad.prepare(cells, buckets, numPartitions = 16,
+        saltBase = Some(hb.encode(col("user_id"))))
+      BulkLoad.writeHFiles(prepared, dir, tsCol = Some("ms"))
+    }
 
   /** B13 driven end-to-end: the reference's point-GET lookup
     * (HBaseRowDataLookupFunction.java fetches one row by rowkey) through
@@ -435,17 +424,31 @@ object HModel {
       .orderBy("z")
       .limit(limit)
 
-  /** One Z-ORDERED bulk-load fixture per sf dir: events written as
-    * HFiles whose rowkey is `encode(interleave(user_id, epoch_hour)) ++
-    * encode(event_id)` — curve-sorted, UNSALTED (a Z-order layout
-    * replaces hash salting: multi-dimensional locality IS the
-    * spreading strategy, and salting would destroy the contiguous key
-    * ranges the read side prunes on), one bucket of non-overlapping
-    * sorted runs. Written once per JVM / machine like
-    * [[ensureLookupDir]].
+  /** The build-once fixture dir `graft_<kind>_<dirKey(sfDir)>` under
+    * java.io.tmpdir: built by `build(dir)` once per JVM (TrieMap) and
+    * once per machine (`_done` marker, written after the build) — a
+    * changed build path must delete the old dirs, or it reuses them.
+    * Every fixture-backed row (the lookup and Z-order HFile sets, the
+    * persisted stores behind Pipeline's indexed rows) goes through here.
     */
-  private val zorderDirs =
+  private val fixtureDirs =
     scala.collection.concurrent.TrieMap[String, String]()
+  private[graft] def ensureFixtureDir(spark: SparkSession, kind: String,
+                                      sfDir: String)
+                                     (build: String => Unit): String = {
+    val name = s"graft_${kind}_${dirKey(sfDir)}"
+    fixtureDirs.getOrElseUpdate(name, {
+      val dir = s"${System.getProperty("java.io.tmpdir")}/$name"
+      val root = new org.apache.hadoop.fs.Path(dir)
+      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val done = new org.apache.hadoop.fs.Path(root, "_done")
+      if (!fs.exists(done)) {
+        build(dir)
+        fs.create(done, true).close()
+      }
+      dir
+    })
+  }
 
   /** Collision-free fixture-dir key for an sf path: 16 hex chars of
     * md5 over the FULL path. A 32-bit `String.hashCode` can collide
@@ -457,31 +460,30 @@ object HModel {
     java.security.MessageDigest.getInstance("MD5")
       .digest(sfDir.getBytes("UTF-8"))
       .take(8).map(b => f"${b & 0xff}%02x").mkString
+
+  /** One Z-ORDERED bulk-load fixture per sf dir ([[ensureFixtureDir]]):
+    * events written as HFiles whose rowkey is
+    * `encode(interleave(user_id, epoch_hour)) ++ encode(event_id)` —
+    * curve-sorted, UNSALTED (a Z-order layout replaces hash salting:
+    * multi-dimensional locality IS the spreading strategy, and salting
+    * would destroy the contiguous key ranges the read side prunes on),
+    * one bucket of non-overlapping sorted runs.
+    */
   private[graft] def ensureZorderDir(events: DataFrame,
                                      sfDir: String): String =
-    zorderDirs.getOrElseUpdate(sfDir, {
-      val dir = s"${System.getProperty("java.io.tmpdir")}/" +
-        s"graft_zorder_v1_${dirKey(sfDir)}"
-      val spark = events.sparkSession
-      val root = new org.apache.hadoop.fs.Path(dir)
-      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val done = new org.apache.hadoop.fs.Path(root, "_done")
-      if (!fs.exists(done)) {
-        val z = graft.functions.zo.zorder(col("user_id"),
-          expr("ts DIV 1000000000 DIV 3600"))
-        val cells = events.select(
-          concat(hb.encode(z), hb.encode(col("event_id"))).as("rowkey"),
-          lit("f").as("family"),
-          lit("v").as("qualifier"),
-          hb.encode(col("value")).as("value"),
-          expr("ts DIV 1000000").as("ms"))
-        val prepared = BulkLoad.prepare(cells, buckets = 1,
-          numPartitions = 16)
-        BulkLoad.writeHFiles(prepared, dir, tsCol = Some("ms"))
-        fs.create(done, true).close()
-      }
-      dir
-    })
+    ensureFixtureDir(events.sparkSession, "zorder_v1", sfDir) { dir =>
+      val z = graft.functions.zo.zorder(col("user_id"),
+        expr("ts DIV 1000000000 DIV 3600"))
+      val cells = events.select(
+        concat(hb.encode(z), hb.encode(col("event_id"))).as("rowkey"),
+        lit("f").as("family"),
+        lit("v").as("qualifier"),
+        hb.encode(col("value")).as("value"),
+        expr("ts DIV 1000000").as("ms"))
+      val prepared = BulkLoad.prepare(cells, buckets = 1,
+        numPartitions = 16)
+      BulkLoad.writeHFiles(prepared, dir, tsCol = Some("ms"))
+    }
 
   /** B12 driven end-to-end: a (user-range × hour-range) BOX query
     * against the Z-ordered bulk fixture — the reference's fuzzy

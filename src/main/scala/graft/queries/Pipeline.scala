@@ -90,35 +90,13 @@ object Pipeline {
       .orderBy("batch_id", "corpus_id")
   }
 
-  /** The build-once fixture store of the store-backed rows: one
-    * `graft_<kind>idx_v1_<sf key>` dir per sf dir under java.io.tmpdir,
-    * built by `build(dir)` once per JVM (TrieMap) and per machine
-    * (`_done` marker; [[HModel.ensureLookupDir]]'s precedent) — a
-    * changed build path must delete the old dirs, or it reuses them. */
-  private val storeDirs =
-    scala.collection.concurrent.TrieMap[(String, String), String]()
-  private def ensureStoreDir(spark: SparkSession, kind: String,
-                             sfDir: String)(build: String => Unit): String =
-    storeDirs.getOrElseUpdate((kind, sfDir), {
-      val dir = s"${System.getProperty("java.io.tmpdir")}/" +
-        s"graft_${kind}idx_v1_${HModel.dirKey(sfDir)}"
-      val root = new org.apache.hadoop.fs.Path(dir)
-      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val done = new org.apache.hadoop.fs.Path(root, "_done")
-      if (!fs.exists(done)) {
-        build(dir)
-        fs.create(done, true).close()
-      }
-      dir
-    })
-
   /** One persisted LSH layout per sf dir for [[dedupRecallIndexed]],
     * built over the corpus slice (doc_id % 10 != 0 — C22's split, the
     * same corpus [[dedupFuzzyIncremental]] indexes in-plan).
     */
   private[graft] def ensureLshIndexDir(documents: DataFrame,
                                        sfDir: String): String =
-    ensureStoreDir(documents.sparkSession, "lsh", sfDir)(
+    HModel.ensureFixtureDir(documents.sparkSession, "lshidx_v1", sfDir)(
       Dedup.buildLshIndex(documents.filter(col("doc_id") % 10 =!= 0),
         "doc_id", "text", _, k = 3, perms = 128, bands = 16))
 
@@ -144,8 +122,8 @@ object Pipeline {
     * and the one that makes the store-recall number recordable at
     * the 100× replication where the proportional batch's truth join
     * storms. At the gate sf the batch is under the target so the
-    * row equals [[dedupRecallIndexed]] exactly — the C35b
-    * frac-saturation property, spec-pinned.
+    * row equals [[dedupRecallIndexed]] exactly — a target at or above
+    * the batch size adds no filter ([[Sampling.docSlice]]), spec-pinned.
     */
   def dedupRecallIndexedAbs(documents: DataFrame,
                             sfDir: String): DataFrame =
@@ -960,7 +938,7 @@ object Pipeline {
       .orderBy("query_id", "neighbor_id")
 
   /** One persisted IVF×PQ layout per sf dir for [[knnRangeIndexed]]
-    * ([[ensureStoreDir]]). The coarse table is the FROZEN
+    * ([[HModel.ensureFixtureDir]]). The coarse table is the FROZEN
     * [[Knn.strideCoarse]] — identical to the one D10b derives in-plan —
     * so the registered row's answers equal knn_range_ivf's and the
     * plain-SQL oracle replays the stored assignment without replaying a
@@ -968,7 +946,7 @@ object Pipeline {
     */
   private[graft] def ensureKnnIndexDir(embeddings: DataFrame,
                                        sfDir: String): String =
-    ensureStoreDir(embeddings.sparkSession, "knn", sfDir)(
+    HModel.ensureFixtureDir(embeddings.sparkSession, "knnidx_v1", sfDir)(
       Knn.buildIvfPqIndex(embeddings, "vec_id", "embedding", _,
         dim = EmbeddingDim,
         coarse = Some(Knn.strideCoarse(embeddings, "vec_id", "embedding"))))
@@ -1071,13 +1049,13 @@ object Pipeline {
   /** D11b registered: the SQ8 flat scan off the PERSISTED byte-codes
     * store — the read path whose IO matches the 8× memory claim (the
     * in-plan [[knnSq]] models only the arithmetic), built once per sf
-    * dir ([[ensureStoreDir]]) from the full embeddings table. Same grid,
-    * codes, queries, and shortlist rules as D11 ⇒ identical answers
-    * (KnnSpec pins parity), oracle = knn_sq's SQL verbatim.
+    * dir ([[HModel.ensureFixtureDir]]) from the full embeddings table.
+    * Same grid, codes, queries, and shortlist rules as D11 ⇒ identical
+    * answers (KnnSpec pins parity), oracle = knn_sq's SQL verbatim.
     */
   def knnSqIndexed(embeddings: DataFrame, sfDir: String): DataFrame =
     Knn.searchSqIndex(embeddings.sparkSession,
-        ensureStoreDir(embeddings.sparkSession, "sq", sfDir)(
+        HModel.ensureFixtureDir(embeddings.sparkSession, "sqidx_v1", sfDir)(
           Knn.buildSqIndex(embeddings, "vec_id", "embedding", _,
             dim = EmbeddingDim)),
         querySet(embeddings),

@@ -78,21 +78,39 @@ private[graft] object HFileDir {
     }
   }
 
-  /** `f` over `items` through a bounded pool of 16 threads — per-file
-    * short reads at 100k files would gate a job if serial (the parquet
-    * parallel-footer analogue). Results come back in `items` order;
-    * `shutdownNow` so a failure leaves no queued reads running. A single
-    * item runs inline: a one-file probe or read needs no pool.
+  /** `f` over `items` through the shared [[Pool]] of at most 16 threads
+    * — per-file short reads at 100k files would gate a job if serial
+    * (the parquet parallel-footer analogue). Results come back in
+    * `items` order; a failing item cancels this call's other futures
+    * (not the pool's other callers) and its failure is rethrown. A
+    * single item runs inline: a one-file probe or read needs no pool.
+    * `f` must not call `pooled` itself: a nested call would wait on a
+    * pool whose threads may all be waiting on it.
     */
   def pooled[A, B](items: Seq[A])(f: A => B): Seq[B] =
     if (items.isEmpty) Nil
     else if (items.sizeIs == 1) Seq(f(items.head))
     else {
-      val pool = Executors.newFixedThreadPool(math.min(16, items.size))
-      try items.map(a => pool.submit(new Callable[B] { def call(): B = f(a) }))
-        .map(_.get())
-      finally pool.shutdownNow()
+      val futures = items.map(a =>
+        Pool.submit(new Callable[B] { def call(): B = f(a) }))
+      try futures.map(_.get())
+      catch { case e: Throwable => futures.foreach(_.cancel(true)); throw e }
     }
+
+  private[graft] val PoolThreadPrefix = "graft-hfile-io-"
+
+  /** The one pool behind [[pooled]]: 16 named daemon threads, started on
+    * first use and kept for the JVM's life (daemons never hold up exit),
+    * so a driver that plans many small reads starts 16 threads in total
+    * rather than a pool per call. */
+  private lazy val Pool = {
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    Executors.newFixedThreadPool(16, (r: Runnable) => {
+      val t = new Thread(r, PoolThreadPrefix + n.incrementAndGet())
+      t.setDaemon(true)
+      t
+    })
+  }
 
   /** One file's planner stats: entry count and first/last rowkey (None
     * for a cell-less file).

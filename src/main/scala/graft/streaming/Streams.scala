@@ -134,25 +134,15 @@ object Streams {
                               maxBucket: Long = 1000L,
                               idleTimeoutMs: Long = 0L)
       : Dataset[NearDupCandidate] = {
-    require(perms % bands == 0, "perms must be divisible by bands")
-    val rowsPerBand = perms / bands
     val timeoutConf =
       if (idleTimeoutMs > 0) GroupStateTimeout.ProcessingTimeTimeout
       else GroupStateTimeout.NoTimeout
     val sp = docs.sparkSession
     import sp.implicits._
-    val bandKeys = transform(sequence(lit(0), lit(bands - 1)), b =>
-      struct(b.cast("int").as("band"),
-        xxhash64(b, slice(col("sig"), b * rowsPerBand + 1, lit(rowsPerBand)))
-          .as("bkey")))
-    val hits = docs
-      .select(col(idCol).cast("long").as("doc_id"),
-        graft.functions.txt.minhash(
-          graft.operators.Dedup.shingleHashes(col(textCol), k), perms)
-          .as("sig"))
-      .select(col("doc_id"), explode(bandKeys).as("bk"))
-      .select(col("bk.band").as("band"), col("bk.bkey").as("bkey"),
-        col("doc_id"))
+    // the batch blocking's own band keys: stream and batch buckets
+    // collide by construction
+    val hits = Dedup.lshBandKeys(docs, col(idCol).cast("long"), "doc_id",
+        textCol, k, perms, bands)
       .as[BandHit]
     hits
       .groupByKey(h => (h.band, h.bkey))
@@ -248,9 +238,8 @@ object Streams {
       .foreachBatch { (batch0: Dataset[Row], epochId: Long) =>
         if (!batch0.isEmpty) {
           val batch = batch0.toDF()
-          val hits = Dedup.incrementalMinhash(evalSet, batch, idCol,
-            textCol, store.k, store.perms, store.bands, threshold,
-            bucketIndex = Some(store.buckets(batch0.sparkSession)))
+          val hits = store.probe(batch0.sparkSession, evalSet, batch,
+            idCol, textCol, threshold)
           val rolled = hits.groupBy(col("batch_id"))
             .agg(count(lit(1)).as("n_eval_matches"),
               round(max(col("jaccard")), 6).as("max_jaccard"))
@@ -856,9 +845,8 @@ object Streams {
     val store = PersistedStore.Lsh.open(docs.sparkSession, indexDir)
     ingestStream(docs, store, idCol, textCol, docStoreDir, "doc", "jaccard",
         streamId) { (batch, history) =>
-      Dedup.incrementalMinhash(history, batch, idCol, textCol, store.k,
-          store.perms, store.bands, threshold, maxBucket,
-          bucketIndex = Some(store.buckets(batch.sparkSession)))
+      store.probe(batch.sparkSession, history, batch, idCol, textCol,
+          threshold, maxBucket)
         .select(col("batch_id"), col("corpus_id").as("match_id"),
           col("jaccard"))
     }(sink)

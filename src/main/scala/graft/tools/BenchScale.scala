@@ -128,7 +128,7 @@ object BenchScale {
   // ~870), so EXACT truth has a quadratic candidate space there by
   // data construction, whatever the algorithm — measured: the naive
   // inverted join OOMs, and even prefix-filtered candidates are ~2e9.
-  // That regime is exactly what lshRecall's sampled-slice mode is
+  // That regime is exactly what lshRecallSlice's sampled slice is
   // for — dedup_recall_sampled (an ABSOLUTE ~300-doc eval slice, so
   // the quadratic work is scale-invariant) IS in the 100x set and
   // records the cell (ratio100 1.06); the full-truth 10x row

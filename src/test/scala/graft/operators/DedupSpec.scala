@@ -174,8 +174,7 @@ class DedupSpec extends SparkSpec {
       (4L, "uu vv ww xx yy"),
       (5L, "too short"), // < k words -> excluded entirely
       (6L, "click here also")).toDF("doc_id", "text")
-    val out = Dedup.boilerplate(df, "doc_id", "text", k = 3, minDf = 3L,
-        persistShingles = false)
+    val out = Dedup.boilerplate(df, "doc_id", "text", k = 3, minDf = 3L)
       .orderBy("doc_id")
       .select("doc_id", "n_grams", "n_boiler", "max_df")
       .as[(Long, Long, Long, Long)].collect().toSeq
@@ -183,14 +182,12 @@ class DedupSpec extends SparkSpec {
       (1L, 3L, 1L, 3L), (2L, 3L, 1L, 3L), (3L, 4L, 1L, 3L),
       (4L, 3L, 0L, 0L), (6L, 1L, 0L, 0L)), s"got $out")
     // fraction column matches the count columns
-    val fr = Dedup.boilerplate(df, "doc_id", "text", k = 3, minDf = 3L,
-        persistShingles = false)
+    val fr = Dedup.boilerplate(df, "doc_id", "text", k = 3, minDf = 3L)
       .filter(col("doc_id") === 3L)
       .select("boiler_frac").as[Double].head()
     assert(fr == 0.25)
     // raising minDf above the hottest gram's df empties the boiler set
-    val none = Dedup.boilerplate(df, "doc_id", "text", k = 3, minDf = 4L,
-        persistShingles = false)
+    val none = Dedup.boilerplate(df, "doc_id", "text", k = 3, minDf = 4L)
       .agg(sum(col("n_boiler"))).as[Long].head()
     assert(none == 0L)
   }
@@ -432,13 +429,6 @@ class DedupSpec extends SparkSpec {
     val plan = Dedup.incrementalMinhash(corpus, batch, "doc_id", "text")
       .queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastExchange"), "batch keys not broadcast")
-    // jumbo-batch posture: identical rows with the broadcast hints off
-    // (AQE picks join sides instead of asserting the batch fits)
-    val unhinted = Dedup.incrementalMinhash(corpus, batch, "doc_id",
-      "text", broadcastBatch = false).collect()
-    assert(unhinted.toSeq.map(_.toString).sorted ==
-      got.toSeq.map(_.toString).sorted,
-      "broadcastBatch=false must not change results")
     // sf parity with the full pair run restricted to cross-set pairs
     val docs = sf("documents")
     val isDelta = col("doc_id") % 10 === 0
@@ -874,51 +864,74 @@ class DedupSpec extends SparkSpec {
     assert(all.map(_.toString).toSeq == full.map(_.toString).toSeq)
   }
 
-  test("lshRecall sampleFrac: the sampled report EQUALS the full " +
-      "report over the pre-filtered slice, and the slice is the C8 " +
-      "salted-hash predicate") {
-    val frac = 0.4
-    val sampled = Dedup.lshRecall(docs, "doc_id", "text",
-      sampleFrac = frac, seed = 42L).collect()(0)
-    // the C8 predicate applied by hand, then the FULL exact report
-    val slice = docs.filter(Sampling.hashKey(col("doc_id"), 42L) <
-      lit(Sampling.hexThreshold(frac)))
-    val full = Dedup.lshRecall(slice, "doc_id", "text").collect()(0)
-    assert(sampled.toString == full.toString,
-      s"sampled $sampled != full-over-slice $full")
-    // the slice is real (strictly smaller than the corpus) and the
-    // sampled truth is a subset of the corpus truth
-    val nAll = Dedup.lshRecall(docs, "doc_id", "text").collect()(0)
-      .getAs[Long]("n_truth")
-    assert(slice.count() < docs.count() && slice.count() > 0)
-    assert(sampled.getAs[Long]("n_truth") <= nAll)
-    // frac = 1 is byte-identical to the default full report
-    val one = Dedup.lshRecall(docs, "doc_id", "text", sampleFrac = 1.0)
-      .collect()(0)
-    val base = Dedup.lshRecall(docs, "doc_id", "text").collect()(0)
-    assert(one.toString == base.toString)
-    // the ABSOLUTE-size slice is the derived fraction min(1, target/n)
+  test("lshRecallSlice: the sliced report EQUALS the full report over " +
+      "the pre-filtered slice, and the slice is the C8 salted-hash " +
+      "predicate") {
     val n = docs.count()
-    val capped = Dedup.lshRecallSlice(docs, "doc_id", "text",
-      sampleDocs = n / 2).collect()(0)
-    val viaFrac = Dedup.lshRecall(docs, "doc_id", "text",
-      sampleFrac = math.min(1.0, (n / 2).toDouble / n)).collect()(0)
-    assert(capped.toString == viaFrac.toString,
-      s"docs-capped slice $capped != derived-fraction slice $viaFrac")
-    // a target >= the corpus is the full report
+    val target = n / 2
+    val sliced = Dedup.lshRecallSlice(docs, "doc_id", "text",
+      sampleDocs = target, seed = 42L).collect()(0)
+    // the C8 predicate at the derived fraction min(1, target/n) applied
+    // by hand, then the FULL exact report
+    val slice = docs.filter(Sampling.hashKey(col("doc_id"), 42L) <
+      lit(Sampling.hexThreshold(math.min(1.0, target.toDouble / n))))
+    val full = Dedup.lshRecall(slice, "doc_id", "text").collect()(0)
+    assert(sliced.toString == full.toString,
+      s"sliced $sliced != full-over-slice $full")
+    // Sampling.docSlice keeps exactly the hand-filtered rows
+    def ids(df: org.apache.spark.sql.DataFrame) =
+      df.select("doc_id").as[Long].collect().sorted.toSeq
+    assert(ids(Sampling.docSlice(docs, "doc_id", target, 42L)) == ids(slice))
+    // the slice is real (strictly smaller than the corpus) and the
+    // sliced truth is a subset of the corpus truth
+    val base = Dedup.lshRecall(docs, "doc_id", "text").collect()(0)
+    assert(slice.count() < n && slice.count() > 0)
+    assert(sliced.getAs[Long]("n_truth") <= base.getAs[Long]("n_truth"))
+    // a target >= the corpus adds no filter and is the full report
+    assert(Sampling.docSlice(docs, "doc_id", n * 2, 42L) eq docs)
     val all = Dedup.lshRecallSlice(docs, "doc_id", "text",
       sampleDocs = n * 2).collect()(0)
     assert(all.toString == base.toString)
     // knownCount: a catalog-served count skips the corpus scan and
     // yields the IDENTICAL report (same integer -> same IEEE fraction)
     val viaKnown = Dedup.lshRecallSlice(docs, "doc_id", "text",
-      sampleDocs = n / 2, knownCount = Some(n)).collect()(0)
-    assert(viaKnown.toString == capped.toString,
-      s"knownCount report $viaKnown != counted report $capped")
+      sampleDocs = target, knownCount = Some(n)).collect()(0)
+    assert(viaKnown.toString == sliced.toString,
+      s"knownCount report $viaKnown != counted report $sliced")
     intercept[IllegalArgumentException] {
       Dedup.lshRecallSlice(docs, "doc_id", "text",
         knownCount = Some(0L)).collect()
     }
+  }
+
+  test("MinHash-LSH recall and probe verbs: eager driver jobs while " +
+      "the frame is built stay within budget") {
+    val corpus = docs.filter(col("doc_id") % 10 =!= 0)
+    val batch = docs.filter(col("doc_id") % 10 === 0)
+    val dir = java.nio.file.Files.createTempDirectory("lsh_jobs").toString
+    Dedup.buildLshIndex(corpus, "doc_id", "text", dir)
+    val counter = new graft.JobCounter(spark)
+    val counts = try Seq(
+      "lshRecallSlice" -> counter.jobs(Dedup.lshRecallSlice(docs,
+        "doc_id", "text", sampleDocs = 300L)),
+      "lshRecallSweepSlice" -> counter.jobs(Dedup.lshRecallSweepSlice(docs,
+        "doc_id", "text", sampleDocs = 300L)),
+      "lshIndexRecall" -> counter.jobs(Dedup.lshIndexRecall(dir, corpus,
+        batch, "doc_id", "text")),
+      "lshIndexRecallSlice" -> counter.jobs(Dedup.lshIndexRecallSlice(dir,
+        corpus, batch, "doc_id", "text", sampleDocs = 30L)),
+      "incrementalMinhashIndexed" -> counter.jobs(
+        Dedup.incrementalMinhashIndexed(dir, corpus, batch, "doc_id", "text"))
+    ) finally counter.close()
+    spark.catalog.clearCache()
+    // the jobs of the eager actions these verbs take at this scale
+    // (store opens, the slice count, the probe's coverage check, the
+    // sweep's truth checkpoint): one more means a stage went eager
+    val budget = Map("lshRecallSlice" -> 2, "lshRecallSweepSlice" -> 8,
+      "lshIndexRecall" -> 24, "lshIndexRecallSlice" -> 23,
+      "incrementalMinhashIndexed" -> 20)
+    counts.foreach { case (verb, n) =>
+      assert(n <= budget(verb), s"$verb ran $n eager jobs: $counts") }
   }
 
   test("lshIndexRecall: report off the persisted store is exact, " +

@@ -754,4 +754,37 @@ class HFileSpec extends SparkSpec {
       }
     }
   }
+
+  test("HFileDir.pooled: 200 calls start at most 16 shared pool threads; " +
+      "a failing item cancels its own call, and the next call completes") {
+    import scala.jdk.CollectionConverters._
+    (1 to 200).foreach { i =>
+      val items = 1 to 2 + i % 3
+      assert(HFileDir.pooled(items)(_ * 2) == items.map(_ * 2))
+    }
+    // the factory numbers threads in start order, so the highest number
+    // alive is the count ever started (pool threads never exit)
+    val started = Thread.getAllStackTraces.keySet.asScala.toSeq
+      .map(_.getName).filter(_.startsWith(HFileDir.PoolThreadPrefix))
+      .map(_.stripPrefix(HFileDir.PoolThreadPrefix).toInt)
+    assert(started.nonEmpty && started.max <= 16, s"pool threads $started")
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    val running = new CountDownLatch(1)
+    val interrupted = new CountDownLatch(1)
+    val e = intercept[java.util.concurrent.ExecutionException] {
+      HFileDir.pooled(Seq(1, 2)) { i =>
+        if (i == 1) {
+          running.await(10, TimeUnit.SECONDS)
+          throw new IllegalStateException("boom")
+        }
+        running.countDown()
+        try Thread.sleep(60000)
+        catch { case _: InterruptedException => interrupted.countDown() }
+      }
+    }
+    assert(e.getCause.isInstanceOf[IllegalStateException])
+    assert(interrupted.await(10, TimeUnit.SECONDS),
+      "the failing call's other item kept running")
+    assert(HFileDir.pooled(1 to 4)(identity) == (1 to 4))
+  }
 }

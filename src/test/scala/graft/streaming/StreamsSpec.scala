@@ -989,6 +989,47 @@ class StreamsSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("G12 stream blocking is the batch blocking: every emitted " +
+      "(doc_id, first_id) is a Dedup.lshCandidatePairs pair whose " +
+      "members share the emitted (band, bkey)") {
+    implicit val sqlCtx = spark.sqlContext
+    val rows = sf("documents")
+      .select(col("doc_id").cast("long"), col("text"))
+      .as[(Long, String)].collect().toSeq
+    val static = rows.toDF("doc_id", "text")
+    val input = MemoryStream[(Long, String)]
+    val q = Streams.nearDupCandidatesStream(input.toDF().toDF("doc_id", "text"))
+      .writeStream.format("memory").queryName("neardup_parity_out")
+      .outputMode("append").start()
+    try {
+      input.addData(rows: _*)
+      q.processAllAvailable()
+      val emitted = spark.table("neardup_parity_out")
+        .as[NearDupCandidate].collect().toSeq
+      val pairs = graft.operators.Dedup.lshCandidatePairs(
+          static.select(col("doc_id"), graft.functions.txt.minhash(
+            graft.operators.Dedup.shingleHashes(col("text"), 3), 128)
+            .as("sig")),
+          "doc_id", "sig", bands = 16, rowsPerBand = 8)
+        .as[(Long, Long)].collect().toSet
+      val keys = graft.operators.Dedup.lshBandKeys(static, col("doc_id"),
+          "doc_id", "text", 3, 128, 16)
+        .select("band", "bkey", "doc_id").as[(Int, Long, Long)]
+        .collect().toSet
+      assert(emitted.nonEmpty && pairs.nonEmpty)
+      emitted.foreach { c =>
+        assert(pairs((c.first_id min c.doc_id, c.first_id max c.doc_id)),
+          s"$c is no batch candidate pair")
+        assert(keys((c.band, c.bkey, c.doc_id)) &&
+          keys((c.band, c.bkey, c.first_id)), s"$c: not one batch bucket")
+      }
+      // one static batch: every bucket's non-first members emit, so
+      // every batch pair has an emitted member
+      val emittedIds = emitted.map(_.doc_id).toSet
+      assert(pairs.forall { case (a, b) => emittedIds(a) || emittedIds(b) })
+    } finally q.stop()
+  }
+
   test("G14 streaming token rate: closed windows carry exact per-source " +
       "BPE token counts that reconcile with the batch tokenStats") {
     implicit val sqlCtx = spark.sqlContext
