@@ -108,20 +108,21 @@ object Dedup {
     * shingle sets are persisted for the run ([[shingleSets]]: they
     * feed both the band keys and the verification join).
     * Batch-internal near-dups are the batch's own [[minhashLsh]] run
-    * at batch scale. `bucketIndex` serves the corpus buckets from a
-    * [[buildLshIndex]] layout ([[PersistedStore.LshStore.probe]]).
+    * at batch scale. The corpus buckets are built in-plan from the
+    * corpus text; [[PersistedStore.LshStore.probe]] serves them from a
+    * [[buildLshIndex]] layout instead.
     */
   def incrementalMinhash(corpus: DataFrame, batch: DataFrame,
                          idCol: String, textCol: String, k: Int = 3,
                          perms: Int = 128, bands: Int = 16,
                          threshold: Double = 0.7,
-                         maxBucket: Int = 1000,
-                         bucketIndex: Option[DataFrame] = scala.None)
-      : DataFrame =
+                         maxBucket: Int = 1000): DataFrame =
     crossSetPairs(corpus, batch, idCol, textCol, k, perms, bands,
-      threshold, maxBucket, bucketIndex, shingled = scala.None)
+      threshold, maxBucket, bucketIndex = scala.None, shingled = scala.None)
 
-  /** The body of [[incrementalMinhash]]. `shingled` hands in the
+  /** The body of [[incrementalMinhash]] and of
+    * [[PersistedStore.LshStore.probe]]. `bucketIndex` is a store's flat
+    * `(band, bkey, corpus_id)` table. `shingled` hands in the
     * caller's own persisted `(corpus_id, sh)` and `(batch_id, sh)`
     * frames — a caller that already computed the identical kernel for
     * another leg of its plan (the [[lshIndexRecall]] truth leg) shares
@@ -230,7 +231,7 @@ object Dedup {
 
   /** `perms / bands`, the signature rows one band hashes — `bands`
     * must divide `perms`. */
-  private[graft] def rowsPerBand(perms: Int, bands: Int): Int = {
+  private def rowsPerBand(perms: Int, bands: Int): Int = {
     require(perms % bands == 0, "perms must be divisible by bands")
     perms / bands
   }
@@ -358,8 +359,7 @@ object Dedup {
                                 textCol: String, threshold: Double = 0.7,
                                 maxBucket: Int = 1000): DataFrame =
     PersistedStore.Lsh.open(batch.sparkSession, dir)
-      .probe(batch.sparkSession, corpus, batch, idCol, textCol, threshold,
-        maxBucket)
+      .probe(corpus, batch, idCol, textCol, threshold, maxBucket)
 
   /** C37: recall of the PERSISTED LSH index on an incoming batch —
     * the D9-over-D8 discipline for the dedup store. C35 measures the
@@ -419,8 +419,8 @@ object Dedup {
         "batch_id")
       .filter(jaccard(col("c"), col("_nc"), col("_nb")) >= threshold)
       .select(col("batch_id"), col("corpus_id"))
-    val found = store.probe(spark, corpusIn.drop("_cid"), batch, idCol,
-      textCol, threshold, shingled = Some((csets, bsets)))
+    val found = store.probe(corpusIn.drop("_cid"), batch, idCol, textCol,
+      threshold, shingled = Some((csets, bsets)))
     recallReport(truth, found, Seq("batch_id", "corpus_id"))
   }
 

@@ -408,22 +408,21 @@ object PersistedStore {
     val k: Int = params.k
     val perms: Int = params.perms
     val bands: Int = params.bands
-    /** The `bucketIndex` [[Dedup.incrementalMinhash]] probes. */
-    def buckets(spark: SparkSession): DataFrame =
-      data(spark).select(col("band"), col("bkey"), col("corpus_id"))
     /** Verified `(batch_id, corpus_id, jaccard)` near-dup pairs of
       * `batch` against `corpus` off the stored buckets, under the frozen
-      * signature — [[Dedup.incrementalMinhash]] with this store as its
-      * `bucketIndex`. `shingled` hands in the caller's persisted
+      * signature — [[Dedup.incrementalMinhash]] with the corpus buckets
+      * read from this store. `shingled` hands in the caller's persisted
       * `(corpus_id, sh)` / `(batch_id, sh)` frames. */
-    private[graft] def probe(spark: SparkSession, corpus: DataFrame,
-                             batch: DataFrame, idCol: String,
-                             textCol: String, threshold: Double,
-                             maxBucket: Int = 1000,
+    private[graft] def probe(corpus: DataFrame, batch: DataFrame,
+                             idCol: String, textCol: String,
+                             threshold: Double, maxBucket: Int = 1000,
                              shingled: Option[(DataFrame, DataFrame)] =
                                scala.None): DataFrame =
       Dedup.crossSetPairs(corpus, batch, idCol, textCol, k, perms, bands,
-        threshold, maxBucket, Some(buckets(spark)), shingled)
+        threshold, maxBucket,
+        Some(data(batch.sparkSession)
+          .select(col("band"), col("bkey"), col("corpus_id"))),
+        shingled)
     def append(survivors: DataFrame, idCol: String, textCol: String): Unit =
       write(Dedup.lshBandKeys(survivors, col(idCol), "corpus_id", textCol,
         k, perms, bands))

@@ -2,7 +2,7 @@ package graft.sources
 
 import java.io.IOException
 import java.nio.charset.StandardCharsets.UTF_8
-import java.util.concurrent.{Callable, Executors}
+import java.util.concurrent.{Callable, Executors, Future, Semaphore}
 
 import scala.collection.mutable.ArrayBuffer
 
@@ -78,34 +78,47 @@ private[graft] object HFileDir {
     }
   }
 
-  /** `f` over `items` through the shared [[Pool]] of at most 16 threads
-    * — per-file short reads at 100k files would gate a job if serial
-    * (the parquet parallel-footer analogue). Results come back in
+  /** `f` over `items` through the shared [[Pool]] of [[PoolSize]]
+    * threads — per-file short reads at 100k files would gate a job if
+    * serial (the parquet parallel-footer analogue). Results come back in
     * `items` order; a failing item cancels this call's other futures
     * (not the pool's other callers) and its failure is rethrown. A
     * single item runs inline: a one-file probe or read needs no pool.
-    * `f` must not call `pooled` itself: a nested call would wait on a
-    * pool whose threads may all be waiting on it.
+    * Callers share the pool's queue, so one call keeps at most
+    * [[PoolSize]] of its items queued or running: it submits the next
+    * as one finishes, and a concurrent caller's items (a bloom probe
+    * beside a many-file stats fallback) wait for one item per thread,
+    * not for the whole backlog. `f` must not call `pooled` itself: a
+    * nested call would wait on a pool whose threads may all be waiting
+    * on it.
     */
   def pooled[A, B](items: Seq[A])(f: A => B): Seq[B] =
     if (items.isEmpty) Nil
     else if (items.sizeIs == 1) Seq(f(items.head))
     else {
-      val futures = items.map(a =>
-        Pool.submit(new Callable[B] { def call(): B = f(a) }))
-      try futures.map(_.get())
-      catch { case e: Throwable => futures.foreach(_.cancel(true)); throw e }
+      val slots = new Semaphore(PoolSize)
+      val futures = ArrayBuffer.empty[Future[B]]
+      try {
+        items.foreach { a =>
+          slots.acquire()
+          futures += Pool.submit(new Callable[B] {
+            def call(): B = try f(a) finally slots.release()
+          })
+        }
+        futures.map(_.get()).toSeq
+      } catch { case e: Throwable => futures.foreach(_.cancel(true)); throw e }
     }
 
   private[graft] val PoolThreadPrefix = "graft-hfile-io-"
+  private[graft] val PoolSize = 16
 
-  /** The one pool behind [[pooled]]: 16 named daemon threads, started on
-    * first use and kept for the JVM's life (daemons never hold up exit),
-    * so a driver that plans many small reads starts 16 threads in total
-    * rather than a pool per call. */
+  /** The one pool behind [[pooled]]: [[PoolSize]] named daemon threads,
+    * started on first use and kept for the JVM's life (daemons never
+    * hold up exit), so a driver that plans many small reads starts 16
+    * threads in total rather than a pool per call. */
   private lazy val Pool = {
     val n = new java.util.concurrent.atomic.AtomicInteger
-    Executors.newFixedThreadPool(16, (r: Runnable) => {
+    Executors.newFixedThreadPool(PoolSize, (r: Runnable) => {
       val t = new Thread(r, PoolThreadPrefix + n.incrementAndGet())
       t.setDaemon(true)
       t

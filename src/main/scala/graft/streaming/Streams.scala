@@ -238,8 +238,7 @@ object Streams {
       .foreachBatch { (batch0: Dataset[Row], epochId: Long) =>
         if (!batch0.isEmpty) {
           val batch = batch0.toDF()
-          val hits = store.probe(batch0.sparkSession, evalSet, batch,
-            idCol, textCol, threshold)
+          val hits = store.probe(evalSet, batch, idCol, textCol, threshold)
           val rolled = hits.groupBy(col("batch_id"))
             .agg(count(lit(1)).as("n_eval_matches"),
               round(max(col("jaccard")), 6).as("max_jaccard"))
@@ -845,8 +844,7 @@ object Streams {
     val store = PersistedStore.Lsh.open(docs.sparkSession, indexDir)
     ingestStream(docs, store, idCol, textCol, docStoreDir, "doc", "jaccard",
         streamId) { (batch, history) =>
-      store.probe(batch.sparkSession, history, batch, idCol, textCol,
-          threshold, maxBucket)
+      store.probe(history, batch, idCol, textCol, threshold, maxBucket)
         .select(col("batch_id"), col("corpus_id").as("match_id"),
           col("jaccard"))
     }(sink)

@@ -903,9 +903,8 @@ class StoreMaintenanceSpec extends SparkSpec {
     val lsh = tmp("handle_lsh")
     Dedup.buildLshIndex(base, "doc_id", "text", lsh)
     val store = PersistedStore.Lsh.open(spark, lsh)
-    def copiesFound(): Long = Dedup.incrementalMinhash(
-        base.unionByName(moved), batch, "doc_id", "text", store.k,
-        store.perms, store.bands, bucketIndex = Some(store.buckets(spark)))
+    def copiesFound(): Long = store
+      .probe(base.unionByName(moved), batch, "doc_id", "text", 0.7)
       .filter(col("corpus_id") === col("batch_id") + Fresh).count()
     assert(copiesFound() == 0L, "lsh: nothing appended yet")
     Dedup.appendToLshIndex(moved, "doc_id", "text", lsh)

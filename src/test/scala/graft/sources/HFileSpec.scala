@@ -787,4 +787,31 @@ class HFileSpec extends SparkSpec {
       "the failing call's other item kept running")
     assert(HFileDir.pooled(1 to 4)(identity) == (1 to 4))
   }
+
+  test("HFileDir.pooled: a large call keeps at most PoolSize items " +
+      "outstanding, so a concurrent small call is not queued behind it") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    import java.util.concurrent.atomic.AtomicInteger
+    val n = HFileDir.PoolSize * 4
+    val started = new CountDownLatch(1)
+    val done = new AtomicInteger
+    val big = new Thread(() => {
+      HFileDir.pooled(1 to n) { _ =>
+        started.countDown()
+        Thread.sleep(50)
+        done.incrementAndGet()
+      }
+      ()
+    })
+    big.start()
+    assert(started.await(10, TimeUnit.SECONDS))
+    assert(HFileDir.pooled(Seq(1, 2))(_ + 1) == Seq(2, 3))
+    // behind a whole backlog the small call would run only after the
+    // big call's last PoolSize items had been dequeued
+    val doneAtSmall = done.get()
+    big.join(30000)
+    assert(done.get() == n)
+    assert(doneAtSmall < n - HFileDir.PoolSize,
+      s"small call finished after $doneAtSmall of $n big-call items")
+  }
 }
