@@ -2580,7 +2580,7 @@ object SparkEntry {
         |  COUNT(*) AS n_events,
         |  CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
         |FROM events
-        |WHERE user_id BETWEEN 40 AND 80
+        |WHERE user_id BETWEEN 4 AND 80
         |  AND epoch_ms(ts) // 1000 // 3600 BETWEEN 473500 AND 473599
         |GROUP BY 1, 2
         |ORDER BY 1, 2""".stripMargin,

@@ -1,14 +1,15 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.hb
 import graft.sources.{HFile, HFileDir, HFileManifest, HFileReader}
 
-/** One row per cell read back from an HFile by [[BulkLoad.readHFiles]].
-  * `tags`/`mvcc` are empty/0 for files written without the tags layout;
-  * cluster-written files carry them through so rewrites (compaction)
-  * can preserve cell TTL tags and sequence ids.
+/** One row per cell, in the column order of [[BulkLoad.readHFiles]] and
+  * [[BulkLoad.multiGet]] (so the two union). `tags`/`mvcc` are empty/0
+  * for files written without the tags layout; cluster-written files
+  * carry them through so rewrites (compaction) can preserve cell TTL
+  * tags and sequence ids.
   */
 case class HFileCellRow(file: String, bucket: Int, rowkey: Array[Byte],
                         family: String, qualifier: String, ts: Long,
@@ -39,7 +40,7 @@ object Salt {
       hb.encode(epochSec.cast("int")))
 }
 
-/** DataFrame → HFile-shaped bulk output.
+/** DataFrame → HFile v3 bulk output.
   *
   * Spark-first replacement for the reference's pipeline
   * (TsdbBulkload.java:81-155 + HadoopOutputFormat2.java:88-100):
@@ -51,11 +52,10 @@ object Salt {
   * exactly the invariant HBase bulk import (LoadIncrementalHFiles) needs.
   * No global single-point sort; parallelism scales with data size.
   *
-  * Two physical formats share that layout — `bucket=NNN/` directories
-  * of files sorted by (rowkey, family, qualifier): [[write]] emits
-  * parquet, and [[writeHFiles]] emits real HFile v3 binaries without
-  * hbase jars, through [[graft.sources.HFileDir]] (the directory layout
-  * the `graft-hfile` source reads too).
+  * [[writeHFiles]] emits that layout — `bucket=NNN/` directories of
+  * files sorted by (rowkey, family, qualifier) — as real HFile v3
+  * binaries without hbase jars, through [[graft.sources.HFileDir]]; the
+  * `graft-hfile` source ([[readHFiles]]) reads it back.
   */
 object BulkLoad {
 
@@ -83,13 +83,6 @@ object BulkLoad {
       .sortWithinPartitions(col("bucket"), col("salted_key"), col("family"),
         col("qualifier"))
   }
-
-  /** Write the prepared stream as per-bucket sorted runs. */
-  def write(prepared: DataFrame, path: String): Unit =
-    prepared.write
-      .partitionBy("bucket")
-      .mode("overwrite")
-      .parquet(path)
 
   /** Writes the prepared cell stream as real HFile v3 binaries — the
     * reference's actual output format (HadoopOutputFormat2.java:85-100),
@@ -183,37 +176,27 @@ object BulkLoad {
     } finally HFileDir.clearTemp(path, hconf)
   }
 
-  /** Distributed scan of a [[writeHFiles]] directory back into a cell
-    * DataFrame. One executor thread streams one file block-at-a-time
-    * (O(block) memory) with every structural check from
-    * [[graft.sources.HFileReader]] active, so a scan doubles as an
-    * integrity audit of the bulk output.
+  /** A [[writeHFiles]] directory's cells in [[HFileCellRow]]'s column
+    * order: a `graft-hfile` load with its `file`/`tags`/`mvcc` metadata
+    * columns, one task per file. A read of the rows runs every
+    * structural check; COUNT(*) and MIN/MAX(rowkey) answer from trailers.
+    * `path` may hold a run glob (`sink/epoch=*`, an `HFileDir.runsGlob`):
+    * all of a sink's runs are then ONE constant-size scan, and `file`
+    * names each cell's run.
     */
-  def readHFiles(spark: SparkSession, path: String): DataFrame =
-    readHFiles(spark, path, HFileDir.Glob)
-
-  /** [[readHFiles]] with an explicit file glob under `path` — e.g. a
-    * `HFileDir.runsGlob`, to scan every micro-batch run a
-    * streaming sink accumulated as ONE constant-size plan (the run a
-    * cell came from is recoverable from the `file` column), instead of
-    * an N-way union whose analysis cost grows with the epoch count.
-    */
-  def readHFiles(spark: SparkSession, path: String, glob: String): DataFrame = {
-    import spark.implicits._
-    val confMap = HFileDir.confMap(spark)
-    perFile(spark, filesOf(spark, path, glob).paths).flatMap { f =>
-      val bucket = graft.sources.HFileSource.bucketOf(f)
-      HFileReader.scan(HFileDir.open(f, HFileDir.confOf(confMap)))
-        .map(cellRow(f, bucket, _))
-    }.toDF()
+  def readHFiles(spark: SparkSession, path: String): DataFrame = {
+    filesOf(spark, path)
+    spark.read.format("graft-hfile").load(path)
+      .select(CellColumns.head, CellColumns.tail.toIndexedSeq: _*)
   }
 
-  /** `path`'s HFiles under `glob`; every verb but [[dirHasTagsOrMvcc]]
-    * refuses a directory without any.
+  private val CellColumns = Encoders.product[HFileCellRow].schema.fieldNames
+
+  /** `path`'s HFiles; every verb but [[dirHasTagsOrMvcc]] refuses a
+    * directory without any.
     */
-  private def filesOf(spark: SparkSession, path: String,
-                      glob: String = HFileDir.Glob): HFileDir.Listing = {
-    val dir = HFileDir.list(path, spark.sparkContext.hadoopConfiguration, glob)
+  private def filesOf(spark: SparkSession, path: String): HFileDir.Listing = {
+    val dir = HFileDir.list(path, spark.sparkContext.hadoopConfiguration)
     require(dir.files.nonEmpty, s"no HFiles found under $path")
     dir
   }
@@ -230,18 +213,17 @@ object BulkLoad {
       new String(c.qualifier, "UTF-8"), c.ts, c.value, c.keyType.toInt,
       c.tags, c.mvcc)
 
-  /** Whether ANY file under `path`/`glob` stores the tags+mvcc cell
-    * layout — the bit a compaction needs to decide whether its rewrite
-    * must preserve them. One file-info short read per file through a
-    * bounded pool (file-count scale, no data reads), the same pattern
-    * as the manifest fallback.
+  /** Whether ANY file under `path` (a dir or a run glob) stores the
+    * tags+mvcc cell layout — the bit a compaction needs to decide whether
+    * its rewrite must preserve them. One file-info short read per file
+    * through a bounded pool (file-count scale, no data reads), the same
+    * pattern as the manifest fallback.
     */
-  def dirHasTagsOrMvcc(spark: SparkSession, path: String,
-                       glob: String = HFileDir.Glob): Boolean = {
+  def dirHasTagsOrMvcc(spark: SparkSession, path: String): Boolean = {
     val hconf = spark.sparkContext.hadoopConfiguration
     val found = new java.util.concurrent.atomic.AtomicBoolean(false)
     // probes still queued after a hit return without reading
-    HFileDir.pooled(HFileDir.list(path, hconf, glob).paths) { f =>
+    HFileDir.pooled(HFileDir.list(path, hconf).paths) { f =>
       if (!found.get()) {
         val rr = HFileDir.open(f, hconf)
         try {
@@ -263,7 +245,7 @@ object BulkLoad {
     * probes its whole sorted key batch through the bloom and the
     * multi-level index ([[HFileReader.multiGet]]) — a handful of short
     * reads per key, never a file scan. Keys and files both scale
-    * horizontally; result schema matches [[readHFiles]].
+    * horizontally; result columns match [[readHFiles]].
     */
   def multiGet(spark: SparkSession, path: String, keys: DataFrame,
                keyCol: String = "rowkey"): DataFrame = {
@@ -454,12 +436,12 @@ object BulkLoad {
       .toDF("file", "ok", "n_cells", "error")
   }
 
-  /** Per-file stats of a [[writeHFiles]] directory read straight from
-    * the trailers and key ranges (bounded-pool short reads — no data
-    * block IO at any directory size): same shape as [[manifest]], so
-    * [[regionPlan]] consumes either. The file-layout half of the
-    * reference's pre-split/merge admin ops (HBaseManager.java) over real
-    * HFile output.
+  /** Per-file stats of a [[writeHFiles]] directory — the HFile
+    * info-block view: (bucket, file, n_cells, min/max key), read from
+    * the `_manifest` sidecar or straight from the trailers and key
+    * ranges (bounded-pool short reads — no data block IO at any
+    * directory size). Input to [[regionPlan]]: the file-layout half of
+    * the reference's pre-split/merge admin ops (HBaseManager.java).
     */
   def hfileManifest(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
@@ -473,19 +455,7 @@ object BulkLoad {
     }.toDF("bucket", "file", "n_cells", "min_key_hex", "max_key_hex")
   }
 
-  /** Per-file stats of a written bulk output — the HFile info-block
-    * analogue: (bucket, file, n_cells, min/max key). Input to
-    * [[regionPlan]].
-    */
-  def manifest(spark: org.apache.spark.sql.SparkSession,
-               path: String): DataFrame =
-    spark.read.parquet(path)
-      .groupBy(col("bucket"), input_file_name().as("file"))
-      .agg(count(lit(1)).as("n_cells"),
-        min(hex(col("salted_key"))).as("min_key_hex"),
-        max(hex(col("salted_key"))).as("max_key_hex"))
-
-  /** Greedy region assignment over the manifest: pack files (already
+  /** Greedy region assignment over [[hfileManifest]]: pack files (already
     * sorted, non-overlapping within a bucket) into regions of
     * ~`targetCells` each — the reference's pre-split-table sizing and
     * merge-small-regions admin ops (HBaseManager.java) re-expressed as

@@ -251,8 +251,9 @@ object Compaction {
     * [[graft.streaming.Streams.bulkLoadStream]] sink accumulates: N
     * micro-batches leave N overlapping runs that every reader must
     * merge; this folds them into ONE set of non-overlapping sorted runs
-    * per bucket under `outDir` (readable by `graft-hfile` / readHFiles,
-    * `_manifest` included). The input runs are left in place; the sink
+    * per bucket under `outDir` (`_manifest` included). Every selected
+    * run is read through ONE [[BulkLoad.readHFiles]] scan of a run glob
+    * ([[HFileDir.runsGlob]]). The input runs are left in place; the sink
     * publishes `outDir` ([[HFileDir.publishFold]]) before it deletes them.
     *
     * Epoch-aware precedence, the HBase sequence-id analogue: when two
@@ -298,7 +299,8 @@ object Compaction {
         s"selected epochs ${ids.filterNot(liveIds.contains).mkString(",")} " +
           s"missing under $dir")
     }
-    // ONE glob scan; the epoch a cell came from is recovered from the
+    // ONE `graft-hfile` scan of a run glob in the load path, one file
+    // per partition; the epoch a cell came from is recovered from the
     // `file` path — the plan stays constant-size however many
     // micro-batch runs accumulated (an N-way unionByName here made
     // analysis/optimization cost grow linearly with N). When the fold
@@ -307,8 +309,8 @@ object Compaction {
     // live run each round, or total read volume over a stream's life
     // becomes O(N²/maxEpochs) and undoes the O(N log N) economics
     // tiered mode exists for (ADVICE r8).
-    val runsGlob = HFileDir.runsGlob(epochs.map(_ => liveIds))
-    val cells = BulkLoad.readHFiles(spark, dir, runsGlob)
+    val runs = s"$dir/${HFileDir.runsGlob(epochs.map(_ => liveIds))}"
+    val cells = BulkLoad.readHFiles(spark, runs)
       .withColumn("_epoch", HFileDir.runIdOf(col("file")))
       .drop("file")
     val latest = cells
@@ -326,7 +328,7 @@ object Compaction {
         col("key_type"), col("w.value").as("value"), col("w.tags").as("tags"),
         col("w.mvcc").as("mvcc"), col("bucket"))
     rewrite(latest, outDir,
-      carryTags = BulkLoad.dirHasTagsOrMvcc(spark, dir, runsGlob),
+      carryTags = BulkLoad.dirHasTagsOrMvcc(spark, runs),
       collectMarkers, versions, numPartitions, blockSize, compression,
       encoding, familyTtlMs, nowMs)
   }

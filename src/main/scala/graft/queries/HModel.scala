@@ -506,7 +506,7 @@ object HModel {
     * the events table.
     */
   def zorderRangeScan(events: DataFrame, sfDir: String,
-                      userLo: Long = 40L, userHi: Long = 80L,
+                      userLo: Long = 4L, userHi: Long = 80L,
                       hourLo: Long = 473500L, hourHi: Long = 473599L,
                       maxRanges: Int = 32): DataFrame = {
     import graft.functions.{BytesCodec, ZOrderKernel}

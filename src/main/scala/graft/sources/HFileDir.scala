@@ -41,7 +41,7 @@ private[graft] object HFileDir {
 
   // data files under a directory: `bucket=*` (not `*/`) so leftover
   // `_inprogress` attempt files are never read back as data
-  val Glob = "bucket=*/*.hfile"
+  private val Glob = "bucket=*/*.hfile"
 
   /** The session's Hadoop settings as a plain map, captured by task
     * closures — executors must see credentials / fs.defaultFS etc.; a
@@ -164,12 +164,15 @@ private[graft] object HFileDir {
     }
   }
 
-  def list(path: String, conf: Configuration, glob: String = Glob): Listing = {
+  /** `path`'s data files. `path` may itself hold a glob above the
+    * bucket dirs (a [[runsGlob]]): it expands with the file glob.
+    */
+  def list(path: String, conf: Configuration): Listing = {
     val root = new Path(path)
     val fs = root.getFileSystem(conf)
     // globStatus returns null when the path is absent
     new Listing(root, fs, conf,
-      Option(fs.globStatus(new Path(root, glob))).getOrElse(Array.empty).toSeq)
+      Option(fs.globStatus(new Path(root, Glob))).getOrElse(Array.empty).toSeq)
   }
 
   /** Job start of a write; an append keeps the files already there. */
@@ -221,12 +224,13 @@ private[graft] object HFileDir {
   def runPath(path: String, id: Long): String =
     new Path(new Path(path), s"$RunPrefix$id").toString
 
-  /** HFile glob, relative to the sink dir, over the runs `ids` (every
-    * run when None) — one constant-size scan, however many runs.
+  /** Run-dir glob, relative to the sink dir, over the runs `ids` (every
+    * run when None): `sink/<glob>` loads as one constant-size scan,
+    * however many runs.
     */
   def runsGlob(ids: Option[Seq[Long]]): String = ids match {
-    case None    => s"$RunPrefix*/$Glob"
-    case Some(s) => s"$RunPrefix{${s.sorted.mkString(",")}}/$Glob"
+    case None    => s"$RunPrefix*"
+    case Some(s) => s"$RunPrefix{${s.sorted.mkString(",")}}"
   }
 
   /** The id of the run a [[runsGlob]]-scanned `file` path lives in. */

@@ -23,8 +23,8 @@ import org.apache.spark.unsafe.types.UTF8String
 /** DataSource V2 batch-read format for [[graft.operators.BulkLoad.writeHFiles]]
   * output: `spark.read.format("graft-hfile").load(dir)`.
   *
-  * The RDD-free, planner-integrated twin of `BulkLoad.readHFiles`, built
-  * the way a 100 TB scan wants to be planned:
+  * The one row reader of a bulk-load directory (`BulkLoad.readHFiles`
+  * is a load of it), built the way a 100 TB scan wants to be planned:
   *
   *  - '''one InputPartition per HFile''' — a bulk-load directory holds one
   *    sorted, non-overlapping run per file, so file = natural split; each
@@ -45,11 +45,13 @@ import org.apache.spark.unsafe.types.UTF8String
   *    the driver reads those blocks, at physical planning, and the
   *    query runs no Spark job.
   *
-  * The two reads are NOT interchangeable: the data columns are
-  * [[graft.operators.HFileCellRow]]'s without `tags` and `mvcc` (this
-  * source does not read them), and `file` is a metadata column that is
-  * only there when selected. `BulkLoad.readHFiles` without those three
-  * columns is this source's default scan.
+  * The data columns are [[HFileSource.Schema]]; `file`, `tags` and
+  * `mvcc` are metadata columns, there only when selected.
+  * `BulkLoad.readHFiles` selects all three, in
+  * [[graft.operators.HFileCellRow]]'s column order. The load path may
+  * hold a Hadoop glob above the `bucket=N` dirs (`sink/epoch={3,4}`):
+  * the listing expands it, and a glob matching nothing refuses like a
+  * missing path.
   */
 class HFileSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "graft-hfile"
@@ -76,14 +78,18 @@ object HFileSource {
     StructField("value", BinaryType, nullable = false),
     StructField("key_type", IntegerType, nullable = false)))
 
-  /** `file` is a METADATA column (select it explicitly, like parquet's
-    * `_metadata`): readable provenance that writes never demand.
+  /** METADATA columns (select them explicitly, like parquet's
+    * `_metadata`): provenance and cell extras that writes never demand.
+    * `tags`/`mvcc` are empty/0 in files written without the tags layout.
     */
-  object FileMetadataColumn extends MetadataColumn {
-    override def name(): String = "file"
-    override def dataType(): DataType = StringType
+  val MetadataColumns: Array[MetadataColumn] = Array(
+    MetaColumn("file", StringType, "HFile path this cell was read from"),
+    MetaColumn("tags", BinaryType, "the cell's tags (TTL tags among them)"),
+    MetaColumn("mvcc", LongType, "the cell's sequence id"))
+
+  private case class MetaColumn(name: String, dataType: DataType,
+                                override val comment: String) extends MetadataColumn {
     override def isNullable: Boolean = false
-    override def comment(): String = "HFile path this cell was read from"
   }
 
   private[sources] def pathOf(options: CaseInsensitiveStringMap): String = {
@@ -236,7 +242,7 @@ class HFileTable(path: String) extends Table with SupportsRead with SupportsWrit
   override def name(): String = s"graft-hfile:$path"
   override def schema(): StructType = HFileSource.Schema
   override def metadataColumns(): Array[MetadataColumn] =
-    Array(HFileSource.FileMetadataColumn)
+    HFileSource.MetadataColumns
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE,
       TableCapability.TRUNCATE, TableCapability.MICRO_BATCH_READ)
@@ -394,9 +400,16 @@ class HFileScan(path: String, required: StructType, pushed: Array[Filter],
 
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
+  /** Spark builds a streaming scan with no pushdown: a tail reads every
+    * column and filters above the scan. Should a later Spark push into
+    * it, fail rather than drop what the builder took.
+    */
   override def toMicroBatchStream(
-      checkpointLocation: String): rstreaming.MicroBatchStream =
-    new HFileMicroBatchStream(path, required, pushed, confMap)
+      checkpointLocation: String): rstreaming.MicroBatchStream = {
+    require(pushed.isEmpty && required == HFileSource.Schema,
+      s"a graft-hfile tail takes no pushdown: [${pushed.mkString(", ")}] $required")
+    new HFileMicroBatchStream(path, confMap)
+  }
   override def description(): String =
     s"graft-hfile $path, pruned by [${pushed.mkString(", ")}]"
 
@@ -555,13 +568,11 @@ object HFileEpochOffset {
   * HBase replication has with WAL cleanup.
   *
   * Plan shape: offsets and run listings are driver-side (O(runs));
-  * each micro-batch plans one InputPartition per new HFile of a bucket
-  * the pushed filters admit, read by the same readers as the batch scan,
-  * which evaluate every pushed filter exactly.
+  * each micro-batch plans one InputPartition per new HFile, read by the
+  * same readers as the batch scan. Spark pushes nothing into a tail
+  * ([[HFileScan.toMicroBatchStream]]), so a query's filters run above it.
   */
-class HFileMicroBatchStream(path: String, required: StructType,
-                            pushed: Array[Filter],
-                            confMap: Map[String, String])
+class HFileMicroBatchStream(path: String, confMap: Map[String, String])
     extends rstreaming.MicroBatchStream {
   import HFileSource._
 
@@ -625,12 +636,11 @@ class HFileMicroBatchStream(path: String, required: StructType,
     live.filter(r => r.deliverable && r.id > s && r.id <= e).flatMap { r =>
       HFileDir.list(r.path.toString, conf).paths
         .map(p => HFileInputPartition(p, bucketOf(p)))
-        .filter(p => PushedFilters.forBucket(pushed, p.bucket) != Left(false))
     }.toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new HFileReaderFactory(required, confMap, pushed)
+    new HFileReaderFactory(Schema, confMap, Array.empty)
 }
 
 // ---- DSv2 write path ------------------------------------------------------
@@ -826,6 +836,8 @@ class HFilePartitionReader(p: HFileInputPartition, required: StructType,
     case "ts"        => (c: HCell) => c.ts
     case "value"     => (c: HCell) => c.value
     case "key_type"  => (c: HCell) => c.keyType.toInt
+    case "tags"      => (c: HCell) => c.tags
+    case "mvcc"      => (c: HCell) => c.mvcc
     case other => throw new IllegalArgumentException(s"unknown column $other")
   }
 

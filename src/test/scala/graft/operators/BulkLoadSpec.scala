@@ -26,58 +26,33 @@ class BulkLoadSpec extends SparkSpec {
     val prepared = BulkLoad.prepare(cellStream, buckets = 8, numPartitions = 8,
       saltBase = Some(hb.encode(col("user_id"))),
       epochSec = Some(col("hour_sec")))
-    BulkLoad.write(prepared, out)
+    BulkLoad.writeHFiles(prepared, out, tsCol = Some("hour_sec"))
 
     // layout: bucket=N directories
-    val bucketDirs = new java.io.File(out).listFiles()
-      .filter(_.getName.startsWith("bucket=")).sortBy(_.getName)
-    assert(bucketDirs.nonEmpty)
+    assert(new java.io.File(out).listFiles()
+      .exists(_.getName.startsWith("bucket=")))
 
-    // within every physical file the salted keys must be sorted (the
-    // HFile append invariant), and whole-file key ranges within a bucket
-    // must not overlap (non-overlapping sorted runs)
-    import org.apache.spark.sql.Row
-    bucketDirs.foreach { dir =>
-      val files = dir.listFiles().filter(_.getName.endsWith(".parquet"))
-      val ranges = files.map { f =>
-        val keys = spark.read.parquet(f.getAbsolutePath)
-          .select(hex(col("salted_key"))).as[String].collect()
-        assert(keys.toSeq == keys.toSeq.sorted, s"unsorted run in $f")
-        (keys.head, keys.last)
-      }.sortBy(_._1)
-      ranges.sliding(2).foreach {
-        case Array((_, aHi), (bLo, _)) => assert(aHi <= bLo, "overlapping runs")
-        case _ =>
+    // whole-file key ranges within a bucket must not overlap
+    // (non-overlapping sorted runs)
+    BulkLoad.hfileManifest(spark, out)
+      .select("bucket", "min_key_hex", "max_key_hex").as[(Int, String, String)]
+      .collect().groupBy(_._1).foreach { case (b, files) =>
+        files.map(f => (f._2, f._3)).sortBy(_._1).sliding(2).foreach {
+          case Array((_, aHi), (bLo, _)) =>
+            assert(aHi < bLo, s"overlapping runs in bucket $b")
+          case _ =>
+        }
       }
+
+    // a full read checks that every file's keys are sorted (the reader
+    // enforces cell order on every block); every input cell survives in
+    // the bucket dir its salt prefix names
+    val readBack = BulkLoad.readHFiles(spark, out)
+      .select("bucket", "rowkey").as[(Int, Array[Byte])].collect()
+    assert(readBack.length == cellStream.count())
+    readBack.foreach { case (b, k) =>
+      assert(((k(0) & 0xff) << 8 | (k(1) & 0xff)) == b)
     }
-
-    // every input cell survives with its bucket = reference salt
-    val readBack = spark.read.parquet(out)
-    assert(readBack.count() == cellStream.count())
-  }
-
-  test("manifest + region plan: full coverage, bounded regions, ordered keys") {
-    val out = Files.createTempDirectory("bulkload_plan").toString
-    val prepared = BulkLoad.prepare(cellStream, buckets = 8, numPartitions = 8,
-      saltBase = Some(hb.encode(col("user_id"))),
-      epochSec = Some(col("hour_sec")))
-    BulkLoad.write(prepared, out)
-    val m = BulkLoad.manifest(spark, out)
-    val total = cellStream.count()
-    assert(m.agg(sum(col("n_cells"))).head().getLong(0) == total)
-
-    val target = total / 4
-    val plan = BulkLoad.regionPlan(m, target).collect()
-    assert(plan.map(_.getAs[Long]("n_cells")).sum == total)
-    // greedy packing: every region except possibly the last is filled
-    // to at least the target minus one file's worth
-    val maxFile = m.agg(max(col("n_cells"))).head().getLong(0)
-    plan.dropRight(1).foreach { r =>
-      assert(r.getAs[Long]("n_cells") >= target - maxFile)
-    }
-    // region ids are contiguous from 0
-    assert(plan.map(_.getAs[Long]("region_id")).toSeq ==
-      (0L until plan.length).toSeq)
   }
 
   test("multiGet: keyed lookup returns exactly the requested rows' cells") {
@@ -140,9 +115,18 @@ class BulkLoadSpec extends SparkSpec {
       assert(scanCounts(r.getAs[String]("file")) == r.getAs[Long]("n_cells"))
       assert(r.getAs[String]("min_key_hex") <= r.getAs[String]("max_key_hex"))
     }
-    // and the region planner consumes it unchanged
-    val plan = BulkLoad.regionPlan(m, targetCells = total / 3).collect()
+    // and the region planner packs it: full coverage, greedy packing
+    // (every region but the last filled to at least the target minus one
+    // file's worth), region ids contiguous from 0
+    val target = total / 3
+    val plan = BulkLoad.regionPlan(m, targetCells = target).collect()
     assert(plan.map(_.getAs[Long]("n_cells")).sum == total)
+    val maxFile = m.agg(max(col("n_cells"))).head().getLong(0)
+    plan.dropRight(1).foreach { r =>
+      assert(r.getAs[Long]("n_cells") >= target - maxFile)
+    }
+    assert(plan.map(_.getAs[Long]("region_id")).toSeq ==
+      (0L until plan.length).toSeq)
   }
 
   test("backup validates+copies; repair quarantines exactly the corrupt file") {
@@ -179,9 +163,9 @@ class BulkLoadSpec extends SparkSpec {
     assert(rep.filter(!col("ok")).head().getString(0)
       .endsWith(victim.getName))
     assert(new java.io.File(quarantine).listFiles.nonEmpty)
-    // the directory scans clean again (readHFiles re-validates every
+    // the directory scans clean again (a full read re-validates every
     // block), minus the quarantined file's cells
-    val left = BulkLoad.readHFiles(spark, dst).count()
+    val left = BulkLoad.readHFiles(spark, dst).collect().length
     assert(left < total && left > 0)
   }
 
@@ -214,7 +198,7 @@ class BulkLoadSpec extends SparkSpec {
     raf.seek(60); val b = raf.read(); raf.seek(60); raf.write(b ^ 0x5a)
     raf.close()
     intercept[Exception] { // the corruption is real: the dir no longer scans
-      BulkLoad.readHFiles(spark, dir).count()
+      BulkLoad.readHFiles(spark, dir).collect()
     }
 
     // restore validates every backup file and overwrites the bad original

@@ -14,8 +14,8 @@ class ZorderScanSpec extends SparkSpec {
 
   test("zorderRangeScan equals a direct box rollup over events") {
     val events = sf("events")
-    // sf0.001 only has users 0..14 — pass a box that hits them (the
-    // sf0.01 defaults are exercised by the driver's oracle run)
+    // sf0.001 only has users 0..14 — a box inside them (the defaults'
+    // box, users 4..80, is the oracle row at every scale)
     val got = HModel.zorderRangeScan(events, sfDir,
       userLo = 3L, userHi = 10L).collect()
     val want = events

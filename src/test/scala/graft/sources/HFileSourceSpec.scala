@@ -10,12 +10,13 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources.{EqualTo, GreaterThan, In}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-/** `spark.read.format("graft-hfile")`: schema, parity with readHFiles,
-  * column pruning, and bucket/rowkey file pruning.
+/** `spark.read.format("graft-hfile")`: schema, parity with a Spark-free
+  * [[HFileReader.scan]] of every file, column pruning, bucket/rowkey file
+  * pruning, and glob load paths.
   */
 class HFileSourceSpec extends SparkSpec {
   import spark.implicits._
-  import HFileSourceSpec.{localScans, plannedFiles}
+  import HFileSourceSpec.{localScans, plannedFiles, referenceCells}
 
   // one shared bulk-load directory: 4 buckets, small blocks
   private lazy val out: String = {
@@ -54,14 +55,14 @@ class HFileSourceSpec extends SparkSpec {
   private def partitionsFor(filters: org.apache.spark.sql.sources.Filter*) =
     partitionsIn(out, filters: _*)
 
-  test("reads back exactly what readHFiles reads") {
+  test("reads back exactly what HFileReader.scan reads") {
     val v2 = spark.read.format("graft-hfile").load(out)
     assert(v2.schema == HFileSource.Schema)
-    val a = v2.select(col("bucket"), hex(col("rowkey")).as("k"),
-      col("family"), col("qualifier"), col("ts"), hex(col("value")).as("v"))
-    val b = BulkLoad.readHFiles(spark, out)
-      .select(col("bucket"), hex(col("rowkey")).as("k"),
-        col("family"), col("qualifier"), col("ts"), hex(col("value")).as("v"))
+    def canon(df: org.apache.spark.sql.DataFrame) = df.select(col("bucket"),
+      hex(col("rowkey")).as("k"), col("family"), col("qualifier"), col("ts"),
+      hex(col("value")).as("v"), col("key_type"))
+    val a = canon(v2)
+    val b = canon(referenceCells(spark, out))
     assert(a.count() == b.count() && a.except(b).isEmpty && b.except(a).isEmpty)
   }
 
@@ -92,7 +93,7 @@ class HFileSourceSpec extends SparkSpec {
     val pruned = spark.read.format("graft-hfile").load(out)
       .filter($"bucket" === 2)
     assert(pruned.count() ==
-      BulkLoad.readHFiles(spark, out).filter($"bucket" === 2).count())
+      referenceCells(spark, out).filter($"bucket" === 2).count())
     assert(pruned.count() > 0)
   }
 
@@ -351,7 +352,7 @@ class HFileSourceSpec extends SparkSpec {
     spark.read.format("graft-hfile").load(out)
       .createOrReplaceTempView("hfile_cells")
     val n = spark.sql("SELECT count(*) FROM hfile_cells").head().getLong(0)
-    assert(n == BulkLoad.readHFiles(spark, out).count())
+    assert(n == referenceCells(spark, out).count())
     val rows = spark.sql(
       "SELECT qualifier, count(*) AS c FROM hfile_cells GROUP BY 1")
       .collect()
@@ -487,14 +488,14 @@ class HFileSourceSpec extends SparkSpec {
   test("count(*) answers from trailers without scanning a data block") {
     val df = spark.read.format("graft-hfile").load(out)
     val full = df.count()
-    assert(full == BulkLoad.readHFiles(spark, out).count())
+    assert(full == referenceCells(spark, out).count())
     // the plan is a local (driver) scan, not a file-reading batch scan
     val plan = df.groupBy().count().queryExecution.executedPlan.toString
     assert(plan.contains("count-from-trailers") || !plan.contains("BatchScan"),
       plan)
     // bucket filters are consumed exactly and still push the count
     val b2 = df.filter($"bucket" === 2).count()
-    assert(b2 == BulkLoad.readHFiles(spark, out)
+    assert(b2 == referenceCells(spark, out)
       .filter($"bucket" === 2).count())
     // rowkey filters keep the row scan (no bogus trailer count)
     val someKey = spark.read.format("graft-hfile").load(out)
@@ -504,7 +505,7 @@ class HFileSourceSpec extends SparkSpec {
 
   test("min/max(rowkey) and per-bucket counts answer from key ranges") {
     val df = spark.read.format("graft-hfile").load(out)
-    val full = BulkLoad.readHFiles(spark, out)
+    val full = referenceCells(spark, out)
     // global min/max + count in one pushed aggregate
     val g = df.agg(min($"rowkey"), max($"rowkey"), count(lit(1))).head()
     val e = full.agg(min($"rowkey"), max($"rowkey"), count(lit(1))).head()
@@ -549,10 +550,10 @@ class HFileSourceSpec extends SparkSpec {
     df.queryExecution.executedPlan.collect { case s: BatchScanExec => s }.nonEmpty
 
   test("pushed filters are exact on the local and the distributed path: " +
-      "boundary keys, an Or of ranges and In(bucket) match readHFiles " +
+      "boundary keys, an Or of ranges and In(bucket) match HFileReader.scan " +
       "plus the same Spark-side filter") {
     val v2 = spark.read.format("graft-hfile").load(out)
-    val raw = BulkLoad.readHFiles(spark, out).cache()
+    val raw = referenceCells(spark, out).cache()
     def cells(df: org.apache.spark.sql.DataFrame): Seq[String] =
       df.select(col("bucket"), hex(col("rowkey")), col("family"),
         col("qualifier"), col("ts"), hex(col("value")))
@@ -623,6 +624,55 @@ class HFileSourceSpec extends SparkSpec {
     assert(multiGet("k0005", "k0005x") == Seq("k0005", "k0005x"))
   }
 
+  test("a glob load path reads exactly the runs it matches, through one " +
+      "scan with no exchange") {
+    implicit val sqlCtx = spark.sqlContext
+    val dir = Files.createTempDirectory("hfile_glob").toString
+    val input = org.apache.spark.sql.execution.streaming.runtime
+      .MemoryStream[Long]
+    val q = graft.streaming.Streams.bulkLoadStream(
+        input.toDF().select(hb.encode(col("value")).as("rowkey"),
+          lit("f").as("family"), lit("q").as("qualifier"),
+          hb.encode(col("value")).as("value")),
+        dir, buckets = 2, numPartitions = 2)
+      .option("checkpointLocation",
+        Files.createTempDirectory("hfile_glob_ckpt").toString)
+      .start()
+    try (0 until 3).foreach { i =>
+      input.addData((i * 10L) until (i * 10L + 10))
+      q.processAllAvailable()
+    } finally q.stop()
+    val ids = HFileDir.runs(dir, spark.sparkContext.hadoopConfiguration)
+      .map(_.id)
+    assert(ids.size == 3)
+    val picked = Seq(ids(0), ids(2))
+    val glob = s"$dir/${HFileDir.runsGlob(Some(picked))}"
+    val got = BulkLoad.readHFiles(spark, glob)
+    // exactly the picked runs' cells, as a Spark-free scan reads them
+    def canon(df: org.apache.spark.sql.DataFrame) = df.select(col("bucket"),
+      hex(col("rowkey")).as("k"), col("ts"), hex(col("value")).as("v"))
+    val want = picked.map(id => referenceCells(spark, HFileDir.runPath(dir, id)))
+      .reduce(_ union _)
+    assert(got.count() == 20)
+    assert(canon(got).except(canon(want)).isEmpty &&
+      canon(want).except(canon(got)).isEmpty)
+    assert(got.select(HFileDir.runIdOf(col("file"))).distinct().as[Long]
+      .collect().sorted.toSeq == picked)
+    // a glob that matches no run refuses, like a missing path
+    intercept[IllegalArgumentException] {
+      BulkLoad.readHFiles(spark, s"$dir/${HFileDir.runsGlob(Some(Seq(ids.max + 1)))}")
+    }
+    intercept[IllegalArgumentException] {
+      BulkLoad.readHFiles(spark, s"$dir/never_created")
+    }
+    // one scan, one task per file, no file-name shuffle
+    val plan = got.queryExecution.executedPlan
+    assert(plan.collect { case s: BatchScanExec => s }.size == 1, plan.toString)
+    assert(plan.collect {
+      case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
+    }.isEmpty, plan.toString)
+  }
+
   test("driver-local reads launch no job; wide ranges and multiGet keep " +
       "theirs") {
     val v2 = spark.read.format("graft-hfile").load(out)
@@ -664,6 +714,23 @@ object HFileSourceSpec {
       case q: QueryStageExec        => localScans(q.plan)
       case a: AdaptiveSparkPlanExec => localScans(a.executedPlan)
     }.flatten
+
+  /** Every cell under `dir` (bucket, rowkey, family, qualifier, ts, value,
+    * key_type), read by [[HFileReader.scan]] on the driver, outside any
+    * Spark read: the reference a `graft-hfile` read is checked against.
+    */
+  def referenceCells(spark: org.apache.spark.sql.SparkSession,
+                     dir: String): DataFrame = {
+    import spark.implicits._
+    val conf = spark.sparkContext.hadoopConfiguration
+    HFileDir.list(dir, conf).paths.flatMap { f =>
+      val b = HFileSource.bucketOf(f)
+      HFileReader.scan(HFileDir.open(f, conf)).map(c =>
+        (b, c.rowkey, new String(c.family, "UTF-8"),
+          new String(c.qualifier, "UTF-8"), c.ts, c.value, c.keyType.toInt))
+        .toSeq
+    }.toDF("bucket", "rowkey", "family", "qualifier", "ts", "value", "key_type")
+  }
 
   /** Files the query's one planned `graft-hfile` scan reads. */
   def plannedFiles(df: DataFrame): Int = {

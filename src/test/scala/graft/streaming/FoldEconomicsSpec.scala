@@ -44,7 +44,7 @@ class FoldEconomicsSpec extends SparkSpec {
       .toSet + 1L
     Seq(s"$work/flat", s"$work/lsm").foreach { dir =>
       val seen = graft.operators.BulkLoad
-        .readHFiles(spark, dir, "epoch=*/bucket=*/*.hfile")
+        .readHFiles(spark, s"$dir/epoch=*")
         .select(graft.functions.hb.decode(
           expr("substring(rowkey, 3, 8)"), LongType).as("k"))
         .as[Long].collect().toSet
