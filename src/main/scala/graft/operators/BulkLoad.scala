@@ -54,8 +54,10 @@ object Salt {
   *
   * [[writeHFiles]] emits that layout — `bucket=NNN/` directories of
   * files sorted by (rowkey, family, qualifier) — as real HFile v3
-  * binaries without hbase jars, through [[graft.sources.HFileDir]]; the
-  * `graft-hfile` source ([[readHFiles]]) reads it back.
+  * binaries without hbase jars, through [[graft.sources.HFileDir]]. It is
+  * the one HFile writer: the G7 sink's runs, compaction and the query
+  * fixtures all write through it. The read-only `graft-hfile` source
+  * ([[readHFiles]]) reads it back.
   */
 object BulkLoad {
 
@@ -104,26 +106,29 @@ object BulkLoad {
     * rejected — collapse them first with [[Cells.latestVersion]] /
     * [[Cells.lastVersions]].
     *
-    * Output is task-committed: each task writes attempt-unique temp
-    * files under `_inprogress/` and renames them into place when the
-    * task ends, so a failed or speculative duplicate attempt
-    * never interleaves bytes into a final file (first finished rename
-    * wins; output is deterministic, so the winner's bytes equal the
-    * loser's). The driver clears `_inprogress/` after the job.
+    * `path` is replaced: an unknown `compression` or `encoding` fails on
+    * the driver before anything there is deleted, and then the old
+    * directory goes. Output is task-committed: each task writes
+    * attempt-unique temp files under `_inprogress/` and renames them
+    * into place when the task ends, so a failed or speculative duplicate
+    * attempt never interleaves bytes into a final file (first finished
+    * rename wins; output is deterministic, so the winner's bytes equal
+    * the loser's). A failing task aborts its writer, and the driver
+    * clears `_inprogress/` after the job; `_manifest` is written only
+    * when every task committed.
     */
   def writeHFiles(prepared: DataFrame, path: String,
                   tsCol: Option[String] = None,
                   typeCol: Option[String] = None,
                   blockSize: Int = HFile.DefaultBlockSize,
                   compression: String = "none",
-                  bloomChunkKeys: Int = HFile.DefaultBloomChunkKeys,
                   maxFileBytes: Long = HFile.DefaultMaxFileBytes,
                   encoding: String = "none",
                   tagsCol: Option[String] = None,
                   mvccCol: Option[String] = None): Unit = {
     val format = HFileDir.Format(blockSize,
       HFile.codecOf(compression), // fail fast, on the driver
-      bloomChunkKeys, maxFileBytes,
+      maxFileBytes,
       graft.sources.BlockEncoding.idOf(encoding),
       // tagsCol/mvccCol switch every file to the tags+mvcc cell layout
       // (the cluster's KEY_VALUE_VERSION=1 format) — what a compaction of
@@ -132,7 +137,7 @@ object BulkLoad {
       withTagsAndMvcc = tagsCol.isDefined || mvccCol.isDefined)
     val spark = prepared.sparkSession
     val hconf = spark.sparkContext.hadoopConfiguration
-    HFileDir.startWrite(path, hconf, overwrite = true)
+    HFileDir.startWrite(path, hconf)
     val confMap = HFileDir.confMap(spark)
 
     val ts = tsCol.map(col(_).cast("long")).getOrElse(lit(0L))
@@ -161,14 +166,16 @@ object BulkLoad {
       val entries = rows.mapPartitions { it: Iterator[org.apache.spark.sql.Row] =>
         val tc = org.apache.spark.TaskContext.get()
         val w = new HFileDir.TaskWriter(path, HFileDir.confOf(confMap),
-          format, "part-", tc.partitionId(), tc.taskAttemptId())
-        it.foreach { r =>
-          w.write(r.getInt(0), HFile.HCell(r.getAs[Array[Byte]](1),
-            r.getString(2).getBytes("UTF-8"), r.getString(3).getBytes("UTF-8"),
-            r.getLong(4), r.getAs[Array[Byte]](5), r.getInt(6).toByte,
-            r.getAs[Array[Byte]](7), r.getLong(8)))
-        }
-        w.commit().iterator
+          format, tc.partitionId(), tc.taskAttemptId())
+        try {
+          it.foreach { r =>
+            w.write(r.getInt(0), HFile.HCell(r.getAs[Array[Byte]](1),
+              r.getString(2).getBytes("UTF-8"), r.getString(3).getBytes("UTF-8"),
+              r.getLong(4), r.getAs[Array[Byte]](5), r.getInt(6).toByte,
+              r.getAs[Array[Byte]](7), r.getLong(8)))
+          }
+          w.commit().iterator
+        } catch { case t: Throwable => w.abort(); throw t }
       }
         // one row per FILE, not per cell — driver-scale at any data size
         .collect()

@@ -554,13 +554,14 @@ object HFile {
 /** Streaming single-file writer. Not thread-safe; call [[append]] in
   * strictly increasing cell order, then [[finish]]. Memory is O(block
   * size + one index entry per block).
-  */
-/** @param withTagsAndMvcc interop-test mode: serialize each cell's
-  *   `tags` (u16 length prefix) and `mvcc` (Hadoop vlong) and declare
-  *   them in the file info (`hfile.MAX_TAGS_LEN`, `KEY_VALUE_VERSION`,
-  *   `MAX_MEMSTORE_TS`) — the layout a region-server-written v3 file
-  *   has. The production bulk path never sets this; it exists so specs
-  *   can synthesize cluster-shaped files for [[HFileReader]].
+  *
+  * @param withTagsAndMvcc serialize each cell's `tags` (u16 length
+  *   prefix) and `mvcc` (Hadoop vlong) and declare them in the file info
+  *   (`hfile.MAX_TAGS_LEN`, `KEY_VALUE_VERSION`, `MAX_MEMSTORE_TS`) — the
+  *   layout a region-server-written v3 file has. `BulkLoad.writeHFiles`
+  *   sets it when given `tagsCol`/`mvccCol`, which `Compaction`'s rewrite
+  *   passes whenever its input carries tags or mvcc ids, so they survive
+  *   the rewrite; specs also use it to synthesize cluster-shaped files.
   */
 class HFileWriter(out: OutputStream,
                   blockSize: Int = HFile.DefaultBlockSize,

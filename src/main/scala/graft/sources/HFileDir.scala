@@ -175,27 +175,21 @@ private[graft] object HFileDir {
       Option(fs.globStatus(new Path(root, Glob))).getOrElse(Array.empty).toSeq)
   }
 
-  /** Job start of a write; an append keeps the files already there. */
-  def startWrite(path: String, conf: Configuration, overwrite: Boolean): Unit = {
+  /** Job start of a write: the directory is replaced, so a replayed
+    * write (the G7 sink re-running a batch) leaves no file of the last.
+    */
+  def startWrite(path: String, conf: Configuration): Unit = {
     val root = new Path(path)
     val fs = root.getFileSystem(conf)
-    if (overwrite && fs.exists(root)) fs.delete(root, true)
+    if (fs.exists(root)) fs.delete(root, true)
     fs.mkdirs(root)
   }
 
-  /** Job end of a write: the `_manifest` sidecar over the tasks' entries
-    * plus those of the sidecar already there (appended names never
-    * collide; a stale old sidecar makes the merged one fail
-    * [[HFileManifest.readValid]] — planning falls back, never wrong).
-    */
+  /** Job end of a write: the `_manifest` sidecar over the tasks' entries. */
   def commitWrite(path: String, conf: Configuration,
-                  fresh: Seq[HFileManifest.Entry]): Unit = {
+                  entries: Seq[HFileManifest.Entry]): Unit = {
     val root = new Path(path)
-    val fs = root.getFileSystem(conf)
-    val freshNames = fresh.map(_.file).toSet
-    val carried = HFileManifest.read(fs, root).getOrElse(Nil)
-      .filterNot(e => freshNames.contains(e.file))
-    HFileManifest.write(fs, root, carried ++ fresh)
+    HFileManifest.write(root.getFileSystem(conf), root, entries)
   }
 
   /** Clears task temp files after any write job, committed or failed. */
@@ -315,22 +309,23 @@ private[graft] object HFileDir {
   }
 
   /** How every file of one write is encoded. */
-  case class Format(blockSize: Int, codec: Int, bloomChunkKeys: Int,
-                    maxFileBytes: Long, encoding: Int,
-                    withTagsAndMvcc: Boolean = false)
+  case class Format(blockSize: Int, codec: Int, maxFileBytes: Long,
+                    encoding: Int, withTagsAndMvcc: Boolean = false)
 
   /** One task's sorted cell stream written as `bucket=N/` HFiles under
     * `root`: one [[HFileWriter]] at a time, rolling whenever the bucket
     * changes — the reference's roll-on-salt-prefix-change rule
     * (HadoopOutputFormat2.java:88-100) — and on `maxFileBytes` at a
-    * rowkey boundary. Files are named `<prefix>PPPPP-SSS.hfile`
+    * rowkey boundary. Files are named `part-PPPPP-SSS.hfile`
     * (partition, sequence) and written under `_inprogress/`; [[commit]]
     * renames them into place at task end, the first finished attempt
     * winning (output is deterministic, so a loser's bytes equal the
-    * winner's), and returns their [[HFileManifest.Entry]]s.
+    * winner's), and returns their [[HFileManifest.Entry]]s. A task that
+    * fails calls [[abort]], which closes the open file and deletes the
+    * attempt's temp files.
     */
   final class TaskWriter(root: String, conf: Configuration, format: Format,
-                         prefix: String, partitionId: Int, attemptId: Long) {
+                         partitionId: Int, attemptId: Long) {
     private val fs = new Path(root).getFileSystem(conf)
     private var bucket = Int.MinValue
     private var seq = 0
@@ -365,14 +360,13 @@ private[graft] object HFileDir {
 
     private def roll(b: Int): Unit = {
       finishCurrent()
-      val name = f"$prefix$partitionId%05d-$seq%03d.hfile"
+      val name = f"part-$partitionId%05d-$seq%03d.hfile"
       dest = new Path(root, s"bucket=$b/$name")
       tmp = new Path(root, s"_inprogress/attempt-$attemptId-$name")
       seq += 1
       out = fs.create(tmp, true)
       writer = new HFileWriter(out, format.blockSize, format.codec,
-        format.bloomChunkKeys, withTagsAndMvcc = format.withTagsAndMvcc,
-        encoding = format.encoding)
+        withTagsAndMvcc = format.withTagsAndMvcc, encoding = format.encoding)
       bucket = b
     }
 

@@ -5,8 +5,8 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 /** `_manifest` sidecar for a bulk-load directory: one line per HFile
   * with the stats every planner consumer needs — `(relative path,
   * bucket, bytes, entry_count, min rowkey, max rowkey)` — written once
-  * at job commit by [[graft.operators.BulkLoad.writeHFiles]] and the
-  * `graft-hfile` DSv2 sink, when the writer already knows all of it.
+  * at job commit by [[graft.operators.BulkLoad.writeHFiles]], when the
+  * writer already knows all of it.
   *
   * This is the parquet `_metadata` analogue for the scan side: without
   * it, file pruning / trailer stats / multiGet routing each need three
@@ -74,7 +74,7 @@ object HFileManifest {
   /** The sidecar's entries, or None when absent or malformed (never
     * throws for a bad sidecar — planning falls back to pooled reads).
     */
-  def read(fs: FileSystem, root: Path): Option[Seq[Entry]] = {
+  private def read(fs: FileSystem, root: Path): Option[Seq[Entry]] = {
     val p = new Path(root, FileName)
     try {
       if (!fs.exists(p)) return None

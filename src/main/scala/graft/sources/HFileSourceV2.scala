@@ -9,19 +9,19 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.connector.catalog.{MetadataColumn, SupportsMetadataColumns, SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
-import org.apache.spark.sql.connector.expressions.{Expressions, SortDirection, SortOrder, Transform}
+import org.apache.spark.sql.connector.catalog.{MetadataColumn, SupportsMetadataColumns, SupportsRead, Table, TableCapability, TableProvider}
+import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.read.{streaming => rstreaming}
-import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
 /** DataSource V2 batch-read format for [[graft.operators.BulkLoad.writeHFiles]]
-  * output: `spark.read.format("graft-hfile").load(dir)`.
+  * output: `spark.read.format("graft-hfile").load(dir)`. It is read-only:
+  * `writeHFiles` is the one HFile writer, and Spark refuses
+  * `df.write.format("graft-hfile")` before any job runs.
   *
   * The one row reader of a bulk-load directory (`BulkLoad.readHFiles`
   * is a load of it), built the way a 100 TB scan wants to be planned:
@@ -68,7 +68,7 @@ class HFileSource extends TableProvider with DataSourceRegister {
 }
 
 object HFileSource {
-  /** Data columns — the table schema, and the write contract. */
+  /** Data columns — the table schema. */
   val Schema: StructType = StructType(Seq(
     StructField("bucket", IntegerType, nullable = false),
     StructField("rowkey", BinaryType, nullable = false),
@@ -79,7 +79,7 @@ object HFileSource {
     StructField("key_type", IntegerType, nullable = false)))
 
   /** METADATA columns (select them explicitly, like parquet's
-    * `_metadata`): provenance and cell extras that writes never demand.
+    * `_metadata`): provenance and cell extras, not part of the schema.
     * `tags`/`mvcc` are empty/0 in files written without the tags layout.
     */
   val MetadataColumns: Array[MetadataColumn] = Array(
@@ -237,19 +237,16 @@ private[sources] object PushedFilters {
   }
 }
 
-class HFileTable(path: String) extends Table with SupportsRead with SupportsWrite
+class HFileTable(path: String) extends Table with SupportsRead
     with SupportsMetadataColumns {
   override def name(): String = s"graft-hfile:$path"
   override def schema(): StructType = HFileSource.Schema
   override def metadataColumns(): Array[MetadataColumn] =
     HFileSource.MetadataColumns
   override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE,
-      TableCapability.TRUNCATE, TableCapability.MICRO_BATCH_READ)
+    util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new HFileScanBuilder(path)
-  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
-    new HFileWriteBuilder(path, info)
 }
 
 class HFileScanBuilder(path: String) extends ScanBuilder
@@ -641,169 +638,6 @@ class HFileMicroBatchStream(path: String, confMap: Map[String, String])
 
   override def createReaderFactory(): PartitionReaderFactory =
     new HFileReaderFactory(Schema, confMap, Array.empty)
-}
-
-// ---- DSv2 write path ------------------------------------------------------
-
-/** `df.write.format("graft-hfile").mode(...).save(dir)` — the write twin of
-  * the read path, so the two surfaces are symmetric.
-  *
-  * Input columns: `bucket int, rowkey binary, family string,
-  * qualifier string, ts long, value binary` and optionally
-  * `key_type int` (defaults to Put). Options: `blockSize`,
-  * `compression` (`none`/`gz`/`snappy`/`lz4`/`zstd`), `encoding`
-  * (`none`/`prefix`/`diff`/`fast_diff` data block encoding), `bloom`,
-  * `bloomChunkKeys`, `maxFileBytes`.
-  *
-  * Instead of pre-shuffling like [[graft.operators.BulkLoad.writeHFiles]],
-  * the write declares what it needs via
-  * [[RequiresDistributionAndOrdering]] — range-distributed by
-  * (bucket, rowkey) and fully sorted within partitions (family/qualifier
-  * ascending, ts/key_type descending) — and Spark plans the shuffle+sort
-  * itself (AQE included). Only (bucket, rowkey) distributes: any finer
-  * key in the range partitioning could split one row's cells across a
-  * boundary and produce overlapping files at that rowkey. Each task then
-  * streams its sorted run through one [[HFileDir.TaskWriter]] — the
-  * same rolling, `_inprogress/` naming and task-end commit as
-  * `writeHFiles` — naming files `part-<queryId8>-PPPPP-SSS` so appends
-  * never collide with existing files.
-  */
-class HFileWriteBuilder(path: String, info: LogicalWriteInfo)
-    extends WriteBuilder with SupportsTruncate {
-  private var doTruncate = false
-  override def truncate(): WriteBuilder = { doTruncate = true; this }
-  override def build(): Write =
-    new HFileWriteImpl(path, info, doTruncate,
-      HFileDir.confMap(SparkSession.active))
-}
-
-class HFileWriteImpl(path: String, info: LogicalWriteInfo, truncate: Boolean,
-                     confMap: Map[String, String])
-    extends Write with RequiresDistributionAndOrdering {
-
-  private val schema = info.schema()
-  // validate the contract on the driver, before any task launches
-  HFileWriteImpl.fieldIndexes(schema)
-  private def opt(name: String): Option[String] = Option(info.options.get(name))
-  private val format = HFileDir.Format(
-    blockSize = opt("blockSize").map(_.toInt).getOrElse(HFile.DefaultBlockSize),
-    codec = HFile.codecOf(opt("compression").getOrElse("none")),
-    // bloom=false disables the row bloom; bloomChunkKeys overrides capacity
-    bloomChunkKeys =
-      if (opt("bloom").exists(_.toLowerCase == "false")) 0
-      else opt("bloomChunkKeys").map(_.toInt)
-        .getOrElse(HFile.DefaultBloomChunkKeys),
-    maxFileBytes = opt("maxFileBytes").map(_.toLong)
-      .getOrElse(HFile.DefaultMaxFileBytes),
-    // data block encoding name (none / prefix / diff / fast_diff), like
-    // the table-level DATA_BLOCK_ENCODING attribute
-    encoding = BlockEncoding.idOf(opt("encoding").getOrElse("none")))
-
-  private def asc(name: String): SortOrder =
-    Expressions.sort(Expressions.column(name), SortDirection.ASCENDING)
-  private def desc(name: String): SortOrder =
-    Expressions.sort(Expressions.column(name), SortDirection.DESCENDING)
-
-  // (bucket, rowkey) only: one rowkey's cells must never straddle a range
-  // boundary (overlapping files); family/qualifier/ts order comes from
-  // the within-partition sort below
-  override def requiredDistribution(): Distribution =
-    Distributions.ordered(Array(asc("bucket"), asc("rowkey")))
-
-  override def requiredOrdering(): Array[SortOrder] = {
-    val base = Array(asc("bucket"), asc("rowkey"), asc("family"),
-      asc("qualifier"), desc("ts"))
-    if (schema.fieldNames.contains("key_type")) base :+ desc("key_type")
-    else base
-  }
-
-  override def toBatch: BatchWrite = {
-    // overwrite clears the directory before tasks rename files into it
-    // (same driver-side semantics as BulkLoad.writeHFiles)
-    HFileDir.startWrite(path, HFileDir.confOf(confMap), overwrite = truncate)
-    new HFileBatchWrite(path, schema, format, confMap, info.queryId())
-  }
-}
-
-object HFileWriteImpl {
-  /** Column indexes (bucket, rowkey, family, qualifier, ts, value,
-    * key_type or -1), with loud errors for anything missing, mistyped,
-    * or unknown.
-    */
-  private[sources] def fieldIndexes(schema: StructType): Array[Int] = {
-    val expected = Map(
-      "bucket" -> IntegerType, "rowkey" -> BinaryType,
-      "family" -> StringType, "qualifier" -> StringType,
-      "ts" -> LongType, "value" -> BinaryType, "key_type" -> IntegerType)
-    schema.fields.foreach { f =>
-      expected.get(f.name) match {
-        case None => throw new IllegalArgumentException(
-          s"graft-hfile write: unknown column '${f.name}' " +
-            s"(drop it first; expected ${expected.keys.mkString(", ")})")
-        case Some(t) => require(f.dataType == t,
-          s"graft-hfile write: column '${f.name}' must be $t, got ${f.dataType}")
-      }
-    }
-    def idx(name: String): Int = schema.fieldNames.indexOf(name)
-    val required = Seq("bucket", "rowkey", "family", "qualifier", "ts", "value")
-    required.foreach(n => require(idx(n) >= 0,
-      s"graft-hfile write: missing required column '$n'"))
-    (required.map(idx) :+ idx("key_type")).toArray
-  }
-}
-
-case class HFileCommitMessage(files: Seq[HFileManifest.Entry])
-    extends WriterCommitMessage
-
-class HFileBatchWrite(path: String, schema: StructType,
-                      format: HFileDir.Format, confMap: Map[String, String],
-                      queryId: String) extends BatchWrite {
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    new HFileDataWriterFactory(path, schema, format, confMap, queryId)
-
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    HFileDir.commitWrite(path, HFileDir.confOf(confMap), messages.toSeq.flatMap {
-      case HFileCommitMessage(entries) => entries
-      case _                           => Nil
-    })
-    HFileDir.clearTemp(path, HFileDir.confOf(confMap))
-  }
-
-  override def abort(messages: Array[WriterCommitMessage]): Unit =
-    HFileDir.clearTemp(path, HFileDir.confOf(confMap))
-}
-
-class HFileDataWriterFactory(path: String, schema: StructType,
-                             format: HFileDir.Format,
-                             confMap: Map[String, String], queryId: String)
-    extends DataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new HFileDataWriter(path, schema, format, confMap, queryId, partitionId,
-      taskId)
-}
-
-class HFileDataWriter(path: String, schema: StructType,
-                      format: HFileDir.Format, confMap: Map[String, String],
-                      queryId: String, partitionId: Int, taskId: Long)
-    extends DataWriter[InternalRow] {
-  private val Array(iBucket, iRowkey, iFamily, iQualifier, iTs, iValue, iType) =
-    HFileWriteImpl.fieldIndexes(schema)
-  // queryId is a UUID; 8 chars de-collide appends into an existing dir
-  private val writer = new HFileDir.TaskWriter(path, HFileDir.confOf(confMap),
-    format, s"part-${queryId.replace("-", "").take(8)}-", partitionId, taskId)
-
-  override def write(row: InternalRow): Unit =
-    writer.write(row.getInt(iBucket), HFile.HCell(
-      row.getBinary(iRowkey),
-      row.getUTF8String(iFamily).toString.getBytes("UTF-8"),
-      row.getUTF8String(iQualifier).toString.getBytes("UTF-8"),
-      row.getLong(iTs),
-      row.getBinary(iValue),
-      if (iType < 0) HFile.KeyTypePut else row.getInt(iType).toByte))
-
-  override def commit(): WriterCommitMessage = HFileCommitMessage(writer.commit())
-  override def abort(): Unit = writer.abort()
-  override def close(): Unit = ()
 }
 
 class HFileReaderFactory(required: StructType, confMap: Map[String, String],

@@ -12,7 +12,9 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** `spark.read.format("graft-hfile")`: schema, parity with a Spark-free
   * [[HFileReader.scan]] of every file, column pruning, bucket/rowkey file
-  * pruning, and glob load paths.
+  * pruning, and glob load paths; the `BulkLoad.writeHFiles` commit it
+  * plans from (`_manifest`, replacement, a failed task), and the refused
+  * `df.write`.
   */
 class HFileSourceSpec extends SparkSpec {
   import spark.implicits._
@@ -239,79 +241,121 @@ class HFileSourceSpec extends SparkSpec {
     assert(partitionsIn(dir, le).nonEmpty)
   }
 
-  test("DSv2 write commits a _manifest; append keeps it valid") {
-    val dir = Files.createTempDirectory("hfile_dsv2_manifest").toString
-    def rows(ids: Range) = ids
-      .map(i => (i % 2, f"r$i%04d".getBytes("UTF-8"), "f", "q", 0L,
-        Array[Byte](1), 4))
-      .toDF("bucket", "rowkey", "family", "qualifier", "ts", "value",
-        "key_type")
-    rows(0 until 20).write.format("graft-hfile").mode("overwrite").save(dir)
-    val root = new org.apache.hadoop.fs.Path(dir)
-    assert(HFileManifest.readValid(fsOf(dir), root, listingOf(dir)).isDefined)
-    rows(20 until 30).write.format("graft-hfile").mode("append").save(dir)
-    val merged = HFileManifest.readValid(fsOf(dir), root, listingOf(dir))
-    assert(merged.isDefined, "append must merge, not invalidate")
-    assert(merged.get.map(_.entryCount).sum == 30)
-    assert(spark.read.format("graft-hfile").load(dir).count() == 30)
-  }
-
-  test("writeHFiles and the DSv2 write roll and commit the same files") {
+  test("writeHFiles rolls files by maxFileBytes; their _manifest entries " +
+      "equal their trailer stats and no _inprogress is left") {
     val cells = (0 until 400)
       .map(i => (f"r${i / 2}%04d".getBytes("UTF-8"), "f", s"q${i % 2}",
         Array.fill[Byte](24)(i.toByte), i.toLong))
       .toDF("rowkey", "family", "qualifier", "value", "ts")
-    // one range partition on both sides, so files differ only if the
-    // writers roll or commit differently
     val prepared = BulkLoad.prepare(cells, buckets = 4, numPartitions = 1)
-    val viaBulkLoad = Files.createTempDirectory("hfile_parity_bl").toString
-    BulkLoad.writeHFiles(prepared, viaBulkLoad, tsCol = Some("ts"),
+    val dir = Files.createTempDirectory("hfile_roll").toString
+    BulkLoad.writeHFiles(prepared, dir, tsCol = Some("ts"),
       blockSize = 256, maxFileBytes = 1024)
-    val viaDsv2 = Files.createTempDirectory("hfile_parity_v2").toString
-    val shufflePartitions = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "1")
-    try prepared.select(col("bucket"), col("salted_key").as("rowkey"),
-        col("family"), col("qualifier"), col("ts"), col("value"),
-        lit(HFile.KeyTypePut.toInt).as("key_type"))
-      .write.format("graft-hfile").option("blockSize", "256")
-      .option("maxFileBytes", "1024").mode("overwrite").save(viaDsv2)
-    finally spark.conf.set("spark.sql.shuffle.partitions", shufflePartitions)
-
-    /** bucket -> its files' cells, files in name (= roll) order. */
-    def filesByBucket(dir: String): Map[Int, Seq[Seq[String]]] =
-      listingOf(dir).map(_.getPath.toString).sorted
-        .groupBy(HFileSource.bucketOf).map { case (b, files) =>
-          b -> files.map { f =>
-            val bytes = Files.readAllBytes(
-              java.nio.file.Paths.get(new java.net.URI(f)))
-            HFileReader.scan(new HFileReader.BytesRead(bytes)).map { c =>
-              Seq(HFileManifest.toHex(c.rowkey), new String(c.family, "UTF-8"),
-                new String(c.qualifier, "UTF-8"), c.ts.toString,
-                HFileManifest.toHex(c.value), c.keyType.toString).mkString("/")
-            }.toSeq
-          }
-        }
-    val a = filesByBucket(viaBulkLoad)
-    val b = filesByBucket(viaDsv2)
-    val filesPerBucket = a.map { case (k, fs) => k -> fs.size }
+    val filesPerBucket = listingOf(dir).groupBy(st =>
+      HFileSource.bucketOf(st.getPath.toString)).map { case (b, fs) => b -> fs.size }
     assert(filesPerBucket.keySet == Set(0, 1, 2, 3))
-    assert(filesPerBucket == b.map { case (k, fs) => k -> fs.size })
     assert(filesPerBucket.values.exists(_ > 1), "maxFileBytes must roll files")
-    a.keys.foreach(k =>
-      assert(a(k).flatten == b(k).flatten, s"bucket $k cell stream"))
-    Seq(viaBulkLoad, viaDsv2).foreach { dir =>
-      val root = new org.apache.hadoop.fs.Path(dir)
-      val sidecar = HFileManifest.readValid(fsOf(dir), root, listingOf(dir))
-        .getOrElse(fail(s"no valid _manifest under $dir"))
-        .map(e => (e.bucket, e.file, e.entryCount, e.minHex, e.maxHex)).toSet
-      HFileManifest.delete(fsOf(dir), root)
-      val trailers = BulkLoad.hfileManifest(spark, dir).as[(Int, String, Long, String, String)]
-        .collect().map { case (bk, f, n, lo, hi) =>
-          (bk, HFileManifest.relOf(new org.apache.hadoop.fs.Path(f)), n, lo, hi)
-        }.toSet
-      assert(sidecar == trailers)
-      assert(!new java.io.File(s"$dir/_inprogress").exists())
+    val root = new org.apache.hadoop.fs.Path(dir)
+    val sidecar = HFileManifest.readValid(fsOf(dir), root, listingOf(dir))
+      .getOrElse(fail(s"no valid _manifest under $dir"))
+      .map(e => (e.bucket, e.file, e.entryCount, e.minHex, e.maxHex)).toSet
+    assert(sidecar.toSeq.map(_._3).sum == 400)
+    HFileManifest.delete(fsOf(dir), root)
+    val trailers = BulkLoad.hfileManifest(spark, dir).as[(Int, String, Long, String, String)]
+      .collect().map { case (bk, f, n, lo, hi) =>
+        (bk, HFileManifest.relOf(new org.apache.hadoop.fs.Path(f)), n, lo, hi)
+      }.toSet
+    assert(sidecar == trailers)
+    assert(!new java.io.File(s"$dir/_inprogress").exists())
+  }
+
+  test("a second writeHFiles over a directory replaces its files and " +
+      "_manifest") {
+    val dir = writeRangedDir()
+    val prepared = (0 until 10)
+      .map(i => (1, f"z$i%04d".getBytes("UTF-8"), "f", "q", Array[Byte](2)))
+      .toDF("bucket", "salted_key", "family", "qualifier", "value")
+      .repartition(1)
+    BulkLoad.writeHFiles(prepared, dir)
+    assert(listingOf(dir).map(st => HFileSource.bucketOf(st.getPath.toString))
+      .toSet == Set(1))
+    val entries = HFileManifest.readValid(fsOf(dir),
+      new org.apache.hadoop.fs.Path(dir), listingOf(dir))
+      .getOrElse(fail("the replaced directory's _manifest must validate"))
+    assert(entries.map(_.entryCount).sum == 10)
+    assert(referenceCells(spark, dir).select(col("rowkey").cast("string"))
+      .as[String].collect().sorted.toSeq == (0 until 10).map(i => f"z$i%04d"))
+  }
+
+  test("writeHFiles refuses an unknown encoding or compression before it " +
+      "touches the directory") {
+    val dir = writeRangedDir()
+    def cells() = referenceCells(spark, dir)
+      .select(col("bucket"), hex(col("rowkey")), col("ts"), hex(col("value")))
+      .collect().map(_.toString).sorted.toSeq
+    val before = cells()
+    val prepared = Seq((0, "k0000".getBytes("UTF-8"), "f", "q", Array[Byte](1)))
+      .toDF("bucket", "salted_key", "family", "qualifier", "value")
+    intercept[IllegalArgumentException] {
+      BulkLoad.writeHFiles(prepared, dir, encoding = "row_index_v1")
     }
+    intercept[IllegalArgumentException] {
+      BulkLoad.writeHFiles(prepared, dir, compression = "lzo")
+    }
+    assert(HFileManifest.readValid(fsOf(dir),
+      new org.apache.hadoop.fs.Path(dir), listingOf(dir)).isDefined)
+    assert(cells() == before && before.size == 40)
+    assert(spark.read.format("graft-hfile").load(dir).collect().length == 40)
+  }
+
+  test("a writeHFiles task that fails aborts: the error names the cell " +
+      "order, and no _inprogress or _manifest is left") {
+    val dir = Files.createTempDirectory("hfile_fail").toString
+    // the same full cell key twice: the writer refuses the second
+    val prepared = Seq.fill(2)(
+        (0, "k0001".getBytes("UTF-8"), "f", "q", Array[Byte](1)))
+      .toDF("bucket", "salted_key", "family", "qualifier", "value")
+      .repartition(1)
+    val e = intercept[Exception](BulkLoad.writeHFiles(prepared, dir))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("strictly increasing")), e)
+    assert(!new java.io.File(s"$dir/_inprogress").exists())
+    assert(!new java.io.File(s"$dir/_manifest").exists())
+    assert(listingOf(dir).isEmpty)
+    // the failed task closed its open file rather than leaving it to GC
+    // (checked where the OS lists a process's open files)
+    val fds = new java.io.File("/proc/self/fd")
+    if (fds.isDirectory) {
+      val open = Option(fds.listFiles).toSeq.flatten.flatMap(f =>
+        scala.util.Try(Files.readSymbolicLink(f.toPath).toString).toOption)
+        .filter(_.contains(dir))
+      assert(open.isEmpty, open)
+    }
+  }
+
+  test("df.write.format(\"graft-hfile\") is refused before any job, and " +
+      "the target directory is left as it was") {
+    import org.apache.spark.sql.connector.catalog.TableCapability._
+    val dir = writeRangedDir()
+    assert(new HFileTable(dir).capabilities() ==
+      java.util.EnumSet.of(BATCH_READ, MICRO_BATCH_READ))
+    val df = referenceCells(spark, dir)
+    val counter = new graft.JobCounter(spark)
+    try Seq("overwrite", "append").foreach { mode =>
+      // the table is read-only, so Spark falls back to a V1 write, which
+      // the source does not provide either
+      val jobs = counter.jobs {
+        val e = intercept[org.apache.spark.SparkException] {
+          df.write.format("graft-hfile").mode(mode).save(dir)
+        }
+        assert(e.getMessage.contains("does not allow create table as select"),
+          e.getMessage)
+      }
+      assert(jobs == 0, s"$mode ran $jobs jobs")
+    } finally counter.close()
+    assert(HFileManifest.readValid(fsOf(dir),
+      new org.apache.hadoop.fs.Path(dir), listingOf(dir)).isDefined)
+    assert(spark.read.format("graft-hfile").load(dir).collect().length == 40)
   }
 
   test("restore drops the destination _manifest (content rewritten in place)") {
@@ -322,28 +366,6 @@ class HFileSourceSpec extends SparkSpec {
     assert(!new java.io.File(dir, "_manifest").exists())
     // next planner read falls back to pooled and still answers
     assert(spark.read.format("graft-hfile").load(dir).count() == 40)
-  }
-
-  test("DSv2 write: write-then-read parity, Spark plans the range sort") {
-    val src = spark.read.format("graft-hfile").load(out).drop("file")
-    val dir = Files.createTempDirectory("hfile_dsv2_w").toString
-    src.write.format("graft-hfile").mode("overwrite").save(dir)
-    assert(!new java.io.File(s"$dir/_inprogress").exists())
-    def canon(df: org.apache.spark.sql.DataFrame) =
-      df.select(col("bucket"), hex(col("rowkey")).as("k"), col("family"),
-        col("qualifier"), col("ts"), hex(col("value")).as("v"))
-    val a = canon(src)
-    val b = canon(spark.read.format("graft-hfile").load(dir))
-    assert(a.count() == b.count() && a.except(b).isEmpty && b.except(a).isEmpty)
-    // append adds a second run set (distinct query-id file names)…
-    src.write.format("graft-hfile").mode("append").save(dir)
-    assert(spark.read.format("graft-hfile").load(dir).count() == 2 * src.count())
-    // …and overwrite truncates back down to a subset
-    src.filter($"bucket" === 2).write.format("graft-hfile")
-      .mode("overwrite").save(dir)
-    val left = spark.read.format("graft-hfile").load(dir)
-    assert(left.count() == src.filter($"bucket" === 2).count())
-    assert(left.select("bucket").distinct().collect().map(_.getInt(0)).toSeq == Seq(2))
   }
 
   test("SQL over a temp view works, including the pushed count") {
@@ -357,77 +379,6 @@ class HFileSourceSpec extends SparkSpec {
       "SELECT qualifier, count(*) AS c FROM hfile_cells GROUP BY 1")
       .collect()
     assert(rows.length == 1 && rows.head.getLong(1) == n)
-  }
-
-  test("DSv2 write: maxFileBytes option rolls files within a bucket") {
-    val src = spark.read.format("graft-hfile").load(out).drop("file")
-    val dir = Files.createTempDirectory("hfile_dsv2_roll").toString
-    src.write.format("graft-hfile").mode("overwrite")
-      .option("blockSize", "1024").option("maxFileBytes", "8192").save(dir)
-    val perBucket = spark.read.format("graft-hfile").load(dir)
-      .select(col("file"), col("bucket")).distinct()
-      .groupBy("bucket").count().collect().map(_.getLong(1))
-    assert(perBucket.exists(_ > 1))
-    assert(spark.read.format("graft-hfile").load(dir).count() == src.count())
-  }
-
-  test("DSv2 write: gz/snappy compression options round-trip") {
-    val src = spark.read.format("graft-hfile").load(out).drop("file")
-    for ((name, id) <- Seq("gz" -> HFile.CodecGz,
-                           "snappy" -> HFile.CodecSnappy)) {
-      val dir = Files.createTempDirectory(s"hfile_dsv2_$name").toString
-      src.write.format("graft-hfile").mode("overwrite")
-        .option("compression", name).option("blockSize", "1024").save(dir)
-      val back = spark.read.format("graft-hfile").load(dir)
-      assert(back.count() == src.count(), name)
-      // the written files really carry the codec ordinal in the trailer
-      // (skip the local-FS .crc sidecars)
-      val f = new java.io.File(dir).listFiles
-        .filter(_.getName.startsWith("bucket=")).head.listFiles
-        .filter(_.getName.endsWith(".hfile")).head
-      val bytes = java.nio.file.Files.readAllBytes(f.toPath)
-      val t = HFileReader.readTrailer(new HFileReader.BytesRead(bytes))
-      assert(t.compressionCodec == id, name)
-    }
-  }
-
-  test("DSv2 write: encoding option produces DATABLKE files that read back") {
-    val src = spark.read.format("graft-hfile").load(out).drop("file")
-    for (name <- Seq("prefix", "diff", "fast_diff")) {
-      val dir = Files.createTempDirectory(s"hfile_dsv2_enc_$name").toString
-      src.write.format("graft-hfile").mode("overwrite")
-        .option("encoding", name).option("blockSize", "1024").save(dir)
-      val back = spark.read.format("graft-hfile").load(dir)
-      assert(back.count() == src.count(), name)
-      assert(back.drop("file").except(src).isEmpty &&
-        src.except(back.drop("file")).isEmpty, name)
-      val f = new java.io.File(dir).listFiles
-        .filter(_.getName.startsWith("bucket=")).head.listFiles
-        .filter(_.getName.endsWith(".hfile")).head
-      val bytes = java.nio.file.Files.readAllBytes(f.toPath)
-      assert(bytes.slice(0, 8).sameElements(HFile.BlockMagicEncodedData), name)
-    }
-    // unknown encoding names fail on the driver, before any task runs
-    intercept[IllegalArgumentException] {
-      src.write.format("graft-hfile").mode("overwrite")
-        .option("encoding", "row_index_v1")
-        .save(Files.createTempDirectory("hfile_dsv2_enc_bad").toString)
-    }
-  }
-
-  test("DSv2 write: unknown and mistyped columns are rejected loudly") {
-    val src = spark.read.format("graft-hfile").load(out).drop("file")
-    val dir = Files.createTempDirectory("hfile_dsv2_bad").toString
-    intercept[Exception] {
-      src.withColumn("extra", lit(1)).write.format("graft-hfile")
-        .mode("overwrite").save(dir)
-    }
-    // ts as int is fine (Spark upcasts on by-name resolution); a binary
-    // column fed an int is not castable and must fail
-    intercept[Exception] {
-      src.withColumn("value", lit(1)).write.format("graft-hfile")
-        .mode("overwrite").save(dir)
-    }
   }
 
   test("hfile_point_lookup: scans fewer partitions than files and matches " +
@@ -613,11 +564,14 @@ class HFileSourceSpec extends SparkSpec {
       .select(col("rowkey").cast("string")).as[String].collect().sorted.toSeq
     assert(get("k0005x").collect().isEmpty)
     assert(multiGet("k0005", "k0005x") == Seq("k0005"))
-    // the second write appends one file to bucket 0
-    Seq((0, "k0005x".getBytes("UTF-8"), "f", "q", 7L, Array[Byte](2), 4))
-      .toDF("bucket", "rowkey", "family", "qualifier", "ts", "value",
-        "key_type")
-      .write.format("graft-hfile").mode("append").save(dir)
+    // a file of another write, copied into bucket 0 under a new name
+    val other = Files.createTempDirectory("hfile_append_src").toString
+    BulkLoad.writeHFiles(
+      Seq((0, "k0005x".getBytes("UTF-8"), "f", "q", Array[Byte](2), 7L))
+        .toDF("bucket", "salted_key", "family", "qualifier", "value", "ts"),
+      other, tsCol = Some("ts"))
+    val written = java.nio.file.Paths.get(listingOf(other).head.getPath.toUri)
+    Files.copy(written, java.nio.file.Paths.get(dir, "bucket=0", "part-appended.hfile"))
     val got = get("k0005x")
     assert(isLocal(got), got.queryExecution.executedPlan.toString)
     assert(got.select(col("ts")).as[Long].collect().toSeq == Seq(7L))
